@@ -37,25 +37,7 @@ object Bench {
     // the slowest completed stage's wall + the stage count, so the next
     // adjudication can tell scheduler/box noise (run inflates, top stage
     // flat) from a plan change (top stage moves with the run).
-    object stageWin extends BenchGate.StageWindow {
-      private var topMs = 0L; private var n = 0
-      def reset(): Unit = synchronized { topMs = 0L; n = 0 }
-      def snapshot(): (Double, Int) = synchronized { (topMs / 1000.0, n) }
-      def record(ms: Long): Unit = synchronized {
-        if (ms > topMs) topMs = ms
-        n += 1
-      }
-    }
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          for (s <- i.submissionTime; c <- i.completionTime)
-            stageWin.record(c - s)
-        }
-      })
-    BenchGate.stageWindow = Some(stageWin)
+    BenchGate.installStageWindow(spark.sparkContext)
 
     // Low-core scaling contract (r18 VERDICT item 2): when the driver grants
     // a MINORITY of the machine's cores (the 8-of-32 scaling re-run), load on
@@ -114,10 +96,10 @@ object Bench {
     // the plan) was at fault; the r16 driver bench carried c20 at 33 s
     // `quiet: true` because the CPU-only gate was blind to foreign DISK
     // traffic. BenchGate measures both axes per run — see its Scaladoc for
-    // the full design; tools/IoLoadProbe validates the I/O axis against a
-    // deliberate dd co-load.
-    import BenchGate.{RunStamp, stampRun, isQuiet => gateQuiet, fmt2,
-      cpuMeasurable}
+    // the full design; dev/ioloadprobe_r17.jsonl records the I/O axis
+    // validated against a deliberate dd co-load.
+    import BenchGate.{Outcome, RunStamp, stampRun, isQuiet => gateQuiet, fmt2,
+      cpuMeasurable, splitFailed, minTotal, stampJson}
     val quietCeil = math.max(1.0, cpus.toDouble / 8)
     def isQuiet(r: RunStamp): Boolean = gateQuiet(r, quietCeil)
     // min of two runs: the first run of a query pays one-off codegen/JIT
@@ -129,12 +111,9 @@ object Bench {
     // disagree by >3× (the interference signature — warm runs should only
     // get faster), a THIRD run breaks the tie: min-of-3 then can't be a
     // lone spike, and the raw triple + load stamps prove which run was hit.
-    def runPair(spec: QuerySpec, dir: String, tag: String): (String, Seq[RunStamp]) = {
+    def timeRuns(spec: QuerySpec, dir: String, tag: String): Seq[RunStamp] = {
       def one(): RunStamp = stampRun {
-        try spec.run(spark, dir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $tag${spec.name} failed: ${e.getMessage}")
-        }
+        spec.run(spark, dir).write.format("noop").mode("overwrite").save()
       }
       var runs = Seq(one(), one())
       // Second tie-break trigger (r11 ADVICE): if interference inflates
@@ -177,8 +156,16 @@ object Bench {
             ") — retrying")
         runs = runs :+ one()
       }
-      spec.name -> runs
+      runs
     }
+    // A run that throws fails the whole query: it keeps no timing, so it
+    // stays out of every total and is listed under `failed` instead.
+    def runPair(spec: QuerySpec, dir: String, tag: String): Outcome =
+      try spec.name -> Right(timeRuns(spec, dir, tag))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $tag${spec.name} FAILED: $e")
+        spec.name -> Left(e)
+      }
     def minsJson(rs: Seq[(String, Seq[RunStamp])]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v.map(_.sec).min }
         .mkString("{", ",", "}")
@@ -191,11 +178,7 @@ object Bench {
     // extension, prior elements unchanged.
     def stampsJson(rs: Seq[(String, Seq[RunStamp])]): String =
       rs.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(r =>
-          s"[${r.loadBefore},${r.loadAfter},${r.rssAfterMb},${fmt2(r.otherCores)}," +
-            s"${fmt2(r.foreignMbps)},${fmt2(r.devBusy)}," +
-            s"${fmt2(r.topStageSec)},${r.stages},${r.codeCacheMb}]")
-          .mkString("[", ",", "]")
+        "\"" + k + "\":" + v.map(stampJson).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     // Quiet qualification per query: true iff at least one run executed
     // with other-process CPU under the ceiling. Once a quiet run exists,
@@ -223,15 +206,19 @@ object Bench {
     def unquietCount(rs: Seq[(String, Seq[RunStamp])]): String =
       if (lowCoreRun || !cpuMeasurable) "null"
       else rs.count { case (_, v) => !v.exists(isQuiet) }.toString
-    val results = Registry.headline.map(spec => runPair(spec, sfDir, ""))
+    def namesJson(ns: Seq[String]): String =
+      ns.map(Verify.jsonString).mkString("[", ",", "]")
+    val (results, failed) =
+      splitFailed(Registry.headline.map(spec => runPair(spec, sfDir, "")))
     val qs = minsJson(results)
-    val total = results.map(_._2.map(_.sec).min).sum
+    val total = minTotal(results)
+    val failedJson = s""","failed":${namesJson(failed)}"""
     // Headline JSON FIRST (r18 VERDICT item 2): if this run is later killed
     // mid-sf1 (time budget, OOM on a constrained box), the stdout tail still
     // carries one parseable line with the driver-graded fields. Marked
     // provisional; the full/compact lines below remain the last words on a
     // successful run.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","quiet_total":${quietTotal(results)},"unquiet_count":${unquietCount(results)},"queries":$qs,"sf":"$sfDir","provisional":true}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","quiet_total":${quietTotal(results)},"unquiet_count":${unquietCount(results)},"queries":$qs$failedJson,"sf":"$sfDir","provisional":true}""")
 
     // Optional larger-SF point: the headline set is overhead-dominated at
     // sf0.1 on 32 cores (~0.4 s fixed job setup per query), so per-row
@@ -283,9 +270,8 @@ object Bench {
     // (r12 ADVICE).
     val (sf1, sf1Summary) = if (new java.io.File(s"$sf1Dir/lineitem.parquet").exists()) {
       warm(sf1Dir)
-      def timed(spec: QuerySpec): (String, Seq[RunStamp]) =
-        runPair(spec, sf1Dir, "sf1 ")
-      val r1 = Registry.headline.map(timed)
+      def timed(spec: QuerySpec): Outcome = runPair(spec, sf1Dir, "sf1 ")
+      val (r1, f1) = splitFailed(Registry.headline.map(timed))
       // non-headline operators whose cost profile only shows at scale:
       // clustering (iterative CC), contamination (gram join), inverted
       // index (wide posting rows), LSH ANN (index build), heavy hitters
@@ -441,10 +427,10 @@ object Bench {
       // beats a SIGKILLed one with no JSON at all (the r18 c8 run).
       val extSpecs = extNames.flatMap(Registry.byName.get)
       val extSkipped = scala.collection.mutable.ArrayBuffer.empty[String]
-      val rExt = extSpecs.flatMap { spec =>
+      val (rExt, fExt) = splitFailed(extSpecs.flatMap { spec =>
         if (inBudget) Some(timed(spec))
         else { extSkipped += spec.name; None }
-      }
+      })
       if (extSkipped.nonEmpty) System.err.println(
         s"[bench] budget ${budgetSec}s exhausted — skipped ${extSkipped.size} " +
           s"ext queries: ${extSkipped.mkString(", ")}")
@@ -452,16 +438,17 @@ object Bench {
       val q1runs = runsJson(r1 ++ rExt)
       val q1stamps = stampsJson(r1 ++ rExt)
       val q1quiet = quietJson(r1 ++ rExt)
-      val sf1Tot = r1.map(_._2.map(_.sec).min).sum
-      val extTot = rExt.map(_._2.map(_.sec).min).sum
+      val sf1Tot = minTotal(r1)
+      val extTot = minTotal(rExt)
       val sf1QTot = quietTotal(r1); val extQTot = quietTotal(rExt)
       val sf1Unq = unquietCount(r1 ++ rExt)
       val mins = (r1 ++ rExt).map { case (k, v) => k -> v.map(_.sec).min }
       val skippedJson =
         if (extSkipped.isEmpty) ""
-        else s""","sf1_ext_skipped":${extSkipped.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-      (s""","sf1_total":$sf1Tot,"sf1_quiet_total":$sf1QTot,"sf1_ext_total":$extTot,"sf1_ext_quiet_total":$extQTot,"sf1_unquiet_count":$sf1Unq,"sf1_queries":$q1,"sf1_queries_runs":$q1runs,"sf1_queries_stamps":$q1stamps,"sf1_queries_quiet":$q1quiet,"sf1_dir":"$sf1Dir"$skippedJson""",
-        Some((sf1Tot, extTot, mins)))
+        else s""","sf1_ext_skipped":${namesJson(extSkipped.toSeq)}"""
+      val sf1Failed = f1 ++ fExt
+      (s""","sf1_total":$sf1Tot,"sf1_quiet_total":$sf1QTot,"sf1_ext_total":$extTot,"sf1_ext_quiet_total":$extQTot,"sf1_unquiet_count":$sf1Unq,"sf1_queries":$q1,"sf1_queries_runs":$q1runs,"sf1_queries_stamps":$q1stamps,"sf1_queries_quiet":$q1quiet,"sf1_failed":${namesJson(sf1Failed)},"sf1_dir":"$sf1Dir"$skippedJson""",
+        Some((sf1Tot, extTot, mins, sf1Failed)))
     } else ("", None)
     // HLL-only distinct count: q39's contract output folds in an exact
     // countDistinct purely so the DuckDB oracle can hash-match it, which
@@ -506,7 +493,7 @@ object Bench {
     val duck1 =
       if (sf1.isEmpty) ""","sf1":"skipped (no data)""""
       else duckTotal(sf1Dir).map(v => s""","sf1_duckdb_total":$v""").getOrElse("")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","quiet_total":${quietTotal(results)},"unquiet_count":${unquietCount(results)},"queries":$qs,"queries_runs":${runsJson(results)},"queries_stamps":${stampsJson(results)},"queries_quiet":${quietJson(results)},"sf":"$sfDir","hll_only":$hll,"note":"$note"$duck$sf1$duck1}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","quiet_total":${quietTotal(results)},"unquiet_count":${unquietCount(results)},"queries":$qs$failedJson,"queries_runs":${runsJson(results)},"queries_stamps":${stampsJson(results)},"queries_quiet":${quietJson(results)},"sf":"$sfDir","hll_only":$hll,"note":"$note"$duck$sf1$duck1}"""
     println(line)
     // The same line, file-based: the driver harvests the stdout tail, where
     // the JSON rides behind sbt's "[info] " prefix and a tail window that
@@ -537,16 +524,16 @@ object Bench {
     // queries; full per-run detail stays in bench_out.json. Built from
     // the SAME in-scope values as the sf1 fragment (sf1Summary), never by
     // re-parsing the rendered string (r12 ADVICE).
-    val sf1Fields = sf1Summary.map { case (t, e, _) =>
-      s""","sf1_total":$t,"sf1_ext_total":$e"""
+    val sf1Fields = sf1Summary.map { case (t, e, _, f) =>
+      s""","sf1_total":$t,"sf1_ext_total":$e,"sf1_failed":${namesJson(f)}"""
     }.getOrElse("")
-    val slow5 = sf1Summary.map { case (_, _, mins) =>
+    val slow5 = sf1Summary.map { case (_, _, mins, _) =>
       val top = mins.sortBy(-_._2).take(5)
         .map { case (k, v) => s""""$k":$v""" }.mkString(",")
       s""","sf1_slowest":{$top}"""
     }.getOrElse("")
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","quiet_total":${quietTotal(results)},"unquiet_count":${unquietCount(results)},"queries":$qs,"sf":"$sfDir","hll_only":$hll$duck$sf1Fields$duck1$slow5,"full":"bench_out.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","quiet_total":${quietTotal(results)},"unquiet_count":${unquietCount(results)},"queries":$qs$failedJson,"sf":"$sfDir","hll_only":$hll$duck$sf1Fields$duck1$slow5,"full":"bench_out.json"}"""
     // Emit the compact line AFTER spark.stop() and through the raw file
     // descriptor, as the process's genuinely last stdout bytes: the r12
     // driver tail showed the line arriving prefixed "[info] " (sbt logger

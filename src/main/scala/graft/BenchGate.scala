@@ -1,10 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Machine-quietness measurement shared by [[Bench]] and the dev load
-  * probes (`tools/IoLoadProbe`). A bench number is only evidence when the
-  * machine was quiet while it ran; this object measures that fact per run
-  * instead of leaving it to forensic loadavg reads.
+/** Machine-quietness measurement shared by [[Bench]] and `tools/Profile`.
+  * A bench number is only evidence when the machine was quiet while it
+  * ran; this object measures that fact per run instead of leaving it to
+  * forensic loadavg reads.
   *
   * Two independent interference axes, both as deltas bracketing a run:
   *
@@ -34,7 +34,7 @@ import java.nio.file.{Files, Paths}
   *    rate AND a saturated device (delayed writeback of a few hundred MB
   *    spread over the flusher's ~30 s horizon stays under the rate
   *    ceiling; a dd co-load is hundreds of MB/s at ~100% busy, trips both;
-  *    validated by tools/IoLoadProbe, dev/ioloadprobe_r17.jsonl).
+  *    validated against a dd co-load, dev/ioloadprobe_r17.jsonl).
   *
   *    Completion-time accounting can land a co-load's bytes in the
   *    bracket BEFORE the one it delays (r17 verdict item 5: a dd window
@@ -68,17 +68,30 @@ object BenchGate {
         .map(_.getUsage.getUsed).sum / 1048576
     } catch { case _: Throwable => -1L }
 
-  /** Pluggable per-run stage-wall window (r18 VERDICT item 7): the bench
-    * installs a SparkListener-backed implementation, and [[stampRun]]
-    * brackets each run with reset()/snapshot() so every stamp carries the
-    * slowest completed stage's wall plus the stage count. That lets the
-    * next adjudication separate scheduler/box noise (run slower, top stage
-    * flat, many stages) from a real plan change (top-stage wall moves with
-    * the run). Listener events are posted asynchronously, so the snapshot
-    * can miss a stage that completes within the last few ms — diagnostic
-    * precision, not a gate input. */
-  trait StageWindow { def reset(): Unit; def snapshot(): (Double, Int) }
-  @volatile var stageWindow: Option[StageWindow] = None
+  /** Per-run stage-wall window (r18 VERDICT item 7): once
+    * [[installStageWindow]] has added its SparkListener, [[stampRun]]
+    * resets the window before each run and reads it after, so every stamp
+    * carries the slowest completed stage's wall plus the stage count. That
+    * lets the next adjudication separate scheduler/box noise (run slower,
+    * top stage flat, many stages) from a real plan change (top-stage wall
+    * moves with the run). Listener events are posted asynchronously, so
+    * the read can miss a stage that completes within the last few ms —
+    * diagnostic precision, not a gate input. Guarded by `stageLock`. */
+  private val stageLock = new Object
+  private var stageWindow: Option[(Long, Int)] = None // (slowest ms, stages)
+
+  def installStageWindow(sc: org.apache.spark.SparkContext): Unit = {
+    stageLock.synchronized { stageWindow = Some((0L, 0)) }
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        for (s <- i.submissionTime; c <- i.completionTime) stageLock.synchronized {
+          stageWindow = stageWindow.map { case (top, n) => (math.max(top, c - s), n + 1) }
+        }
+      }
+    })
+  }
 
   val clkTck: Double =
     try {
@@ -160,7 +173,6 @@ object BenchGate {
     * lazy val latched a single transient /proc read failure into
     * permanently-disabled gating for the whole bench run (r17 ADVICE). */
   def cpuMeasurable: Boolean = cpuTicks() != ((-1L, -1L))
-  def ioMeasurable: Boolean = { val (s, _, _) = ioBytes(); s >= 0 }
 
   // end-of-last-window I/O sample + its foreign rate: the trailing memory
   // the writeback-attribution fix reads (r17 verdict item 5). Benches run
@@ -168,9 +180,10 @@ object BenchGate {
   @volatile private var lastIoEnd: (Long, Long, Long) = (-1L, -1L, 0L)
   @volatile private var lastForeignMbps: Double = 0.0
 
-  /** Run `f`, bracketing it with every interference signal. */
+  /** Run `f`, bracketing it with every interference signal. An exception
+    * from `f` propagates: a run that throws has no stamp. */
   def stampRun(f: => Unit): RunStamp = {
-    stageWindow.foreach(_.reset())
+    stageLock.synchronized { stageWindow = stageWindow.map(_ => (0L, 0)) }
     val lb = loadAvg(); val (b0, s0) = cpuTicks()
     val (io0, self0, tk0) = ioBytes()
     val t = System.nanoTime()
@@ -202,11 +215,26 @@ object BenchGate {
         v - tk0.getOrElse(d, v) }.max.toDouble / (sec * 1000.0))
     lastIoEnd = (io1, self1, System.nanoTime())
     lastForeignMbps = math.max(0.0, fMbps)
-    val (topStage, nStages) =
-      stageWindow.map(_.snapshot()).getOrElse((-1.0, -1))
+    val (topStage, nStages) = stageLock.synchronized {
+      stageWindow.fold((-1.0, -1)) { case (top, n) => (top / 1000.0, n) }
+    }
     RunStamp(sec, lb, loadAvg(), rssMb(), other, fMbps, busy, prevMbps,
       topStage, nStages, codeCacheMb())
   }
+
+  /** One query's outcome: its run stamps, or the error that ended it. */
+  type Outcome = (String, Either[Throwable, Seq[RunStamp]])
+
+  /** Splits outcomes into the timed queries and the names of the failed
+    * ones, both in input order. A failed query carries no timing at all:
+    * a query that dies early would otherwise read as fast and count in
+    * every total. */
+  def splitFailed(rs: Seq[Outcome]): (Seq[(String, Seq[RunStamp])], Seq[String]) =
+    (rs.collect { case (k, Right(v)) => k -> v }, rs.collect { case (k, Left(_)) => k })
+
+  /** Sum over queries of each query's fastest run. */
+  def minTotal(rs: Seq[(String, Seq[RunStamp])]): Double =
+    rs.map(_._2.map(_.sec).min).sum
 
   /** CPU term: other processes averaged under `quietCeil` cores during the
     * run, OR under half a core-second absolute (sub-0.1 s runs see
@@ -234,6 +262,14 @@ object BenchGate {
 
   def isQuiet(r: RunStamp, quietCeil: Double): Boolean =
     !cpuMeasurable || (r.otherCores >= 0 && cpuQuiet(r, quietCeil) && ioQuiet(r))
+
+  /** A stamp as the bench artifact's positional array: [load before, load
+    * after, RSS MB, foreign cores, foreign MB/s, device busy, slowest stage
+    * s, stages, code cache MB]. */
+  def stampJson(r: RunStamp): String =
+    s"[${r.loadBefore},${r.loadAfter},${r.rssAfterMb},${fmt2(r.otherCores)}," +
+      s"${fmt2(r.foreignMbps)},${fmt2(r.devBusy)}," +
+      s"${fmt2(r.topStageSec)},${r.stages},${r.codeCacheMb}]"
 
   /** Locale-independent 2-decimal formatting (r16 ADVICE: f"%.2f" uses the
     * default locale; a comma-decimal locale would emit invalid JSON). */

@@ -56,21 +56,7 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(s"$outDir/oracle_sql.json")
     // Completion manifest: the machine-checkable record that Verify ran to
     // completion and what it produced. dev/check.py refuses to emit a
     // correctness artifact that covers fewer queries than `written` claims,
@@ -84,8 +70,9 @@ object Verify {
       }.sortBy(_._1)
       val manifest =
         s"""{"queries_total": ${selected.size}, """ +
-          s""""written": ${written.map(q).mkString("[", ",", "]")}, """ +
-          s""""failed": ${failed.map { case (n, m) => s"${q(n)}: ${q(m.take(300))}" }
+          s""""written": ${written.map(jsonString).mkString("[", ",", "]")}, """ +
+          s""""failed": ${failed.map { case (n, m) =>
+              s"${jsonString(n)}: ${jsonString(m.take(300))}" }
               .mkString("{", ",", "}")}}"""
       Files.writeString(Paths.get(s"$outDir/_manifest.json"), manifest)
       if (failed.nonEmpty) {
@@ -109,5 +96,29 @@ object Verify {
       }
     }
     spark.stop()
+  }
+
+  /** JSON string literal. Escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in hand-written oracle SQL would otherwise make
+    * the DuckDB compare's json.load fail and silently zero the run's
+    * correctness artifact. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Writes SparkEntry.oracleSql to `path` as the `oracle_sql.json` object
+    * the DuckDB compare reads; returns the entry count. */
+  def writeOracleSql(path: String): Int = {
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(path), json)
+    SparkEntry.oracleSql.size
   }
 }

@@ -304,33 +304,11 @@ object Corpus {
     * affected-shard discipline applied to the index). Provably ≡
     * rebuilding the index over the union — the c39 oracle is c10's
     * full-rebuild SQL. Deployment writes only the re-aggregated shards
-    * ([[invertedIndexMergeDelta]]) via dynamic partition overwrite;
-    * this full view exists for serving and for the oracle proof.
+    * (`merged` below) via dynamic partition overwrite; this full view
+    * exists for serving and for the oracle proof.
     */
   private[graft] def invertedIndexMerge(base: DataFrame,
       delta: DataFrame): DataFrame = {
-    val (untouched, merged) = indexMergeParts(base, delta)
-    untouched.select("token", "shard", "df_shard", "min_id", "postings")
-      .unionByName(merged.select("token", "shard", "df_shard", "min_id",
-        "postings"))
-  }
-
-  /** Only the RE-AGGREGATED shards of [[invertedIndexMerge]] — what an
-    * incremental maintenance job actually writes. The stored index is
-    * partitioned by `shard`; with dynamic partition overwrite the
-    * untouched partitions never leave disk, so the write (like the
-    * merge shuffle) is batch-proportional. [[invertedIndexMerge]]'s
-    * full logical view (= untouched ∪ this) is what the c39 oracle
-    * proves ≡ a rebuild, which makes this frame's correctness a
-    * corollary: it is that view minus an identity passthrough.
-    */
-  private[graft] def invertedIndexMergeDelta(base: DataFrame,
-      delta: DataFrame): DataFrame =
-    indexMergeParts(base, delta)._2
-      .select("token", "shard", "df_shard", "min_id", "postings")
-
-  private def indexMergeParts(base: DataFrame,
-      delta: DataFrame): (DataFrame, DataFrame) = {
     // The delta index is batch-sized by definition; pin it so the
     // batch tokenizes ONCE (it feeds both the affected-shard probe and
     // the merge — left lazy, Spark re-derives it per consumer and the
@@ -346,7 +324,9 @@ object Corpus {
         array_join(transform(
           sort_array(collect_list(struct(col("min_id"), col("postings")))),
           s => s.getField("postings")), ",").as("postings"))
-    (untouched, merged)
+    untouched.select("token", "shard", "df_shard", "min_id", "postings")
+      .unionByName(merged.select("token", "shard", "df_shard", "min_id",
+        "postings"))
   }
 
   def bm25Scores(docs: DataFrame, qt: Seq[String]): DataFrame =
@@ -1980,9 +1960,12 @@ object Corpus {
     QuerySpec(
       "c32b_kn_pruned_score",
       // n_grams → n_trigrams: the declared output schema predates the
-      // generic chain and is part of the contract (oracle column names)
+      // generic chain and is part of the contract (oracle column names).
+      // An explicit select, so a renamed source column fails at analysis
+      // instead of silently passing through under the old name.
       (s, d) => knNgramScore(Tables(s, d, "documents"), 3, minCount = 2)
-        .withColumnRenamed("n_grams", "n_trigrams"),
+        .select(col("doc_id"), col("n_grams").as("n_trigrams"),
+          col("avg_nll")),
       Some {
         s"""WITH ${knScoreCtesPruned(2)}
            |SELECT doc_id, n_trigrams, avg_nll FROM sc
@@ -2556,15 +2539,6 @@ object Corpus {
     knGroupGuarded(tg.drop("doc_id"), "h",
       Seq("c" -> count(lit(1))), Seq(s"x$n", s"s${n - 1}"),
       knSubCols(n).filterNot(Set(s"x$n", s"s${n - 1}")), label)
-
-  /** [[knGramHashCounts]] straight from docs — the count-table build a
-    * maintenance job persists (ProbeR18 c36counts measures this against
-    * [[knCountsMerge]]; the contract row c36 proves merge ≡ recount
-    * through the shared scoring tail).
-    */
-  private[graft] def knGramHashCountsPublic(docs: DataFrame,
-      n: Int): DataFrame =
-    knGramHashCounts(knNgramHashStream(docs, n), n, "c36 recount")
 
   /** Stored base count table + append batch → merged count table (the
     * c36 merge step in isolation: only the batch tokenizes). The merge

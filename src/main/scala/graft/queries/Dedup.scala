@@ -664,8 +664,8 @@ object Dedup {
       // them MEMORY_ONLY — localCheckpoint's MEMORY_AND_DISK default
       // writes every round's blocks to disk even when they'd trivially
       // fit in memory, which is what made the checkpoint-heavy family
-      // track foreign disk traffic (r17 verdict item 6; ProbeR18 s17
-      // measures the cadence)
+      // track foreign disk traffic (r17 verdict item 6; the s17 cadence
+      // measurement is in OPTIMIZATION_r18.md)
       val next = smallStar(largeStar(edges))
       edges = loopStorage match {
         case Some(lvl) => next.localCheckpoint(true, lvl)

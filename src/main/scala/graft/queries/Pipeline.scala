@@ -173,18 +173,17 @@ object Pipeline {
     (scala.util.hashing.MurmurHash3.stringHash(
       new java.io.File(d).getAbsolutePath) & 0x7fffffff).toHexString
 
-  /** p12's engine — ONE definition shared by the contract query and the
-    * ProbeR15 section. Input needs (doc_id, text); synthesizes the
-    * deterministic revision fan-out and collapses it latest-wins. See the
-    * p12 QuerySpec comment for the design narrative (struct-max partial
-    * agg, not a window).
+  /** p12's engine (scale runs: the `p12` lines of dev/scaleprobe_r15.jsonl).
+    * Input needs (doc_id, text); synthesizes the deterministic revision
+    * fan-out and collapses it latest-wins. See the p12 QuerySpec comment
+    * for the design narrative (struct-max partial agg, not a window).
     */
   def latestWinsMerge(docs: DataFrame): DataFrame =
     latestWinsAgg(revisionFrame(docs)).orderBy("doc_id")
 
   /** p12's deterministic revision fan-out — ONE definition shared by the
-    * batch merge, the streaming twin ([[graft.streaming.Streams]]
-    * latestWins), and the probe.
+    * batch merge and the streaming twin ([[graft.streaming.Streams]]
+    * latestWins).
     */
   private[graft] def revisionFrame(docs: DataFrame): DataFrame =
     docs
@@ -210,10 +209,10 @@ object Pipeline {
         col("latest.ts").as("latest_ts"),
         col("latest.digest").as("latest_md5"))
 
-  /** p13's engine — ONE definition shared by the contract query and the
-    * ProbeR15 section. Input needs (shard, tsu, value) — the caller maps
-    * its table to the zone grain. See the p13 QuerySpec comment for the
-    * design narrative (zone maps + middle-third window verdict).
+  /** p13's engine (scale runs: the `p13` lines of dev/scaleprobe_r15.jsonl).
+    * Input needs (shard, tsu, value) — the caller maps its table to the
+    * zone grain. See the p13 QuerySpec comment for the design narrative
+    * (zone maps + middle-third window verdict).
     */
   def zoneMapPrune(ev: DataFrame): DataFrame =
     zoneVerdict(zoneStats(ev).localCheckpoint(true))

@@ -859,7 +859,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id"))
       .distinct()
     // DECISION RECORD (r10, measured): the serve cut stays a row_number
-    // window, NOT plans/TopKPerKey. At the 1M probe (tools/ProbeKnn,
+    // window, NOT plans/TopKPerKey. At the 1M probe (dev/scaleprobe_r10.jsonl,
     // identical corpus/params), the TopKPerKey variant ran 424 s vs 44 s
     // for this shape — in an ALL-queries build the bucket cap leaves only
     // ~tens of candidates per q_id, so a 32-task run sees ≈1 row per

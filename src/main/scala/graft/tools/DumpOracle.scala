@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dev utility: dump SparkEntry.oracleSql as JSON without running any
   * query (Verify writes the same file, but only after executing all ~120
   * queries). Input to dev/duckdb_bench.py, which times the oracle SQL in
@@ -10,18 +8,7 @@ import java.nio.file.{Files, Paths}
 object DumpOracle {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/oracle_sql.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
-    println(s"wrote ${graft.SparkEntry.oracleSql.size} oracle entries to $out")
+    val n = graft.Verify.writeOracleSql(out)
+    println(s"wrote $n oracle entries to $out")
   }
 }

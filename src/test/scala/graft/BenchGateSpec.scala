@@ -68,6 +68,21 @@ class BenchGateSpec extends AnyFunSuite {
     if (!cpuMeasurable) assert(isQuiet(r, ceil))
   }
 
+  test("a thrown query carries no timing: out of every total, listed as failed") {
+    // stampRun rethrows, so a run that throws has no stamp at all
+    val dies: Outcome = "dies" -> scala.util.Try(Seq(stampRun(
+      throw new IllegalStateException("boom")))).toEither
+    assert(dies._2.isLeft)
+    val rs: Seq[Outcome] = Seq(
+      "ok" -> Right(Seq(st(1.5, 0, 0, 0), st(1.0, 0, 0, 0))),
+      dies,
+      "ok2" -> Right(Seq(st(0.5, 0, 0, 0))))
+    val (timed, failed) = splitFailed(rs)
+    assert(timed.map(_._1) == Seq("ok", "ok2"))
+    assert(failed == Seq("dies"))
+    assert(minTotal(timed) == 1.5)
+  }
+
   test("fmt2 is locale-independent and JSON-safe") {
     // Double.toString-based rendering: always '.' decimal separator
     assert(fmt2(3.14159) == "3.14")

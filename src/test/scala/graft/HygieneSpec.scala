@@ -42,6 +42,15 @@ class HygieneSpec extends AnyFunSuite {
       s"query paths must not mutate session conf; tune() called from: $offenders")
   }
 
+  test("no per-round tools: no round-suffixed file under tools/") {
+    // One profiling tool (tools/Profile) replaced a new probe file every
+    // round; a name like ProbeR20.scala means one is growing back.
+    val offenders = mainSources.map(_._1.toString).filter(p =>
+      p.startsWith("src/main/scala/graft/tools/") && p.matches(".*R\\d+\\.scala"))
+    assert(offenders.isEmpty,
+      s"per-round tool files (use tools/Profile instead): $offenders")
+  }
+
   test("query engines do not set session conf") {
     // Same rule, wider net: `.conf.set(` inside graft.queries would make
     // results depend on which query ran first in a shared session.

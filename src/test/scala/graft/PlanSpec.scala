@@ -16,6 +16,12 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     Registry.byName(name).run(spark, sf).queryExecution.explainString(FormattedMode)
 
+  /** The detail block of every shuffle Exchange node in a formatted plan:
+    * its `Input` attribute list (the payload it moves) and its
+    * `Arguments` line (the partitioning keys). */
+  private def shuffleExchanges(p: String): List[String] =
+    p.split("\n\n").toList.filter(_.matches("(?s)\\(\\d+\\) Exchange\\b.*"))
+
   test("filters reach the parquet scan (q02)") {
     val p = plan("q02_filter")
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), IsNotNull(l_shipdate), " +
@@ -427,14 +433,12 @@ class PlanSpec extends AnyFunSuite {
         "c36b_kn5_bucketed_merge", "c37_kn5_ref_trained",
         "c38_kn5_count_retract")) {
       val p = plan(q)
-      val exchanges = p.linesIterator
-        .filter(l => l.contains("Arguments: hashpartitioning") ||
-          l.contains("Arguments: SinglePartition")).toList
+      val exchanges = shuffleExchanges(p)
       assert(exchanges.nonEmpty, p)
-      assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-        s"$q: doc text leaks into a shuffle:\n${exchanges.mkString("\n")}")
-      assert(!exchanges.exists(_.matches(".*\\bg\\d+#\\d+.*")),
-        s"$q: gram strings leak into a shuffle:\n${exchanges.mkString("\n")}")
+      assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+        s"$q: doc text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
+      assert(!exchanges.exists(_.matches("(?s).*\\bg\\d+#\\d+.*")),
+        s"$q: gram strings leak into a shuffle:\n${exchanges.mkString("\n\n")}")
     }
     // c37's deployment path: the reference model is bounded by design, so
     // every scoring-side model join must broadcast — a SortMergeJoin
@@ -448,18 +452,27 @@ class PlanSpec extends AnyFunSuite {
     // the r19 scorer swap (c32 stays string-keyed as the equivalence
     // anchor): the trigram stream's u/v/w token columns and the doc text
     // must be consumed map-side; only 8-byte window hashes (h, x*, s*,
-    // u1..u3) and the tiny decision-layer keys (doc_id, lang) may shuffle
-    for (q <- Seq("c32b_kn_pruned_score", "c33_kn_perplexity_buckets",
-        "c34_kn_mixing_manifest")) {
-      val p = plan(q)
-      val exchanges = p.linesIterator
-        .filter(l => l.contains("Arguments: hashpartitioning") ||
-          l.contains("Arguments: SinglePartition")).toList
+    // u1..u3) and the tiny decision-layer keys (doc_id, lang) may shuffle.
+    // Every shuffle Exchange is checked on its keys AND its Input payload.
+    // c33's and c34's plans stop at the scorer's eager localCheckpoint, so
+    // the scorer is gated directly too: its own plan (model build and
+    // scoring join) and the count shuffle that feeds the checkpoint.
+    val docs = graft.engine.Tables(spark, sf, "documents")
+    val scorer = Seq(
+      "knNgramScore(docs, 3, minCount = 2)" ->
+        queries.Corpus.knNgramScore(docs, 3, minCount = 2),
+      "knGramHashCounts(docs, 3)" -> queries.Corpus.knGramHashCounts(
+        queries.Corpus.knNgramHashStream(docs, 3), 3, "PlanSpec"))
+      .map { case (k, df) => k -> df.queryExecution.explainString(FormattedMode) }
+    val rows = Seq("c32b_kn_pruned_score", "c33_kn_perplexity_buckets",
+      "c34_kn_mixing_manifest").map(q => q -> plan(q))
+    for ((q, p) <- rows ++ scorer) {
+      val exchanges = shuffleExchanges(p)
       assert(exchanges.nonEmpty, p)
-      assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-        s"$q: doc text leaks into a shuffle:\n${exchanges.mkString("\n")}")
-      assert(!exchanges.exists(_.matches(".*\\b[uvw]#\\d+.*")),
-        s"$q: token strings leak into a shuffle:\n${exchanges.mkString("\n")}")
+      assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+        s"$q: doc text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
+      assert(!exchanges.exists(_.matches("(?s).*\\b[uvw]#\\d+.*")),
+        s"$q: token strings leak into a shuffle:\n${exchanges.mkString("\n\n")}")
     }
   }
 
