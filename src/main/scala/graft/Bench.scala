@@ -99,7 +99,7 @@ object Bench {
     // the full design; dev/ioloadprobe_r17.jsonl records the I/O axis
     // validated against a deliberate dd co-load.
     import BenchGate.{Outcome, RunStamp, stampRun, isQuiet => gateQuiet, fmt2,
-      cpuMeasurable, splitFailed, minTotal, stampJson}
+      cpuMeasurable, splitFailed, minTotal, stampJson, exitCode}
     val quietCeil = math.max(1.0, cpus.toDouble / 8)
     def isQuiet(r: RunStamp): Boolean = gateQuiet(r, quietCeil)
     // min of two runs: the first run of a query pays one-off codegen/JIT
@@ -550,6 +550,13 @@ object Bench {
         java.io.FileDescriptor.out), true)
       rawOut.println(compact)
       rawOut.flush()
+    }
+    val sf1Failed = sf1Summary.map(_._4).getOrElse(Nil)
+    val code = exitCode(failed, sf1Failed)
+    if (code != 0) {
+      System.err.println(
+        s"[bench] exiting $code: failed ${(failed ++ sf1Failed).mkString(", ")}")
+      sys.exit(code)
     }
   }
 }

@@ -232,6 +232,13 @@ object BenchGate {
   def splitFailed(rs: Seq[Outcome]): (Seq[(String, Seq[RunStamp])], Seq[String]) =
     (rs.collect { case (k, Right(v)) => k -> v }, rs.collect { case (k, Left(_)) => k })
 
+  /** Bench's process exit code: 1 when any headline (`failed`) or sf1
+    * (`sf1_failed`) query threw, else 0. The JSON lines are printed first
+    * and stay the same; the exit code makes the failure loud to a caller
+    * that reads only the status. */
+  def exitCode(failed: Seq[String], sf1Failed: Seq[String]): Int =
+    if (failed.isEmpty && sf1Failed.isEmpty) 0 else 1
+
   /** Sum over queries of each query's fastest run. */
   def minTotal(rs: Seq[(String, Seq[RunStamp])]): Double =
     rs.map(_._2.map(_.sec).min).sum

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.QuerySpec
 import graft.engine.{Exact, Tables}
@@ -498,9 +498,9 @@ object Relational {
           .filter(col("o_custkey") < 50)
           .select(
             col("o_custkey"), col("o_orderkey"),
-            sum(col("o_totalprice").cast(DecimalType(38, 10)))
+            Exact.dsum(col("o_totalprice"))
               .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-              .cast(DoubleType).as("running_total"),
+              .as("running_total"),
             lag(col("o_totalprice"), 1).over(w).as("prev_price"),
             lead(col("o_totalprice"), 1).over(w).as("next_price"),
           )

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.QuerySpec
 import graft.engine.{Exact, Skew, Tables}
@@ -18,8 +18,6 @@ import graft.plans.TopK
   * subqueries/windows/sets: SURVEY.md §2.4).
   */
 object Relational4 {
-
-  private val Dec = DecimalType(38, 10)
 
   val specs: Vector[QuerySpec] = Vector(
     // Q4 shape: EXISTS-correlated order counting — plans as a left-semi join
@@ -233,7 +231,7 @@ object Relational4 {
           .select(
             col("o_custkey"), col("o_orderkey"), col("day"),
             count(lit(1)).over(w).as("n_30d"),
-            sum(col("o_totalprice").cast(Dec)).over(w).cast(DoubleType).as("spend_30d"),
+            Exact.dsum(col("o_totalprice")).over(w).as("spend_30d"),
           )
           .orderBy("o_custkey", "day", "o_orderkey")
       },

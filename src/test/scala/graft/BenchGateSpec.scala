@@ -83,6 +83,13 @@ class BenchGateSpec extends AnyFunSuite {
     assert(minTotal(timed) == 1.5)
   }
 
+  test("Bench exits non-zero when a headline or sf1 query failed") {
+    assert(exitCode(Nil, Nil) == 0)
+    assert(exitCode(Seq("q10_tpch_q1"), Nil) == 1)
+    assert(exitCode(Nil, Seq("c36b_kn5_bucketed_merge")) == 1)
+    assert(exitCode(Seq("a"), Seq("b")) == 1)
+  }
+
   test("fmt2 is locale-independent and JSON-safe") {
     // Double.toString-based rendering: always '.' decimal separator
     assert(fmt2(3.14159) == "3.14")

@@ -1,7 +1,16 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.expressions.{Cast, ConditionalExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, DeclarativeAggregate, Final,
+  Partial}
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec,
+  SortAggregateExec}
+import org.apache.spark.sql.types.DecimalType
+
+import graft.engine.ExactSum
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan quality gates — the properties that decide whether a query
@@ -66,6 +75,44 @@ class PlanSpec extends AnyFunSuite {
     df.collect()
     val p = df.queryExecution.explainString(FormattedMode)
     assert(p.contains("codegen id"), p)
+  }
+
+  test("q10 exact sums: hash aggregates in whole-stage codegen, no per-row decimal cast") {
+    val df = Registry.byName("q10_tpch_q1").run(spark, sf)
+    df.collect()
+    val root = df.queryExecution.executedPlan
+    def all(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => all(a.executedPlan)
+      case q: QueryStageExec => q +: all(q.plan)
+      case _ => p +: p.children.flatMap(all)
+    }
+    val nodes = all(root)
+    assert(!nodes.exists(n => n.isInstanceOf[ObjectHashAggregateExec] ||
+      n.isInstanceOf[SortAggregateExec]), root)
+    // the operators one codegen stage fuses: up to the next stage boundary
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: QueryStageExec | _: WholeStageCodegenExec => Nil
+      case _ => p +: p.children.flatMap(fused)
+    }
+    val inCodegen = nodes.collect { case w: WholeStageCodegenExec => fused(w.child) }
+      .flatten.collect { case h: HashAggregateExec => h }
+    val modes = inCodegen.map(_.aggregateExpressions.map(_.mode).distinct)
+    assert(modes.sortBy(_.toString) == Seq(Seq(Final), Seq(Partial)), root)
+    val partial = inCodegen.filter(_.aggregateExpressions.exists(_.mode == Partial))
+    val fns = partial.flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+    // five distinct exact sums (davg's sum is shared with dsum's) + counts
+    assert(fns.count(_.isInstanceOf[ExactSum]) == 5, fns)
+    assert(fns.forall(f => f.isInstanceOf[ExactSum] || f.isInstanceOf[Count]), fns)
+    // every expression a partial aggregate evaluates for each row: a
+    // conditional expression contributes only its always-evaluated inputs
+    def perRow(e: Expression): Seq[Expression] = e match {
+      case c: ConditionalExpression => c +: c.alwaysEvaluatedInputs.flatMap(perRow)
+      case _ => e +: e.children.flatMap(perRow)
+    }
+    val casts = fns.collect { case d: DeclarativeAggregate => d }
+      .flatMap(_.updateExpressions.flatMap(perRow))
+      .collect { case c: Cast if c.dataType.isInstanceOf[DecimalType] => c }
+    assert(casts.isEmpty, casts)
   }
 
   test("AQE coalesces shuffle partitions at runtime (q05)") {
