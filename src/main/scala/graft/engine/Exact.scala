@@ -46,8 +46,8 @@ object Exact {
   def davg(c: Column): Column =
     dsum(c) / count(c).cast(DoubleType)
 
-  /** SQL fragment builders so the Spark-side and oracle-side text stay in
-    * lockstep when queries are written as SQL strings.
+  /** Oracle-side (DuckDB) SQL fragment builders. Spark SQL text writes the
+    * same exact sum as `sum_exact(x)`, which [[GraftExtensions]] registers.
     */
   /** The DuckDB text has two extra VARCHAR hops, because Spark's double↔
     * decimal casts are string-mediated while DuckDB's are binary:
@@ -73,13 +73,6 @@ object Exact {
     */
   def sqlSumNarrow(expr: String): String =
     s"CAST(CAST(SUM(CAST(CAST(($expr) AS VARCHAR) AS DECIMAL(18,10))) AS VARCHAR) AS DOUBLE)"
-
-  /** Spark-SQL-side text of the same exact sum (for spark.sql queries).
-    * Spark's own double↔decimal casts are already string-mediated, so no
-    * VARCHAR hops are needed on this side.
-    */
-  def sqlSparkSum(expr: String): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(38,10))) AS DOUBLE)"
 
   def sqlAvg(expr: String): String =
     s"(${sqlSum(expr)} / CAST(COUNT($expr) AS DOUBLE))"

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -606,27 +605,5 @@ object ghash {
       case other => throw new IllegalArgumentException(
         s"$fn: argument ${idx + 1} must be a literal integer, got $other")
     }
-  }
-
-  /** Register fnv1a64 / minhash_sig / simhash64 for spark.sql use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("fnv1a64", es => Fnv1a64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("mix64", es => Mix64(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig",
-      es => MinHashSig(es.head, litInt(es, 1, "minhash_sig")),
-      "built-in")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("phash64", es => PHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hash",
-      es => ShingleHash(es.head, litInt(es, 1, "shingle_hash")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "gram_hash_pos",
-      es => GramHashPos(es.head, litInt(es, 1, "gram_hash_pos"),
-        if (es.length > 2) litInt(es, 2, "gram_hash_pos") else 0),
-      "built-in")
   }
 }

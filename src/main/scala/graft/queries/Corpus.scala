@@ -139,13 +139,11 @@ object Corpus {
     * scorer swap — which is the operational point of factoring the
     * pipeline this way.
     *
-    * Since r19 the scorer is the HASH-KEYED order-3 chain
-    * ([[knNgramScore]] at n=3 — guide §2.3: fused 8-byte window hashes
-    * in every exchange instead of three token strings). CorpusSpec pins
-    * `knNgramScore(_, 3)` ≡ [[knTrigramScore]] bit-for-bit on every
-    * double, so the tertile cuts — and the c33/c34 oracles, which stay
-    * string-keyed — are unchanged by construction; c32 itself keeps the
-    * string-keyed scorer as the declared equivalence anchor.
+    * The scorer is c32's: the HASH-KEYED order-3 chain
+    * ([[knNgramScore]] at n=3 — fused 8-byte window hashes in every
+    * exchange instead of three token strings). The c33/c34 oracles stay
+    * string-keyed and share c32's score CTEs, so each green row is also
+    * a hash≡string check of the scores its tertile cuts are drawn from.
     */
   def knPerplexityBuckets(docsDf: DataFrame): DataFrame =
     tertileBuckets(knNgramScore(docsDf, 3)
@@ -558,8 +556,8 @@ object Corpus {
   /** c32's score chain as DuckDB CTEs ending in
     * `sc(doc_id, n_trigrams, avg_nll)` — ONE oracle-side definition
     * shared by c32 and c33 (the t13ScoreCtes pattern). The lm expression
-    * is the SAME IEEE tree as [[knTrigramModel]]'s Column tree: fully
-    * parenthesized so both parsers build identical ASTs, the 0.75
+    * is the SAME IEEE tree as [[knNgramModel]]'s Column tree at n = 3:
+    * fully parenthesized so both parsers build identical ASTs, the 0.75
     * discount an independent literal on both sides (exactly
     * representable: 3/4), rational ratios until the final ln.
     */
@@ -1870,13 +1868,19 @@ object Corpus {
            |$tertileOracleTail""".stripMargin
       },
     ),
-    // Interpolated Kneser–Ney trigram LM perplexity — see
-    // [[knTrigramScore]] / [[knTrigramModel]] for the design narrative
-    // (continuation counts, D=0.75 absolute discount, every KN statistic
-    // a rollup of the one trigram-keyed count, size-gated scoring join).
+    // Interpolated Kneser–Ney trigram LM perplexity — the hash-keyed
+    // chain at order 3; see [[knNgramModel]] / [[knNgramScore]] for the
+    // design narrative (continuation counts, D=0.75 absolute discount,
+    // every KN statistic a rollup of the one gram-keyed count, size-gated
+    // scoring join). The oracle below is string-keyed, so the green row
+    // is also the hash≡string proof at order 3.
     QuerySpec(
       "c32_kneser_ney_score",
-      (s, d) => knTrigramScore(Tables(s, d, "documents")),
+      // n_grams → n_trigrams: the declared output schema (oracle column
+      // names), renamed through an explicit select as in c32b
+      (s, d) => knNgramScore(Tables(s, d, "documents"), 3)
+        .select(col("doc_id"), col("n_grams").as("n_trigrams"),
+          col("avg_nll")),
       Some {
         s"""WITH $knScoreCtes
            |SELECT doc_id, n_trigrams, avg_nll FROM sc
@@ -1893,10 +1897,9 @@ object Corpus {
     // knNgramHashStream: fused 8-byte window hashes, guarded rollups, no
     // gram string in any exchange; PlanSpec gates it) while this oracle
     // stays string-keyed, so the green row is ALSO the hash≡string
-    // equivalence proof at full model depth. CorpusSpec pins order-3 ==
-    // c32 (string-keyed) bit-for-bit and that order 5 separates
-    // trigram-preserving recombinations MORE than c32 (the failure mode
-    // a trigram filter cannot see).
+    // equivalence proof at full model depth. CorpusSpec pins that order
+    // 5 separates trigram-preserving recombinations MORE than order 3
+    // (the failure mode a trigram filter cannot see).
     QuerySpec(
       "c35_kn5_score",
       (s, d) => knNgramScore(Tables(s, d, "documents"), n = 5),
@@ -1945,18 +1948,17 @@ object Corpus {
            |ORDER BY doc_id""".stripMargin
       },
     ),
-    // Pruned-model KN scoring — see [[knTrigramModel]]'s minCount knob:
+    // Pruned-model KN scoring — see [[knNgramModel]]'s minCount knob:
     // trigram types below count 2 lose their max-term and score through
     // the context's backoff mass (the KenLM pruning deployment knob —
     // singleton n-grams dominate any web-scale model's row count, and
     // dropping them is how a 100 TB-corpus model fits its serving
     // budget). Statistics stay the full model's; CorpusSpec pins the
-    // NLL-monotonicity law (pruning can only raise a doc's NLL).
-    // Since r19 the engine side rides the HASH-KEYED order-3 chain
-    // (guide §2.3 — same swap as c33/c34; CorpusSpec pins the pruned
-    // variant bit-for-bit against the string-keyed knTrigramScore, and
-    // the oracle below STAYS string-keyed, so the green row is also the
-    // pruned-path hash≡string proof; c32 remains the unpruned anchor).
+    // NLL-monotonicity law (pruning can only raise a doc's NLL) and the
+    // pruned order-3 scores of a literal fixture bit-for-bit. The engine
+    // side is the HASH-KEYED order-3 chain (same as c32/c33/c34) while
+    // the oracle below is string-keyed, so the green row is also the
+    // pruned-path hash≡string proof.
     QuerySpec(
       "c32b_kn_pruned_score",
       // n_grams → n_trigrams: the declared output schema predates the
@@ -2330,115 +2332,6 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  /** c32's map-side trigram stream: the token array zipped with its own
-    * two tails (the c22 bigram move, one order up) — no window, no
-    * self-join; a doc with fewer than 3 tokens yields empty slices and
-    * drops out at the explode. Unfiltered split (the repo's token
-    * convention, Corpus.scala c13/c22).
-    */
-  private[graft] def knTrigramStream(docs: DataFrame): DataFrame = {
-    val ts = split(col("text"), " ")
-    val n2 = greatest(size(ts) - 2, lit(0))
-    docs.select(col("doc_id"),
-        explode(zip_with(
-          zip_with(slice(ts, lit(1), n2), slice(ts, lit(2), n2),
-            (a, b) => struct(a.as("u"), b.as("v"))),
-          slice(ts, lit(3), n2),
-          (p, c) => struct(p.getField("u").as("u"),
-            p.getField("v").as("v"), c.as("w")))).as("t"))
-      .select(col("doc_id"), col("t.u").as("u"), col("t.v").as("v"),
-        col("t.w").as("w"))
-  }
-
-  /** Interpolated Kneser–Ney trigram probabilities from the trigram TYPE
-    * table `tc(u, v, w, c3)` — every KN statistic is a rollup of `tc`
-    * (dictionary-sized), never a second corpus pass:
-    *
-    *   p(w|u,v) = (c(uvw) − D)/c(uv·) + D·N1+(uv·)/c(uv·) · p(w|v)
-    *   p(w|v)   = (N1+(·vw) − D)/N1+(·v·) + D·N1+(v·)/N1+(·v·) · p_cont(w)
-    *   p_cont(w) = N1+(·w) / N1+(··)
-    *
-    * with absolute discount D = 0.75 (the Chen–Goodman default) at both
-    * orders. The continuation counts are the KN signature: a word's
-    * lower-order mass is how many DISTINCT contexts it follows, not how
-    * often it occurs — "Francisco" is frequent but follows only "San",
-    * so its backoff mass stays small where a raw-frequency backoff (c22's
-    * JM unigram floor) overrates it. Trained on the corpus being scored
-    * (the c13/c22 closed-vocabulary convention), every scored trigram has
-    * c3 ≥ 1 and every backoff count ≥ 1, so all three terms are strictly
-    * positive and no max(·,0)/OOV path is needed; each order sums to
-    * exactly 1 over the continuation vocabulary (CorpusSpec pins it).
-    * All arithmetic is the same IEEE expression tree as the oracle SQL —
-    * count ratios and the discount are rational until the final ln.
-    */
-  private[graft] def knTrigramModel(tc: DataFrame,
-      minCount: Int = 1): DataFrame = {
-    val D = 0.75
-    val ctx = tc.groupBy("u", "v")
-      .agg(sum(col("c3")).as("cuv"), count(lit(1)).as("tuv"))
-    val vw = tc.groupBy("v", "w").agg(count(lit(1)).as("nvw"))
-      .localCheckpoint(true)
-    val vctx = vw.groupBy("v")
-      .agg(sum(col("nvw")).as("nv"), count(lit(1)).as("tv"))
-    val wc = vw.groupBy("w").agg(count(lit(1)).as("nw"))
-    val tot = broadcast(vw.agg(count(lit(1)).as("nb")))
-    val p1 = col("nw").cast(DoubleType) / col("nb").cast(DoubleType)
-    val p2 = (col("nvw").cast(DoubleType) - lit(D)) /
-        col("nv").cast(DoubleType) +
-      lit(D) * col("tv").cast(DoubleType) / col("nv").cast(DoubleType) * p1
-    // score-time pruning (c32b, the KenLM deployment knob): a trigram
-    // type below minCount loses its max-term and scores through the
-    // context's backoff mass alone — p = D·N1+(uv·)/c(uv·)·p(w|v) —
-    // while every statistic stays the FULL model's (the shipped model
-    // drops the pruned trigram rows; the lower orders are untouched).
-    // Pruned p < full p always ((c3 − D) > 0 at c3 ≥ 1), so per-doc
-    // NLL can only rise — CorpusSpec pins that law.
-    val bo = lit(D) * col("tuv").cast(DoubleType) /
-      col("cuv").cast(DoubleType) * p2
-    val maxTerm = (col("c3").cast(DoubleType) - lit(D)) /
-      col("cuv").cast(DoubleType)
-    val p3 =
-      if (minCount <= 1) maxTerm + bo
-      else when(col("c3") >= minCount, maxTerm + bo).otherwise(bo)
-    tc.join(ctx, Seq("u", "v")).join(vw, Seq("v", "w"))
-      .join(vctx, Seq("v")).join(wc, Seq("w"))
-      .crossJoin(tot)
-      .select(col("u"), col("v"), col("w"), p3.as("p"))
-  }
-
-  /** Interpolated Kneser–Ney trigram LM perplexity scoring — the KenLM-
-    * shaped filter CCNet/RedPajama actually run, one order up from c22's
-    * JM bigram (r15 VERDICT item 2). Each doc is scored by mean NLL per
-    * trigram position; docs with < 3 tokens drop out (inner-join
-    * semantics, same contract both engines).
-    *
-    * Scale shape: trigram extraction is MAP-SIDE, the model is ONE
-    * trigram-keyed count shuffle plus dictionary-sized rollups (see
-    * [[knTrigramModel]]), and the scoring join is size-gated like
-    * c13/c22's — broadcast under `broadcastTypesMax` trigram types,
-    * shuffle hash join past it (an open web-scale trigram table is far
-    * beyond any broadcast). The per-doc sum is decimal-exact.
-    */
-  def knTrigramScore(docs: DataFrame,
-      broadcastTypesMax: Long = 4L << 20, minCount: Int = 1): DataFrame = {
-    val tg = knTrigramStream(docs)
-    val tc = tg.groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
-      .localCheckpoint(true)
-    val nTypes = tc.count()
-    val lm = knTrigramModel(tc, minCount).select(col("u"), col("v"), col("w"),
-      log(col("p")).as("logp"))
-    val joined =
-      if (nTypes <= broadcastTypesMax)
-        tg.join(broadcast(lm), Seq("u", "v", "w"))
-      else tg.join(lm, Seq("u", "v", "w"))
-    joined
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        ((lit(0.0) - Exact.dsum(col("logp"))) /
-          count(lit(1)).cast(DoubleType)).as("avg_nll"))
-      .orderBy("doc_id")
-  }
-
   /** Order-parameterized n-gram HASH stream — the d15/GramHashPos
     * discipline applied to the KN family (r17 verdict item 1: past the
     * broadcast gate the old string-keyed form shuffled the corpus-sized
@@ -2581,28 +2474,6 @@ object Corpus {
     (2 to n).map(k => s"x$k") ++ (1 to n - 1).map(k => s"s$k") ++
       (1 to n).map(k => s"u$k")
 
-  /** Interpolated Kneser–Ney at ORDER n from the HASH-KEYED n-gram TYPE
-    * table `tc` ([[knGramHashCounts]] output: `h`, sub-window hashes, `c`)
-    * — [[knTrigramModel]]'s recursion generalized (r16 item 4), re-keyed
-    * on fused 8-byte window hashes (r17 item 1) so no gram string exists
-    * anywhere in the model build: every group key and join key below is
-    * one long column, every rollup re-guarded by [[knGroupGuarded]].
-    * Every statistic of every order is still a rollup of the ONE n-gram
-    * count table, never a second corpus pass. The continuation chain:
-    * m_{n−1} (keyed by `s{n-1}`, the (n−1)-suffix hash) counts distinct
-    * first tokens per suffix type; each m_k is COUNT(*) over m_{k+1}
-    * grouped one window shorter (`s{k}`); each context table carries
-    * (SUM(m_k), COUNT(*)) grouped by `x{k}`. The top order discounts raw
-    * counts; lower orders discount continuation counts; D = 0.75
-    * (Chen–Goodman) at every order. Closed vocabulary (trained on the
-    * scored corpus), so every term is strictly positive and the
-    * probability tree needs no max(·,0)/OOV path. The Column tree keeps
-    * EXACTLY the trigram model's association, so order 3 reproduces
-    * [[knTrigramModel]] bit-for-bit (CorpusSpec pins it — which, now
-    * that knTrigramScore stays string-keyed, is also a hash-keyed ≡
-    * string-keyed equivalence proof) and the oracle SQL shares the tree
-    * shape. Output: (`h`, `p`).
-    */
   /** The order-n KN statistic tables from a guarded hash-keyed count
     * table — shared by the closed-vocab model ([[knNgramModel]]) and the
     * open-vocab reference-trained model ([[knNgramScoreOpenVocab]]).
@@ -2630,10 +2501,10 @@ object Corpus {
       val carry = ((2 to k).map(j => s"x$j") ++
         (1 until k).map(j => s"s$j") ++ (1 to k).map(j => s"u$j"))
         .filterNot(guard.toSet)
-      // checkpoint each rollup (the vw discipline in knTrigramModel):
-      // every m_k feeds BOTH the score join and the next rollup —
-      // dictionary-sized, so the checkpoint is cheap and the plan stays
-      // flat instead of re-deriving the whole chain per consumer
+      // checkpoint each rollup: every m_k feeds BOTH the score join and
+      // the next rollup — dictionary-sized, so the checkpoint is cheap
+      // and the plan stays flat instead of re-deriving the whole chain
+      // per consumer
       cur = knGroupGuarded(cur, s"s$k",
         Seq(s"m$k" -> count(lit(1))), guard, carry, s"knModel m$k")
         .localCheckpoint(true)
@@ -2651,12 +2522,49 @@ object Corpus {
     KnTables(ctxTop, conts, ctxs, tot)
   }
 
+  /** Interpolated Kneser–Ney at ORDER n from the HASH-KEYED n-gram TYPE
+    * table `tc` ([[knGramHashCounts]] output: `h`, sub-window hashes,
+    * `c`). At order 3 the interpolation reads
+    *
+    *   p(w|u,v) = (c(uvw) − D)/c(uv·) + D·N1+(uv·)/c(uv·) · p(w|v)
+    *   p(w|v)   = (N1+(·vw) − D)/N1+(·v·) + D·N1+(v·)/N1+(·v·) · p_cont(w)
+    *   p_cont(w) = N1+(·w) / N1+(··)
+    *
+    * and each further order adds one level of the middle line: the top
+    * order discounts raw counts, lower orders discount CONTINUATION
+    * counts, with absolute discount D = 0.75 (the Chen–Goodman default) at
+    * every order. The continuation counts are the KN signature: a word's
+    * lower-order mass is how many DISTINCT contexts it follows, not how
+    * often it occurs — "Francisco" is frequent but follows only "San", so
+    * its backoff mass stays small where a raw-frequency backoff (c22's JM
+    * unigram floor) overrates it.
+    *
+    * Every statistic of every order is a rollup of the ONE n-gram count
+    * table, never a second corpus pass, and no gram string exists
+    * anywhere in the model build: every group key and join key is one
+    * fused 8-byte window hash, every rollup re-guarded by
+    * [[knGroupGuarded]]. The continuation chain: m_{n−1} (keyed by
+    * `s{n-1}`, the (n−1)-suffix hash) counts distinct first tokens per
+    * suffix type; each m_k is COUNT(*) over m_{k+1} grouped one window
+    * shorter (`s{k}`); each context table carries (SUM(m_k), COUNT(*))
+    * grouped by `x{k}`.
+    *
+    * Closed vocabulary (trained on the scored corpus): every scored gram
+    * has c ≥ 1 and every backoff count ≥ 1, so every term is strictly
+    * positive and the tree needs no max(·,0)/OOV path; each order sums to
+    * exactly 1 over the continuation vocabulary (CorpusSpec pins it at
+    * order 3). The Column tree is the same IEEE expression tree as the
+    * oracle SQL — count ratios and the discount are rational until the
+    * final ln. `minCount` is the score-time pruning knob (c32b): a
+    * top-order type below it loses its max-term and scores through its
+    * context's backoff mass alone. Output: (`h`, `p`).
+    */
   private[graft] def knNgramModel(tc: DataFrame, n: Int,
       minCount: Int = 1): DataFrame = {
     val D = 0.75
     val KnTables(ctxTop, conts, ctxs, tot) = knNgramTables(tc, n)
     // the interpolated probability tree, built bottom-up with the same
-    // association as knTrigramModel's
+    // association as the oracle SQL's (knScoreCtes, knNgramScoreCtes)
     val p1 = col("m1").cast(DoubleType) / col("nb").cast(DoubleType)
     val pMid = (2 to n - 1).foldLeft(p1) { (pPrev, k) =>
       (col(s"m$k").cast(DoubleType) - lit(D)) / col(s"n$k").cast(DoubleType) +
@@ -2688,15 +2596,20 @@ object Corpus {
     joined.crossJoin(tot).select(col("h"), p.as("p"))
   }
 
-  /** Kneser–Ney LM perplexity scoring at ORDER n — c35 runs it at
-    * KenLM's (and CCNet's shipped filter's) default order 5. Same scale
-    * shape as [[knTrigramScore]]: map-side n-gram extraction, ONE
-    * count shuffle, dictionary-sized rollups, size-gated scoring join —
-    * but every key is a fused 8-byte window hash ([[knNgramHashStream]],
-    * r17 item 1), so past the broadcast gate the corpus-sized scoring
-    * join moves 16-byte rows instead of five strings per gram. Docs
-    * shorter than n tokens drop (inner-join semantics, same contract
-    * both engines).
+  /** Kneser–Ney LM perplexity scoring at ORDER n, the KenLM-shaped
+    * filter CCNet/RedPajama run: each doc is scored by mean NLL per gram
+    * position. c32, c32b, c33 and c34 run it at order 3; c35 at KenLM's
+    * (and CCNet's shipped filter's) default order 5.
+    *
+    * Scale shape: map-side n-gram extraction, ONE count shuffle,
+    * dictionary-sized rollups ([[knNgramModel]]), and a scoring join
+    * size-gated like c13/c22's — broadcast under `broadcastTypesMax` gram
+    * types, shuffle hash join past it. Every key is a fused 8-byte window
+    * hash ([[knNgramHashStream]]), so past the broadcast gate the
+    * corpus-sized scoring join moves 16-byte rows instead of n token
+    * strings per gram. The per-doc sum is decimal-exact. Docs shorter
+    * than n tokens drop (inner-join semantics, same contract both
+    * engines).
     */
   def knNgramScore(docs: DataFrame, n: Int,
       broadcastTypesMax: Long = 4L << 20, minCount: Int = 1): DataFrame = {
@@ -2881,12 +2794,7 @@ object Corpus {
     * because its stream IS the count table's source; here they differ).
     */
   def knNgramScoreOpenVocab(docs: DataFrame, n: Int, trainPred: Column,
-      broadcastTypesMax: Long = 4L << 20,
-      // probe/spec-only escape hatch: serve through the PRE-r19 join
-      // chain even beyond the broadcast gate (the old completeness
-      // path), so the chain-vs-compacted A/B stays measurable in one
-      // JVM. Defaults off; no declared query sets it.
-      serveChain: Boolean = false): DataFrame = {
+      broadcastTypesMax: Long = 4L << 20): DataFrame = {
     val D = 0.75
     val tcT = knGramHashCounts(knNgramHashStream(docs.filter(trainPred), n),
       n, "c37 train").localCheckpoint(true)
@@ -2963,22 +2871,18 @@ object Corpus {
             count(lit(1)).cast(DoubleType)).as("avg_nll"))
         .orderBy("doc_id")
     }
-    if (trainTypes <= broadcastTypesMax || serveChain) {
+    if (trainTypes <= broadcastTypesMax) {
       // DEPLOYMENT PATH (the CCNet config — bounded reference model):
       // broadcast left-join chain, one map-side pass over the corpus
-      // stream, zero shuffles of corpus data. Unchanged from r18.
-      // (With serveChain beyond the gate, gate() degrades to identity —
-      // exactly the pre-r19 completeness chain, kept A/B-able.)
-      def gate(df: DataFrame): DataFrame =
-        if (trainTypes <= broadcastTypesMax) broadcast(df) else df
+      // stream, zero shuffles of corpus data.
       val sAll = knNgramHashStream(docs, n)
       var sc = sAll
-        .join(gate(lmTop), Seq("h"), "left")
-        .join(gate(boN), Seq(s"x$n"), "left")
+        .join(broadcast(lmTop), Seq("h"), "left")
+        .join(broadcast(boN), Seq(s"x$n"), "left")
       for (k <- (n - 1) to 2 by -1)
-        sc = sc.join(gate(pks(k)), Seq(s"s$k"), "left")
-          .join(gate(bos(k)), Seq(s"x$k"), "left")
-      sc = sc.join(gate(pks(1)), Seq("s1"), "left").crossJoin(tot)
+        sc = sc.join(broadcast(pks(k)), Seq(s"s$k"), "left")
+          .join(broadcast(bos(k)), Seq(s"x$k"), "left")
+      sc = sc.join(broadcast(pks(1)), Seq("s1"), "left").crossJoin(tot)
       // collision guard: any MATCHED model row whose witnesses disagree
       // with the stream's own window hashes is a 64-bit key collision
       val clashes = Seq(

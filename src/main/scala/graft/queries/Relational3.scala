@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.engine.{Exact, Tables}
+import graft.engine.{Exact, GraftExtensions, Tables}
 
 /** Third tranche: nested/correlated subquery shapes (TPC-H Q2/Q18/Q21
   * families) — these exercise Catalyst's subquery decorrelation, which
@@ -41,12 +41,13 @@ object Relational3 {
       "q49_in_grouped",
       (s, d) => {
         Tables.registerAll(s, d)
-        s.sql(s"""SELECT o_orderkey, o_custkey, o_totalprice
-                 |FROM orders
-                 |WHERE o_orderkey IN (
-                 |  SELECT l_orderkey FROM lineitem
-                 |  GROUP BY l_orderkey HAVING ${Exact.sqlSparkSum("l_quantity")} > 250)
-                 |ORDER BY o_orderkey""".stripMargin)
+        GraftExtensions.install(s) // sum_exact
+        s.sql("""SELECT o_orderkey, o_custkey, o_totalprice
+                |FROM orders
+                |WHERE o_orderkey IN (
+                |  SELECT l_orderkey FROM lineitem
+                |  GROUP BY l_orderkey HAVING sum_exact(l_quantity) > 250)
+                |ORDER BY o_orderkey""".stripMargin)
       },
       Some(s"""SELECT o_orderkey, o_custkey, o_totalprice
               |FROM orders

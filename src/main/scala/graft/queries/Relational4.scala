@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.QuerySpec
-import graft.engine.{Exact, Skew, Tables}
+import graft.engine.{Exact, GraftExtensions, Skew, Tables}
 import graft.plans.TopK
 
 /** Round-2 widening: more TPC-H plan families (Q4/Q6/Q10/Q18/Q22 shapes,
@@ -176,12 +176,13 @@ object Relational4 {
       "q68_grouping_sets",
       (s, d) => {
         Tables.registerAll(s, d)
-        s.sql(s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-                 |  ${Exact.sqlSparkSum("l_quantity")} AS sum_qty
-                 |FROM lineitem
-                 |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-                 |ORDER BY l_returnflag ASC NULLS FIRST,
-                 |         l_linestatus ASC NULLS FIRST""".stripMargin)
+        GraftExtensions.install(s) // sum_exact
+        s.sql("""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
+                |  sum_exact(l_quantity) AS sum_qty
+                |FROM lineitem
+                |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+                |ORDER BY l_returnflag ASC NULLS FIRST,
+                |         l_linestatus ASC NULLS FIRST""".stripMargin)
       },
       Some(s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
               |  ${Exact.sqlSum("l_quantity")} AS sum_qty

@@ -27,14 +27,23 @@ object GraftColumnBridge {
     * session. `spark.sql.extensions` is static config — it only takes effect
     * on a fresh SparkContext — so this replays the extension's function and
     * strategy injections onto the live session state (registerFunctions /
-    * buildPlannerStrategies are private[sql], hence the bridge).
+    * buildPlannerStrategies are private[sql], hence the bridge). Functions
+    * and strategies the session already has are skipped, so replaying the
+    * same extension on every query run changes nothing after the first.
     */
   def applyExtensions(spark: SparkSession, ext: SparkSessionExtensions => Unit): Unit = {
     val e = new SparkSessionExtensions
     ext(e)
-    e.registerFunctions(spark.sessionState.functionRegistry)
+    val injected = new catalyst.analysis.SimpleFunctionRegistry
+    e.registerFunctions(injected)
+    val reg = spark.sessionState.functionRegistry
+    injected.listFunction().filterNot(reg.functionExists).foreach { f =>
+      reg.registerFunction(f, injected.lookupFunction(f).get,
+        injected.lookupFunctionBuilder(f).get)
+    }
+    val have = spark.experimental.extraStrategies
     spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies ++ e.buildPlannerStrategies(spark)
+      have ++ e.buildPlannerStrategies(spark).filterNot(have.contains)
   }
 
   /** Analyzed logical plan of a DataFrame (queryExecution is classic-only). */

@@ -427,11 +427,11 @@ class CorpusSpec extends AnyFunSuite {
     val corpus = Seq("a b x1", "a b x2", "a b x3", "a b a", "a b b",
       "a b x1").zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    val tc = Corpus.knTrigramStream(corpus)
-      .groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
-    val model = Corpus.knTrigramModel(tc)
-    val total = model.filter(col("u") === "a" && col("v") === "b")
-      .agg(sum(col("p"))).head.getDouble(0)
+    val tc = Corpus.knGramHashCounts(Corpus.knNgramHashStream(corpus, 3), 3,
+      "CorpusSpec")
+    val model = Corpus.knNgramModel(tc, 3)
+    // every trigram type has the context (a, b): sum p over all rows
+    val total = model.agg(sum(col("p"))).head.getDouble(0)
     assert(math.abs(total - 1.0) < 1e-12, s"Σ p(w|a,b) = $total")
     // and every probability is strictly positive (closed vocabulary —
     // no max(·,0) clamp is ever needed)
@@ -453,7 +453,7 @@ class CorpusSpec extends AnyFunSuite {
       (101L to 150L).map(i => (i, t2)) :+ probeFluent :+ probeRecomb)
       .toDF("doc_id", "text")
     def gap(scores: Map[Long, Double]): Double = scores(201L) - scores(200L)
-    val kn = Corpus.knTrigramScore(corpus).collect()
+    val kn = Corpus.knNgramScore(corpus, 3).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val bg = Corpus.bigramLmScore(corpus).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -462,19 +462,8 @@ class CorpusSpec extends AnyFunSuite {
       s"KN gap ${gap(kn)} must beat bigram gap ${gap(bg)}")
     // docs with < 3 tokens contribute no trigram positions and drop out
     val tiny = Seq((1L, "a b c"), (2L, "x y")).toDF("doc_id", "text")
-    assert(Corpus.knTrigramScore(tiny).collect().map(_.getLong(0)).toSet
+    assert(Corpus.knNgramScore(tiny, 3).collect().map(_.getLong(0)).toSet
       == Set(1L))
-  }
-
-  test("c32: broadcast and shuffle-join paths are value-identical") {
-    val viaBroadcast = Corpus.knTrigramScore(docs).collect()
-    val viaShuffle = Corpus.knTrigramScore(docs, broadcastTypesMax = 0).collect()
-    assert(viaBroadcast.length == viaShuffle.length)
-    viaBroadcast.zip(viaShuffle).foreach { case (a, b) =>
-      assert(a.getLong(0) == b.getLong(0))
-      assert(a.getLong(1) == b.getLong(1))
-      assert(a.getDouble(2) == b.getDouble(2), s"doc ${a.getLong(0)}")
-    }
   }
 
   test("c33: KN buckets keep the tertile accounting and re-rank vs c27") {
@@ -499,32 +488,36 @@ class CorpusSpec extends AnyFunSuite {
     kn.unpersist()
   }
 
-  test("c35: generic KN chain at order 3 reproduces c32 bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    // the order-parameterized model is only trustworthy if its recursion
-    // IS the trigram model's — pinned as bit-equality of every score, not
-    // approximate agreement (the two Column trees must be the same IEEE
-    // tree, which is also why the c35 oracle can share c32's shape)
-    val in = docs.select(col("doc_id"), col("text"))
-    val tri = Corpus.knTrigramScore(in).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val gen = Corpus.knNgramScore(in, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(gen == tri, "order-3 generic chain must equal knTrigramScore")
-  }
-
-  test("c32b: pruned order-3 generic chain reproduces pruned knTrigramScore bit-for-bit") {
-    import org.apache.spark.sql.functions._
-    // the r19 scorer swap: c32b/c33/c34 ride the hash-keyed generic chain
-    // while their oracles stay string-keyed — sound only if the PRUNED
-    // variant (minCount's when() branch) is also the same IEEE tree
-    val in = docs.select(col("doc_id"), col("text"))
-    val tri = Corpus.knTrigramScore(in, minCount = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val gen = Corpus.knNgramScore(in, 3, minCount = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(gen == tri,
-      "pruned order-3 generic chain must equal pruned knTrigramScore")
+  test("c32/c32b: order-3 KN scores equal fixed recorded bits, full and pruned") {
+    import spark.implicits._
+    // (doc_id, n_trigrams, raw bits of avg_nll), recorded from the former
+    // string-keyed trigram scorer (u/v/w token columns) before it was
+    // deleted: the hash-keyed chain must keep reproducing them
+    // bit-for-bit, with and without minCount = 2 pruning. Doc 1 is
+    // all repeated trigrams (pruning leaves it alone); doc 5 is one
+    // singleton trigram; doc 7 has < 3 tokens and drops out.
+    val corpus = Seq(
+      (1L, "the cat sat on the mat"),
+      (2L, "the cat sat on the rug"),
+      (3L, "a dog sat on the mat"),
+      (4L, "the dog sat on the cat sat on the mat"),
+      (5L, "the cat ran"),
+      (6L, "a dog ran off the mat"),
+      (7L, "x y")).toDF("doc_id", "text")
+    val full = Seq(
+      (1L, 4L, 0x3fd16b74ab0c588aL), (2L, 4L, 0x3fe72222599f9831L),
+      (3L, 4L, 0x3fd674eb5fd06e44L), (4L, 8L, 0x3fe04c1a06a976e3L),
+      (5L, 1L, 0x3ffd452f031beaf7L), (6L, 4L, 0x3feac3180e24ed06L))
+    val pruned = Seq(
+      (1L, 4L, 0x3fd16b74ab0c588aL), (2L, 4L, 0x3fec96d1125a344fL),
+      (3L, 4L, 0x3fdafff3f9e78111L), (4L, 8L, 0x3fe50b6587a6fa6cL),
+      (5L, 1L, 0x400294d4facfb1b2L), (6L, 4L, 0x3ff805e22621e90eL))
+    for ((minCount, want) <- Seq(1 -> full, 2 -> pruned)) {
+      val got = Corpus.knNgramScore(corpus, 3, minCount = minCount).collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
+      assert(got == want, s"minCount = $minCount")
+    }
   }
 
   test("c35: 5-gram separates trigram-preserving recombinations beyond c32") {
@@ -546,7 +539,7 @@ class CorpusSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     def gap(s: Map[Long, Double]): Double = s(201L) - s(200L)
     val k5 = scores(Corpus.knNgramScore(corpus, 5))
-    val k3 = scores(Corpus.knTrigramScore(corpus))
+    val k3 = scores(Corpus.knNgramScore(corpus, 3))
     assert(gap(k5) > 0, s"5-gram KN must penalize the splice: ${gap(k5)}")
     assert(gap(k5) > gap(k3),
       s"5-gram gap ${gap(k5)} must beat trigram gap ${gap(k3)}")
@@ -554,25 +547,39 @@ class CorpusSpec extends AnyFunSuite {
     val tiny = Seq((1L, "a b c d e"), (2L, "v w x y")).toDF("doc_id", "text")
     assert(Corpus.knNgramScore(tiny, 5).collect().map(_.getLong(0)).toSet
       == Set(1L))
-    // size-gated join: broadcast and shuffle paths are value-identical
-    val viaShuffle = scores(Corpus.knNgramScore(corpus, 5,
-      broadcastTypesMax = 0))
-    assert(k5 == viaShuffle, "broadcast/shuffle paths must agree exactly")
+    // size-gated join: broadcast and shuffle paths are value-identical,
+    // at orders 3 and 5, on this fixture and on the documents table
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val in = docs.select(col("doc_id"), col("text"))
+    for (n <- Seq(3, 5); (name, df) <- Seq("splice" -> corpus, "docs" -> in)) {
+      val viaBroadcast = rows(Corpus.knNgramScore(df, n))
+      val viaShuffle = rows(Corpus.knNgramScore(df, n, broadcastTypesMax = 0))
+      assert(viaBroadcast.nonEmpty)
+      assert(viaBroadcast == viaShuffle,
+        s"$name, order $n: broadcast/shuffle paths must agree exactly")
+    }
   }
 
-  test("c35b: order-5 pruning can only raise NLL; strict where singleton 5-grams occur") {
+  test("c32b/c35b: pruning can only raise NLL at orders 3 and 5; strict where singleton n-grams occur") {
     import org.apache.spark.sql.functions._
     val in = docs.select(col("doc_id"), col("text"))
-    val full = Corpus.knNgramScore(in, 5).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val pruned = Corpus.knNgramScore(in, 5, minCount = 2).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(full.keySet == pruned.keySet)
-    full.keys.foreach { d =>
-      assert(pruned(d) >= full(d), s"doc $d: pruning lowered NLL")
+    for (n <- Seq(3, 5)) {
+      val full = Corpus.knNgramScore(in, n).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val pruned = Corpus.knNgramScore(in, n, minCount = 2).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(full.keySet == pruned.keySet)
+      // the pruned probability of an affected gram is strictly below the
+      // full one (the max-term (c − 0.75) > 0 at c >= 1), so a doc's mean
+      // NLL can only rise — and must rise somewhere, because singleton
+      // n-gram types exist in any natural corpus
+      full.keys.foreach { d =>
+        assert(pruned(d) >= full(d), s"order $n, doc $d: pruning lowered NLL")
+      }
+      assert(full.keys.exists(d => pruned(d) > full(d)),
+        s"order $n: no doc was affected — singleton n-grams must exist")
     }
-    assert(full.keys.exists(d => pruned(d) > full(d)),
-      "no doc was affected — singleton 5-grams must exist")
   }
 
   test("c36: incremental count merge equals full recount at ANY cutoff") {
@@ -763,38 +770,13 @@ class CorpusSpec extends AnyFunSuite {
     // 10th decimal place — the bound reflects that, not IEEE noise
     assert(math.abs(open(101L)._3 - (0.0 - math.log(1.0 / (nb + 1)))) < 1e-9,
       s"all-OOV doc must sit exactly on the unk floor, got ${open(101L)._3}")
-    // broadcast, compacted-shuffle, and pre-r19 chain paths agree exactly
+    // the broadcast chain and the compacted-shuffle path agree exactly
     val viaShuffle = Corpus.knNgramScoreOpenVocab(corpus, 5,
         col("source") === "ref", broadcastTypesMax = 0).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap
-    assert(open == viaShuffle)
-    val viaChain = Corpus.knNgramScoreOpenVocab(corpus, 5,
-        col("source") === "ref", broadcastTypesMax = 0, serveChain = true)
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toMap
-    assert(viaChain == viaShuffle,
-      "compacted completeness serve diverged from the pre-r19 join chain")
-  }
-
-  test("c32b: pruning can only raise NLL; strict where singleton trigrams occur") {
-    import org.apache.spark.sql.functions._
-    val in = docs.select(col("doc_id"), col("text"))
-    val full = Corpus.knTrigramScore(in).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val pruned = Corpus.knTrigramScore(in, minCount = 2).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(full.keySet == pruned.keySet)
-    // the pruned probability of an affected trigram is strictly below
-    // the full one (the max-term (c3 − 0.75) > 0 at c3 >= 1), so a
-    // doc's mean NLL can only rise — and must rise somewhere, because
-    // singleton trigram types exist in any natural corpus
-    full.keys.foreach { d =>
-      assert(pruned(d) >= full(d), s"doc $d: pruning lowered NLL")
-    }
-    assert(full.keys.exists(d => pruned(d) > full(d)),
-      "no doc was affected — the plant lost its point")
+    assert(open == viaShuffle,
+      "compacted completeness serve diverged from the broadcast join chain")
   }
 
   test("c33: the approx-sketch scale path tracks the exact KN buckets") {

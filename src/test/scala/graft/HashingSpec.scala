@@ -26,7 +26,7 @@ class HashingSpec extends AnyFunSuite {
   }
 
   test("shingle_hash is registered for SQL and matches the column API") {
-    ghash.register(spark)
+    graft.engine.GraftExtensions.install(spark)
     val sql = spark.sql(
       "SELECT shingle_hash(array('a','b','c','d'), 3) h").head().getSeq[Long](0)
     import spark.implicits._
@@ -37,7 +37,7 @@ class HashingSpec extends AnyFunSuite {
   }
 
   test("fnv1a64 is registered for SQL") {
-    ghash.register(spark)
+    graft.engine.GraftExtensions.install(spark)
     val r = spark.sql("SELECT fnv1a64('foobar') h").head().getLong(0)
     assert(r == 0x85944171f73967e8L)
   }

@@ -51,6 +51,21 @@ class HygieneSpec extends AnyFunSuite {
       s"per-round tool files (use tools/Profile instead): $offenders")
   }
 
+  test("one list of graft SQL functions: only GraftExtensions registers them") {
+    // A second registration list drifts from the first (mix64 was once
+    // only in one, cosine_sim only in the other); sessions that need the
+    // functions replay GraftExtensions (GraftExtensions.install).
+    val offenders = mainSources.collect {
+      case (p, text)
+          if (text.contains("createOrReplaceTempFunction") ||
+            text.contains("injectFunction")) &&
+            p.toString != "src/main/scala/graft/engine/GraftExtensions.scala" =>
+        p.toString
+    }
+    assert(offenders.isEmpty,
+      s"SQL functions registered outside GraftExtensions: $offenders")
+  }
+
   test("query engines do not set session conf") {
     // Same rule, wider net: `.conf.set(` inside graft.queries would make
     // results depend on which query ran first in a shared session.

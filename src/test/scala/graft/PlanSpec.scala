@@ -115,6 +115,18 @@ class PlanSpec extends AnyFunSuite {
     assert(casts.isEmpty, casts)
   }
 
+  test("q49/q68 SQL-text exact sums run on sum_exact, with no DECIMAL(38,10) cast") {
+    for (q <- Seq("q49_in_grouped", "q68_grouping_sets")) {
+      val lp = Registry.byName(q).run(spark, sf).queryExecution.optimizedPlan
+      val exprs = lp.collectWithSubqueries { case n => n.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+      assert(exprs.exists(_.isInstanceOf[ExactSum]), s"$q: no sum_exact:\n$lp")
+      val casts = exprs.collect {
+        case c: Cast if c.dataType == DecimalType(38, 10) => c }
+      assert(casts.isEmpty, s"$q: DECIMAL(38,10) casts $casts:\n$lp")
+    }
+  }
+
   test("AQE coalesces shuffle partitions at runtime (q05)") {
     val df = Registry.byName("q05_group_agg").run(spark, sf)
     df.collect()
@@ -464,10 +476,10 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("hashpartitioning(h#"), p)
     // gram STRING column (g) must not appear in any exchange's output —
     // only its two 8-byte hashes move between stages
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
+    val exchanges = shuffleExchanges(p)
     assert(exchanges.nonEmpty, p)
-    assert(!exchanges.exists(_.matches(".*\\bg#\\d+.*")),
-      s"gram text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    assert(!exchanges.exists(_.matches("(?s).*\\bg#\\d+.*")),
+      s"gram text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
   }
 
   test("c35/c36 KN: no gram strings in any exchange — hashes only") {
@@ -496,10 +508,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("c32b/c33/c34: order-3 scorer is hash-keyed — no token strings in any exchange") {
-    // the r19 scorer swap (c32 stays string-keyed as the equivalence
-    // anchor): the trigram stream's u/v/w token columns and the doc text
-    // must be consumed map-side; only 8-byte window hashes (h, x*, s*,
-    // u1..u3) and the tiny decision-layer keys (doc_id, lang) may shuffle.
+    // every order-3 KN row (c32 included) runs the hash-keyed scorer: the
+    // doc text and any u/v/w token column must be consumed map-side; only
+    // 8-byte window hashes (h, x*, s*, u1..u3) and the tiny decision-layer
+    // keys (doc_id, lang) may shuffle.
     // Every shuffle Exchange is checked on its keys AND its Input payload.
     // c33's and c34's plans stop at the scorer's eager localCheckpoint, so
     // the scorer is gated directly too: its own plan (model build and
@@ -511,8 +523,8 @@ class PlanSpec extends AnyFunSuite {
       "knGramHashCounts(docs, 3)" -> queries.Corpus.knGramHashCounts(
         queries.Corpus.knNgramHashStream(docs, 3), 3, "PlanSpec"))
       .map { case (k, df) => k -> df.queryExecution.explainString(FormattedMode) }
-    val rows = Seq("c32b_kn_pruned_score", "c33_kn_perplexity_buckets",
-      "c34_kn_mixing_manifest").map(q => q -> plan(q))
+    val rows = Seq("c32_kneser_ney_score", "c32b_kn_pruned_score",
+      "c33_kn_perplexity_buckets", "c34_kn_mixing_manifest").map(q => q -> plan(q))
     for ((q, p) <- rows ++ scorer) {
       val exchanges = shuffleExchanges(p)
       assert(exchanges.nonEmpty, p)
@@ -534,10 +546,10 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("FullOuter"), p)
     // every exchange moves doc_id + 32-char digests (+ shard); the text
     // column is consumed by md5() inside the scan-side project
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
+    val exchanges = shuffleExchanges(p)
     assert(exchanges.nonEmpty, p)
-    assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-      s"text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+      s"text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
   }
 
   test("s08 PQ: codebooks/LUT broadcast; the encoded corpus scan never hash-shuffles") {
@@ -548,9 +560,9 @@ class PlanSpec extends AnyFunSuite {
     // sized frames (q_id keys), never the corpus embedding column
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
     assert(p.contains("TopKPerKey"), p)
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
-    assert(!exchanges.exists(_.matches(".*\\bembedding#\\d+.*")),
-      s"corpus embeddings leak into a shuffle:\n${exchanges.mkString("\n")}")
+    val exchanges = shuffleExchanges(p)
+    assert(!exchanges.exists(_.matches("(?s).*\\bembedding#\\d+.*")),
+      s"corpus embeddings leak into a shuffle:\n${exchanges.mkString("\n\n")}")
   }
 
   test("s13 kNN serve: rank<=k cut is a WindowGroupLimit, partial before the exchange") {
@@ -595,9 +607,9 @@ class PlanSpec extends AnyFunSuite {
     // byte sizes are computed scan-side; the shard rollup moves partial
     // sums (map-side combine), and no exchange carries the text column
     assert(p.contains("partial_sum") || p.contains("partial_count"), p)
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
-    assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-      s"text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    val exchanges = shuffleExchanges(p)
+    assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+      s"text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
     // only doc_id + text are ever read
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
   }
@@ -607,9 +619,9 @@ class PlanSpec extends AnyFunSuite {
     // token counts are computed scan-side (split+size inside the scan
     // stage); every exchange after the pack carries only the id triple,
     // n_tokens, and the hash key — never the text column
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
-    assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-      s"text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    val exchanges = shuffleExchanges(p)
+    assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+      s"text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string,source:string>") ||
       p.contains("ReadSchema: struct<doc_id:bigint,source:string,text:string>"), p)
   }
@@ -638,10 +650,10 @@ class PlanSpec extends AnyFunSuite {
     // boundary detection + chunk md5s are per-row expressions in the scan
     // stage; the cross-doc sharing aggregation shuffles (doc_id, 32-char
     // md5) rows only — payload text must never reach an exchange
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
+    val exchanges = shuffleExchanges(p)
     assert(exchanges.nonEmpty, p)
-    assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-      s"payload text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+      s"payload text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -652,18 +664,18 @@ class PlanSpec extends AnyFunSuite {
     // window (top-k machinery has no business in a radius query)
     assert(p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("(Window"), p)
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
-    assert(!exchanges.exists(_.matches(".*\\bembedding#\\d+.*")),
-      s"corpus embeddings leak into a shuffle:\n${exchanges.mkString("\n")}")
+    val exchanges = shuffleExchanges(p)
+    assert(!exchanges.exists(_.matches("(?s).*\\bembedding#\\d+.*")),
+      s"corpus embeddings leak into a shuffle:\n${exchanges.mkString("\n\n")}")
   }
 
   test("c19/d19 host-keyed reports broadcast the host dims; no text in shuffles") {
     val p19 = plan("d19_boilerplate_lines")
     assert(p19.contains("BroadcastExchange"), p19)
-    val exchanges = p19.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
+    val exchanges = shuffleExchanges(p19)
     assert(exchanges.nonEmpty, p19)
-    assert(!exchanges.exists(_.matches(".*\\b(text|line)#\\d+.*")),
-      s"line text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    assert(!exchanges.exists(_.matches("(?s).*\\b(text|line)#\\d+.*")),
+      s"line text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
   }
 
   test("s12 hybrid RRF: both arms shortlist via partial top-k; query vector broadcasts") {
@@ -711,10 +723,10 @@ class PlanSpec extends AnyFunSuite {
   test("m07 chunk accounting: chunk-hash agg is partial+final; no text in shuffles") {
     val p = plan("m07_chunk_dedup_ratio")
     assert(p.contains("partial_count") || p.contains("partial_min"), p)
-    val exchanges = p.linesIterator.filter(_.contains("Arguments: hashpartitioning")).toList
+    val exchanges = shuffleExchanges(p)
     assert(exchanges.nonEmpty, p)
-    assert(!exchanges.exists(_.matches(".*\\btext#\\d+.*")),
-      s"doc text leaks into a shuffle:\n${exchanges.mkString("\n")}")
+    assert(!exchanges.exists(_.matches("(?s).*\\btext#\\d+.*")),
+      s"doc text leaks into a shuffle:\n${exchanges.mkString("\n\n")}")
   }
 
   test("AQE splits a planted skewed join at runtime (OptimizeSkewedJoin fires)") {

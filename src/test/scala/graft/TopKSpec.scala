@@ -178,7 +178,7 @@ class TopKSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     org.apache.spark.sql.GraftColumnBridge.applyExtensions(
       s2, new graft.engine.GraftExtensions)
-    // functions resolve in pure SQL with no ghash.register call
+    // functions resolve in pure SQL with no per-function registration
     val h = s2.sql("SELECT fnv1a64('abc') AS h, simhash64(array('a','b')) AS s," +
       " minhash_sig(array('a','b'), 4) AS m").head()
     // published FNV-1a 64 test vector for "abc"
@@ -193,6 +193,18 @@ class TopKSpec extends AnyFunSuite {
     assert(h2.getSeq[Long](0).size == 2)
     assert(h2.getDouble(2) == 1.0)
     assert(h2.getInt(3) == 2)
+    // mix64 and the exact-sum aggregate: 0.1 + 0.2 sums to exactly the
+    // double nearest 0.3, where a double sum gives 0.30000000000000004
+    val h3 = s2.sql("SELECT mix64(1L) AS m, sum_exact(x) AS s," +
+      " CAST(SUM(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS d" +
+      " FROM VALUES (0.1D), (0.2D) AS t(x)").head()
+    assert(h3.getLong(0) == graft.functions.HashAlgos.mix64(1L))
+    assert(h3.getDouble(1) == 0.3)
+    assert(h3.getDouble(1) == h3.getDouble(2))
+    // replaying the extension leaves exactly one top-k strategy
+    org.apache.spark.sql.GraftColumnBridge.applyExtensions(
+      s2, new graft.engine.GraftExtensions)
+    assert(s2.experimental.extraStrategies.count(_ == graft.plans.TopKStrategy) == 1)
     // the planner strategy came along too: drive the custom node through it
     import s2.implicits._
     val data = s2.range(100).selectExpr("id % 5 AS k", "id")
