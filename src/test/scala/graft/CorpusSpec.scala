@@ -561,25 +561,31 @@ class CorpusSpec extends AnyFunSuite {
     }
   }
 
-  test("c32b/c35b: pruning can only raise NLL at orders 3 and 5; strict where singleton n-grams occur") {
+  // the pruned probability of an affected gram is strictly below the
+  // full one (the max-term (c − 0.75) > 0 at c >= 1), so a doc's mean NLL
+  // can only rise — and must rise somewhere, because singleton n-gram
+  // types exist in any natural corpus
+  private def assertPruningRaisesNll(n: Int): Unit = {
     import org.apache.spark.sql.functions._
     val in = docs.select(col("doc_id"), col("text"))
-    for (n <- Seq(3, 5)) {
-      val full = Corpus.knNgramScore(in, n).collect()
-        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      val pruned = Corpus.knNgramScore(in, n, minCount = 2).collect()
-        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      assert(full.keySet == pruned.keySet)
-      // the pruned probability of an affected gram is strictly below the
-      // full one (the max-term (c − 0.75) > 0 at c >= 1), so a doc's mean
-      // NLL can only rise — and must rise somewhere, because singleton
-      // n-gram types exist in any natural corpus
-      full.keys.foreach { d =>
-        assert(pruned(d) >= full(d), s"order $n, doc $d: pruning lowered NLL")
-      }
-      assert(full.keys.exists(d => pruned(d) > full(d)),
-        s"order $n: no doc was affected — singleton n-grams must exist")
+    val full = Corpus.knNgramScore(in, n).collect()
+      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val pruned = Corpus.knNgramScore(in, n, minCount = 2).collect()
+      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(full.keySet == pruned.keySet)
+    full.keys.foreach { d =>
+      assert(pruned(d) >= full(d), s"order $n, doc $d: pruning lowered NLL")
     }
+    assert(full.keys.exists(d => pruned(d) > full(d)),
+      s"order $n: no doc was affected — singleton n-grams must exist")
+  }
+
+  test("c32b: pruning can only raise NLL; strict where singleton trigrams occur") {
+    assertPruningRaisesNll(3)
+  }
+
+  test("c35b: order-5 pruning can only raise NLL; strict where singleton 5-grams occur") {
+    assertPruningRaisesNll(5)
   }
 
   test("c36: incremental count merge equals full recount at ANY cutoff") {
