@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.engine.GraftSession
 
 /** Benchmark main — times the headline queries at SPARK_GRAFT_SF_DIR and
@@ -13,25 +12,9 @@ object Bench {
     // default to every core (the driver runs local[32]); env overrides
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    // Shuffle/spill/broadcast codec (r18 VERDICT item 3, guide §2.3):
-    // A/B'd this round — two full same-box benches differing ONLY in this
-    // env var. zstd cut the KN count-shuffle bytes (652 → 462 MB probe)
-    // and won c35/c36/c37/c38 (0.65-0.91×), but LOST the suite: geomean
-    // zstd/lz4 = 1.225 over 79 sf1 rows, ext total 503 vs 402 s — the
-    // shuffle-light majority pays zstd's broadcast/shuffle CPU for
-    // nothing (t20b 1.94×, t26 1.85×). lz4 stays the default; the knob
-    // stays for clusters whose network, unlike this box's RAM-speed
-    // loopback, makes bytes the binding constraint.
-    val codec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.io.compression.codec", codec)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpusInt = scala.util.Try(cpus.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = GraftSession.build("graft-bench", cpusInt)
 
     // Per-run stage-wall window (r18 VERDICT item 7): every stamp carries
     // the slowest completed stage's wall + the stage count, so the next
@@ -46,8 +29,6 @@ object Bench {
     // and the quiet-retry machinery must not burn 5 runs per query on them
     // (the r18 c8 run died mid-ext exactly that way, exit 137, no JSON).
     // Quiet fields emit null in that mode: unmeasured, not unquiet.
-    val cpusInt = scala.util.Try(cpus.trim.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
     val machineCores = Runtime.getRuntime.availableProcessors()
     val lowCoreRun = cpusInt < machineCores / 2
     // Hard wall-clock budget so the bench always terminates and prints its
@@ -102,8 +83,10 @@ object Bench {
       cpuMeasurable, splitFailed, minTotal, stampJson, exitCode}
     val quietCeil = math.max(1.0, cpus.toDouble / 8)
     def isQuiet(r: RunStamp): Boolean = gateQuiet(r, quietCeil)
-    // min of two runs: the first run of a query pays one-off codegen/JIT
-    // costs that say nothing about per-row throughput. BOTH raw runs are
+    // min of two runs: the first run of a query pays its one-off Janino
+    // compiles and JIT warm-up, which say nothing about per-row throughput
+    // (GraftSession's codegen cache holds every class, so a later run
+    // compiles nothing; the stamps' compile fields show it). BOTH raw runs are
     // kept and emitted (`*_runs` fields) so machine interference is visible
     // in the artifact — the r8 driver bench showed phantom "regressions"
     // (q11 0.92→2.31 s) that a lone min-of-2 number can't distinguish from
@@ -172,10 +155,10 @@ object Bench {
     def runsJson(rs: Seq[(String, Seq[RunStamp])]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v.map(_.sec).mkString("[", ",", "]") }
         .mkString("{", ",", "}")
-    // stamp arrays gain three trailing elements this round (r18 VERDICT
-    // item 7): [6] = slowest completed stage's wall (s), [7] = stages run,
-    // [8] = JIT code-cache occupancy MB after the run — additive
-    // extension, prior elements unchanged.
+    // stamp arrays (layout in BenchGate.stampJson) grow only at the end:
+    // [6] = slowest completed stage's wall (s), [7] = stages run,
+    // [8] = JIT code-cache occupancy MB after the run, [9]/[10] = Janino
+    // compiles/ms and [11] = JIT ms during the run.
     def stampsJson(rs: Seq[(String, Seq[RunStamp])]): String =
       rs.map { case (k, v) =>
         "\"" + k + "\":" + v.map(stampJson).mkString("[", ",", "]")

@@ -49,17 +49,22 @@ object BenchGate {
       rssAfterMb: Long, otherCores: Double, foreignMbps: Double,
       devBusy: Double, prevForeignMbps: Double = 0.0,
       topStageSec: Double = -1.0, stages: Int = -1,
-      codeCacheMb: Long = -1L)
+      codeCacheMb: Long = -1L, janinoCompiles: Long = -1L,
+      janinoMs: Long = -1L, jitMs: Long = -1L)
 
-  /** JIT code-cache occupancy (MB) across the CodeHeap pools. A long
-    * multi-query bench JVM compiles fresh codegen classes for every plan;
-    * when the reserved code cache (JDK 17 default 240 MB) fills, the JIT
-    * flushes hot methods or stops compiling and generated code runs
-    * INTERPRETED — a silent 10-100x CPU inflation on expression-heavy
-    * queries that no /proc interference stamp can see (the r18 s17 probe
-    * measured 66/240 MB from a single query's 5 runs). Stamped per run so
-    * the artifact itself shows whether late-series queries ran against a
-    * saturated cache. */
+  /** JIT code-cache occupancy (MB) across the CodeHeap pools. Every
+    * generated class the JVM loads adds JIT-compiled code; when the
+    * reserved code cache (JDK 17 default 240 MB) fills, the JIT flushes
+    * hot methods or stops compiling and generated code runs INTERPRETED —
+    * a silent 10-100x CPU inflation on expression-heavy queries that no
+    * /proc interference stamp can see. Occupancy stays bounded only while
+    * each class compiles once per JVM: a session not built by GraftSession
+    * keeps Spark's 100-entry codegen LRU, which one headline pass
+    * overflows, and a class loader per cloned session, so it re-generates
+    * its classes on every run (the r18 s17 probe measured 66/240 MB from a
+    * single query's 5 runs). Stamped per run, beside the run's compile
+    * counts, so the artifact shows whether late-series queries ran against
+    * a saturated cache. */
   def codeCacheMb(): Long =
     try {
       import scala.jdk.CollectionConverters._
@@ -67,6 +72,24 @@ object BenchGate {
         .filter(_.getName.startsWith("CodeHeap"))
         .map(_.getUsage.getUsed).sum / 1048576
     } catch { case _: Throwable => -1L }
+
+  /** Janino compiles so far in this JVM: codegen-cache misses, one per
+    * generated class Spark had to compile. */
+  def janinoCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Milliseconds spent in Janino so far in this JVM. Call it after the
+    * JVM's first session is built: Spark sizes the codegen cache from the
+    * active session's conf when this first touches `CodeGenerator`. */
+  def janinoMs(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L
+
+  /** Milliseconds the JIT compiler threads have spent so far in this JVM
+    * (CPU on the compiler threads, not wall time on the query thread). */
+  def jitMs(): Long =
+    try java.lang.management.ManagementFactory.getCompilationMXBean
+      .getTotalCompilationTime
+    catch { case _: Throwable => -1L }
 
   /** Per-run stage-wall window (r18 VERDICT item 7): once
     * [[installStageWindow]] has added its SparkListener, [[stampRun]]
@@ -198,6 +221,7 @@ object BenchGate {
         ((io0 - gSys) - (self0 - gSelf)).toDouble / (gs * 1048576.0))
     }
     val prevMbps = math.max(lastForeignMbps, gapMbps)
+    val (jc0, jm0, jit0) = (janinoCompiles(), janinoMs(), jitMs())
     f
     val sec = (System.nanoTime() - t) / 1e9
     val (b1, s1) = cpuTicks()
@@ -218,8 +242,10 @@ object BenchGate {
     val (topStage, nStages) = stageLock.synchronized {
       stageWindow.fold((-1.0, -1)) { case (top, n) => (top / 1000.0, n) }
     }
+    val jit1 = jitMs()
     RunStamp(sec, lb, loadAvg(), rssMb(), other, fMbps, busy, prevMbps,
-      topStage, nStages, codeCacheMb())
+      topStage, nStages, codeCacheMb(), janinoCompiles() - jc0,
+      janinoMs() - jm0, if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
   }
 
   /** One query's outcome: its run stamps, or the error that ended it. */
@@ -272,11 +298,14 @@ object BenchGate {
 
   /** A stamp as the bench artifact's positional array: [load before, load
     * after, RSS MB, foreign cores, foreign MB/s, device busy, slowest stage
-    * s, stages, code cache MB]. */
+    * s, stages, code cache MB, Janino compiles, Janino ms, JIT ms]. The
+    * last three are deltas over the run: a warm run that compiled
+    * anything shows it here. */
   def stampJson(r: RunStamp): String =
     s"[${r.loadBefore},${r.loadAfter},${r.rssAfterMb},${fmt2(r.otherCores)}," +
       s"${fmt2(r.foreignMbps)},${fmt2(r.devBusy)}," +
-      s"${fmt2(r.topStageSec)},${r.stages},${r.codeCacheMb}]"
+      s"${fmt2(r.topStageSec)},${r.stages},${r.codeCacheMb}," +
+      s"${r.janinoCompiles},${r.janinoMs},${r.jitMs}]"
 
   /** Locale-independent 2-decimal formatting (r16 ADVICE: f"%.2f" uses the
     * default locale; a comma-decimal locale would emit invalid JSON). */

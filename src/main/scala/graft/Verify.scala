@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,16 +13,10 @@ object Verify {
       case None    => _ => true
     }
     // default to every core (the driver runs local[32]); env overrides
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.engine.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .flatMap(c => scala.util.Try(c.trim.toInt).toOption)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = graft.engine.GraftSession.build("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
     // queries are independent; 4 concurrent Spark jobs keep the scheduler
     // busy through the many small-output queries (fair scheduling within

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.GraftSession
 
 /** Generates an sf1-equivalent dataset by tiling sf0.1 `tiles`× with
   * key remapping that preserves every join relationship: tile i of
@@ -22,13 +23,8 @@ object GenSf1 {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "/root/repo/local/sf1"
     val tiles = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-gen-sf1",
+      extraConf = Map("spark.sql.shuffle.partitions" -> "32"))
     generate(spark, src, dst, tiles)
     spark.stop()
   }

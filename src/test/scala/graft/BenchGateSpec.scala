@@ -90,6 +90,16 @@ class BenchGateSpec extends AnyFunSuite {
     assert(exitCode(Seq("a"), Seq("b")) == 1)
   }
 
+  test("stamp array: compile counters append after the code-cache MB") {
+    val r = RunStamp(1.0, 0.5, 0.75, 1000L, 0.1, 2.0, 0.3, 0.0,
+      topStageSec = 0.4, stages = 7, codeCacheMb = 64L, janinoCompiles = 12L,
+      janinoMs = 345L, jitMs = 678L)
+    val a = stampJson(r).stripPrefix("[").stripSuffix("]").split(",").toSeq
+    // positions 0-8 predate the compile counters and must not move
+    assert(a == Seq("0.5", "0.75", "1000", "0.1", "2.0", "0.3", "0.4", "7",
+      "64", "12", "345", "678"))
+  }
+
   test("fmt2 is locale-independent and JSON-safe") {
     // Double.toString-based rendering: always '.' decimal separator
     assert(fmt2(3.14159) == "3.14")

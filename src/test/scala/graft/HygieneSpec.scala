@@ -25,8 +25,6 @@ class HygieneSpec extends AnyFunSuite {
     // EventsOps.ev() flipped AQE back on mid-sweep). Session tuning is an
     // entry-point responsibility; query paths are conf-read-only.
     val allowed = Set(
-      "src/main/scala/graft/Bench.scala",
-      "src/main/scala/graft/Verify.scala",
       "src/main/scala/graft/SparkEntry.scala",
       "src/main/scala/graft/engine/GraftSession.scala", // the definition
       "src/main/scala/graft/streaming/Streams.scala",   // streaming entry points
@@ -40,6 +38,24 @@ class HygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"query paths must not mutate session conf; tune() called from: $offenders")
+  }
+
+  test("one session factory: only GraftSession builds a SparkSession") {
+    // The codegen-cache size and the shared class loader are static confs:
+    // they reach a JVM only through the builder of its first session. A
+    // hand-rolled builder drops them and every warm pass re-compiles its
+    // classes. tools/Smoke imitates a bare external session on purpose.
+    val allowed = Set(
+      "src/main/scala/graft/engine/GraftSession.scala",
+      "src/main/scala/graft/tools/Smoke.scala",
+    )
+    val builder = "SparkSession\\s*\\.\\s*builder\\b".r
+    val offenders = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed.contains(p.toString))
+      .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.toString).toSeq
+    assert(offenders.isEmpty,
+      s"sessions must be built by GraftSession.build; builder found in: $offenders")
   }
 
   test("no per-round tools: no round-suffixed file under tools/") {

@@ -585,20 +585,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("seeded"), e.getMessage)
   }
 
-  test("streaming LSH near-dup ingest equals batch d10 semantics across micro-batches") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val docs = graft.engine.Tables(spark, sf, "documents")
-      .select(col("doc_id"), col("text"))
-    val tenth = docs.filter(col("doc_id") % 10 === 0)
-    // batch 1: exact copies (+2M); batch 2: near copies (+1M, 2 tokens cut)
-    val b1 = tenth.select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-    val b2 = tenth.select((col("doc_id") + 1000000L).as("doc_id"),
+  // The LSH ingest fixture: the sf0.001 documents seed the corpus; batch 1
+  // is exact copies of every 10th doc (+2M ids), batch 2 near copies
+  // (+1M ids, 2 tokens cut).
+  private lazy val lshDocs = graft.engine.Tables(spark, sf, "documents")
+    .select(col("doc_id"), col("text"))
+  private lazy val lshTenth = lshDocs.filter(col("doc_id") % 10 === 0)
+  private lazy val lshB1 =
+    lshTenth.select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
+  private lazy val lshB2 = lshTenth
+    .select((col("doc_id") + 1000000L).as("doc_id"),
       concat_ws(" ", slice(split(col("text"), " "), lit(1),
         size(split(col("text"), " ")) - 2)).as("text"))
+
+  /** One lshDedupIngest daemon over fresh directories: seed the corpus,
+    * stream batch 1 then batch 2, stop. Returns every emitted pair. */
+  private def lshIngest(): Set[(Long, Long)] = {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val tmp = Files.createTempDirectory("graft-lsh-ingest")
     val corpusDir = s"$tmp/corpus"
-    docs.write.mode("overwrite").parquet(corpusDir)
+    lshDocs.write.mode("overwrite").parquet(corpusDir)
     val streamIn = s"$tmp/incoming"
     Files.createDirectories(Paths.get(streamIn))
     def arrive(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -618,23 +625,41 @@ class StreamingSpec extends AnyFunSuite {
         collected ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
       }).start()
     try {
-      arrive(b1, "b1")
+      arrive(lshB1, "b1")
       q.processAllAvailable()
-      arrive(b2, "b2")
+      arrive(lshB2, "b2")
       q.processAllAvailable()
-      // expected: batch d03 over the full final corpus, restricted to pairs
-      // touching a streamed doc (>= 1M id) — b1-internal pairs surface in
-      // micro-batch 1, corpus×b1 and (corpus ∪ b1)×b2 in their batches;
-      // corpus-internal pairs must never re-surface
-      val all = graft.queries.Dedup.lshJaccardPairs(
-        docs.unionByName(b1).unionByName(b2), k = 32, bands = 8, cap = 100,
-        threshold = 0.3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val expected = all.filter(p => p._1 >= 1000000L || p._2 >= 1000000L)
-      assert(collected.toSet == expected,
-        s"only-streamed=${collected.toSet -- expected} only-batch=${expected -- collected}")
-      assert(collected.nonEmpty)
     } finally q.stop()
+    collected.toSet
+  }
+
+  test("streaming LSH near-dup ingest equals batch d10 semantics across micro-batches") {
+    val collected = lshIngest()
+    // expected: batch d03 over the full final corpus, restricted to pairs
+    // touching a streamed doc (>= 1M id) — b1-internal pairs surface in
+    // micro-batch 1, corpus×b1 and (corpus ∪ b1)×b2 in their batches;
+    // corpus-internal pairs must never re-surface
+    val all = graft.queries.Dedup.lshJaccardPairs(
+      lshDocs.unionByName(lshB1).unionByName(lshB2), k = 32, bands = 8,
+      cap = 100, threshold = 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expected = all.filter(p => p._1 >= 1000000L || p._2 >= 1000000L)
+    assert(collected == expected,
+      s"only-streamed=${collected -- expected} only-batch=${expected -- collected}")
+    assert(collected.nonEmpty)
+  }
+
+  test("a second lshDedupIngest daemon over the same inputs compiles no class") {
+    // Every streaming query runs in a cloned session. With Spark's artifact
+    // isolation each clone got a fresh executor class loader, and the
+    // codegen cache is keyed by class loader, so each daemon start
+    // re-compiled the same ~35 classes (GraftSession turns isolation off).
+    val first = lshIngest()
+    val c0 = BenchGate.janinoCompiles()
+    val second = lshIngest()
+    val compiled = BenchGate.janinoCompiles() - c0
+    assert(compiled == 0, s"the second daemon compiled $compiled classes")
+    assert(second == first && second.nonEmpty)
   }
 
   test("lshDedupIngest restart from checkpoint equals the uninterrupted run") {
