@@ -78,11 +78,14 @@ object BenchGate {
   def janinoCompiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** Milliseconds spent in Janino so far in this JVM. Call it after the
-    * JVM's first session is built: Spark sizes the codegen cache from the
-    * active session's conf when this first touches `CodeGenerator`. */
+  /** Milliseconds spent in Janino so far in this JVM, or -1 before any
+    * session exists: the first touch of `CodeGenerator` sizes Spark's
+    * codegen cache from the session conf, so touching it earlier would fix
+    * the cache at Spark's default of 100 entries for the JVM's life. */
   def janinoMs(): Long =
-    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L
+    if (org.apache.spark.sql.SparkSession.getDefaultSession.isEmpty) -1L
+    else org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime / 1000000L
 
   /** Milliseconds the JIT compiler threads have spent so far in this JVM
     * (CPU on the compiler threads, not wall time on the query thread). */
@@ -242,10 +245,11 @@ object BenchGate {
     val (topStage, nStages) = stageLock.synchronized {
       stageWindow.fold((-1.0, -1)) { case (top, n) => (top / 1000.0, n) }
     }
-    val jit1 = jitMs()
+    val (jm1, jit1) = (janinoMs(), jitMs())
     RunStamp(sec, lb, loadAvg(), rssMb(), other, fMbps, busy, prevMbps,
       topStage, nStages, codeCacheMb(), janinoCompiles() - jc0,
-      janinoMs() - jm0, if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
+      if (jm0 < 0 || jm1 < 0) -1L else jm1 - jm0,
+      if (jit0 < 0 || jit1 < 0) -1L else jit1 - jit0)
   }
 
   /** One query's outcome: its run stamps, or the error that ended it. */

@@ -57,10 +57,10 @@ object GraftSession {
       // lz4 shuffle/spill codec, kept after the r19 full-bench A/B: zstd
       // cut the KN count-shuffle bytes (652 → 462 MB) but lost the suite
       // (geomean zstd/lz4 = 1.225 over 79 sf1 rows) — the shuffle-light
-      // majority pays its CPU for nothing on RAM-speed loopback. The env
-      // override stays for clusters whose network makes bytes the limit.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
+      // majority pays its CPU for nothing on RAM-speed loopback. To repeat
+      // the A/B, run Profile with `--conf spark.io.compression.codec=zstd`:
+      // `extraConf` is applied after these lines.
+      .config("spark.io.compression.codec", "lz4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * skew is known ahead of time or the join sits under further shuffles AQE
   * won't re-split.
   *
-  * Decision rule (gated by PlanSpec "AQE splits a planted skewed join" and
-  * the ScaleProbe `skewjoin` section):
+  * Decision rule (gated by PlanSpec "AQE splits a planted skewed join";
+  * split-vs-straggler wall at 1M rows is the `skewjoin` line of
+  * dev/scaleprobe_r14.jsonl):
   *  1. DEFAULT: do nothing — AQE's `OptimizeSkewedJoin` splits oversized
   *     join partitions at runtime using the actual map-output sizes. It
   *     needs no foreknowledge of which key is hot, adds zero cost when data

@@ -69,9 +69,4 @@ object Tables {
     df.createOrReplaceTempView(name)
     df
   }
-
-  /** `\dt` equivalent (reference: src/cli.rs:118-119, show_tables at
-    * src/storage/csv.rs:65-85).
-    */
-  def showTables(spark: SparkSession): DataFrame = spark.sql("SHOW TABLES")
 }

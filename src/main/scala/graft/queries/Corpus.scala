@@ -70,9 +70,9 @@ object Corpus {
     * INVERT the quality ranking the filter exists to produce (measured:
     * corr −0.37 vs the full model); the per-type form keeps an OOV
     * occurrence scoring like a typical rare token, so ranks track the
-    * full model (ScaleProbe c13 asserts corr ≥ 0.95 at a 1.5M-type
-    * vocab). The broadcast is bounded by construction (≤ topN rows) no
-    * matter how open the real vocabulary is.
+    * full model (corr 0.999 at a 1.5M-type vocab: the `c13` line of
+    * dev/scaleprobe_r14.jsonl). The broadcast is bounded by construction
+    * (≤ topN rows) no matter how open the real vocabulary is.
     */
   def unigramLmScoreTruncated(docs: DataFrame, topN: Int): DataFrame = {
     val toks = docs
@@ -201,52 +201,6 @@ object Corpus {
           .when(col("avg_nll") < col("t2.avg_nll") ||
             (col("avg_nll") === col("t2.avg_nll") &&
               col("doc_id") <= col("t2.doc_id")), "middle")
-          .otherwise("tail").as("ppl_bucket"))
-      .orderBy("doc_id")
-  }
-
-  /** c27's production-scale threshold path (the c13 full/truncated
-    * pattern): per-lang tertile CUTS from `percentile_approx` — a
-    * mergeable t-digest sketch with bounded per-group state, so no
-    * language ever buffers its full score list — then the same broadcast
-    * assignment. Buckets are approximate ONLY at the tertile boundaries
-    * (sketch error moves the cut by a few ranks); CorpusSpec pins
-    * agreement with [[perplexityBuckets]] on the shared corpus and that
-    * the head/middle/tail NLL ordering survives. This is the variant a
-    * 100 TB run deploys; the exact path is the oracle-gated contract.
-    */
-  def perplexityBucketsApprox(docsDf: DataFrame,
-      accuracy: Int = 10000): DataFrame =
-    tertileBucketsApprox(unigramLmScore(docsDf)
-      .join(docsDf.select(col("doc_id"), col("lang")), "doc_id"), accuracy)
-
-  /** c33's production-scale threshold path — the same percentile_approx
-    * tertile cuts over the c32 Kneser–Ney scores (the c27
-    * exact/approx pairing carried to the KN scorer; CorpusSpec pins
-    * agreement with the exact c33 buckets).
-    */
-  def knPerplexityBucketsApprox(docsDf: DataFrame,
-      accuracy: Int = 10000): DataFrame =
-    tertileBucketsApprox(knNgramScore(docsDf, 3)
-      .select(col("doc_id"), col("avg_nll"))
-      .join(docsDf.select(col("doc_id"), col("lang")), "doc_id"), accuracy)
-
-  /** The sketch-threshold assignment shared by the two approx paths. */
-  private def tertileBucketsApprox(scoresDf: DataFrame,
-      accuracy: Int): DataFrame = {
-    val scores = scoresDf
-      .select(col("doc_id"), col("lang"), col("avg_nll"))
-      .localCheckpoint(true)
-    val thr = scores.groupBy("lang")
-      .agg(percentile_approx(col("avg_nll"),
-        array(lit(1.0 / 3), lit(2.0 / 3)), lit(accuracy)).as("cuts"))
-      .select(col("lang"),
-        element_at(col("cuts"), 1).as("c1"),
-        element_at(col("cuts"), 2).as("c2"))
-    scores.join(broadcast(thr), "lang")
-      .select(col("doc_id"), col("lang"), col("avg_nll"),
-        when(col("avg_nll") <= col("c1"), "head")
-          .when(col("avg_nll") <= col("c2"), "middle")
           .otherwise("tail").as("ppl_bucket"))
       .orderBy("doc_id")
   }
@@ -409,18 +363,18 @@ object Corpus {
   /** Sequence packing (the c16 engine): pack documents, in deterministic
     * doc_id order, into fixed-2048-token bins, greedily by running token
     * count — a doc starts in the bin its cumulative prefix lands in.
-    * Packing is per (source, shard) where a shard is a `shardDocs`-wide
-    * doc_id range, so the prefix-sum window's per-task state is bounded
-    * by the shard width, never by a source's total volume. The width is
-    * sized so a shard's token mass dwarfs the bin size (8192 docs ≫ one
-    * 2048-token bin): each (source, shard) wastes at most one partial
-    * final bin, so sharding costs <1% fill ratio while per-source packing
-    * would put an ENTIRE source in one task (ScaleProbe c16 measures
-    * both). `shardDocs = Int.MaxValue` degenerates to per-source packing
-    * (the probe's comparison baseline only).
+    * Packing is per (source, shard) where a shard is a 8192-wide doc_id
+    * range, so the prefix-sum window's per-task state is bounded by the
+    * shard width, never by a source's total volume. The width is sized so
+    * a shard's token mass dwarfs the bin size (8192 docs ≫ one 2048-token
+    * bin): each (source, shard) wastes at most one partial final bin, so
+    * sharding costs <1% fill ratio while per-source packing would put an
+    * ENTIRE source in one task (the `c16` line of dev/scaleprobe_r14.jsonl
+    * measures both: fill 0.991 sharded vs 0.9999 per source at 1M docs).
     */
-  def sequencePack(docs: DataFrame, shardDocs: Int = 8192): DataFrame = {
+  def sequencePack(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val shardDocs = 8192
     val w = Window.partitionBy("source", "shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     docs

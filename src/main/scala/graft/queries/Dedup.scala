@@ -559,8 +559,8 @@ object Dedup {
     connectedComponentsWithRounds(pairs, maxRounds, localThreshold)._1
 
   /** As [[connectedComponents]], also returning the number of star rounds
-    * run before the fixpoint — the ScaleProbe CC section reports it so the
-    * O(log n)-rounds claim is measured, not asserted (the driver fast path
+    * run before the fixpoint, so the O(log n)-rounds claim is measured,
+    * not asserted (DedupSpec pins a chain's rounds; the driver fast path
     * reports 0 rounds).
     *
     * `localThreshold` is the broadcast-join pattern applied to CC: a graph
@@ -576,9 +576,7 @@ object Dedup {
     */
   def connectedComponentsWithRounds(
       pairs: DataFrame, maxRounds: Int = 50,
-      localThreshold: Long = 1L << 20,
-      loopStorage: Option[org.apache.spark.storage.StorageLevel] = None)
-      : (DataFrame, Int) = {
+      localThreshold: Long = 1L << 20): (DataFrame, Int) = {
     require(maxRounds > 0, "maxRounds must be positive")
     // Materialize the input ONCE before deriving anything: vertices and
     // edges below are two independent consumers, and without this the
@@ -659,18 +657,8 @@ object Dedup {
     var converged = edges.isEmpty
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      // per-round frames are narrow long pairs bounded by |edges| (and
-      // shrinking); loopStorage lets an I/O-variance-sensitive caller pin
-      // them MEMORY_ONLY — localCheckpoint's MEMORY_AND_DISK default
-      // writes every round's blocks to disk even when they'd trivially
-      // fit in memory, which is what made the checkpoint-heavy family
-      // track foreign disk traffic (r17 verdict item 6; the s17 cadence
-      // measurement is in OPTIMIZATION_r18.md)
-      val next = smallStar(largeStar(edges))
-      edges = loopStorage match {
-        case Some(lvl) => next.localCheckpoint(true, lvl)
-        case None => next.localCheckpoint(true)
-      }
+      // per-round frames are narrow long pairs bounded by |edges|, and shrink
+      edges = smallStar(largeStar(edges)).localCheckpoint(true)
       converged = violations(edges) == 0
       rounds += 1
     }
@@ -689,7 +677,7 @@ object Dedup {
     (out, rounds)
   }
 
-  /** Corpus-level line dedup, per-line verdict — the d12/ScaleProbe engine.
+  /** Corpus-level line dedup, per-line verdict — the d12 engine.
     * Segments each doc into fixed-`width`-word lines, counts every line
     * across the whole corpus keyed by its 64-bit FNV (8-byte shuffle keys,
     * map-side partial absorbs repeats, O(1) state per key: count + min
@@ -2173,9 +2161,9 @@ private[graft] object LineDedup {
     "click here to accept cookies and continue reading this page without interruption",
   )
 
-  /** Banner-planting expression — THE definition shared by the d12 spec,
-    * the p01 publish pipeline, and the 1M-doc ScaleProbe (their
-    * cross-checks are only meaningful while all three plant identically):
+  /** Banner-planting expression — THE definition shared by the d12 spec
+    * and the p01 publish pipeline (their cross-checks are only meaningful
+    * while both plant identically):
     * every 7th doc gets banner (doc_id % 3) prepended.
     */
   def plantText(docId: Column, text: Column): Column = {

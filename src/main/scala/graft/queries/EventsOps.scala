@@ -724,8 +724,7 @@ object EventsOps {
       .select(col("event_id"), col("event_type"), col("value"), col("z"))
 
   /** Cohort retention over a (user_id, day) activity frame — the e16
-    * engine, factored so the ScaleProbe consumes the SAME rollup. See the
-    * e16 QuerySpec comment for the shuffle shape.
+    * engine. See the e16 QuerySpec comment for the shuffle shape.
     */
   def cohortRetention(days: DataFrame): DataFrame = {
     // FLOOR division, not Spark's truncate-toward-zero `div`. DuckDB

@@ -76,8 +76,7 @@ object Pipeline {
     out.result()
   }
 
-  /** p11's engine — ONE definition for the contract query and the
-    * ScaleProbe section. Input needs (doc_id, text); synthesizes 50-doc
+  /** p11's engine. Input needs (doc_id, text); synthesizes 50-doc
     * containers then ingests them with [[walkContainer]]. See the p11
     * QuerySpec comment for the full design narrative.
     */
@@ -101,10 +100,10 @@ object Pipeline {
       .orderBy("rec_doc_id")
   }
 
-  /** p09's engine — ONE definition shared by the contract query and the
-    * ScaleProbe p09 section. See the p09 QuerySpec comment for the full
-    * design narrative (first-fit by prefix sum, 4096-shard packing
-    * domains, planted size inflation on every 5th shard).
+  /** p09's engine (scale runs: the `p09` lines of dev/scaleprobe_r14.jsonl).
+    * See the p09 QuerySpec comment for the full design narrative
+    * (first-fit by prefix sum, 4096-shard packing domains, planted size
+    * inflation on every 5th shard).
     */
   def compactionPlan(docs: DataFrame, shardDocs: Int = 64,
       targetBytes: Long = 65536L, domain: Int = 4096): DataFrame = {
@@ -378,8 +377,7 @@ object Pipeline {
       "p01_publish_manifest",
       (s, d) => {
         // stage 0: plant the d12 banners so the line-dedup stage has work
-        // (LineDedup.plantText: the ONE planting definition d12 and the
-        // scale probe also use)
+        // (LineDedup.plantText: the ONE planting definition d12 also uses)
         val planted = Tables(s, d, "documents")
           .select(col("doc_id"), col("source"),
             LineDedup.plantText(col("doc_id"), col("text")).as("text"))

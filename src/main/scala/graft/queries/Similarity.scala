@@ -143,9 +143,7 @@ object Similarity {
     * TopK partial aggregation's ≤(queries·shortlist) rows per task.
     */
   def pqAdcAnn(e: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int,
-      nQ: Int, shortlist: Int, topK: Int,
-      queryFilter: Option[Column] = None): DataFrame = {
-    val qSet = queryFilter.getOrElse(col("vec_id") < nQ)
+      nQ: Int, shortlist: Int, topK: Int): DataFrame = {
     val cb = pqCodebooks(e, m, subDim, ksub, iters)
     // one nested row: cb[sub] = codes, sorted by sub for positional access
     val cbRow = cb.agg(array_sort(collect_list(struct(col("sub"),
@@ -163,7 +161,7 @@ object Similarity {
     // referenced -Inf slot), so the corpus scan below does O(1)
     // positional lookups per subspace — the ADC hot loop — instead of an
     // O(ksub) filter per row.
-    val qlut = e.filter(qSet).crossJoin(broadcast(cbRow))
+    val qlut = e.filter(col("vec_id") < nQ).crossJoin(broadcast(cbRow))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         transform(col("cb"), sc =>
           transform(sequence(lit(0), lit(ksub - 1)), codeId => {
@@ -382,7 +380,7 @@ object Similarity {
     // training pattern — and FAISS's own recommendation: ~O(k) training
     // points suffice); encode/route/serve stay corpus-wide and
     // structurally identical. The oracle-gated contract trains full
-    // (trainPred = None); the scale probe times the sampled deployment.
+    // (trainPred = None); s18b runs the sampled deployment.
     val trainE = trainPred.map(e.filter).getOrElse(e)
     val (centArr, cbRow) = ivfPqQuantizers(trainE, k, ivfIters,
       m, subDim, ksub, pqIters)

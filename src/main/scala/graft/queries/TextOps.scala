@@ -1962,8 +1962,7 @@ object TextOps {
     ),
   )
 
-  /** t18's engine — ONE definition for the contract query and the
-    * ScaleProbe section. Input: (doc_id, text, lang). See the t18
+  /** t18's engine. Input: (doc_id, text, lang). See the t18
     * QuerySpec comment for the full design narrative.
     */
   def markupExtract(in: DataFrame): DataFrame = {
@@ -2021,8 +2020,8 @@ object TextOps {
     // j+1 semantics), then re-sort the kept indices to rebuild original
     // order. The r13 shape probed one array_position scan PER chunk —
     // fine at this corpus's ~40-word docs but quadratic on real 1k-word
-    // web docs (~350 chunks ≈ 6·10⁴ string-compare probes/doc; the r14
-    // long-doc ScaleProbe is what forced the rewrite). Each intermediate
+    // web docs (~350 chunks ≈ 6·10⁴ string-compare probes/doc; the
+    // `t19long` line of dev/scaleprobe_r14.jsonl). Each intermediate
     // array is materialized as a column BEFORE a lambda self-references
     // it (the r13 t19 lesson: referencing an unmaterialized transform
     // inside a lambda re-builds the whole array per probe).

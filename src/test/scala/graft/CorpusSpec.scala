@@ -397,23 +397,6 @@ class CorpusSpec extends AnyFunSuite {
     }
   }
 
-  test("c27: the approx-sketch scale path tracks the exact buckets") {
-    import org.apache.spark.sql.functions._
-    val in = docs.select(col("doc_id"), col("text"), col("lang"))
-    val exact = Corpus.perplexityBuckets(in)
-      .select(col("doc_id"), col("ppl_bucket").as("b_exact"))
-    val approx = Corpus.perplexityBucketsApprox(in)
-      .select(col("doc_id"), col("ppl_bucket").as("b_approx"))
-    val j = exact.join(approx, "doc_id").cache()
-    val n = j.count()
-    val agree = j.filter(col("b_exact") === col("b_approx")).count()
-    // sketch error only moves the tertile CUTS by a few ranks, so
-    // disagreement is confined to boundary docs
-    assert(agree.toDouble / n >= 0.95,
-      s"approx path agrees on $agree/$n docs")
-    j.unpersist()
-  }
-
   test("c32: each KN order sums to exactly 1 over the continuation vocabulary") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -783,20 +766,6 @@ class CorpusSpec extends AnyFunSuite {
       .toMap
     assert(open == viaShuffle,
       "compacted completeness serve diverged from the broadcast join chain")
-  }
-
-  test("c33: the approx-sketch scale path tracks the exact KN buckets") {
-    import org.apache.spark.sql.functions._
-    val in = docs.select(col("doc_id"), col("text"), col("lang"))
-    val exact = Corpus.knPerplexityBuckets(in)
-      .select(col("doc_id"), col("ppl_bucket").as("b_exact"))
-    val approx = Corpus.knPerplexityBucketsApprox(in)
-      .select(col("doc_id"), col("ppl_bucket").as("b_approx"))
-    val j = exact.join(approx, "doc_id").cache()
-    val n = j.count()
-    val agree = j.filter(col("b_exact") === col("b_approx")).count()
-    assert(agree.toDouble / n >= 0.95, s"approx path agrees on $agree/$n docs")
-    j.unpersist()
   }
 
   test("c34: mixing manifest partitions the bucketed docs; shares normalize per lang") {

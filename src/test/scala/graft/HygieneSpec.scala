@@ -60,9 +60,11 @@ class HygieneSpec extends AnyFunSuite {
 
   test("no per-round tools: no round-suffixed file under tools/") {
     // One profiling tool (tools/Profile) replaced a new probe file every
-    // round; a name like ProbeR20.scala means one is growing back.
+    // round; a name like ProbeR20.scala or JoinProbe.scala means one is
+    // growing back.
     val offenders = mainSources.map(_._1.toString).filter(p =>
-      p.startsWith("src/main/scala/graft/tools/") && p.matches(".*R\\d+\\.scala"))
+      p.startsWith("src/main/scala/graft/tools/") &&
+        (p.matches(".*R\\d+\\.scala") || p.matches(".*/[^/]*Probe[^/]*\\.scala")))
     assert(offenders.isEmpty,
       s"per-round tool files (use tools/Profile instead): $offenders")
   }
