@@ -789,6 +789,130 @@ object Dedup {
         .otherwise(segs).as("paras"))
   }
 
+  /** d03's near-dup pair ids of `corpus`: the input every cluster-level
+    * row below closes under [[connectedComponents]]. */
+  private def d03PairIds(corpus: DataFrame): DataFrame =
+    lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100, threshold = 0.3)
+      .select("a_id", "b_id")
+
+  /** d08's body (and v08's): one row per dup cluster, members sorted. */
+  private def dupClusters(corpus: DataFrame): DataFrame =
+    connectedComponents(d03PairIds(corpus))
+      .groupBy(col("label").as("component"))
+      .agg(count(lit(1)).as("n_docs"),
+        concat_ws(",", sort_array(collect_list(col("id")))).as("members"))
+      .orderBy("component")
+
+  /** d10's body (and v10's): `incoming` = the exact (+2M) and near (+1M,
+    * last two tokens dropped) copies of `tenth`, deduped against `docs`.
+    */
+  private def incrementalDedup(docs: DataFrame, tenth: DataFrame): DataFrame = {
+    val incoming = tenth
+      .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
+      .unionByName(tenth.select(
+        (col("doc_id") + 1000000L).as("doc_id"),
+        concat_ws(" ", slice(split(col("text"), " "), lit(1),
+          size(split(col("text"), " ")) - 2)).as("text")))
+    incrementalLshPairs(docs, incoming, k = 32, bands = 8, cap = 100,
+      threshold = 0.3)
+  }
+
+  /** d11's body (and v11's): per-lang kept counts + kept-id digest after
+    * dropping every non-canonical cluster member.
+    */
+  private def nearDupSurvivors(corpus: DataFrame): DataFrame = {
+    val losers = connectedComponents(d03PairIds(corpus))
+      .filter(col("id") =!= col("label"))
+      .select(col("id").as("drop_id"))
+    corpus.join(losers, col("doc_id") === col("drop_id"), "left_anti")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_kept"),
+        md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
+          .as("kept_digest"))
+      .orderBy("lang")
+  }
+
+  /** d20's body (and v20's): `docs` is the train side; the benchmark is
+    * every 23rd doc with its last two tokens dropped (+5M), and the rows
+    * are the train×bench near-dup pairs.
+    */
+  private def crossCorpusNearDup(docs: DataFrame): DataFrame = {
+    val bench = docs.filter(col("doc_id") % 23 === 0)
+      .select((col("doc_id") + 5000000L).as("doc_id"),
+        concat_ws(" ", slice(split(col("text"), " "), lit(1),
+          size(split(col("text"), " ")) - 2)).as("text"))
+    incrementalLshPairs(docs, bench, k = 32, bands = 8, cap = 100,
+      threshold = 0.3)
+      .filter(col("a_id") < 5000000L)
+      .select(col("a_id").as("train_id"),
+        (col("b_id") - 5000000L).as("bench_src"), col("jac"))
+      .orderBy("train_id", "bench_src")
+  }
+
+  /** d21's body (and v21b's): per-lang survivors keeping each cluster's
+    * LONGEST member (tie → smallest doc_id).
+    */
+  private def qualitySurvivors(corpus: DataFrame): DataFrame = {
+    val labels = connectedComponents(d03PairIds(corpus))
+    // checkpointed: lab is consumed twice (argmax agg + semi join),
+    // and without it the corpus text column is re-scanned for `len`
+    // on each pass — 2 full-text scans at 100 TB vs one 32-byte/row
+    // materialization
+    val lab = corpus
+      .select(col("doc_id"), col("lang"),
+        length(col("text")).cast(LongType).as("len"))
+      .join(labels, col("doc_id") === col("id"), "left_outer")
+      .select(col("doc_id"), col("lang"), col("len"),
+        coalesce(col("label"), col("doc_id")).as("comp"))
+      .localCheckpoint(true)
+    // per-cluster argmax via struct max: lexicographic (len, -id) —
+    // longest wins, ties to the smallest doc_id; an agg, not a window
+    val keep = lab.groupBy("comp")
+      .agg(max(struct(col("len"), (-col("doc_id")).as("nid"))).as("m"))
+      .select((-col("m.nid")).as("keep_id"))
+    lab.join(keep, col("doc_id") === col("keep_id"), "left_semi")
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_kept"),
+        md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
+          .as("kept_digest"))
+      .orderBy("lang")
+  }
+
+  /** d17's body (and v17's): weight 1/|cluster| per clustered doc. */
+  private def softDedupWeights(corpus: DataFrame): DataFrame = {
+    val labels = connectedComponents(d03PairIds(corpus))
+    val sizes = labels.groupBy("label")
+      .agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, "label")
+      .select(col("id").as("doc_id"), col("cluster_size"),
+        (lit(1.0) / col("cluster_size").cast(DoubleType)).as("weight"))
+      .orderBy("doc_id")
+  }
+
+  /** c21's body (and v21's): train/val/test split by hashed duplicate
+    * cluster (singletons are their own component), per-split count + md5
+    * of the sorted members.
+    */
+  private def leakageFreeSplits(corpus: DataFrame): DataFrame = {
+    val labels = connectedComponents(d03PairIds(corpus))
+    val comp = corpus.select(col("doc_id"))
+      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("label"), col("doc_id")).as("component"))
+    val bucket = pmod(shiftrightunsigned(
+      ghash.fnv1a64(concat(lit("split|"),
+        col("component").cast("string"))), 8), lit(10))
+    comp
+      .select(col("doc_id"),
+        when(bucket < 8, lit("train")).when(bucket === 8, lit("val"))
+          .otherwise(lit("test")).as("split"))
+      .groupBy("split")
+      .agg(count(lit(1)).as("n_docs"),
+        md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
+          .as("members_md5"))
+      .orderBy("split")
+  }
+
   val specs: Vector[QuerySpec] = Vector(
     // Exact dedup: digest → group → keep min id. Finds exactly the planted
     // exact copies.
@@ -843,15 +967,7 @@ object Dedup {
       "d10_dedup_incremental_lsh",
       (s, d) => {
         val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-        val tenth = docs.filter(col("doc_id") % 10 === 0)
-        val incoming = tenth
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-          .unionByName(tenth.select(
-            (col("doc_id") + 1000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), lit(1),
-              size(split(col("text"), " ")) - 2)).as("text")))
-        incrementalLshPairs(docs, incoming, k = 32, bands = 8, cap = 100,
-          threshold = 0.3)
+        incrementalDedup(docs, docs.filter(col("doc_id") % 10 === 0))
       },
       Some(lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
         newPred = Some("doc_id >= 1000000"))),
@@ -867,20 +983,7 @@ object Dedup {
     // moves except through d03's already-bounded pipeline.
     QuerySpec(
       "d11_neardup_survivors",
-      (s, d) => {
-        val corpus = plantedCorpus(s, d)
-        val pairs = lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100,
-          threshold = 0.3).select("a_id", "b_id")
-        val losers = connectedComponents(pairs)
-          .filter(col("id") =!= col("label"))
-          .select(col("id").as("drop_id"))
-        corpus.join(losers, col("doc_id") === col("drop_id"), "left_anti")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_kept"),
-            md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
-              .as("kept_digest"))
-          .orderBy("lang")
-      },
+      (s, d) => nearDupSurvivors(plantedCorpus(s, d)),
       Some(d11OracleSql(corpusCte)),
     ),
     // Cross-corpus NEAR-dup decontamination — the fuzzy half of the
@@ -899,19 +1002,8 @@ object Dedup {
     // all train ids, so a_id < 5M keeps exactly the train×bench pairs.
     QuerySpec(
       "d20_crosscorpus_neardup",
-      (s, d) => {
-        val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-        val bench = docs.filter(col("doc_id") % 23 === 0)
-          .select((col("doc_id") + 5000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), lit(1),
-              size(split(col("text"), " ")) - 2)).as("text"))
-        incrementalLshPairs(docs, bench, k = 32, bands = 8, cap = 100,
-          threshold = 0.3)
-          .filter(col("a_id") < 5000000L)
-          .select(col("a_id").as("train_id"),
-            (col("b_id") - 5000000L).as("bench_src"), col("jac"))
-          .orderBy("train_id", "bench_src")
-      },
+      (s, d) => crossCorpusNearDup(
+        Tables(s, d, "documents").select(col("doc_id"), col("text"))),
       Some(d20OracleSql(slicePred = "TRUE")),
     ),
     // QUALITY-aware survivor selection — d11 with the keeper rule real
@@ -925,34 +1017,7 @@ object Dedup {
     // through d03's bounded pipeline (length is computed in the scan).
     QuerySpec(
       "d21_quality_survivors",
-      (s, d) => {
-        val corpus = plantedCorpus(s, d)
-        val pairs = lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100,
-          threshold = 0.3).select("a_id", "b_id")
-        val labels = connectedComponents(pairs)
-        // checkpointed: lab is consumed twice (argmax agg + semi join),
-        // and without it the corpus text column is re-scanned for `len`
-        // on each pass — 2 full-text scans at 100 TB vs one 32-byte/row
-        // materialization
-        val lab = corpus
-          .select(col("doc_id"), col("lang"),
-            length(col("text")).cast(LongType).as("len"))
-          .join(labels, col("doc_id") === col("id"), "left_outer")
-          .select(col("doc_id"), col("lang"), col("len"),
-            coalesce(col("label"), col("doc_id")).as("comp"))
-          .localCheckpoint(true)
-        // per-cluster argmax via struct max: lexicographic (len, -id) —
-        // longest wins, ties to the smallest doc_id; an agg, not a window
-        val keep = lab.groupBy("comp")
-          .agg(max(struct(col("len"), (-col("doc_id")).as("nid"))).as("m"))
-          .select((-col("m.nid")).as("keep_id"))
-        lab.join(keep, col("doc_id") === col("keep_id"), "left_semi")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_kept"),
-            md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
-              .as("kept_digest"))
-          .orderBy("lang")
-      },
+      (s, d) => qualitySurvivors(plantedCorpus(s, d)),
       Some(d21OracleSql(corpusCte)),
     ),
     // Production-scale exact-Jaccard near-dup join: the SAME verification as
@@ -1065,15 +1130,7 @@ object Dedup {
     // min-label CTE.
     QuerySpec(
       "d08_dup_clusters",
-      (s, d) => {
-        val pairs = lshJaccardPairs(plantedCorpus(s, d), k = 32, bands = 8,
-          cap = 100, threshold = 0.3).select("a_id", "b_id")
-        connectedComponents(pairs)
-          .groupBy(col("label").as("component"))
-          .agg(count(lit(1)).as("n_docs"),
-            concat_ws(",", sort_array(collect_list(col("id")))).as("members"))
-          .orderBy("component")
-      },
+      (s, d) => dupClusters(plantedCorpus(s, d)),
       Some(d08OracleSql(corpusCte)),
     ),
     // Train/test contamination check — the decontamination op of an LLM
@@ -1480,17 +1537,7 @@ object Dedup {
     // aggregation-order hazard), bit-identical across engines.
     QuerySpec(
       "d17_softdedup_weights",
-      (s, d) => {
-        val pairs = lshJaccardPairs(plantedCorpus(s, d), k = 32, bands = 8,
-          cap = 100, threshold = 0.3).select("a_id", "b_id")
-        val labels = connectedComponents(pairs)
-        val sizes = labels.groupBy("label")
-          .agg(count(lit(1)).as("cluster_size"))
-        labels.join(sizes, "label")
-          .select(col("id").as("doc_id"), col("cluster_size"),
-            (lit(1.0) / col("cluster_size").cast(DoubleType)).as("weight"))
-          .orderBy("doc_id")
-      },
+      (s, d) => softDedupWeights(plantedCorpus(s, d)),
       Some(d17OracleSql(corpusCte)),
     ),
     // Domain-conditional boilerplate detection (the CCNet/C4 cleanup
@@ -1603,28 +1650,7 @@ object Dedup {
     // assignment, not just the sizes.
     QuerySpec(
       "c21_leakage_free_splits",
-      (s, d) => {
-        val corpus = plantedCorpus(s, d)
-        val pairs = lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100,
-          threshold = 0.3).select("a_id", "b_id")
-        val labels = connectedComponents(pairs)
-        val comp = corpus.select(col("doc_id"))
-          .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("label"), col("doc_id")).as("component"))
-        val bucket = pmod(shiftrightunsigned(
-          ghash.fnv1a64(concat(lit("split|"),
-            col("component").cast("string"))), 8), lit(10))
-        comp
-          .select(col("doc_id"),
-            when(bucket < 8, lit("train")).when(bucket === 8, lit("val"))
-              .otherwise(lit("test")).as("split"))
-          .groupBy("split")
-          .agg(count(lit(1)).as("n_docs"),
-            md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
-              .as("members_md5"))
-          .orderBy("split")
-      },
+      (s, d) => leakageFreeSplits(plantedCorpus(s, d)),
       Some(c21OracleSql(corpusCte)),
     ),
     // --- sf1-scale slice verification rows (r11 verdict item 3) ---
@@ -1654,41 +1680,12 @@ object Dedup {
     ),
     QuerySpec(
       "v08_dup_clusters_sf1slice",
-      (s, d) => {
-        val pairs = lshJaccardPairs(slicedPlanted(s, d), k = 32, bands = 8,
-          cap = 100, threshold = 0.3).select("a_id", "b_id")
-        connectedComponents(pairs)
-          .groupBy(col("label").as("component"))
-          .agg(count(lit(1)).as("n_docs"),
-            concat_ws(",", sort_array(collect_list(col("id")))).as("members"))
-          .orderBy("component")
-      },
+      (s, d) => dupClusters(slicedPlanted(s, d)),
       Some(d08OracleSql(slicedCorpusCte)),
     ),
     QuerySpec(
       "v21_splits_sf1slice",
-      (s, d) => {
-        val corpus = slicedPlanted(s, d)
-        val pairs = lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100,
-          threshold = 0.3).select("a_id", "b_id")
-        val labels = connectedComponents(pairs)
-        val comp = corpus.select(col("doc_id"))
-          .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("label"), col("doc_id")).as("component"))
-        val bucket = pmod(shiftrightunsigned(
-          ghash.fnv1a64(concat(lit("split|"),
-            col("component").cast("string"))), 8), lit(10))
-        comp
-          .select(col("doc_id"),
-            when(bucket < 8, lit("train")).when(bucket === 8, lit("val"))
-              .otherwise(lit("test")).as("split"))
-          .groupBy("split")
-          .agg(count(lit(1)).as("n_docs"),
-            md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
-              .as("members_md5"))
-          .orderBy("split")
-      },
+      (s, d) => leakageFreeSplits(slicedPlanted(s, d)),
       Some(c21OracleSql(slicedCorpusCte)),
     ),
     // --- r12: slice rows for the remaining dedup-family sf1 cap-skips ---
@@ -1717,16 +1714,8 @@ object Dedup {
       "v10_incremental_sf1slice",
       (s, d) => {
         val base = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-        val docs = base.filter(col("doc_id") % 20 === 0)
-        val tenth = base.filter(col("doc_id") % 200 === 0)
-        val incoming = tenth
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-          .unionByName(tenth.select(
-            (col("doc_id") + 1000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), lit(1),
-              size(split(col("text"), " ")) - 2)).as("text")))
-        incrementalLshPairs(docs, incoming, k = 32, bands = 8, cap = 100,
-          threshold = 0.3)
+        incrementalDedup(base.filter(col("doc_id") % 20 === 0),
+          base.filter(col("doc_id") % 200 === 0))
       },
       Some(lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
         newPred = Some("doc_id >= 1000000"),
@@ -1743,35 +1732,12 @@ object Dedup {
     ),
     QuerySpec(
       "v11_survivors_sf1slice",
-      (s, d) => {
-        val corpus = slicedPlanted(s, d)
-        val pairs = lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100,
-          threshold = 0.3).select("a_id", "b_id")
-        val losers = connectedComponents(pairs)
-          .filter(col("id") =!= col("label"))
-          .select(col("id").as("drop_id"))
-        corpus.join(losers, col("doc_id") === col("drop_id"), "left_anti")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_kept"),
-            md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
-              .as("kept_digest"))
-          .orderBy("lang")
-      },
+      (s, d) => nearDupSurvivors(slicedPlanted(s, d)),
       Some(d11OracleSql(slicedCorpusCte)),
     ),
     QuerySpec(
       "v17_softdedup_sf1slice",
-      (s, d) => {
-        val pairs = lshJaccardPairs(slicedPlanted(s, d), k = 32, bands = 8,
-          cap = 100, threshold = 0.3).select("a_id", "b_id")
-        val labels = connectedComponents(pairs)
-        val sizes = labels.groupBy("label")
-          .agg(count(lit(1)).as("cluster_size"))
-        labels.join(sizes, "label")
-          .select(col("id").as("doc_id"), col("cluster_size"),
-            (lit(1.0) / col("cluster_size").cast(DoubleType)).as("weight"))
-          .orderBy("doc_id")
-      },
+      (s, d) => softDedupWeights(slicedPlanted(s, d)),
       Some(d17OracleSql(slicedCorpusCte)),
     ),
     // d20 sliced: train side = 5% of raw docs, benchmark derives from the
@@ -1779,47 +1745,15 @@ object Dedup {
     // bench paraphrase still has its train twin present.
     QuerySpec(
       "v20_decontam_sf1slice",
-      (s, d) => {
-        val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
-          .filter(col("doc_id") % 20 === 0)
-        val bench = docs.filter(col("doc_id") % 23 === 0)
-          .select((col("doc_id") + 5000000L).as("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), lit(1),
-              size(split(col("text"), " ")) - 2)).as("text"))
-        incrementalLshPairs(docs, bench, k = 32, bands = 8, cap = 100,
-          threshold = 0.3)
-          .filter(col("a_id") < 5000000L)
-          .select(col("a_id").as("train_id"),
-            (col("b_id") - 5000000L).as("bench_src"), col("jac"))
-          .orderBy("train_id", "bench_src")
-      },
+      (s, d) => crossCorpusNearDup(
+        Tables(s, d, "documents").select(col("doc_id"), col("text"))
+          .filter(col("doc_id") % 20 === 0)),
       Some(d20OracleSql(slicePred = "doc_id % 20 = 0")),
     ),
     // v21 is c21's slice row; the d21 survivor-quality rule gets v21b.
     QuerySpec(
       "v21b_quality_survivors_sf1slice",
-      (s, d) => {
-        val corpus = slicedPlanted(s, d)
-        val pairs = lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100,
-          threshold = 0.3).select("a_id", "b_id")
-        val labels = connectedComponents(pairs)
-        val lab = corpus
-          .select(col("doc_id"), col("lang"),
-            length(col("text")).cast(LongType).as("len"))
-          .join(labels, col("doc_id") === col("id"), "left_outer")
-          .select(col("doc_id"), col("lang"), col("len"),
-            coalesce(col("label"), col("doc_id")).as("comp"))
-          .localCheckpoint(true)
-        val keep = lab.groupBy("comp")
-          .agg(max(struct(col("len"), (-col("doc_id")).as("nid"))).as("m"))
-          .select((-col("m.nid")).as("keep_id"))
-        lab.join(keep, col("doc_id") === col("keep_id"), "left_semi")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_kept"),
-            md5(concat_ws(",", sort_array(collect_list(col("doc_id")))))
-              .as("kept_digest"))
-          .orderBy("lang")
-      },
+      (s, d) => qualitySurvivors(slicedPlanted(s, d)),
       Some(d21OracleSql(slicedCorpusCte)),
     ),
   )

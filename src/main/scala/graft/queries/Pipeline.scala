@@ -100,15 +100,21 @@ object Pipeline {
       .orderBy("rec_doc_id")
   }
 
+  // p09's compaction contract, read by the engine and its oracle: docs
+  // per shard, the keep/merge size target in bytes, shards per packing
+  // domain
+  private val CompactShardDocs = 64
+  private val CompactTargetBytes = 65536L
+  private val CompactDomain = 4096
+
   /** p09's engine (scale runs: the `p09` lines of dev/scaleprobe_r14.jsonl).
     * See the p09 QuerySpec comment for the full design narrative
     * (first-fit by prefix sum, 4096-shard packing domains, planted size
     * inflation on every 5th shard).
     */
-  def compactionPlan(docs: DataFrame, shardDocs: Int = 64,
-      targetBytes: Long = 65536L, domain: Int = 4096): DataFrame = {
+  def compactionPlan(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (b, t, dom) = (shardDocs, targetBytes, domain)
+    val (b, t, dom) = (CompactShardDocs, CompactTargetBytes, CompactDomain)
     val shards = docs
       .select(expr(s"doc_id div $b").as("shard"),
         (octet_length(col("text")).cast(LongType) *
@@ -910,25 +916,25 @@ object Pipeline {
       "p09_compaction_plan",
       (s, d) => compactionPlan(Tables(s, d, "documents")
         .select(col("doc_id"), col("text"))),
-      Some("""WITH s AS (
-             |  SELECT doc_id // 64 AS shard, COUNT(*) AS n_docs,
+      Some(s"""WITH s AS (
+             |  SELECT doc_id // $CompactShardDocs AS shard, COUNT(*) AS n_docs,
              |    CAST(SUM(strlen(text) *
-             |      (CASE WHEN (doc_id // 64) % 5 = 0 THEN 8 ELSE 1 END))
+             |      (CASE WHEN (doc_id // $CompactShardDocs) % 5 = 0 THEN 8 ELSE 1 END))
              |      AS BIGINT) AS bytes
              |  FROM documents GROUP BY 1),
              |small AS (
              |  SELECT shard, n_docs, bytes,
-             |    COALESCE(SUM(bytes) OVER (PARTITION BY shard // 4096
+             |    COALESCE(SUM(bytes) OVER (PARTITION BY shard // $CompactDomain
              |      ORDER BY shard
              |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
              |      AS before
-             |  FROM s WHERE bytes < 65536)
+             |  FROM s WHERE bytes < $CompactTargetBytes)
              |SELECT shard, n_docs, bytes, 'keep' AS action,
              |  CAST(NULL AS BIGINT) AS grp
-             |FROM s WHERE bytes >= 65536
+             |FROM s WHERE bytes >= $CompactTargetBytes
              |UNION ALL
              |SELECT shard, n_docs, bytes, 'merge' AS action,
-             |  CAST((shard // 4096) * 4096 + before // 65536 AS BIGINT)
+             |  CAST((shard // $CompactDomain) * $CompactDomain + before // $CompactTargetBytes AS BIGINT)
              |    AS grp
              |FROM small
              |ORDER BY shard""".stripMargin),

@@ -26,6 +26,8 @@ import graft.plans.TopK
 object Similarity {
 
   private def emb(s: SparkSession, d: String): DataFrame = Tables(s, d, "embeddings")
+  private def vecs(s: SparkSession, d: String): DataFrame =
+    emb(s, d).select(col("vec_id"), col("embedding"))
 
   /** Quantizer-training sample bound for the s18b/s19b deployment-config
     * contract rows: train on vec_id < 200 — a deterministic prefix (plain
@@ -36,6 +38,20 @@ object Similarity {
     * the probes time that configuration at 200k/1M.
     */
   private[graft] val SampledTrainN = 200
+
+  // The ANN contract: one set of values read by the s04/s08/s18–s20 and
+  // c24 rows, their oracles and the streaming ingest twin
+  // (Streams.annIndexEncode), so no side can drift from another.
+  private[graft] val IvfK = 16 // coarse cells
+  private[graft] val IvfNprobe = 4 // cells probed per query
+  private[graft] val IvfIters = 3 // Lloyd rounds of the coarse quantizer
+  private[graft] val PqM = 4 // PQ subspaces
+  private[graft] val PqSubDim = 16 // dims per subspace
+  private[graft] val PqKsub = 8 // codes per subspace
+  private[graft] val PqIters = 2 // Lloyd rounds per codebook
+  private[graft] val AnnNQ = 5 // the PQ rows' queries: vec_id < AnnNQ
+  private[graft] val AnnShortlist = 32 // ADC shortlist per query
+  private[graft] val AnnTopK = 5 // neighbors per query after the rerank
 
   /** Σ aᵢ·bᵢ in double precision, sequential fold. */
   def ddot(a: Column, b: Column): Column =
@@ -60,6 +76,11 @@ object Similarity {
     s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
   }
 
+  /** DuckDB equivalent of [[ddot]]: the LUT and residual qc dot products. */
+  private def duckDot(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b),
+       |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))""".stripMargin
+
   // ---- Product quantization (s08) ----
 
   /** Σ (aᵢ−bᵢ)² in double precision, sequential fold — the PQ training
@@ -80,8 +101,9 @@ object Similarity {
   /** PQ codebooks: `m` subspaces × `ksub` codes, each subspace trained by
     * `iters` Lloyd rounds (L2 metric, decimal-exact means — the s04
     * exactness contract) over the corpus subvectors; seeds are the `ksub`
-    * lowest vec_ids' subvectors. Returns one row per subspace:
-    * `(sub, codes: array<struct<code, cvec>>)`, codes sorted by code id.
+    * lowest vec_ids' subvectors. Returns ONE broadcast-ready row
+    * `cb: array<struct<sub, codes: array<struct<code, cvec>>>>`, sorted by
+    * sub (cb[sub] is positional) and each codes array by code id.
     *
     * Scale shape: the training frame is corpus×m NARROW rows (subDim
     * doubles each, checkpointed once); each round is one broadcast join +
@@ -123,59 +145,59 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("code"), col("cvec")))).as("codes"))
         .localCheckpoint(true)
     }
-    cb
+    cb.agg(array_sort(collect_list(struct(col("sub"), col("codes")))).as("cb"))
   }
 
-  /** PQ-ADC approximate nearest neighbors: train codebooks
-    * ([[pqCodebooks]]), encode every corpus vector as `m` small code ids
-    * (the 100 TB memory story: m bytes leave the scan instead of the
-    * full float vector — 64× compression at m=4, dim=64), precompute each
-    * query's asymmetric-distance lookup table (m×ksub subvector dot
-    * products), score the whole corpus with O(m) LUT lookups per row,
-    * shortlist per query through the bounded [[TopK.perKey]] partial
-    * top-k (≤`shortlist` rows per query per map task reach the exchange
-    * — never the corpus×queries scored frame), then exact-cosine rerank
-    * the shortlist to `topK`.
-    *
-    * Everything downstream of the codebooks is shuffle-free over the
-    * corpus: encode and ADC scoring are per-row expressions against the
-    * broadcast codebook/LUT rows; the only corpus-wide exchange is the
-    * TopK partial aggregation's ≤(queries·shortlist) rows per task.
+  /** The `m` PQ codes of `vec` against the in-scope `cb` codebook row: per
+    * subspace the nearest code by L2, (dist, code) tie-break. The one
+    * encode of the flat (s08), IVF (s18/s20 and the streaming twin) and
+    * residual (s19, where `vec` is the residual) indexes.
     */
-  def pqAdcAnn(e: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int,
-      nQ: Int, shortlist: Int, topK: Int): DataFrame = {
-    val cb = pqCodebooks(e, m, subDim, ksub, iters)
-    // one nested row: cb[sub] = codes, sorted by sub for positional access
-    val cbRow = cb.agg(array_sort(collect_list(struct(col("sub"),
-      col("codes")))).as("cb"))
-    val enc = e.crossJoin(broadcast(cbRow))
-      .select(col("vec_id"),
-        transform(sequence(lit(0), lit(m - 1)), si =>
-          array_min(transform(
-            element_at(col("cb"), si + 1).getField("codes"), c =>
-              struct(l2(subVec(col("embedding"), si, subDim),
-                c.getField("cvec")).as("d"),
-                c.getField("code").as("code")))).getField("code")).as("codes"))
-    // LUT densified BY CODE ID per query (slot j = dot(q_sub, cvec of
-    // code j); a code that dropped out of the codebook leaves a never-
-    // referenced -Inf slot), so the corpus scan below does O(1)
-    // positional lookups per subspace — the ADC hot loop — instead of an
-    // O(ksub) filter per row.
-    val qlut = e.filter(col("vec_id") < nQ).crossJoin(broadcast(cbRow))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+  private def pqCodes(vec: Column, m: Int, subDim: Int): Column =
+    transform(sequence(lit(0), lit(m - 1)), si =>
+      array_min(transform(
+        element_at(col("cb"), si + 1).getField("codes"), c =>
+          struct(l2(subVec(vec, si, subDim), c.getField("cvec")).as("d"),
+            c.getField("code").as("code")))).getField("code")).as("codes")
+
+  /** The query set `(q_id, q_emb)`: the vectors with vec_id < `n`. */
+  private def annQueries(e: DataFrame, n: Int): DataFrame =
+    e.filter(col("vec_id") < n)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Per-query ADC lookup tables `(q_id, q_emb, lut)`, densified BY CODE
+    * ID (slot j = dot(q_sub, cvec of code j); a code that dropped out of
+    * the codebook leaves a never-referenced -Inf slot), so scoring does
+    * O(1) positional lookups per subspace — the ADC hot loop — instead of
+    * an O(ksub) filter per row. Built from the RAW query subvectors, also
+    * against residual codebooks (s19).
+    */
+  private def pqLut(q: DataFrame, cbRow: DataFrame, subDim: Int, ksub: Int): DataFrame =
+    q.crossJoin(broadcast(cbRow))
+      .select(col("q_id"), col("q_emb"),
         transform(col("cb"), sc =>
           transform(sequence(lit(0), lit(ksub - 1)), codeId => {
             val hit = filter(sc.getField("codes"),
               c => c.getField("code") === codeId)
             when(size(hit) > 0,
-              ddot(subVec(col("embedding"), sc.getField("sub"), subDim),
+              ddot(subVec(col("q_emb"), sc.getField("sub"), subDim),
                 element_at(hit, 1).getField("cvec")))
               .otherwise(lit(Double.NegativeInfinity))
           })).as("lut"))
-    val scored = enc.crossJoin(broadcast(qlut))
-      .filter(col("vec_id") =!= col("q_id"))
+
+  /** ADC serve over `cands(q_id, q_emb, lut, vec_id, codes)`: each score
+    * folds the candidate's m LUT lookups in subspace order from `seed`
+    * (0.0, or the residual index's per-cell `qc`), the bounded
+    * [[TopK.perKey]] partial top-k keeps ≤`shortlist` rows per query per
+    * map task (never the candidates×queries scored frame), and the
+    * shortlist gets the exact-cosine rerank to `topK`. The one serve tail
+    * of flat (s08), IVF-routed (s18/s20) and residual (s19) ADC.
+    */
+  private def adcTopK(e: DataFrame, cands: DataFrame, seed: Column, m: Int,
+      shortlist: Int, topK: Int): DataFrame = {
+    val scored = cands
       .select(col("q_id"), col("q_emb"), col("vec_id"),
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, si) =>
+        aggregate(sequence(lit(0), lit(m - 1)), seed, (acc, si) =>
           acc + element_at(element_at(col("lut"), si + 1),
             element_at(col("codes"), si + 1) + 1)).as("adc"))
     val short = TopK.perKey(scored,
@@ -191,6 +213,29 @@ object Similarity {
       .filter(col("rank") <= topK)
       .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"), col("cos"))
       .orderBy("q_id", "rank")
+  }
+
+  /** PQ-ADC approximate nearest neighbors: train codebooks
+    * ([[pqCodebooks]]), encode every corpus vector as `m` small code ids
+    * (the 100 TB memory story: m bytes leave the scan instead of the
+    * full float vector — 64× compression at m=4, dim=64), precompute each
+    * query's asymmetric-distance lookup table ([[pqLut]]), then score the
+    * whole corpus with O(m) LUT lookups per row, shortlist and rerank
+    * ([[adcTopK]]).
+    *
+    * Everything downstream of the codebooks is shuffle-free over the
+    * corpus: encode and ADC scoring are per-row expressions against the
+    * broadcast codebook/LUT rows; the only corpus-wide exchange is the
+    * TopK partial aggregation's ≤(queries·shortlist) rows per task.
+    */
+  def pqAdcAnn(e: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int,
+      nQ: Int, shortlist: Int, topK: Int): DataFrame = {
+    val cbRow = pqCodebooks(e, m, subDim, ksub, iters)
+    val enc = e.crossJoin(broadcast(cbRow))
+      .select(col("vec_id"), pqCodes(col("embedding"), m, subDim))
+    val qlut = pqLut(annQueries(e, nQ), cbRow, subDim, ksub)
+    adcTopK(e, enc.crossJoin(broadcast(qlut)).filter(col("vec_id") =!= col("q_id")),
+      lit(0.0), m, shortlist, topK)
   }
 
   // ---- IVF coarse quantizer (s04) ----
@@ -210,9 +255,10 @@ object Similarity {
         c.getField("cell").as("cell"))))
       .getField("cell")
 
-  /** Lloyd-refined IVF centroids: seeds = the k lowest vec_ids, then `iters`
-    * rounds of (per-row nearest-centroid assignment → decimal-exact mean per
-    * cell & dim). Returns ONE array row `cents: array<struct<cell,cvec>>`
+  /** Lloyd-refined IVF centroids: seeds = the k lowest vec_ids, then exactly
+    * `iters` rounds of (per-row nearest-centroid assignment → decimal-exact
+    * mean per cell & dim) — a fixed count, so the DuckDB oracle unrolls the
+    * identical steps. Returns ONE array row `cents: array<struct<cell,cvec>>`
     * ready to broadcast.
     *
     * Loop discipline is the d08 pattern: every round's centroid frame is
@@ -222,35 +268,20 @@ object Similarity {
     * ContextCleaner reclaims each round's blocks when the frame goes out of
     * scope — unlike `persist()`, nothing leaks past the computation.
     *
-    * `tol` > 0 switches to convergence mode for index-building callers: the
-    * loop stops early when the round's total assignment similarity
-    * (Σ cos(v, nearest centroid), a SINGLE driver-side scalar per round —
-    * the only thing collected) improves by less than `tol`, and THROWS if
-    * `iters` rounds pass without converging, the d08 round-cap contract.
-    * The s04 CONTRACT query uses tol=0 (exactly `iters` rounds) so the
-    * DuckDB oracle can unroll the identical fixed number of steps.
-    *
     * Means are decimal-exact ([[graft.engine.Exact.dsum]]), not `avg`:
     * order-independent, so centroids — and every downstream assignment —
     * are identical on any partitioning AND bit-reproducible by the oracle.
     */
-  def ivfCentroids(e: DataFrame, k: Int, iters: Int, tol: Double = 0.0): DataFrame = {
+  def ivfCentroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
     import graft.engine.Exact
-    def assign(centArr: DataFrame): DataFrame =
-      e.crossJoin(broadcast(centArr))
-        .select(col("vec_id"), col("embedding"),
-          nearestCell(col("cents"), col("embedding")).as("cell"),
-          col("cents"))
     var centArr = e.filter(col("vec_id") < k)
       .agg(collect_list(struct(col("vec_id").as("cell"),
         col("embedding").as("cvec"))).as("cents"))
       .localCheckpoint(true)
-    var prevScore = Double.NegativeInfinity
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      val assigned = assign(centArr)
-      centArr = assigned
+    for (_ <- 1 to iters) {
+      centArr = e.crossJoin(broadcast(centArr))
+        .select(col("embedding"),
+          nearestCell(col("cents"), col("embedding")).as("cell"))
         .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy("cell", "dim")
         .agg((Exact.dsum(col("v").cast(DoubleType)) /
@@ -260,24 +291,29 @@ object Similarity {
         .select(col("cell"), transform(col("dm"), x => x.getField("m")).as("cvec"))
         .agg(collect_list(struct(col("cell"), col("cvec"))).as("cents"))
         .localCheckpoint(true)
-      round += 1
-      if (tol > 0.0) {
-        // convergence probe: one scalar (the d08 sum-probe shape)
-        val score = assign(centArr)
-          .select(cosine(col("embedding"),
-            element_at(filter(col("cents"),
-              c => c.getField("cell") === col("cell")), 1).getField("cvec"))
-            .as("cos"))
-          .agg(Exact.dsum(col("cos")).as("s"))
-          .head().getDouble(0)
-        if (score - prevScore < tol) converged = true
-        prevScore = score
-      }
     }
-    if (tol > 0.0 && !converged)
-      throw new IllegalStateException(
-        s"IVF Lloyd did not converge within $iters rounds (last Δ vs tol=$tol)")
     centArr
+  }
+
+  /** IVF routing: each query's `nprobe` nearest cells — a per-row
+    * array_sort on (-cos, cell) over the broadcast centroids (ascending =
+    * cos DESC, cell ASC), then explode. With `qc` each probe also carries
+    * dot(q, centroid), the residual decomposition's per-cell scalar (s19);
+    * the sort never reaches it, cells being unique. Returns
+    * `(q_id, q_emb, cell[, qc])`.
+    */
+  private def probeCells(q: DataFrame, centArr: DataFrame, nprobe: Int,
+      qc: Boolean): DataFrame = {
+    val fields = (c: Column) => Seq(
+        (-cosine(col("q_emb"), c.getField("cvec"))).as("neg_cos"),
+        c.getField("cell").as("cell")) ++
+      (if (qc) Seq(ddot(col("q_emb"), c.getField("cvec")).as("qc")) else Nil)
+    q.crossJoin(broadcast(centArr))
+      .select(col("q_id"), col("q_emb"),
+        explode(slice(array_sort(transform(col("cents"), c =>
+          struct(fields(c): _*))), 1, nprobe)).as("pc"))
+      .select(col("q_id"), col("q_emb"), col("pc.*"))
+      .drop("neg_cos")
   }
 
   /** IVF ANN end-to-end: build centroids ([[ivfCentroids]]), index the
@@ -295,57 +331,20 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         nearestCell(col("cents"), col("embedding")).as("cell"))
       .localCheckpoint(true)
-    // queries probe nprobe cells: per-row top-nprobe via array_sort on
-    // (-cos, cell) — ascending sort = cos DESC, cell ASC — then explode
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = q.crossJoin(broadcast(centArr))
-      .select(col("q_id"), col("q_emb"),
-        explode(slice(array_sort(transform(col("cents"), c =>
-          struct(
-            (-cosine(col("q_emb"), c.getField("cvec"))).as("neg_cos"),
-            c.getField("cell").as("cell")))), 1, nprobe)).as("pc"))
-      .select(col("q_id"), col("q_emb"), col("pc.cell").as("cell"))
-    probes.join(index, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("embedding")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
-      .orderBy("q_id", "rank")
+    rerankTopK(probeCells(annQueries(e, 10), centArr, nprobe, qc = false)
+      .join(index, "cell")
+      .filter(col("vec_id") =!= col("q_id")), topK)
   }
 
-  /** Composed IVF-PQ ANN — the production FAISS index shape (r15 VERDICT
-    * item 4): route each query to its `nprobe` nearest IVF cells
-    * ([[ivfCentroids]], the s04 coarse quantizer), ADC-score with the PQ
-    * lookup table ([[pqCodebooks]], the s08 compressed codes) ONLY the
-    * vectors indexed in those cells, then exact-cosine rerank the
-    * shortlist. At 100 TB a query touches |corpus|·nprobe/k COMPRESSED
-    * rows (m bytes each) instead of the whole float corpus — the two
-    * operators' scale stories multiplied.
-    *
-    * Composition law (SimilaritySpec): with nprobe = k this degenerates
-    * to EXACTLY s08's flat ADC ranking — the cell routing only ever
-    * restricts the candidate set, never changes a score. Index build is
-    * ONE corpus pass computing cell + PQ codes together (both
-    * quantizers are broadcast); candidates join on `cell` (each vector
-    * lives in exactly one cell, so no candidate dedup is needed); the
-    * shortlist is the bounded TopK.perKey partial top-k.
-    */
-  /** IVF-PQ quantizer training: coarse centroids ([[ivfCentroids]]) +
-    * PQ codebooks ([[pqCodebooks]]) folded to the single broadcast-ready
-    * row the encode pass consumes. Split out so [[ivfPqAnn]] (train =
-    * encode corpus) and [[ivfPqIndexAppend]] (train frozen on the BASE,
-    * encode also the append batch) share one training definition.
+  /** IVF-PQ quantizer training: coarse centroids ([[ivfCentroids]]) + the
+    * PQ codebook row ([[pqCodebooks]]) the encode pass consumes. Split out
+    * so [[ivfPqAnn]] (train = encode corpus) and [[ivfPqIndexAppend]]
+    * (train frozen on the BASE, encode also the append batch) share one
+    * training definition.
     */
   private[graft] def ivfPqQuantizers(trainE: DataFrame, k: Int, ivfIters: Int,
-      m: Int, subDim: Int, ksub: Int, pqIters: Int): (DataFrame, DataFrame) = {
-    val centArr = ivfCentroids(trainE, k, ivfIters)
-    val cbRow = pqCodebooks(trainE, m, subDim, ksub, pqIters)
-      .agg(array_sort(collect_list(struct(col("sub"), col("codes")))).as("cb"))
-    (centArr, cbRow)
-  }
+      m: Int, subDim: Int, ksub: Int, pqIters: Int): (DataFrame, DataFrame) =
+    (ivfCentroids(trainE, k, ivfIters), pqCodebooks(trainE, m, subDim, ksub, pqIters))
 
   /** The IVF-PQ encode pass: one map-side sweep stamping each vector with
     * its coarse cell and m PQ codes against ALREADY-TRAINED quantizers.
@@ -365,13 +364,25 @@ object Similarity {
       .join(broadcast(cbRow.withColumn("_j", lit(1))), "_j")
       .select(col("vec_id"),
         nearestCell(col("cents"), col("embedding")).as("cell"),
-        transform(sequence(lit(0), lit(m - 1)), si =>
-          array_min(transform(
-            element_at(col("cb"), si + 1).getField("codes"), c =>
-              struct(l2(subVec(col("embedding"), si, subDim),
-                c.getField("cvec")).as("d"),
-                c.getField("code").as("code")))).getField("code")).as("codes"))
+        pqCodes(col("embedding"), m, subDim))
 
+  /** Composed IVF-PQ ANN — the production FAISS index shape (r15 VERDICT
+    * item 4): route each query to its `nprobe` nearest IVF cells
+    * ([[ivfCentroids]], the s04 coarse quantizer), ADC-score with the PQ
+    * lookup table ([[pqCodebooks]], the s08 compressed codes) ONLY the
+    * vectors indexed in those cells, then exact-cosine rerank the
+    * shortlist. At 100 TB a query touches |corpus|·nprobe/k COMPRESSED
+    * rows (m bytes each) instead of the whole float corpus — the two
+    * operators' scale stories multiplied.
+    *
+    * Composition law (SimilaritySpec): with nprobe = k this degenerates
+    * to EXACTLY s08's flat ADC ranking — the cell routing only ever
+    * restricts the candidate set, never changes a score. Index build is
+    * ONE corpus pass computing cell + PQ codes together (both
+    * quantizers are broadcast); candidates join on `cell` (each vector
+    * lives in exactly one cell, so no candidate dedup is needed); the
+    * shortlist is the bounded TopK.perKey partial top-k.
+    */
   def ivfPqAnn(e: DataFrame, k: Int, nprobe: Int, ivfIters: Int,
       m: Int, subDim: Int, ksub: Int, pqIters: Int,
       nQ: Int, shortlist: Int, topK: Int,
@@ -390,59 +401,27 @@ object Similarity {
     val index = ivfPqEncode(e, centArr, cbRow, m, subDim)
       .localCheckpoint(true)
     ivfPqServe(e, index, centArr, cbRow, m, subDim, ksub, nprobe,
-      nQ, shortlist, topK)
+      nQ, shortlist, topK, residual = false)
   }
 
   /** The IVF-PQ serve path over a built `index(vec_id, cell, codes)`:
-    * per-query LUT + nprobe cell routing + ADC scoring + bounded
-    * shortlist + exact-cosine rerank. Shared by [[ivfPqAnn]] and
-    * [[ivfPqIndexAppend]] — the append op must serve through the SAME
-    * path as the full build or its equivalence row proves nothing.
+    * per-query LUT ([[pqLut]]) + nprobe cell routing ([[probeCells]]) +
+    * ADC scoring, bounded shortlist and exact-cosine rerank ([[adcTopK]]).
+    * Shared by [[ivfPqAnn]], [[ivfPqIndexAppend]] and
+    * [[ivfPqResidualAnn]] — the append op must serve through the SAME
+    * path as the full build or its equivalence row proves nothing. A
+    * `residual` index seeds each score at its probe's qc.
     */
   private[graft] def ivfPqServe(e: DataFrame, index: DataFrame,
       centArr: DataFrame, cbRow: DataFrame, m: Int, subDim: Int, ksub: Int,
-      nprobe: Int, nQ: Int, shortlist: Int, topK: Int): DataFrame = {
-    val q = e.filter(col("vec_id") < nQ)
-    // s08's densified per-query LUT (slot j = dot(q_sub, cvec of code j))
-    val qlut = q.crossJoin(broadcast(cbRow))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        transform(col("cb"), sc =>
-          transform(sequence(lit(0), lit(ksub - 1)), codeId => {
-            val hit = filter(sc.getField("codes"),
-              c => c.getField("code") === codeId)
-            when(size(hit) > 0,
-              ddot(subVec(col("embedding"), sc.getField("sub"), subDim),
-                element_at(hit, 1).getField("cvec")))
-              .otherwise(lit(Double.NegativeInfinity))
-          })).as("lut"))
-    // s04's nprobe cell routing
-    val probes = q.crossJoin(broadcast(centArr))
-      .select(col("vec_id").as("q_id"),
-        explode(slice(array_sort(transform(col("cents"), c =>
-          struct(
-            (-cosine(col("embedding"), c.getField("cvec"))).as("neg_cos"),
-            c.getField("cell").as("cell")))), 1, nprobe)).as("pc"))
-      .select(col("q_id"), col("pc.cell").as("cell"))
-    val scored = probes.join(index, "cell")
+      nprobe: Int, nQ: Int, shortlist: Int, topK: Int,
+      residual: Boolean): DataFrame = {
+    val q = annQueries(e, nQ)
+    val cands = probeCells(q, centArr, nprobe, qc = residual).drop("q_emb")
+      .join(index, "cell")
       .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(qlut), "q_id")
-      .select(col("q_id"), col("q_emb"), col("vec_id"),
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0), (acc, si) =>
-          acc + element_at(element_at(col("lut"), si + 1),
-            element_at(col("codes"), si + 1) + 1)).as("adc"))
-    val short = TopK.perKey(scored,
-      keys = Seq(col("q_id")),
-      order = Seq(col("adc").desc, col("vec_id")),
-      k = shortlist)
-    e.select(col("vec_id"), col("embedding").as("n_emb"))
-      .join(broadcast(short), "vec_id")
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adc"),
-        cosine(col("q_emb"), col("n_emb")).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"), col("cos"))
-      .orderBy("q_id", "rank")
+      .join(broadcast(pqLut(q, cbRow, subDim, ksub)), "q_id")
+    adcTopK(e, cands, if (residual) col("qc") else lit(0.0), m, shortlist, topK)
   }
 
   /** Incremental ANN index maintenance (r16 VERDICT item 3): a standing
@@ -492,7 +471,7 @@ object Similarity {
         merged.join(broadcast(dl.select("vec_id")), Seq("vec_id"), "left_anti"))
       .getOrElse(merged)
     ivfPqServe(e, live, centArr, cbRow, m, subDim, ksub, nprobe,
-      nQ, shortlist, topK)
+      nQ, shortlist, topK, residual = false)
   }
 
   /** Residual IVF-PQ ANN — the ACTUAL FAISS `IVFPQ` encoding (s18 is
@@ -539,63 +518,13 @@ object Similarity {
       .localCheckpoint(true)
     val resFrame = assigned.select(col("vec_id"),
       col("residual").as("embedding"))
-    val cb = pqCodebooks(trainPred.map(resFrame.filter).getOrElse(resFrame),
+    val cbRow = pqCodebooks(trainPred.map(resFrame.filter).getOrElse(resFrame),
       m, subDim, ksub, pqIters)
-    val cbRow = cb.agg(array_sort(collect_list(struct(col("sub"),
-      col("codes")))).as("cb"))
     val index = assigned.crossJoin(broadcast(cbRow))
-      .select(col("vec_id"), col("cell"),
-        transform(sequence(lit(0), lit(m - 1)), si =>
-          array_min(transform(
-            element_at(col("cb"), si + 1).getField("codes"), c =>
-              struct(l2(subVec(col("residual"), si, subDim),
-                c.getField("cvec")).as("d"),
-                c.getField("code").as("code")))).getField("code")).as("codes"))
+      .select(col("vec_id"), col("cell"), pqCodes(col("residual"), m, subDim))
       .localCheckpoint(true)
-    val q = e.filter(col("vec_id") < nQ)
-    // LUT from RAW query subvectors vs the residual codebooks
-    val qlut = q.crossJoin(broadcast(cbRow))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        transform(col("cb"), sc =>
-          transform(sequence(lit(0), lit(ksub - 1)), codeId => {
-            val hit = filter(sc.getField("codes"),
-              c => c.getField("code") === codeId)
-            when(size(hit) > 0,
-              ddot(subVec(col("embedding"), sc.getField("sub"), subDim),
-                element_at(hit, 1).getField("cvec")))
-              .otherwise(lit(Double.NegativeInfinity))
-          })).as("lut"))
-    // probes carry qc = dot(q, centroid) — the residual decomposition's
-    // per-cell scalar
-    val probes = q.crossJoin(broadcast(centArr))
-      .select(col("vec_id").as("q_id"),
-        explode(slice(array_sort(transform(col("cents"), c =>
-          struct(
-            (-cosine(col("embedding"), c.getField("cvec"))).as("neg_cos"),
-            c.getField("cell").as("cell"),
-            ddot(col("embedding"), c.getField("cvec")).as("qc")))),
-          1, nprobe)).as("pc"))
-      .select(col("q_id"), col("pc.cell").as("cell"), col("pc.qc").as("qc"))
-    val scored = probes.join(index, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(qlut), "q_id")
-      .select(col("q_id"), col("q_emb"), col("vec_id"),
-        aggregate(sequence(lit(0), lit(m - 1)), col("qc"), (acc, si) =>
-          acc + element_at(element_at(col("lut"), si + 1),
-            element_at(col("codes"), si + 1) + 1)).as("adc"))
-    val short = TopK.perKey(scored,
-      keys = Seq(col("q_id")),
-      order = Seq(col("adc").desc, col("vec_id")),
-      k = shortlist)
-    e.select(col("vec_id"), col("embedding").as("n_emb"))
-      .join(broadcast(short), "vec_id")
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adc"),
-        cosine(col("q_emb"), col("n_emb")).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"), col("cos"))
-      .orderBy("q_id", "rank")
+    ivfPqServe(e, index, centArr, cbRow, m, subDim, ksub, nprobe,
+      nQ, shortlist, topK, residual = true)
   }
 
   // ---- DuckDB replicas of the sign-LSH pipeline (oracles for s02/s03) ----
@@ -761,18 +690,16 @@ object Similarity {
       .bitwiseXOR(pow(lit(2.0), (i2 - 1).cast(DoubleType)).cast("int"))
   }
 
-  /** Sign-LSH approximate top-k: index every corpus vector under its primary
-    * code per table; rows matching `queryPred` (a predicate over `vec_id`)
-    * are the query set and probe their primary code plus the two
-    * lowest-margin flips per table (multi-probe T=2). Exact cosine rerank
-    * over candidates only — at 100 TB the bucket join touches
-    * |corpus|·(buckets probed)/2^nBits vectors instead of all of them.
+  /** Sign-LSH candidates `(q_id, vec_id)`: index every corpus vector under
+    * its primary code per table; rows matching `queryPred` (a predicate
+    * over `vec_id`) are the query set and probe their primary code plus
+    * the two lowest-margin flips per table (multi-probe T=2).
     *
     * Scale shape: the index is a NARROW (tbl, code, vec_id) table — the
     * 64-float embeddings never enter the bucket shuffle (the r5 shape
     * carried them through every (vector, table) row, 4× vector duplication);
-    * they re-attach once per confirmed candidate, the d03 pattern. And the
-    * index is BOUNDED: one min-`cap` aggregation ([[graft.functions
+    * callers re-attach them once per confirmed candidate, the d03 pattern.
+    * And the index is BOUNDED: one min-`cap` aggregation ([[graft.functions
     * .BoundedCollect]], ≤ cap ids of state per key at every point of the
     * partial/final lifecycle) truncates each bucket to its `cap` smallest
     * vec_ids, so one degenerate code (a boilerplate-doc embedding cluster)
@@ -782,8 +709,8 @@ object Similarity {
     * it degrades gracefully, and the kept-ids rule (cap smallest) is
     * deterministic so the DuckDB oracle replicates it exactly.
     */
-  def lshAnn(corpus: DataFrame, queryPred: Column, nTables: Int, nBits: Int,
-      k: Int, cap: Int = 1000): DataFrame = {
+  private def lshCandidates(corpus: DataFrame, queryPred: Column, nTables: Int,
+      nBits: Int, cap: Int): DataFrame = {
     // one row per (vector, table); code and probe codes derived from the
     // SAME materialized projection array. Eager local checkpoint, not
     // persist: index + query sides are independent stages AQE submits
@@ -804,17 +731,18 @@ object Similarity {
       .select(col("tbl"),
         explode(array(col("code"), col("probe"), col("probe2"))).as("code"),
         col("vec_id").as("q_id"))
-    val cand = index.join(qcodes, Seq("tbl", "code"))
+    index.join(qcodes, Seq("tbl", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
       .distinct()
-    // embeddings attach per candidate: query side is tiny → broadcast;
-    // corpus side is one shuffle of (vec_id → embedding) against the
-    // candidate list, each vector moving once
-    cand
-      .join(broadcast(corpus.filter(queryPred)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))), "q_id")
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
+  }
+
+  /** Exact-cosine top-`k` per query over `cands(q_id, q_emb, vec_id,
+    * embedding)`, ties to the smaller vec_id: the rerank of s02, s04 and
+    * the kNN graph.
+    */
+  private def rerankTopK(cands: DataFrame, k: Int): DataFrame =
+    cands
       .withColumn("cos", cosine(col("q_emb"), col("embedding")))
       .withColumn("rank",
         row_number().over(
@@ -822,7 +750,21 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
       .orderBy("q_id", "rank")
-  }
+
+  /** Sign-LSH approximate top-k ([[lshCandidates]] for the `queryPred`
+    * rows, then an exact cosine rerank over candidates only) — at 100 TB
+    * the bucket join touches |corpus|·(buckets probed)/2^nBits vectors
+    * instead of all of them.
+    */
+  def lshAnn(corpus: DataFrame, queryPred: Column, nTables: Int, nBits: Int,
+      k: Int, cap: Int = 1000): DataFrame =
+    // embeddings attach per candidate: query side is tiny → broadcast;
+    // corpus side is one shuffle of (vec_id → embedding) against the
+    // candidate list, each vector moving once
+    rerankTopK(lshCandidates(corpus, queryPred, nTables, nBits, cap)
+      .join(broadcast(corpus.filter(queryPred)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))), "q_id")
+      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"), k)
 
   /** kNN GRAPH — [[lshAnn]] with every vector as a query (the structure
     * SemDeDup-style semantic clustering, kNN-graph community detection,
@@ -835,27 +777,7 @@ object Similarity {
     * graph build is O(|corpus| · probes · occupancy), never quadratic.
     */
   def knnGraph(corpus: DataFrame, nTables: Int, nBits: Int, k: Int,
-      cap: Int = 1000): DataFrame = {
-    val codes = corpus.select(
-      col("vec_id"),
-      posexplode(array((0 until nTables).map(t =>
-        lshProjs(col("embedding"), t, nBits)): _*)).as(Seq("tbl", "projs")))
-      .select(col("vec_id"), col("tbl"),
-        codeOf(col("projs"), nBits).as("code"),
-        probeCodeOf(col("projs"), nBits, 1).as("probe"),
-        probeCodeOf(col("projs"), nBits, 2).as("probe2"))
-      .localCheckpoint(true)
-    val index = codes.groupBy("tbl", "code")
-      .agg(graft.functions.BoundedCollect.minK(col("vec_id"), cap).as("ids"))
-      .select(col("tbl"), col("code"), explode(col("ids")).as("vec_id"))
-    val qcodes = codes
-      .select(col("tbl"),
-        explode(array(col("code"), col("probe"), col("probe2"))).as("code"),
-        col("vec_id").as("q_id"))
-    val cand = index.join(qcodes, Seq("tbl", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .distinct()
+      cap: Int = 1000): DataFrame =
     // DECISION RECORD (r10, measured): the serve cut stays a row_number
     // window, NOT plans/TopKPerKey. At the 1M probe (dev/scaleprobe_r10.jsonl,
     // identical corpus/params), the TopKPerKey variant ran 424 s vs 44 s
@@ -870,17 +792,9 @@ object Similarity {
     // PlanSpec. s08 keeps TopKPerKey, where per-task rows-per-key ≫ k
     // (corpus-wide scoring against a broadcast shortlist) makes the
     // partial phase genuinely reductive.
-    cand
+    rerankTopK(lshCandidates(corpus, lit(true), nTables, nBits, cap)
       .join(corpus.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), "q_id")
-      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id")
-      .withColumn("cos", cosine(col("q_emb"), col("embedding")))
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
-      .orderBy("q_id", "rank")
-  }
+      .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"), k)
 
   /** Embedding near-dup pairs over an arbitrary (vec_id, embedding) corpus:
     * sign-LSH codes per table index the corpus; candidate pairs come from
@@ -1439,34 +1353,33 @@ object Similarity {
     // identical three steps and stay bit-exact.
     QuerySpec(
       "s04_ann_ivf",
-      (s, d) => ivfAnn(emb(s, d).select(col("vec_id"), col("embedding")),
-        k = 16, nprobe = 4, iters = 3, topK = 5),
+      (s, d) => ivfAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters, AnnTopK),
       // full SQL oracle: each Lloyd step uses the decimal-exact mean, so the
       // centroids — and every assignment, probe, and rerank after them —
-      // are bit-identical across engines. The three iterations are UNROLLED
-      // (seeds → cent1 → cent2 → cent3), mirroring the fixed iteration
-      // count in the Spark contract query.
+      // are bit-identical across engines. The iterations are UNROLLED
+      // (seeds → cent1 → … → cent{IvfIters}), mirroring the fixed
+      // iteration count in the Spark contract query.
       Some {
-        s"""$lloydOracleCtes,
+        s"""${lloydOracleCtes(None)},
            |idx AS MATERIALIZED (
            |  SELECT vec_id, embedding, cell FROM (
            |    SELECT e.vec_id, e.embedding, c.cell,
            |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
            |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
+           |    FROM e CROSS JOIN cent$IvfIters c) t WHERE rn = 1),
            |probes AS (
            |  SELECT q_id, q_emb, cell FROM (
            |    SELECT e.vec_id AS q_id, e.embedding AS q_emb, c.cell,
            |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
            |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 10) t WHERE rn <= 4),
+           |    FROM e CROSS JOIN cent$IvfIters c WHERE e.vec_id < 10) t WHERE rn <= $IvfNprobe),
            |ranked AS (
            |  SELECT q_id, i.vec_id AS neighbor_id,
            |    ${duckCos("q_emb", "i.embedding")} AS cos,
            |    ROW_NUMBER() OVER (PARTITION BY q_id
            |      ORDER BY ${duckCos("q_emb", "i.embedding")} DESC, i.vec_id) AS rank
            |  FROM probes p JOIN idx i USING (cell) WHERE i.vec_id != p.q_id)
-           |SELECT q_id, neighbor_id, rank, cos FROM ranked WHERE rank <= 5
+           |SELECT q_id, neighbor_id, rank, cos FROM ranked WHERE rank <= $AnnTopK
            |ORDER BY q_id, rank""".stripMargin
       },
     ),
@@ -1693,22 +1606,19 @@ object Similarity {
     // reaches an exchange.
     QuerySpec(
       "s08_pq_adc",
-      (s, d) => pqAdcAnn(emb(s, d).select(col("vec_id"), col("embedding")),
-        m = 4, subDim = 16, ksub = 8, iters = 2,
-        nQ = 5, shortlist = 32, topK = 5),
+      (s, d) => pqAdcAnn(vecs(s, d), PqM, PqSubDim, PqKsub, PqIters,
+        AnnNQ, AnnShortlist, AnnTopK),
       Some {
-        s"""WITH ${pqOracleSubCtes(4, 16, 8, 2, 5).mkString(",\n")},
+        val subs = 1 until PqM
+        s"""WITH ${pqOracleSubCtes().mkString(",\n")},
            |scored AS (
            |  SELECT l0.q_id, e0.vec_id,
-           |    l0.lv + l1.lv + l2.lv + l3.lv AS adc
+           |    $pqLvSum AS adc
            |  FROM s0e e0
-           |  JOIN s1e e1 USING (vec_id)
-           |  JOIN s2e e2 USING (vec_id)
-           |  JOIN s3e e3 USING (vec_id)
+           |${subs.map(s => s"  JOIN s${s}e e$s USING (vec_id)").mkString("\n")}
            |  JOIN s0l l0 ON l0.code = e0.code
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = l0.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = l0.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = l0.q_id
+           |${subs.map(s => s"  JOIN s${s}l l$s ON l$s.code = e$s.code AND l$s.q_id = l0.q_id")
+              .mkString("\n")}
            |  WHERE e0.vec_id != l0.q_id),
            |$pqRerankOracleTail""".stripMargin
       },
@@ -1721,41 +1631,9 @@ object Similarity {
     // the only new SQL is that one join.
     QuerySpec(
       "s18_ivfpq_ann",
-      (s, d) => ivfPqAnn(emb(s, d).select(col("vec_id"), col("embedding")),
-        k = 16, nprobe = 4, ivfIters = 3,
-        m = 4, subDim = 16, ksub = 8, pqIters = 2,
-        nQ = 5, shortlist = 32, topK = 5),
-      Some {
-        s"""$lloydOracleCtes,
-           |${pqOracleSubCtes(4, 16, 8, 2, 5).mkString(",\n")},
-           |idx AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
-           |probes AS (
-           |  SELECT q_id, cell FROM (
-           |    SELECT e.vec_id AS q_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 5) t WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.q_id, i.vec_id,
-           |    l0.lv + l1.lv + l2.lv + l3.lv AS adc
-           |  FROM probes p
-           |  JOIN idx i USING (cell)
-           |  JOIN s0e e0 ON e0.vec_id = i.vec_id
-           |  JOIN s1e e1 ON e1.vec_id = i.vec_id
-           |  JOIN s2e e2 ON e2.vec_id = i.vec_id
-           |  JOIN s3e e3 ON e3.vec_id = i.vec_id
-           |  JOIN s0l l0 ON l0.code = e0.code AND l0.q_id = p.q_id
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = p.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = p.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = p.q_id
-           |  WHERE i.vec_id != p.q_id),
-           |$pqRerankOracleTail""".stripMargin
-      },
+      (s, d) => ivfPqAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
+        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK),
+      Some(ivfPqOracleSql(None, idxWhere = "")),
     ),
     // SAMPLED-training IVF-PQ — the configuration a 100 TB deployment
     // actually ships (r16 VERDICT item 2): quantizers train on the
@@ -1770,42 +1648,10 @@ object Similarity {
     // unchanged SQL. SimilaritySpec pins the recall-vs-full law.
     QuerySpec(
       "s18b_ivfpq_sampled",
-      (s, d) => ivfPqAnn(emb(s, d).select(col("vec_id"), col("embedding")),
-        k = 16, nprobe = 4, ivfIters = 3,
-        m = 4, subDim = 16, ksub = 8, pqIters = 2,
-        nQ = 5, shortlist = 32, topK = 5,
+      (s, d) => ivfPqAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
+        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK,
         trainPred = Some(col("vec_id") < SampledTrainN)),
-      Some {
-        s"""${lloydOracleCtesSampled(SampledTrainN)},
-           |${pqOracleSubCtes(4, 16, 8, 2, 5, tsrc = "tr").mkString(",\n")},
-           |idx AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
-           |probes AS (
-           |  SELECT q_id, cell FROM (
-           |    SELECT e.vec_id AS q_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 5) t WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.q_id, i.vec_id,
-           |    l0.lv + l1.lv + l2.lv + l3.lv AS adc
-           |  FROM probes p
-           |  JOIN idx i USING (cell)
-           |  JOIN s0e e0 ON e0.vec_id = i.vec_id
-           |  JOIN s1e e1 ON e1.vec_id = i.vec_id
-           |  JOIN s2e e2 ON e2.vec_id = i.vec_id
-           |  JOIN s3e e3 ON e3.vec_id = i.vec_id
-           |  JOIN s0l l0 ON l0.code = e0.code AND l0.q_id = p.q_id
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = p.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = p.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = p.q_id
-           |  WHERE i.vec_id != p.q_id),
-           |$pqRerankOracleTail""".stripMargin
-      },
+      Some(ivfPqOracleSql(Some(s"vec_id < $SampledTrainN"), idxWhere = "")),
     ),
     // Residual IVF-PQ — see [[ivfPqResidualAnn]]: the actual FAISS IVFPQ
     // encoding (PQ over residuals against the assigned coarse centroid;
@@ -1816,52 +1662,9 @@ object Similarity {
     // ADC sum.
     QuerySpec(
       "s19_ivfpq_residual",
-      (s, d) => ivfPqResidualAnn(emb(s, d).select(col("vec_id"), col("embedding")),
-        k = 16, nprobe = 4, ivfIters = 3,
-        m = 4, subDim = 16, ksub = 8, pqIters = 2,
-        nQ = 5, shortlist = 32, topK = 5),
-      Some {
-        val dot = (a: String, b: String) =>
-          s"""list_sum(list_transform(list_zip($a, $b),
-             |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))""".stripMargin
-        s"""$lloydOracleCtes,
-           |idx0 AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
-           |res AS MATERIALIZED (
-           |  SELECT i.vec_id, i.cell,
-           |    list_transform(list_zip(e.embedding, c.cvec),
-           |      p -> CAST(p[1] AS DOUBLE) - p[2]) AS embedding
-           |  FROM idx0 i JOIN e ON e.vec_id = i.vec_id
-           |  JOIN cent3 c ON c.cell = i.cell),
-           |${pqOracleSubCtes(4, 16, 8, 2, 5, src = "res",
-              qsrc = "embeddings").mkString(",\n")},
-           |probes AS (
-           |  SELECT q_id, cell, qc FROM (
-           |    SELECT e.vec_id AS q_id, c.cell,
-           |      ${dot("e.embedding", "c.cvec")} AS qc,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 5) t WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.q_id, i.vec_id,
-           |    p.qc + l0.lv + l1.lv + l2.lv + l3.lv AS adc
-           |  FROM probes p
-           |  JOIN res i USING (cell)
-           |  JOIN s0e e0 ON e0.vec_id = i.vec_id
-           |  JOIN s1e e1 ON e1.vec_id = i.vec_id
-           |  JOIN s2e e2 ON e2.vec_id = i.vec_id
-           |  JOIN s3e e3 ON e3.vec_id = i.vec_id
-           |  JOIN s0l l0 ON l0.code = e0.code AND l0.q_id = p.q_id
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = p.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = p.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = p.q_id
-           |  WHERE i.vec_id != p.q_id),
-           |$pqRerankOracleTail""".stripMargin
-      },
+      (s, d) => ivfPqResidualAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
+        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK),
+      Some(ivfPqResidualOracleSql(None)),
     ),
     // SAMPLED-training residual IVF-PQ — s19's deployment config (r16
     // VERDICT item 2, same adjudication as s18b): coarse centroids train
@@ -1873,55 +1676,10 @@ object Similarity {
     // verbatim.
     QuerySpec(
       "s19b_ivfpq_residual_sampled",
-      (s, d) => ivfPqResidualAnn(emb(s, d).select(col("vec_id"), col("embedding")),
-        k = 16, nprobe = 4, ivfIters = 3,
-        m = 4, subDim = 16, ksub = 8, pqIters = 2,
-        nQ = 5, shortlist = 32, topK = 5,
+      (s, d) => ivfPqResidualAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
+        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK,
         trainPred = Some(col("vec_id") < SampledTrainN)),
-      Some {
-        val dot = (a: String, b: String) =>
-          s"""list_sum(list_transform(list_zip($a, $b),
-             |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))""".stripMargin
-        s"""${lloydOracleCtesSampled(SampledTrainN)},
-           |idx0 AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
-           |res AS MATERIALIZED (
-           |  SELECT i.vec_id, i.cell,
-           |    list_transform(list_zip(e.embedding, c.cvec),
-           |      p -> CAST(p[1] AS DOUBLE) - p[2]) AS embedding
-           |  FROM idx0 i JOIN e ON e.vec_id = i.vec_id
-           |  JOIN cent3 c ON c.cell = i.cell),
-           |rtr AS MATERIALIZED (
-           |  SELECT vec_id, cell, embedding FROM res WHERE vec_id < $SampledTrainN),
-           |${pqOracleSubCtes(4, 16, 8, 2, 5, src = "res",
-              qsrc = "embeddings", tsrc = "rtr").mkString(",\n")},
-           |probes AS (
-           |  SELECT q_id, cell, qc FROM (
-           |    SELECT e.vec_id AS q_id, c.cell,
-           |      ${dot("e.embedding", "c.cvec")} AS qc,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 5) t WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.q_id, i.vec_id,
-           |    p.qc + l0.lv + l1.lv + l2.lv + l3.lv AS adc
-           |  FROM probes p
-           |  JOIN res i USING (cell)
-           |  JOIN s0e e0 ON e0.vec_id = i.vec_id
-           |  JOIN s1e e1 ON e1.vec_id = i.vec_id
-           |  JOIN s2e e2 ON e2.vec_id = i.vec_id
-           |  JOIN s3e e3 ON e3.vec_id = i.vec_id
-           |  JOIN s0l l0 ON l0.code = e0.code AND l0.q_id = p.q_id
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = p.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = p.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = p.q_id
-           |  WHERE i.vec_id != p.q_id),
-           |$pqRerankOracleTail""".stripMargin
-      },
+      Some(ivfPqResidualOracleSql(Some(s"vec_id < $SampledTrainN"))),
     ),
     // Incremental ANN index maintenance — see [[ivfPqIndexAppend]]: the
     // engine trains quantizers on the BASE (vec_id ≤ 80% cutoff),
@@ -1932,42 +1690,9 @@ object Similarity {
     // engines from MAX(vec_id)*4/5 under floor division.
     QuerySpec(
       "s20_ann_index_append",
-      (s, d) => ivfPqIndexAppend(emb(s, d).select(col("vec_id"), col("embedding")),
-        k = 16, nprobe = 4, ivfIters = 3,
-        m = 4, subDim = 16, ksub = 8, pqIters = 2,
-        nQ = 5, shortlist = 32, topK = 5),
-      Some {
-        s"""${lloydOracleCtesTrained(
-             "vec_id <= (SELECT (MAX(vec_id) * 4) // 5 FROM embeddings)")},
-           |${pqOracleSubCtes(4, 16, 8, 2, 5, tsrc = "tr").mkString(",\n")},
-           |idx AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
-           |probes AS (
-           |  SELECT q_id, cell FROM (
-           |    SELECT e.vec_id AS q_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 5) t WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.q_id, i.vec_id,
-           |    l0.lv + l1.lv + l2.lv + l3.lv AS adc
-           |  FROM probes p
-           |  JOIN idx i USING (cell)
-           |  JOIN s0e e0 ON e0.vec_id = i.vec_id
-           |  JOIN s1e e1 ON e1.vec_id = i.vec_id
-           |  JOIN s2e e2 ON e2.vec_id = i.vec_id
-           |  JOIN s3e e3 ON e3.vec_id = i.vec_id
-           |  JOIN s0l l0 ON l0.code = e0.code AND l0.q_id = p.q_id
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = p.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = p.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = p.q_id
-           |  WHERE i.vec_id != p.q_id),
-           |$pqRerankOracleTail""".stripMargin
-      },
+      (s, d) => ivfPqIndexAppend(vecs(s, d), IvfK, IvfNprobe, IvfIters,
+        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK),
+      Some(ivfPqOracleSql(Some(appendBaseSql), idxWhere = "")),
     ),
     // Tombstone deletion on the maintained index — s20 with a delete
     // LIST (vec_id % 17 = 3, a deterministic relation both engines
@@ -1981,46 +1706,13 @@ object Similarity {
     QuerySpec(
       "s20b_ann_index_delete",
       (s, d) => {
-        val e = emb(s, d).select(col("vec_id"), col("embedding"))
-        ivfPqIndexAppend(e,
-          k = 16, nprobe = 4, ivfIters = 3,
-          m = 4, subDim = 16, ksub = 8, pqIters = 2,
-          nQ = 5, shortlist = 32, topK = 5,
+        val e = vecs(s, d)
+        ivfPqIndexAppend(e, IvfK, IvfNprobe, IvfIters,
+          PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK,
           deletes = Some(e.filter(pmod(col("vec_id"), lit(17)) === 3)))
       },
-      Some {
-        s"""${lloydOracleCtesTrained(
-             "vec_id <= (SELECT (MAX(vec_id) * 4) // 5 FROM embeddings)")},
-           |${pqOracleSubCtes(4, 16, 8, 2, 5, tsrc = "tr").mkString(",\n")},
-           |idx AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c
-           |    WHERE e.vec_id % 17 != 3) t WHERE rn = 1),
-           |probes AS (
-           |  SELECT q_id, cell FROM (
-           |    SELECT e.vec_id AS q_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c WHERE e.vec_id < 5) t WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.q_id, i.vec_id,
-           |    l0.lv + l1.lv + l2.lv + l3.lv AS adc
-           |  FROM probes p
-           |  JOIN idx i USING (cell)
-           |  JOIN s0e e0 ON e0.vec_id = i.vec_id
-           |  JOIN s1e e1 ON e1.vec_id = i.vec_id
-           |  JOIN s2e e2 ON e2.vec_id = i.vec_id
-           |  JOIN s3e e3 ON e3.vec_id = i.vec_id
-           |  JOIN s0l l0 ON l0.code = e0.code AND l0.q_id = p.q_id
-           |  JOIN s1l l1 ON l1.code = e1.code AND l1.q_id = p.q_id
-           |  JOIN s2l l2 ON l2.code = e2.code AND l2.q_id = p.q_id
-           |  JOIN s3l l3 ON l3.code = e3.code AND l3.q_id = p.q_id
-           |  WHERE i.vec_id != p.q_id),
-           |$pqRerankOracleTail""".stripMargin
-      },
+      Some(ivfPqOracleSql(Some(appendBaseSql),
+        idxWhere = "\n    WHERE e.vec_id % 17 != 3")),
     ),
     // Range (radius) search — the similarity-ball primitive top-k can't
     // express: EVERYTHING with cos >= tau per query, however many that
@@ -2073,7 +1765,7 @@ object Similarity {
     // removed; SimilaritySpec checks graph recall against brute force.
     QuerySpec(
       "s10_knn_graph",
-      (s, d) => knnGraph(emb(s, d).select(col("vec_id"), col("embedding")),
+      (s, d) => knnGraph(vecs(s, d),
         nTables = 4, nBits = 8, k = 5, cap = 1000),
       Some(s"""WITH $knnGraphOracleCtes
               |SELECT q_id, neighbor_id, rank, cos FROM ranked
@@ -2092,7 +1784,7 @@ object Similarity {
     QuerySpec(
       "s13_knn_graph_scaled",
       (s, d) => {
-        val e = emb(s, d).select(col("vec_id"), col("embedding"))
+        val e = vecs(s, d)
         val nb = scaledBits(e.count())
         knnGraph(e, nTables = 4, nBits = nb, k = 5, cap = 1000)
       },
@@ -2118,8 +1810,8 @@ object Similarity {
       "c24_cluster_mix",
       (s, d) => {
         import graft.engine.Exact
-        val e = emb(s, d).select(col("vec_id"), col("embedding"))
-        val centArr = ivfCentroids(e, k = 16, iters = 3)
+        val e = vecs(s, d)
+        val centArr = ivfCentroids(e, IvfK, IvfIters)
         val assigned = e.crossJoin(broadcast(centArr))
           .select(col("vec_id"),
             nearestCell(col("cents"), col("embedding")).as("cell"))
@@ -2151,13 +1843,8 @@ object Similarity {
         val rScaled =
           s"CAST(${DuckHash.signed(DuckHash.mix64("CAST(vec_id AS HUGEINT)"))} " +
             "AS DOUBLE) / 9.223372036854775808e18 * 0.5 + 0.5"
-        s"""$lloydOracleCtes,
-           |asg AS MATERIALIZED (
-           |  SELECT vec_id, cell FROM (
-           |    SELECT e.vec_id, c.cell,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent3 c) t WHERE rn = 1),
+        s"""${lloydOracleCtes(None)},
+           |${nearestCellOracleCte("asg", "")},
            |counts AS (SELECT cell, COUNT(*) AS n_vecs FROM asg GROUP BY cell),
            |tot AS (
            |  SELECT ${Exact.sqlSum("sqrt(CAST(n_vecs AS DOUBLE))")} AS sum_sqrt,
@@ -2485,9 +2172,9 @@ object Similarity {
 
   /** One DuckDB Lloyd step: assign to `prev`'s centroids (cosine argmax,
     * cell tie-break), recompute decimal-exact means — mirrors one
-    * [[ivfCentroids]] iteration. Shared by the s04 and c24 oracles.
+    * [[ivfCentroids]] iteration over the `src` training rows.
     */
-  private def lloydStepSql(n: Int, prev: String, src: String = "e"): String = {
+  private def lloydStepSql(n: Int, prev: String, src: String): String = {
     import graft.engine.Exact
     s"""a$n AS (
        |  SELECT vec_id, embedding, cell FROM (
@@ -2505,26 +2192,22 @@ object Similarity {
   }
 
   /** The PQ training/encode/LUT chain as generated CTEs — ONE definition
-    * shared by the s08 (flat ADC) and s18 (IVF-routed ADC) oracles: per
-    * subspace `s`, `s{s}v` (subvectors), `s{s}c0..c{iters}` (Lloyd
-    * rounds, decimal-exact means), `s{s}e` (corpus codes), `s{s}l`
-    * (per-query LUT rows for vec_id < nQ). The consumer composes a
-    * `scored` stage over `s*e` ⋈ `s*l` — flat for s08, candidate-gated
-    * for s18 — then [[pqRerankOracleTail]].
+    * shared by the s08 (flat ADC), s18/s20 (IVF-routed ADC) and s19
+    * (residual) oracles: per subspace `s`, `s{s}v` (subvectors),
+    * `s{s}c0..c{PqIters}` (Lloyd rounds, decimal-exact means), `s{s}e`
+    * (corpus codes), `s{s}l` (per-query LUT rows for vec_id < AnnNQ). The
+    * consumer composes a `scored` stage over `s*e` ⋈ `s*l` — flat for
+    * s08, candidate-gated for s18 — then [[pqRerankOracleTail]].
     */
-  private def pqOracleSubCtes(m: Int, subDim: Int, ksub: Int, iters: Int,
-      nQ: Int, src: String = "embeddings",
+  private def pqOracleSubCtes(src: String = "embeddings",
       qsrc: String = "embeddings", tsrc: String = ""): Seq[String] = {
     import graft.engine.Exact
     def sl(s: Int) =
-      s"list_transform(embedding[${s * subDim + 1}:${(s + 1) * subDim}], x -> CAST(x AS DOUBLE))"
+      s"list_transform(embedding[${s * PqSubDim + 1}:${(s + 1) * PqSubDim}], x -> CAST(x AS DOUBLE))"
     def dL2(a: String, b: String) =
       s"""list_sum(list_transform(list_zip($a, $b),
          |      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))""".stripMargin
-    def dDot(a: String, b: String) =
-      s"""list_sum(list_transform(list_zip($a, $b),
-         |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))""".stripMargin
-    (0 until m).flatMap { s =>
+    (0 until PqM).flatMap { s =>
       val v = s"s${s}v"
       // when the LUT's query side differs from the train/encode source
       // (s19: codebooks over RESIDUALS, LUT over RAW query subvectors),
@@ -2544,9 +2227,9 @@ object Similarity {
       Seq(
         s"$v AS MATERIALIZED (SELECT vec_id, ${sl(s)} AS svec FROM $src)") ++
         tvCte ++ Seq(
-        s"s${s}c0 AS (SELECT vec_id AS code, svec AS cvec FROM $tv WHERE vec_id < $ksub)") ++
+        s"s${s}c0 AS (SELECT vec_id AS code, svec AS cvec FROM $tv WHERE vec_id < $PqKsub)") ++
         qvCte ++
-        (1 to iters).flatMap { n =>
+        (1 to PqIters).flatMap { n =>
           Seq(
             s"""s${s}a$n AS (
                |  SELECT vec_id, svec, code FROM (
@@ -2557,7 +2240,7 @@ object Similarity {
             s"""s${s}m$n AS (
                |  SELECT code, dim,
                |    ${Exact.sqlSum("svec[dim+1]")} / CAST(COUNT(*) AS DOUBLE) AS mv
-               |  FROM s${s}a$n, UNNEST(range(0, $subDim)) AS t(dim)
+               |  FROM s${s}a$n, UNNEST(range(0, $PqSubDim)) AS t(dim)
                |  GROUP BY code, dim)""".stripMargin,
             s"""s${s}c$n AS MATERIALIZED (
                |  SELECT code, list(mv ORDER BY dim) AS cvec
@@ -2568,17 +2251,21 @@ object Similarity {
            |    SELECT v.vec_id, c.code,
            |      ROW_NUMBER() OVER (PARTITION BY v.vec_id
            |        ORDER BY ${dL2("v.svec", "c.cvec")}, c.code) AS rn
-           |    FROM $v v CROSS JOIN s${s}c$iters c) t WHERE rn = 1)""".stripMargin,
+           |    FROM $v v CROSS JOIN s${s}c$PqIters c) t WHERE rn = 1)""".stripMargin,
         s"""s${s}l AS MATERIALIZED (
-           |  SELECT qv.vec_id AS q_id, c.code, ${dDot("qv.svec", "c.cvec")} AS lv
-           |  FROM $qv qv CROSS JOIN s${s}c$iters c
-           |  WHERE qv.vec_id < $nQ)""".stripMargin)
+           |  SELECT qv.vec_id AS q_id, c.code, ${duckDot("qv.svec", "c.cvec")} AS lv
+           |  FROM $qv qv CROSS JOIN s${s}c$PqIters c
+           |  WHERE qv.vec_id < $AnnNQ)""".stripMargin)
     }
   }
 
+  /** `l0.lv + … + l{PqM-1}.lv`: the ADC sum of the per-subspace LUT rows
+    * in subspace order — the Spark fold's order.
+    */
+  private def pqLvSum: String = (0 until PqM).map(s => s"l$s.lv").mkString(" + ")
+
   /** The shortlist + exact-cosine rerank tail reading an in-scope
-    * `scored(q_id, vec_id, adc)` CTE — shared by s08 and s18 (shortlist
-    * 32, topK 5).
+    * `scored(q_id, vec_id, adc)` CTE — shared by every PQ oracle.
     */
   private def pqRerankOracleTail: String =
     s"""short AS MATERIALIZED (
@@ -2586,7 +2273,7 @@ object Similarity {
        |    SELECT q_id, vec_id, adc,
        |      ROW_NUMBER() OVER (PARTITION BY q_id
        |        ORDER BY adc DESC, vec_id) AS srank
-       |    FROM scored) t WHERE srank <= 32),
+       |    FROM scored) t WHERE srank <= $AnnShortlist),
        |rer AS (
        |  SELECT s.q_id, s.vec_id AS neighbor_id, s.adc,
        |    ${duckCos("q.embedding", "n.embedding")} AS cos
@@ -2597,54 +2284,124 @@ object Similarity {
        |  SELECT q_id, neighbor_id, adc, cos,
        |    ROW_NUMBER() OVER (PARTITION BY q_id
        |      ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM rer) t WHERE rank <= 5
+       |  FROM rer) t WHERE rank <= $AnnTopK
        |ORDER BY q_id, rank""".stripMargin
 
-  /** The fixed 16-seed, 3-iteration Lloyd unrolling (s04's contract) as a
-    * WITH prefix ending at `cent3`.
-    */
-  private def lloydOracleCtes: String =
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell, embedding AS cvec FROM e WHERE vec_id < 16),
-       |${lloydStepSql(1, "seeds")},
-       |${lloydStepSql(2, "cent1")},
-       |${lloydStepSql(3, "cent2")}""".stripMargin
-
-  /** [[lloydOracleCtes]] with Lloyd TRAINED on the vec_id-prefix sample
-    * (the s18b/s19b deployment config — r16 VERDICT item 2): seeds and
-    * every assignment round read `tr` (vec_id < trainN); everything
+  /** The fixed IvfK-seed, IvfIters-round Lloyd unrolling (s04's contract)
+    * as a WITH prefix ending at `cent{IvfIters}`. With `trainWhere` Lloyd
+    * TRAINS on `tr` = e WHERE trainWhere (s18b/s19b: the vec_id-prefix
+    * sample; s20: the base slice below the append cutoff) while everything
     * downstream (encode, probes) still reads the full `e`.
     */
-  private def lloydOracleCtesSampled(trainN: Int): String =
-    lloydOracleCtesTrained(s"vec_id < $trainN")
+  private def lloydOracleCtes(trainWhere: Option[String]): String = {
+    val src = if (trainWhere.isEmpty) "e" else "tr"
+    (Seq("WITH e AS (SELECT vec_id, embedding FROM embeddings)") ++
+      trainWhere.map(w => s"tr AS MATERIALIZED (SELECT vec_id, embedding FROM e WHERE $w)") ++
+      Seq(s"seeds AS (SELECT vec_id AS cell, embedding AS cvec FROM $src WHERE vec_id < $IvfK)") ++
+      (1 to IvfIters).map(n =>
+        lloydStepSql(n, if (n == 1) "seeds" else s"cent${n - 1}", src)))
+      .mkString(",\n")
+  }
 
-  /** The general form: Lloyd trained on `tr` = e WHERE `trainWhere`
-    * (s18b/s19b: the vec_id-prefix sample; s20: the base slice below the
-    * append cutoff), everything downstream reading the full `e`. */
-  private def lloydOracleCtesTrained(trainWhere: String): String =
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |tr AS MATERIALIZED (SELECT vec_id, embedding FROM e WHERE $trainWhere),
-       |seeds AS (SELECT vec_id AS cell, embedding AS cvec FROM tr WHERE vec_id < 16),
-       |${lloydStepSql(1, "seeds", "tr")},
-       |${lloydStepSql(2, "cent1", "tr")},
-       |${lloydStepSql(3, "cent2", "tr")}""".stripMargin
-
-  /** The all-queries sign-LSH kNN pipeline (s10's contract: 4 tables,
-    * 8 bits, cap 1000, 3 probes) as a WITH body ending at `ranked`
-    * (q_id, neighbor_id, cos, rank). Shared by the s10 and s11 oracles.
+  /** s20's base slice in SQL: [[ivfPqIndexAppend]]'s cut, MAX(vec_id)·4/5
+    * under floor division.
     */
-  private def knnGraphOracleCtes: String =
-    s"""${duckHypCte(4, 8)},
+  private def appendBaseSql: String =
+    "vec_id <= (SELECT (MAX(vec_id) * 4) // 5 FROM embeddings)"
+
+  /** `name(vec_id, cell)`: each vector's nearest final centroid (cosine
+    * argmax, cell tie-break), over the `e` rows passing `where`.
+    */
+  private def nearestCellOracleCte(name: String, where: String): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT vec_id, cell FROM (
+       |    SELECT e.vec_id, c.cell,
+       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+       |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
+       |    FROM e CROSS JOIN cent$IvfIters c$where) t WHERE rn = 1)""".stripMargin
+
+  /** The IVF-PQ serve CTEs over an in-scope index (`idx`, or the residual
+    * rows `res`): `probes` (IvfNprobe cells per query, carrying qc when
+    * `residual`), the probe-gated ADC `scored` stage (seeded at qc when
+    * `residual`) and the rerank tail — the oracle of [[ivfPqServe]].
+    */
+  private def ivfPqServeOracleSql(residual: Boolean): String = {
+    val (qcCol, qcExpr, qcSeed, index) =
+      if (residual) (", qc", s"\n      ${duckDot("e.embedding", "c.cvec")} AS qc,", "p.qc + ", "res")
+      else ("", "", "", "idx")
+    val subs = 0 until PqM
+    s"""probes AS (
+       |  SELECT q_id, cell$qcCol FROM (
+       |    SELECT e.vec_id AS q_id, c.cell,$qcExpr
+       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+       |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
+       |    FROM e CROSS JOIN cent$IvfIters c WHERE e.vec_id < $AnnNQ) t WHERE rn <= $IvfNprobe),
+       |scored AS (
+       |  SELECT p.q_id, i.vec_id,
+       |    $qcSeed$pqLvSum AS adc
+       |  FROM probes p
+       |  JOIN $index i USING (cell)
+       |${subs.map(s => s"  JOIN s${s}e e$s ON e$s.vec_id = i.vec_id").mkString("\n")}
+       |${subs.map(s => s"  JOIN s${s}l l$s ON l$s.code = e$s.code AND l$s.q_id = p.q_id")
+          .mkString("\n")}
+       |  WHERE i.vec_id != p.q_id),
+       |$pqRerankOracleTail""".stripMargin
+  }
+
+  /** The s18/s18b/s20/s20b oracle: Lloyd (trained on `trainWhere`, see
+    * [[lloydOracleCtes]]), the PQ chains trained on the same rows, `idx`
+    * over the vectors passing `idxWhere` (s20b: the tombstone survivors),
+    * then the serve CTEs.
+    */
+  private def ivfPqOracleSql(trainWhere: Option[String], idxWhere: String): String =
+    s"""${lloydOracleCtes(trainWhere)},
+       |${pqOracleSubCtes(tsrc = if (trainWhere.isEmpty) "" else "tr").mkString(",\n")},
+       |${nearestCellOracleCte("idx", idxWhere)},
+       |${ivfPqServeOracleSql(residual = false)}""".stripMargin
+
+  /** The s19/s19b oracle: s18's composition with a residual CTE spliced
+    * between the coarse assignment and the PQ chains (src = residuals,
+    * LUT qsrc = raw query subvectors; with `trainWhere` the chains train
+    * on `rtr`, the sample's residual rows), serving with the per-(query,
+    * cell) qc scalar seeding the ADC sum.
+    */
+  private def ivfPqResidualOracleSql(trainWhere: Option[String]): String = {
+    val rtr = trainWhere.map(w =>
+      s"""rtr AS MATERIALIZED (
+         |  SELECT vec_id, cell, embedding FROM res WHERE $w),
+         |""".stripMargin).getOrElse("")
+    s"""${lloydOracleCtes(trainWhere)},
+       |${nearestCellOracleCte("idx0", "")},
+       |res AS MATERIALIZED (
+       |  SELECT i.vec_id, i.cell,
+       |    list_transform(list_zip(e.embedding, c.cvec),
+       |      p -> CAST(p[1] AS DOUBLE) - p[2]) AS embedding
+       |  FROM idx0 i JOIN e ON e.vec_id = i.vec_id
+       |  JOIN cent$IvfIters c ON c.cell = i.cell),
+       |$rtr${pqOracleSubCtes(src = "res", qsrc = "embeddings",
+              tsrc = if (trainWhere.isEmpty) "" else "rtr").mkString(",\n")},
+       |${ivfPqServeOracleSql(residual = true)}""".stripMargin
+  }
+
+  /** The all-queries sign-LSH kNN pipeline (3 probes, cap 1000) as a WITH
+    * body ending at `ranked` (q_id, neighbor_id, cos, rank), over the
+    * hyperplane CTEs `hyp` and a `coded` stage selecting `code`/`probe(r)`
+    * from `codedFrom`. Shared by the pinned-width (s10/s11/s17) and
+    * count-sized (s13/s17b) oracles.
+    */
+  private def knnGraphCtes(hyp: String, code: String, probe: Int => String,
+      codedFrom: String): String =
+    s"""$hyp,
        |proj AS MATERIALIZED (
        |  SELECT vec_id, embedding, tbl,
        |    ${duckProjs("embedding")} AS projs
        |  FROM embeddings CROSS JOIN hyp),
        |coded AS MATERIALIZED (
        |  SELECT vec_id, tbl,
-       |    ${duckCode("projs", 8)} AS code,
-       |    ${duckProbe("projs", 8, 1)} AS probe,
-       |    ${duckProbe("projs", 8, 2)} AS probe2
-       |  FROM proj),
+       |    $code AS code,
+       |    ${probe(1)} AS probe,
+       |    ${probe(2)} AS probe2
+       |  FROM $codedFrom),
        |idx AS (
        |  SELECT tbl, code, vec_id FROM coded
        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY tbl, code
@@ -2667,8 +2424,12 @@ object Similarity {
        |        c.vec_id) AS rank
        |  FROM cand c
        |  JOIN embeddings qe ON qe.vec_id = c.q_id
-       |  JOIN embeddings ne ON ne.vec_id = c.vec_id)"""
-      .stripMargin
+       |  JOIN embeddings ne ON ne.vec_id = c.vec_id)""".stripMargin
+
+  /** s10's contract (4 tables, 8 bits) through [[knnGraphCtes]]. */
+  private def knnGraphOracleCtes: String =
+    knnGraphCtes(duckHypCte(4, 8), duckCode("projs", 8),
+      duckProbe("projs", 8, _), "proj")
 
   /** The s10b oracle: [[knnGraphOracleCtes]] with the code width computed
     * from the corpus COUNT by the same integer rule as [[scaledBits]]
@@ -2687,50 +2448,15 @@ object Similarity {
          |    CAST(2 ** (list_position(list_transform(projs[1:nb], p -> abs(p)),
          |      list_sort(list_transform(projs[1:nb], p -> abs(p)))[$rank]) - 1)
          |      AS BIGINT))""".stripMargin
-    s"""nbv AS MATERIALIZED (
-       |  SELECT COALESCE(MIN(b), 16) AS nb
-       |  FROM range(4, 17) t(b), (SELECT COUNT(*) AS n FROM embeddings)
-       |  WHERE (16 * (1 << b)) >= n),
-       |${duckHypCte(4, 16)},
-       |proj AS MATERIALIZED (
-       |  SELECT vec_id, embedding, tbl,
-       |    ${duckProjs("embedding")} AS projs
-       |  FROM embeddings CROSS JOIN hyp),
-       |coded AS MATERIALIZED (
-       |  SELECT vec_id, tbl,
-       |    $dynCode AS code,
-       |    ${dynProbe(1)} AS probe,
-       |    ${dynProbe(2)} AS probe2
-       |  FROM proj, nbv),
-       |idx AS (
-       |  SELECT tbl, code, vec_id FROM coded
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY tbl, code
-       |    ORDER BY vec_id) <= 1000),
-       |q AS (
-       |  SELECT tbl, code AS qcode, vec_id AS q_id FROM coded
-       |  UNION ALL
-       |  SELECT tbl, probe AS qcode, vec_id AS q_id FROM coded
-       |  UNION ALL
-       |  SELECT tbl, probe2 AS qcode, vec_id AS q_id FROM coded),
-       |cand AS (
-       |  SELECT DISTINCT q.q_id, i.vec_id
-       |  FROM idx i JOIN q ON i.tbl = q.tbl AND i.code = q.qcode
-       |  WHERE i.vec_id != q.q_id),
-       |ranked AS MATERIALIZED (
-       |  SELECT c.q_id, c.vec_id AS neighbor_id,
-       |    ${duckCos("qe.embedding", "ne.embedding")} AS cos,
-       |    ROW_NUMBER() OVER (PARTITION BY c.q_id
-       |      ORDER BY ${duckCos("qe.embedding", "ne.embedding")} DESC,
-       |        c.vec_id) AS rank
-       |  FROM cand c
-       |  JOIN embeddings qe ON qe.vec_id = c.q_id
-       |  JOIN embeddings ne ON ne.vec_id = c.vec_id)"""
-      .stripMargin
+    knnGraphCtes(
+      s"""nbv AS MATERIALIZED (
+         |  SELECT COALESCE(MIN(b), 16) AS nb
+         |  FROM range(4, 17) t(b), (SELECT COUNT(*) AS n FROM embeddings)
+         |  WHERE (16 * (1 << b)) >= n),
+         |${duckHypCte(4, 16)}""".stripMargin,
+      dynCode, dynProbe, "proj, nbv")
   }
 
-  /** s03's full SQL oracle, shared with s06 (which nests it as the pairs
-    * CTE of the survivor computation).
-    */
   /** d23's oracle: union corpus (train + drifted bench), sign-LSH codes,
     * the SAME hot-bucket guard, bucket join restricted to cross-corpus
     * pairs (bench ids sort above all train ids, so a<b ∧ flags differ ⇒
@@ -2777,6 +2503,9 @@ object Similarity {
        |WHERE ${duckCos("a_emb", "b_emb")} >= 0.98
        |ORDER BY train_id, bench_src""".stripMargin
 
+  /** s03's full SQL oracle, shared with s06 (which nests it as the pairs
+    * CTE of the survivor computation).
+    */
   private lazy val s03OracleSql: String =
     s"""WITH corpus AS (
        |  SELECT vec_id, embedding FROM embeddings

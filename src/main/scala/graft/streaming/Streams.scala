@@ -2,9 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface. The reference has no streaming at all
@@ -105,8 +103,8 @@ object Streams {
   val GapUs: Long = 1800000000L // 30 min, same as EventsOps
 
   /** Folds one ts-sorted micro-batch into the key's open session. Shared by
-    * all three sessionization paths (fMGWS Update / fMGWS Append /
-    * transformWithState) so the merge discipline lives in one place.
+    * both sessionization paths (fMGWS Update / fMGWS Append) so the merge
+    * discipline lives in one place.
     *
     * Returns (sessions closed within this batch, ascending by start; the
     * still-open session).
@@ -361,12 +359,12 @@ object Streams {
     val mxRow = e.agg(max(col("vec_id"))).head
     val cut = if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0) * 4 / 5
     val (centArr, cbRow) = Similarity.ivfPqQuantizers(
-      e.filter(col("vec_id") <= cut), k = 16, ivfIters = 3,
-      m = 4, subDim = 16, ksub = 8, pqIters = 2)
+      e.filter(col("vec_id") <= cut), Similarity.IvfK, Similarity.IvfIters,
+      Similarity.PqM, Similarity.PqSubDim, Similarity.PqKsub, Similarity.PqIters)
     Similarity.ivfPqEncode(
       readEmbeddings(spark, dir).select(col("vec_id"), col("embedding")),
       centArr.localCheckpoint(true), cbRow.localCheckpoint(true),
-      m = 4, subDim = 16)
+      Similarity.PqM, Similarity.PqSubDim)
   }
 
   /** Streaming n-gram count maintenance — the streaming half of batch
@@ -487,6 +485,22 @@ object Streams {
       .select(col("window_id"), col("event_id"))
   }
 
+  /** The ingest daemons' precondition, checked at CONSTRUCTION, not in
+    * batch 0: an unseeded corpus dir would otherwise surface as an opaque
+    * "unable to infer schema" parquet error from inside foreachBatch on
+    * first deployment, so it gets a named check and a message that says
+    * how to satisfy it.
+    */
+  private def requireSeeded(daemon: String, corpusDir: String): Unit = {
+    val seeded = Option(new java.io.File(corpusDir).list())
+      .exists(_.exists(f => f.endsWith(".parquet") || f == "_SUCCESS"))
+    if (!seeded) throw new IllegalStateException(
+      s"$daemon: corpus dir '$corpusDir' has no parquet data — the " +
+        "ingest daemon dedupes against the corpus-so-far, so the dir must " +
+        "be seeded with at least one (doc_id, text) parquet write before " +
+        "the stream starts (an empty DataFrame write suffices)")
+  }
+
   /** Streaming NEAR-dup ingest daemon — the streaming half of batch d10:
     * every micro-batch of incoming docs is verified against the
     * corpus-so-far with the ingest-proportional incremental LSH pipeline
@@ -506,18 +520,7 @@ object Streams {
     */
   def lshDedupIngest(incoming: DataFrame, corpusDir: String,
       onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    // Fail at CONSTRUCTION, not in batch 0: an unseeded corpus dir would
-    // otherwise surface as an opaque "unable to infer schema" parquet
-    // error from inside foreachBatch on first deployment. The contract is
-    // a daemon precondition, so it gets a named check and a message that
-    // says how to satisfy it.
-    val seeded = Option(new java.io.File(corpusDir).list())
-      .exists(_.exists(f => f.endsWith(".parquet") || f == "_SUCCESS"))
-    if (!seeded) throw new IllegalStateException(
-      s"lshDedupIngest: corpus dir '$corpusDir' has no parquet data — the " +
-        "ingest daemon dedupes against the corpus-so-far, so the dir must " +
-        "be seeded with at least one (doc_id, text) parquet write before " +
-        "the stream starts (an empty DataFrame write suffices)")
+    requireSeeded("lshDedupIngest", corpusDir)
     incoming.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
@@ -552,13 +555,7 @@ object Streams {
     */
   def bloomDedupIngest(incoming: DataFrame, corpusDir: String,
       onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val seeded = Option(new java.io.File(corpusDir).list())
-      .exists(_.exists(f => f.endsWith(".parquet") || f == "_SUCCESS"))
-    if (!seeded) throw new IllegalStateException(
-      s"bloomDedupIngest: corpus dir '$corpusDir' has no parquet data — " +
-        "the ingest daemon dedupes against the corpus-so-far, so the dir " +
-        "must be seeded with at least one (doc_id, text) parquet write " +
-        "before the stream starts (an empty DataFrame write suffices)")
+    requireSeeded("bloomDedupIngest", corpusDir)
     incoming.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
@@ -622,92 +619,6 @@ object Streams {
               .map(o => Session(uid, o.start_us, o.end_us, o.n, o.sum))
           }
       }
-  }
-
-  /** Spark 4 `transformWithState` sessionization — the SAME contract as
-    * [[sessionizeAppend]] (Append mode, emit on close, state evicted by an
-    * event-time timer), expressed in the forward-compatible stateful API.
-    *
-    * Decision record (SURVEY §2.4 streaming): ADOPTED as a parallel path,
-    * not a replacement. `transformWithState` is where Spark's stateful
-    * processing is headed — named state variables with independent schemas
-    * (enabling state-schema evolution), first-class timers decoupled from
-    * state, TTL, and `StatefulProcessorWithInitialState` for state
-    * bootstrap. But it REQUIRES the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`; the default HDFS-backed store
-    * throws STATE_STORE_INVALID_PROVIDER at query start), which a library
-    * must not silently impose on every caller's session — so
-    * `flatMapGroupsWithState`, which runs on any provider, stays the
-    * default. StreamingSpec gates both variants against the same batch
-    * oracle so they cannot drift.
-    *
-    * Timer discipline: `registerTimer` ACCUMULATES timers (unlike
-    * `setTimeoutTimestamp`, which replaces), so the processor tracks the
-    * live timer in a second value state and deletes the stale one whenever
-    * the session extends — otherwise every micro-batch that touches a user
-    * leaves a timer behind, and each stale firing would have to re-check
-    * state (and the state-store keeps paying for the orphaned entries).
-    */
-  class SessionProcessor extends StatefulProcessor[Long, TimedEvent, Session] {
-    @transient private var open: ValueState[OpenSession] = _
-    @transient private var timerMs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession], TTLConfig.NONE)
-      timerMs = getHandle.getValueState[Long]("timerMs",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(uid: Long, events: Iterator[TimedEvent],
-        timerValues: TimerValues): Iterator[Session] = {
-      val sorted = events.toIndexedSeq.sortBy(_.ts_us)
-      // merge + stray discipline shared with the fMGWS paths: foldBatch
-      val (closed, cur) = foldBatch(
-        sorted.map(e => (e.ts_us, e.value)),
-        if (open.exists()) Some(open.get()) else None)
-      val out = Vector.newBuilder[Session]
-      closed.foreach(o => out += Session(uid, o.start_us, o.end_us, o.n, o.sum))
-      cur.foreach { o =>
-        open.update(o)
-        val ts = o.end_us / 1000L + GapUs / 1000L
-        if (timerMs.exists() && timerMs.get() != ts) {
-          getHandle.deleteTimer(timerMs.get())
-        }
-        getHandle.registerTimer(ts)
-        timerMs.update(ts)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Session] = {
-      // only the timer matching the CURRENT open session closes it — a
-      // stale timer that raced a same-batch extension is a no-op
-      if (open.exists() && timerMs.exists() &&
-          timerMs.get() == expiredTimerInfo.getExpiryTimeInMs) {
-        val o = open.get()
-        open.clear()
-        timerMs.clear()
-        Iterator.single(Session(uid, o.start_us, o.end_us, o.n, o.sum))
-      } else Iterator.empty
-    }
-  }
-
-  /** [[sessionizeAppend]] via [[SessionProcessor]]. Caller's session must
-    * run the RocksDB state store provider — see the decision record above.
-    */
-  def sessionizeAppendTws(events: DataFrame, delay: String = "2 hours"): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("event_time", delay)
-      .select(col("user_id"), col("ts_us"), col("value"), col("event_time"))
-      .as[TimedEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming heavy hitters — the streaming half of batch e11, and the

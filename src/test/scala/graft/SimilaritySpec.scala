@@ -206,21 +206,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.7, s"3-iter recall vs brute force: $recall")
   }
 
-  test("s04 convergence mode: tol>0 stops early within a generous cap, throws past a tight one") {
-    import org.apache.spark.sql.functions.col
-    val e = graft.engine.Tables(spark, sf, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    // converges well inside 15 rounds at this SF (the probe is one scalar
-    // per round — nothing else is collected)
-    val cents = graft.queries.Similarity.ivfCentroids(e, k = 16, iters = 15, tol = 1e-9)
-    assert(cents.count() == 1)
-    // d08 round-cap contract: a cap too tight to converge THROWS instead of
-    // silently returning an unconverged quantizer
-    assertThrows[IllegalStateException] {
-      graft.queries.Similarity.ivfCentroids(e, k = 16, iters = 1, tol = 1e-12)
-    }
-  }
-
   test("s02 bounded index caps a planted mega-bucket; queries stay sublinear") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

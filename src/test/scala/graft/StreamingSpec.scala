@@ -398,69 +398,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState sessionization matches the flatMapGroupsWithState path") {
-    import java.nio.file.{Files, Paths}
-    // same two-half time-split drive as the append test above, but through
-    // the Spark 4 transformWithState processor — which requires the RocksDB
-    // state store provider (set for this query, restored after)
-    val batchDf = spark.read.schema(Streams.eventSchema).parquet(s"$sf/events.parquet")
-      .withColumn("ts_us", expr(graft.queries.EventsOps.TsUsSql))
-    val midUs = batchDf.agg(
-      ((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long")).head().getLong(0)
-    val stage = Files.createTempDirectory("graft-sess-tws").toString
-    val streamIn = Files.createTempDirectory("graft-sess-tws-in").toString
-    def arrive(src: String, name: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val f = Files.list(Paths.get(src)).iterator().asScala
-        .filter(_.toString.endsWith(".parquet")).next()
-      Files.copy(f, Paths.get(streamIn, name))
-    }
-    batchDf.filter(col("ts_us") <= midUs).drop("ts_us").coalesce(1)
-      .write.mode("overwrite").parquet(s"$stage/half1")
-    batchDf.filter(col("ts_us") > midUs).drop("ts_us").coalesce(1)
-      .write.mode("overwrite").parquet(s"$stage/half2")
-    val events = spark.readStream.schema(Streams.eventSchema).parquet(streamIn)
-      .withColumn("ts_us", expr(graft.queries.EventsOps.TsUsSql))
-      .withColumn("event_time", expr(graft.queries.EventsOps.EventTimeSql))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q = Streams.sessionizeAppendTws(events)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("stream_sessions_tws")
-      .start()
-    try {
-      arrive(s"$stage/half1", "a.parquet")
-      q.processAllAvailable()
-      arrive(s"$stage/half2", "b.parquet")
-      q.processAllAvailable()
-      val streamed = spark.table("stream_sessions_tws")
-        .select("user_id", "start_us", "end_us", "n_events")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      // the contract: byte-identical closed-session set to the
-      // flatMapGroupsWithState path under the same arrival order — derived
-      // from the batch oracle exactly as in the append test
-      val all = Registry.byName("e01_sessionize").run(spark, sf)
-        .select("user_id", "start_us", "end_us", "n_events")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val lastEnd = all.groupBy(_._1).view.mapValues(_.map(_._3).max).toMap
-      val maxUs = batchDf.agg(max(col("ts_us"))).head().getLong(0)
-      val wmMs = maxUs / 1000L - 2L * 3600L * 1000L
-      val expected = all.filter { case (u, _, end, _) =>
-        end != lastEnd(u) || (end / 1000L + Streams.GapUs / 1000L) < wmMs
-      }.toSet
-      assert(streamed == expected)
-      assert(streamed.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("stream-static anti-join dedup matches the batch incremental dedup") {
     val q = Streams.dedupIncremental(spark, sf)
       .writeStream.outputMode("append")
@@ -578,11 +515,19 @@ class StreamingSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
     val incoming = spark.readStream.schema(schema).parquet(s"$tmp/incoming")
-    val e = intercept[IllegalStateException] {
-      Streams.lshDedupIngest(incoming, s"$tmp/corpus", (_, _) => ())
-    }
-    // the message must name the precondition, not leak a parquet error
-    assert(e.getMessage.contains("seeded"), e.getMessage)
+    val corpus = s"$tmp/corpus"
+    // both ingest daemons refuse; the message must name the daemon and the
+    // precondition, not leak a parquet error
+    val refusals = Seq(
+      "lshDedupIngest" -> intercept[IllegalStateException] {
+        Streams.lshDedupIngest(incoming, corpus, (_, _) => ())
+      },
+      "bloomDedupIngest" -> intercept[IllegalStateException] {
+        Streams.bloomDedupIngest(incoming, corpus, (_, _) => ())
+      })
+    for ((name, e) <- refusals)
+      assert(e.getMessage.startsWith(name) && e.getMessage.contains("seeded"),
+        e.getMessage)
   }
 
   // The LSH ingest fixture: the sf0.001 documents seed the corpus; batch 1
