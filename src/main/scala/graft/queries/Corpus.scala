@@ -16,6 +16,43 @@ import graft.engine.{Exact, Tables}
   */
 object Corpus {
 
+  // Contract constants: each is read by its rows' engines, the streaming
+  // twins and the oracle SQL. Declared before `specs`, whose oracle text
+  // reads them while the object initializes.
+
+  /** The size gate of every language-model join here: the model (vocabulary
+    * or n-gram type table) is broadcast up to this many rows and joined by
+    * shuffle past it. Specs pass 0 to pin the shuffle path.
+    */
+  private[graft] val ModelBroadcastMax = 4L << 20
+
+  /** The doc_id width of one inverted-index shard (c10, c39, c39b and
+    * the streaming twin): per-key posting state is bounded by it.
+    */
+  private[graft] val IndexShardB = 100L
+
+  /** The n-gram order of c36's maintained count table, shared by c36b and
+    * the streaming twin ([[graft.streaming.Streams]] ngramCounts).
+    */
+  private[graft] val C36N = 5
+
+  // c22's interpolation weights. λ̄ is NOT computed as 1.0-λ: that double
+  // is 0.30000000000000004, one ulp off the literal 0.3.
+  private[graft] val BigramLambda = 0.7
+  private[graft] val BigramLambdaBar = 0.3
+
+  // c23/p08's water-fill: the token budget is BudgetMult × the corpus,
+  // and a source supplies at most MaxEpochs passes over its own tokens.
+  private[graft] val BudgetMult = 1.2
+  private[graft] val MaxEpochs = 1.4
+
+  // The c26 unigram-LM contract (c26, c26a, c26b).
+  private[graft] val UniMaxPieceLen = 4 // longest seed substring
+  private[graft] val UniSeedPieces = 300 // multi-char seed pieces kept
+  private[graft] val UniRounds = 4 // Viterbi-EM rounds of c26
+  private[graft] val UniVocab = 200 // c26's final vocabulary size
+  private val UniMaxWordLen = 12 // c26b oracle's unrolled DP length
+
   /** Unigram-LM quality scoring (the c13 engine): train an add-one-smoothed
     * unigram model on the corpus (one token-keyed count shuffle), then score
     * every doc by its mean negative log-likelihood per token — the classic
@@ -33,7 +70,7 @@ object Corpus {
     * per-doc sum — CorpusSpec pins it), so the gate is purely physical.
     */
   def unigramLmScore(docs: DataFrame,
-      broadcastVocabMax: Long = 4L << 20): DataFrame = {
+      broadcastVocabMax: Long = ModelBroadcastMax): DataFrame = {
     val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("c"))
@@ -222,17 +259,16 @@ object Corpus {
     * double in both. Returns (doc_id, score) for docs matching ≥1 term.
     */
   /** One sharded-inverted-index build over `docs` — the c10 shape
-    * ((token, shard = doc_id div B) → df_shard + sorted postings),
+    * ((token, shard = doc_id div [[IndexShardB]]) → df_shard + sorted postings),
     * factored so the incremental path (c39) builds its base and delta
     * from the SAME definition. `min_id` rides along purely as the merge
     * ordering key ([[invertedIndexMerge]]).
     */
-  private[graft] def invertedIndexRows(docs: DataFrame,
-      shardB: Long): DataFrame =
+  private[graft] def invertedIndexRows(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("token"))
-      .withColumn("shard", expr(s"doc_id div $shardB"))
+      .withColumn("shard", expr(s"doc_id div $IndexShardB"))
       .groupBy("token", "shard")
       .agg(count(lit(1)).as("df_shard"),
         min(col("doc_id")).as("min_id"),
@@ -1026,15 +1062,15 @@ object Corpus {
         Tables(s, d, "documents")
           .select(col("doc_id"),
             explode(array_distinct(split(col("text"), " "))).as("token"))
-          .withColumn("shard", expr("doc_id div 100"))
+          .withColumn("shard", expr(s"doc_id div $IndexShardB"))
           .groupBy("token", "shard")
           .agg(count(lit(1)).as("df_shard"),
             concat_ws(",", sort_array(collect_list(col("doc_id")))).as("postings"))
           .orderBy("token", "shard"),
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
              |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token
              |  FROM documents)
-             |SELECT token, doc_id // 100 AS shard, COUNT(*) AS df_shard,
+             |SELECT token, doc_id // $IndexShardB AS shard, COUNT(*) AS df_shard,
              |  array_to_string(list_sort(list(doc_id)), ',') AS postings
              |FROM t GROUP BY token, shard ORDER BY token, shard""".stripMargin),
     ),
@@ -1070,20 +1106,18 @@ object Corpus {
       "c39_inverted_index_incremental",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val mxRow = docs.agg(max(col("doc_id"))).head
-        val cut = if (mxRow.isNullAt(0)) Long.MinValue
-          else mxRow.getLong(0) * 4 / 5
+        val cut = Pipeline.appendCutoff(docs, "doc_id")
         val base = invertedIndexRows(
-          docs.filter(col("doc_id") <= cut), 100L).localCheckpoint(true)
-        val delta = invertedIndexRows(docs.filter(col("doc_id") > cut), 100L)
+          docs.filter(col("doc_id") <= cut)).localCheckpoint(true)
+        val delta = invertedIndexRows(docs.filter(col("doc_id") > cut))
         invertedIndexMerge(base, delta)
           .select("token", "shard", "df_shard", "postings")
           .orderBy("token", "shard")
       },
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
              |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token
              |  FROM documents)
-             |SELECT token, doc_id // 100 AS shard, COUNT(*) AS df_shard,
+             |SELECT token, doc_id // $IndexShardB AS shard, COUNT(*) AS df_shard,
              |  array_to_string(list_sort(list(doc_id)), ',') AS postings
              |FROM t GROUP BY token, shard ORDER BY token, shard""".stripMargin),
     ),
@@ -1098,12 +1132,10 @@ object Corpus {
       "c39b_bm25_from_index",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val mxRow = docs.agg(max(col("doc_id"))).head
-        val cut = if (mxRow.isNullAt(0)) Long.MinValue
-          else mxRow.getLong(0) * 4 / 5
+        val cut = Pipeline.appendCutoff(docs, "doc_id")
         val base = invertedIndexRows(
-          docs.filter(col("doc_id") <= cut), 100L).localCheckpoint(true)
-        val delta = invertedIndexRows(docs.filter(col("doc_id") > cut), 100L)
+          docs.filter(col("doc_id") <= cut)).localCheckpoint(true)
+        val delta = invertedIndexRows(docs.filter(col("doc_id") > cut))
         val merged = invertedIndexMerge(base, delta).localCheckpoint(true)
         val dfreq = merged
           .filter(col("token").isin(BmQueryTerms: _*))
@@ -1319,9 +1351,9 @@ object Corpus {
     // incremental-equivalence family (p15 zone maps, s20 ANN postings).
     QuerySpec(
       "c36_kn5_count_merge",
-      (s, d) => knNgramScoreIncremental(Tables(s, d, "documents"), n = 5),
+      (s, d) => knNgramScoreIncremental(Tables(s, d, "documents"), n = C36N),
       Some {
-        s"""WITH ${knNgramScoreCtes(5)}
+        s"""WITH ${knNgramScoreCtes(C36N)}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
       },
@@ -1337,10 +1369,10 @@ object Corpus {
     // state crosses runs.
     QuerySpec(
       "c36b_kn5_bucketed_merge",
-      (s, d) => knNgramScoreBucketed(s, Tables(s, d, "documents"), n = 5,
+      (s, d) => knNgramScoreBucketed(s, Tables(s, d, "documents"), n = C36N,
         table = s"c36b_base_${graft.queries.Pipeline.dirTag(d)}"),
       Some {
-        s"""WITH ${knNgramScoreCtes(5)}
+        s"""WITH ${knNgramScoreCtes(C36N)}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
       },
@@ -1680,8 +1712,8 @@ object Corpus {
            |st AS (SELECT SUM(cu) AS n_total, COUNT(*) AS v FROM uc),
            |lm AS (
            |  SELECT bc.w1, bc.w2,
-           |    ln(0.7 * (CAST(cb AS DOUBLE) / CAST(cw1 AS DOUBLE))
-           |       + 0.3 * (CAST(cu + 1 AS DOUBLE)
+           |    ln($BigramLambda * (CAST(cb AS DOUBLE) / CAST(cw1 AS DOUBLE))
+           |       + $BigramLambdaBar * (CAST(cu + 1 AS DOUBLE)
            |                / CAST(n_total + v AS DOUBLE))) AS logp
            |  FROM bc JOIN cw USING (w1) JOIN uc ON bc.w2 = uc.tok, st)
            |SELECT doc_id, COUNT(*) AS n_bigrams,
@@ -1694,7 +1726,7 @@ object Corpus {
     // Token-budget allocation with repeat caps — the epoching knob c12's
     // mixing weights feed: given a token budget B (here 1.2x the corpus)
     // and a uniform per-source target, a source can only supply
-    // maxEpochs (1.4) passes over its own tokens, so undersized sources
+    // MaxEpochs (1.4) passes over its own tokens, so undersized sources
     // cap and their unmet demand WATER-FILLS to the sources that still
     // have headroom. Two redistribution rounds, unrolled and identical
     // on both engines (the s08 fixed-iteration discipline) — a fixpoint
@@ -1760,7 +1792,7 @@ object Corpus {
     QuerySpec(
       "c26a_unigram_seed",
       (s, d) => unigramSeed(Tables(s, d, "documents")),
-      Some("""WITH types AS (
+      Some(s"""WITH types AS (
              |  SELECT w, COUNT(*) AS cnt
              |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
              |  WHERE len(w) > 0 GROUP BY w),
@@ -1768,7 +1800,7 @@ object Corpus {
              |  SELECT w, cnt, unnest(range(1, len(w) + 1)) AS i FROM types),
              |pc AS (
              |  SELECT w, cnt, i,
-             |    unnest(range(1, least(4, len(w) - i + 1) + 1)) AS l
+             |    unnest(range(1, least($UniMaxPieceLen, len(w) - i + 1) + 1)) AS l
              |  FROM st),
              |wts AS (
              |  SELECT substr(w, CAST(i AS INT), CAST(l AS INT)) AS piece,
@@ -1778,7 +1810,7 @@ object Corpus {
              |UNION ALL
              |SELECT piece, wt FROM (
              |  SELECT piece, wt FROM wts WHERE len(piece) > 1
-             |  ORDER BY wt DESC, piece LIMIT 300)
+             |  ORDER BY wt DESC, piece LIMIT $UniSeedPieces)
              |ORDER BY piece""".stripMargin),
     ),
     // One FULL EM round driver-verified (r17 VERDICT item 7, the last
@@ -1792,7 +1824,7 @@ object Corpus {
     QuerySpec(
       "c26b_unigram_em_round",
       (s, d) => unigramEmRound(Tables(s, d, "documents")),
-      Some(s"""WITH ${unigramEmRoundSql(300, 4, 12)}
+      Some(s"""WITH $unigramEmRoundSql
               |SELECT piece, wt FROM emr ORDER BY piece""".stripMargin),
     ),
     // CCNet perplexity buckets — see [[perplexityBuckets]] for the design
@@ -2148,11 +2180,9 @@ object Corpus {
       |      AS dup_factor
       |  FROM etot t LEFT JOIN uniq u ON t.source = u.source)""".stripMargin
 
-  /** Oracle CTE chain mirroring [[tokenBudgetFillFromCounts]] at the
-    * default budgetMult=1.2 / maxEpochs=1.4: reads a `by_src(source,
-    * n_tokens)` CTE and ends in `r2(source, n_tokens, cap, alloc)` +
-    * `u(unfilled)`. Shared by the c23 and p08 oracles; the literals here
-    * and in the Spark defaults must stay in lockstep.
+  /** Oracle CTE chain mirroring [[tokenBudgetFillFromCounts]]: reads a
+    * `by_src(source, n_tokens)` CTE and ends in `r2(source, n_tokens,
+    * cap, alloc)` + `u(unfilled)`. Shared by the c23 and p08 oracles.
     */
   lazy val WaterFillCtes: String = {
     s"""by_src_pos AS (
@@ -2163,13 +2193,13 @@ object Corpus {
        |tot AS (SELECT SUM(n_tokens) AS t, COUNT(*) AS s FROM by_src_pos),
        |r1 AS (
        |  SELECT source, n_tokens,
-       |    1.4 * CAST(n_tokens AS DOUBLE) AS cap,
-       |    least((1.2 * CAST(t AS DOUBLE)) / CAST(s AS DOUBLE),
-       |      1.4 * CAST(n_tokens AS DOUBLE)) AS alloc1,
-       |    (1.2 * CAST(t AS DOUBLE)) / CAST(s AS DOUBLE) AS want
+       |    $MaxEpochs * CAST(n_tokens AS DOUBLE) AS cap,
+       |    least(($BudgetMult * CAST(t AS DOUBLE)) / CAST(s AS DOUBLE),
+       |      $MaxEpochs * CAST(n_tokens AS DOUBLE)) AS alloc1,
+       |    ($BudgetMult * CAST(t AS DOUBLE)) / CAST(s AS DOUBLE) AS want
        |  FROM by_src_pos, tot),
        |l1 AS (
-       |  SELECT 1.2 * CAST((SELECT t FROM tot) AS DOUBLE)
+       |  SELECT $BudgetMult * CAST((SELECT t FROM tot) AS DOUBLE)
        |      - ${Exact.sqlSum("alloc1")} AS left1,
        |    SUM(CASE WHEN alloc1 < cap THEN 1 ELSE 0 END) AS n_open
        |  FROM r1),
@@ -2180,28 +2210,24 @@ object Corpus {
        |         ELSE alloc1 END AS alloc
        |  FROM r1, l1),
        |u AS (
-       |  SELECT 1.2 * CAST((SELECT t FROM tot) AS DOUBLE)
+       |  SELECT $BudgetMult * CAST((SELECT t FROM tot) AS DOUBLE)
        |      - ${Exact.sqlSum("alloc")} AS unfilled
        |  FROM r2)""".stripMargin
   }
 
   /** Water-filling token-budget allocation — see the c23 QuerySpec
-    * doc-comment. `budgetMult`/`maxEpochs` are independent literals in
-    * the oracle; keep them in lockstep.
+    * doc-comment.
     */
-  def tokenBudgetFill(docs: DataFrame, budgetMult: Double = 1.2,
-      maxEpochs: Double = 1.4): DataFrame =
+  def tokenBudgetFill(docs: DataFrame): DataFrame =
     tokenBudgetFillFromCounts(
       docs.select(col("source"), size(split(col("text"), " ")).as("nt"))
-        .groupBy("source").agg(sum(col("nt")).cast(LongType).as("n_tokens")),
-      budgetMult, maxEpochs)
+        .groupBy("source").agg(sum(col("nt")).cast(LongType).as("n_tokens")))
 
   /** Water-filling over a precomputed `(source, n_tokens)` frame — the
     * allocation core of c23, factored so p08 can allocate over
     * dedup-effective ([[effectiveTokens]]) counts instead of raw ones.
     */
-  def tokenBudgetFillFromCounts(bySrcIn: DataFrame, budgetMult: Double = 1.2,
-      maxEpochs: Double = 1.4): DataFrame = {
+  def tokenBudgetFillFromCounts(bySrcIn: DataFrame): DataFrame = {
     // exclude zero-token sources before allocating (mirrored in
     // WaterFillCtes' by_src_pos): epochs = alloc / n_tokens would divide
     // by zero — Spark Infinity vs DuckDB NULL, a silent engine divergence
@@ -2211,14 +2237,14 @@ object Corpus {
     val bySrc = bySrcIn.filter(col("n_tokens") > 0).localCheckpoint(true)
     val tot = broadcast(bySrc.agg(sum(col("n_tokens")).as("t"),
       count(lit(1)).as("s")))
-    val budget = lit(budgetMult) * col("t").cast(DoubleType)
+    val budget = lit(BudgetMult) * col("t").cast(DoubleType)
     val r1 = bySrc.crossJoin(tot)
       .select(col("source"), col("n_tokens"), col("t"),
-        (lit(maxEpochs) * col("n_tokens").cast(DoubleType)).as("cap"),
+        (lit(MaxEpochs) * col("n_tokens").cast(DoubleType)).as("cap"),
         least(budget / col("s").cast(DoubleType),
-          lit(maxEpochs) * col("n_tokens").cast(DoubleType)).as("alloc1"))
+          lit(MaxEpochs) * col("n_tokens").cast(DoubleType)).as("alloc1"))
     val l1 = broadcast(r1.groupBy("t")
-      .agg((lit(budgetMult) * col("t").cast(DoubleType) -
+      .agg((lit(BudgetMult) * col("t").cast(DoubleType) -
           Exact.dsum(col("alloc1"))).as("left1"),
         sum(when(col("alloc1") < col("cap"), 1L).otherwise(0L)).as("n_open")))
     val r2 = r1.join(l1, "t")
@@ -2227,7 +2253,7 @@ object Corpus {
           least(col("alloc1") + col("left1") / col("n_open").cast(DoubleType),
             col("cap")))
           .otherwise(col("alloc1")).as("alloc"),
-        (lit(budgetMult) * col("t").cast(DoubleType)).as("b"))
+        (lit(BudgetMult) * col("t").cast(DoubleType)).as("b"))
     val unfilled = broadcast(r2.groupBy("b")
       .agg((col("b") - Exact.dsum(col("alloc"))).as("unfilled")))
     r2.join(unfilled, "b")
@@ -2244,11 +2270,8 @@ object Corpus {
     * the model; the interpolation (not an OOV path) is what spreads the
     * scores.
     */
-  def bigramLmScore(docs: DataFrame, lambda: Double = 0.7,
-      lambdaBar: Double = 0.3, // NOT computed as 1.0-lambda: that double
-      // is 0.30000000000000004, one ulp off the literal 0.3 the oracle
-      // parses — the weights are independent literals on both sides
-      broadcastVocabMax: Long = 4L << 20): DataFrame = {
+  def bigramLmScore(docs: DataFrame,
+      broadcastVocabMax: Long = ModelBroadcastMax): DataFrame = {
     val ts = split(col("text"), " ")
     // map-side bigram stream: the token array zipped with its own tail —
     // slice(_, 1, n-1) vs slice(_, 2, n-1); a 1-token doc yields empty
@@ -2271,9 +2294,9 @@ object Corpus {
       .join(uc.withColumnRenamed("tok", "w2"), "w2")
       .crossJoin(st)
       .select(col("w1"), col("w2"),
-        log(lit(lambda) * (col("cb").cast(DoubleType) /
+        log(lit(BigramLambda) * (col("cb").cast(DoubleType) /
             col("cw1").cast(DoubleType)) +
-          lit(lambdaBar) * ((col("cu") + 1).cast(DoubleType) /
+          lit(BigramLambdaBar) * ((col("cu") + 1).cast(DoubleType) /
             (col("n_total") + col("v")).cast(DoubleType))).as("logp"))
     val joined =
       if (nBigramTypes <= broadcastVocabMax) bg.join(broadcast(lm), Seq("w1", "w2"))
@@ -2566,7 +2589,7 @@ object Corpus {
     * engines).
     */
   def knNgramScore(docs: DataFrame, n: Int,
-      broadcastTypesMax: Long = 4L << 20, minCount: Int = 1): DataFrame = {
+      broadcastTypesMax: Long = ModelBroadcastMax, minCount: Int = 1): DataFrame = {
     val tg = knNgramHashStream(docs, n)
     val tc = knGramHashCounts(tg, n, "knNgramScore").localCheckpoint(true)
     knScoreFromCounts(tg, tc, n, broadcastTypesMax, minCount)
@@ -2619,12 +2642,8 @@ object Corpus {
     * (bounded driver scalar, p15's pattern incl. the empty guard).
     */
   def knNgramScoreIncremental(docs: DataFrame, n: Int,
-      broadcastTypesMax: Long = 4L << 20,
       cutOverride: Option[Long] = None): DataFrame = {
-    val cut = cutOverride.getOrElse {
-      val mxRow = docs.agg(max(col("doc_id"))).head
-      if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0) * 4 / 5
-    }
+    val cut = cutOverride.getOrElse(Pipeline.appendCutoff(docs, "doc_id"))
     // NOT checkpointed (re-measured r18 after the fused-kernel rewrite):
     // tg feeds three consumers, but materializing the 3n-1-column hash
     // stream cost more than twice the recompute once the kernel became
@@ -2639,7 +2658,7 @@ object Corpus {
     // cross-side collision guard rides the join
     val tc = knCountsMerge(baseTc, docs.filter(col("doc_id") > cut), n)
       .localCheckpoint(true)
-    knScoreFromCounts(tg, tc, n, broadcastTypesMax, minCount = 1)
+    knScoreFromCounts(tg, tc, n, ModelBroadcastMax, minCount = 1)
   }
 
   /** c36's scenario over the PRODUCTION STORAGE LAYOUT (r18 VERDICT item
@@ -2664,13 +2683,8 @@ object Corpus {
     * a local constant).
     */
   def knNgramScoreBucketed(s: org.apache.spark.sql.SparkSession,
-      docs: DataFrame, n: Int, table: String,
-      broadcastTypesMax: Long = 4L << 20,
-      cutOverride: Option[Long] = None): DataFrame = {
-    val cut = cutOverride.getOrElse {
-      val mxRow = docs.agg(max(col("doc_id"))).head
-      if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0) * 4 / 5
-    }
+      docs: DataFrame, n: Int, table: String): DataFrame = {
+    val cut = Pipeline.appendCutoff(docs, "doc_id")
     val tg = knNgramHashStream(docs, n)
     val baseTc = knGramHashCounts(tg.filter(col("doc_id") <= cut), n,
       "c36b base")
@@ -2679,7 +2693,7 @@ object Corpus {
     graft.queries.Pipeline.bucketedWriteBy(s, table, baseTc, buckets, "h")
     val tc = knCountsMerge(s.table(table), docs.filter(col("doc_id") > cut), n)
       .localCheckpoint(true)
-    knScoreFromCounts(tg, tc, n, broadcastTypesMax, minCount = 1)
+    knScoreFromCounts(tg, tc, n, ModelBroadcastMax, minCount = 1)
   }
 
   /** Takedown propagation into the n-gram model counts (r17 verdict item
@@ -2694,8 +2708,8 @@ object Corpus {
     * retraction ≡ rebuild (d10/p15/s20b pattern); CorpusSpec pins
     * delete∘append ≡ rebuild on interleaved batches.
     */
-  def knNgramScoreRetract(docs: DataFrame, n: Int, delPred: Column,
-      broadcastTypesMax: Long = 4L << 20): DataFrame = {
+  def knNgramScoreRetract(docs: DataFrame, n: Int,
+      delPred: Column): DataFrame = {
     // recompute-over-materialize for the fan-out hash stream (see
     // knNgramScoreIncremental's measured note)
     val tg = knNgramHashStream(docs, n)
@@ -2711,7 +2725,7 @@ object Corpus {
       knSubCols(n).filterNot(Set(s"x$n", s"s${n - 1}")), "c38 merge")
       .filter(col("c") > 0)
       .localCheckpoint(true)
-    knScoreFromCounts(tg.filter(!delPred), tc, n, broadcastTypesMax,
+    knScoreFromCounts(tg.filter(!delPred), tc, n, ModelBroadcastMax,
       minCount = 1)
   }
 
@@ -2748,7 +2762,7 @@ object Corpus {
     * because its stream IS the count table's source; here they differ).
     */
   def knNgramScoreOpenVocab(docs: DataFrame, n: Int, trainPred: Column,
-      broadcastTypesMax: Long = 4L << 20): DataFrame = {
+      broadcastTypesMax: Long = ModelBroadcastMax): DataFrame = {
     val D = 0.75
     val tcT = knGramHashCounts(knNgramHashStream(docs.filter(trainPred), n),
       n, "c37 train").localCheckpoint(true)
@@ -2935,7 +2949,7 @@ object Corpus {
     * vocabulary so every raw token has a finite ratio.
     */
   def dsirSelect(docs: DataFrame, targetPred: Column, k: Int,
-      broadcastVocabMax: Long = 4L << 20): DataFrame = {
+      broadcastVocabMax: Long = ModelBroadcastMax): DataFrame = {
     val toks = docs.select(col("doc_id"), targetPred.as("is_target"),
       explode(split(col("text"), " ")).as("tok"))
     val counts = toks.groupBy("tok")
@@ -3302,8 +3316,8 @@ object Corpus {
     * (word → count; |types| ≪ corpus — pair/piece statistics are
     * identical because segmentation never crosses word boundaries).
     *
-    * Seed: every substring of length ≤ `maxPieceLen` of every type,
-    * weighted by corpus count — top `seedPieces` multi-char pieces by
+    * Seed: every substring of length ≤ [[UniMaxPieceLen]] of every type,
+    * weighted by corpus count — top [[UniSeedPieces]] multi-char pieces by
     * (weight, then lexicographic piece) ∪ ALL single chars (the coverage
     * guarantee SentencePiece hard-codes). K EM rounds: E-step = Viterbi
     * best-segmentation of each TYPE against the broadcast piece log-prob
@@ -3311,9 +3325,9 @@ object Corpus {
     * narrow (piece, weighted count) partial+final agg. Pieces that win no
     * Viterbi mass drop out (self-pruning); single chars floor-keep at
     * weight 1 so coverage never breaks. Final vocab: all single chars +
-    * top multi-char pieces by (weight desc, piece) up to `vocab`.
+    * top multi-char pieces by (weight desc, piece) up to [[UniVocab]].
     *
-    * Driver-side state is the piece table only (≤ seedPieces + |alphabet|
+    * Driver-side state is the piece table only (≤ UniSeedPieces + |alphabet|
     * rows/round — dictionary-sized, the same size-gated collect class as
     * c17's one-row argmaxes and every broadcast model in the suite).
     * Like c17/c18 this is rows-only at the driver gate (the E-step's
@@ -3322,17 +3336,16 @@ object Corpus {
     * reference implementation plus determinism across partitionings.
     */
   /** The c26 seed vocabulary as a standalone query — the driver-legible
-    * companion to c26: every substring of length ≤ `maxPieceLen` of every
-    * word type, weighted by corpus count; ALL single chars (the coverage
-    * guarantee) ∪ top `seedPieces` multi-char pieces by (weight desc,
+    * companion to c26: every substring of length ≤ [[UniMaxPieceLen]] of
+    * every word type, weighted by corpus count; ALL single chars (the
+    * coverage guarantee) ∪ top [[UniSeedPieces]] multi-char pieces by (weight desc,
     * piece). This is [[unigramTrain]]'s exact EM starting state (same
     * [[seedFrom]] code path), and unlike the chained EM rounds it is
     * plain SQL — a green oracle here vouches for the substring/weight
     * machinery the rows-only c26 builds on.
     */
-  def unigramSeed(docs: DataFrame, seedPieces: Int = 300,
-      maxPieceLen: Int = 4): DataFrame =
-    seedFrom(wordTypes(docs), seedPieces, maxPieceLen).orderBy("piece")
+  def unigramSeed(docs: DataFrame): DataFrame =
+    seedFrom(wordTypes(docs)).orderBy("piece")
 
   /** ONE full Viterbi-EM round from the seed state — c26's first E-step
     * (Viterbi re-segmentation of every word type) plus M-step (piece
@@ -3343,12 +3356,11 @@ object Corpus {
     * table (piece, wt) — multi-char pieces that win no Viterbi mass
     * self-prune, mass-less single chars floor-keep at 1.
     */
-  def unigramEmRound(docs: DataFrame, seedPieces: Int = 300,
-      maxPieceLen: Int = 4): DataFrame = {
+  def unigramEmRound(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val types = wordTypes(docs).localCheckpoint(true)
-    val weights = seedFrom(types, seedPieces, maxPieceLen)
+    val weights = seedFrom(types)
       .as[(String, Long)].collect().toMap // dictionary-sized
     val total = weights.valuesIterator.sum.toDouble
     val logp = weights.map { case (p, w) => p -> StrictMath.log(w / total) }
@@ -3374,8 +3386,8 @@ object Corpus {
   /** The c26b oracle: one EM round in pure DuckDB SQL — the c17b move
     * (unroll data-bounded chained state into a fixed expression chain)
     * applied to segmentation. The Viterbi DP over a word is bounded by
-    * word length, so positions 1..`maxWordLen` unroll into struct
-    * columns c1..cW: each c_j is the max over ≤ `maxPieceLen`
+    * word length, so positions 1..[[UniMaxWordLen]] unroll into struct
+    * columns c1..cW: each c_j is the max over ≤ [[UniMaxPieceLen]]
     * candidate structs {'b': score, 'nn': -pieces, 'k': last-piece
     * length} — struct comparison is lexicographic, so the max
     * implements EXACTLY [[viterbiSegment]]'s pinned tie rule (score
@@ -3391,21 +3403,20 @@ object Corpus {
     * binds in milliseconds (measured both ways). Materialization also
     * pins each c_j to evaluate once, which is the DP's own contract.
     *
-    * Words longer than `maxWordLen` would segment to nothing and
+    * Words longer than [[UniMaxWordLen]] would segment to nothing and
     * hash-mismatch loudly (none exist at any shipped SF; max is 10 at
     * sf1). The log-prob model is a DuckDB MAP built from the same seed
     * CTE as c26a's oracle; ln runs on the same double (w/total) in
     * both engines.
     */
-  private def unigramEmRoundSql(seedPieces: Int, maxPieceLen: Int,
-      maxWordLen: Int): String = {
-    val W = maxWordLen
+  private def unigramEmRoundSql: String = {
+    val W = UniMaxWordLen
     def lp(start: Int, k: Int): String =
       s"list_extract(map_extract(m, substr(w, $start, $k)), 1)"
     // struct fields of a prior-CTE column go through struct_extract —
     // the dot form parses as table.column and fails to bind
     val dpCtes = (1 to W).map { j =>
-      val cands = (1 to math.min(maxPieceLen, j)).map { k =>
+      val cands = (1 to math.min(UniMaxPieceLen, j)).map { k =>
         val prevOk =
           if (j - k == 0) "TRUE" else s"c${j - k} IS NOT NULL"
         val prevB =
@@ -3444,7 +3455,7 @@ object Corpus {
        |st AS (SELECT w, cnt, unnest(range(1, len(w) + 1)) AS i FROM types),
        |pcand AS (
        |  SELECT w, cnt, i,
-       |    unnest(range(1, least($maxPieceLen, len(w) - i + 1) + 1)) AS l
+       |    unnest(range(1, least($UniMaxPieceLen, len(w) - i + 1) + 1)) AS l
        |  FROM st),
        |wts AS (
        |  SELECT substr(w, CAST(i AS INT), CAST(l AS INT)) AS piece,
@@ -3455,7 +3466,7 @@ object Corpus {
        |  UNION ALL
        |  SELECT piece, wt FROM (
        |    SELECT piece, wt FROM wts WHERE len(piece) > 1
-       |    ORDER BY wt DESC, piece LIMIT $seedPieces)),
+       |    ORDER BY wt DESC, piece LIMIT $UniSeedPieces)),
        |tot AS (SELECT CAST(SUM(wt) AS DOUBLE) AS total FROM seed),
        |mdl AS MATERIALIZED (
        |  SELECT map(list(piece), list(ln(CAST(wt AS DOUBLE) / total))) AS m
@@ -3481,31 +3492,29 @@ object Corpus {
        |  UNION ALL SELECT piece, wt FROM flchars)""".stripMargin
   }
 
-  private def seedFrom(types: DataFrame, seedPieces: Int,
-      maxPieceLen: Int): DataFrame = {
+  private def seedFrom(types: DataFrame): DataFrame = {
     val subWeights = types
       .select(col("cnt"), explode(flatten(
         transform(sequence(lit(1), length(col("w"))),
           i => transform(
-            sequence(lit(1), least(lit(maxPieceLen), length(col("w")) - i + 1)),
+            sequence(lit(1), least(lit(UniMaxPieceLen), length(col("w")) - i + 1)),
             len => col("w").substr(i, len))))).as("piece"))
       .groupBy("piece").agg(sum(col("cnt")).as("wt"))
     subWeights.filter(length(col("piece")) === 1)
       .unionByName(subWeights.filter(length(col("piece")) > 1)
-        .orderBy(col("wt").desc, col("piece")).limit(seedPieces))
+        .orderBy(col("wt").desc, col("piece")).limit(UniSeedPieces))
   }
 
-  def unigramTrain(docs: DataFrame, rounds: Int = 4, seedPieces: Int = 300,
-      vocab: Int = 200, maxPieceLen: Int = 4): DataFrame = {
+  def unigramTrain(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val types = wordTypes(docs)
       .localCheckpoint(true) // scanned once per EM round
     var weights: Map[String, Long] =
-      seedFrom(types, seedPieces, maxPieceLen)
+      seedFrom(types)
         .as[(String, Long)].collect().toMap // dictionary-sized
     val sc = spark.sparkContext
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to UniRounds) {
       val total = weights.valuesIterator.sum.toDouble
       val logp = weights.map { case (p, w) => p -> StrictMath.log(w / total) }
       val maxLen = weights.keysIterator.map(_.length).max
@@ -3531,7 +3540,7 @@ object Corpus {
     val chars = weights.toSeq.filter(_._1.length == 1)
     val multi = weights.toSeq.filter(_._1.length > 1)
       .sortBy { case (p, w) => (-w, p) }
-      .take(math.max(0, vocab - chars.size))
+      .take(math.max(0, UniVocab - chars.size))
     val finalVocab = (chars ++ multi)
       .sortBy { case (p, w) => (-w, p) }
       .zipWithIndex

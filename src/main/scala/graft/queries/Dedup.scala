@@ -32,6 +32,15 @@ import graft.functions.ghash
   */
 object Dedup {
 
+  // The word-3-gram MinHash/LSH contract of d03/d08/d10/d11/d20, their sf1
+  // slices and the streaming ingest (Streams.lshDedupIngest), read by the
+  // engines and the oracle SQL. d07 and v07 band the same signature 16 ways.
+  private[graft] val MinHashK = 32 // signature permutations
+  private[graft] val MinHashBands = 8 // bands of MinHashK / MinHashBands rows
+  private[graft] val MinHashCap = 100 // hot-bucket guard: larger dropped whole
+  private[graft] val JaccardMin = 0.3 // exact-Jaccard verify (also d05)
+  private[graft] val ParaWidth = 25 // d22's tokens per paragraph segment
+
   /** Deterministic synthetic URL per doc — the d13/c19 fixture: four
     * variants of scheme / WWW / default-port / tracking-param / fragment
     * noise over doc_id, 50 hosts × 20 pages. Shared between the d13
@@ -193,7 +202,7 @@ object Dedup {
        |  FROM inter
        |  JOIN sz sa ON sa.doc_id = a_id
        |  JOIN sz sb ON sb.doc_id = b_id) _j
-       |WHERE jac >= 0.3
+       |WHERE jac >= $JaccardMin
        |ORDER BY a_id, b_id""".stripMargin
 
   private def toks(c: Column): Column = split(c, " ")
@@ -242,12 +251,12 @@ object Dedup {
     * corpus); `finalSql`: replaces the trailing SELECT when the consumer
     * wants a different projection over `cand`/`shingled` (d20).
     */
-  private def lshOracleSql(k: Int, bands: Int, cap: Int, threshold: Double,
+  private def lshOracleSql(bands: Int,
       newPred: Option[String] = None,
       corpusSql: String = corpusCte,
       finalSql: Option[String] = None): String = {
     import graft.engine.DuckHash
-    val rows = k / bands
+    val rows = MinHashK / bands
     val bucketStr =
       s"array_to_string(list_transform(sig[band*$rows+1 : band*$rows+$rows]," +
         " x -> CAST(x AS VARCHAR)), ',')"
@@ -268,13 +277,13 @@ object Dedup {
        |  SELECT doc_id, $hashedShingleSql AS sh FROM tokd),
        |el AS (SELECT DISTINCT unnest(sh) AS v FROM shingled),
        |elsig AS MATERIALIZED (
-       |  SELECT v, ${DuckHash.sigK("[v]", k)} AS pv FROM el),
+       |  SELECT v, ${DuckHash.sigK("[v]", MinHashK)} AS pv FROM el),
        |docel AS (SELECT doc_id, unnest(sh) AS v FROM shingled),
        |docpv AS (
        |  SELECT d.doc_id, list(s.pv) AS pvs
        |  FROM docel d JOIN elsig s USING (v) GROUP BY d.doc_id),
        |sigs AS MATERIALIZED (
-       |  SELECT doc_id, list_transform(range(1, ${k + 1}),
+       |  SELECT doc_id, list_transform(range(1, ${MinHashK + 1}),
        |    i -> list_min(list_transform(pvs, p -> p[i]))) AS sig
        |  FROM docpv),
        |bandstr AS (
@@ -286,7 +295,7 @@ object Dedup {
        |        FROM bandstr) _h),
        |hot AS (
        |  SELECT band, bucket FROM buckets GROUP BY band, bucket
-       |  HAVING COUNT(*) > $cap),
+       |  HAVING COUNT(*) > $MinHashCap),
        |pruned AS MATERIALIZED (
        |  SELECT b.* FROM buckets b ANTI JOIN hot h USING (band, bucket)),
        |cand AS (
@@ -298,7 +307,7 @@ object Dedup {
          |FROM cand
          |JOIN shingled sa ON sa.doc_id = a_id
          |JOIN shingled sb ON sb.doc_id = b_id
-         |WHERE $jacSql >= $threshold
+         |WHERE $jacSql >= $JaccardMin
          |ORDER BY a_id, b_id""".stripMargin)}""".stripMargin
   }
 
@@ -333,7 +342,7 @@ object Dedup {
     * (CORRECTNESS_sf1.json) — at that scale the spec, not the oracle
     * gate, carries the bucketing claim.
     */
-  def ngramJaccardPairs(corpus: DataFrame, threshold: Double = 0.3,
+  def ngramJaccardPairs(corpus: DataFrame,
       bucketed: Boolean = true): DataFrame = {
     // shingle once per doc before the pair join (see d03 note); eager
     // localCheckpoint (house pattern, see d04 note): reused by both
@@ -355,7 +364,7 @@ object Dedup {
       .filter(col("a_id") < col("b_id") &&
         abs(col("a_n") - col("b_n")) <= 60)
       .withColumn("jac", jaccard(col("a_sh"), col("b_sh")))
-      .filter(col("jac") >= threshold)
+      .filter(col("jac") >= JaccardMin)
       .select(col("a_id"), col("b_id"), col("jac"))
       .orderBy("a_id", "b_id")
   }
@@ -439,9 +448,8 @@ object Dedup {
     * output = lshJaccardPairs(existing ∪ incoming) filtered to
     * new-touching pairs (DedupSpec asserts the set equality against d03).
     */
-  def incrementalLshPairs(existing: DataFrame, incoming: DataFrame, k: Int,
-      bands: Int, cap: Int, threshold: Double): DataFrame = {
-    val rows = k / bands
+  def incrementalLshPairs(existing: DataFrame, incoming: DataFrame): DataFrame = {
+    val rows = MinHashK / MinHashBands
     val corpus = existing.select(col("doc_id"), col("text"))
       .withColumn("is_new", lit(false))
       .unionByName(incoming.select(col("doc_id"), col("text"))
@@ -450,20 +458,21 @@ object Dedup {
       .select(col("doc_id"), col("is_new"), shingleHashes(col("text")).as("sh"))
       .localCheckpoint(true)
     val buckets = shingled
-      .withColumn("sig", ghash.minhashSig(col("sh"), k))
+      .withColumn("sig", ghash.minhashSig(col("sh"), MinHashK))
       .select(
         col("doc_id"), col("is_new"),
         posexplode(
-          transform(sequence(lit(0), lit(bands - 1)),
+          transform(sequence(lit(0), lit(MinHashBands - 1)),
             b => ghash.fnv1a64(concat_ws(",",
               transform(slice(col("sig"), b * rows + 1, lit(rows)), x => x.cast("string")))))
         ).as(Seq("band", "bucket")))
-    val candidates = bucketCandidatesIncremental(buckets, Seq("band", "bucket"), cap)
+    val candidates = bucketCandidatesIncremental(buckets, Seq("band", "bucket"),
+      MinHashCap)
     candidates
       .join(shingled.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
       .join(shingled.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
       .withColumn("jac", jaccardHashed(col("a_sh"), col("b_sh")))
-      .filter(col("jac") >= threshold)
+      .filter(col("jac") >= JaccardMin)
       .select(col("a_id"), col("b_id"), col("jac"))
       .orderBy("a_id", "b_id")
   }
@@ -574,9 +583,8 @@ object Dedup {
     * labeling (component minima; PropertySpec pins the distributed path
     * against the same union-find). Pass 0 to force the distributed path.
     */
-  def connectedComponentsWithRounds(
-      pairs: DataFrame, maxRounds: Int = 50,
-      localThreshold: Long = 1L << 20): (DataFrame, Int) = {
+  def connectedComponentsWithRounds(pairs: DataFrame, maxRounds: Int,
+      localThreshold: Long): (DataFrame, Int) = {
     require(maxRounds > 0, "maxRounds must be positive")
     // Materialize the input ONCE before deriving anything: vertices and
     // edges below are two independent consumers, and without this the
@@ -778,11 +786,11 @@ object Dedup {
   // paragraphKeep expects docs to carry a `paras` array column; build it
   // from fixed-width segments + the planted noisy banner. Kept separate so
   // the segmentation is visible to the caller (and the oracle mirror).
-  private[graft] def withParas(docs: DataFrame, width: Int = 25): DataFrame = {
+  private[graft] def withParas(docs: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
-    val nseg = ((size(toks) + lit(width - 1)) / lit(width)).cast("int")
+    val nseg = ((size(toks) + lit(ParaWidth - 1)) / lit(ParaWidth)).cast("int")
     val segs = transform(sequence(lit(0), nseg - 1),
-      i => concat_ws(" ", slice(toks, i * width + 1, lit(width))))
+      i => concat_ws(" ", slice(toks, i * ParaWidth + 1, lit(ParaWidth))))
     docs.select(col("doc_id"),
       when(col("doc_id") % 5 === 0,
         concat(array(ParaDedup.banner(col("doc_id"))), segs))
@@ -792,7 +800,7 @@ object Dedup {
   /** d03's near-dup pair ids of `corpus`: the input every cluster-level
     * row below closes under [[connectedComponents]]. */
   private def d03PairIds(corpus: DataFrame): DataFrame =
-    lshJaccardPairs(corpus, k = 32, bands = 8, cap = 100, threshold = 0.3)
+    lshJaccardPairs(corpus, MinHashK, MinHashBands, MinHashCap, JaccardMin)
       .select("a_id", "b_id")
 
   /** d08's body (and v08's): one row per dup cluster, members sorted. */
@@ -813,8 +821,7 @@ object Dedup {
         (col("doc_id") + 1000000L).as("doc_id"),
         concat_ws(" ", slice(split(col("text"), " "), lit(1),
           size(split(col("text"), " ")) - 2)).as("text")))
-    incrementalLshPairs(docs, incoming, k = 32, bands = 8, cap = 100,
-      threshold = 0.3)
+    incrementalLshPairs(docs, incoming)
   }
 
   /** d11's body (and v11's): per-lang kept counts + kept-id digest after
@@ -841,8 +848,7 @@ object Dedup {
       .select((col("doc_id") + 5000000L).as("doc_id"),
         concat_ws(" ", slice(split(col("text"), " "), lit(1),
           size(split(col("text"), " ")) - 2)).as("text"))
-    incrementalLshPairs(docs, bench, k = 32, bands = 8, cap = 100,
-      threshold = 0.3)
+    incrementalLshPairs(docs, bench)
       .filter(col("a_id") < 5000000L)
       .select(col("a_id").as("train_id"),
         (col("b_id") - 5000000L).as("bench_src"), col("jac"))
@@ -951,9 +957,9 @@ object Dedup {
     // additionally checks planted-pair recall and the mega-bucket guard.
     QuerySpec(
       "d03_minhash_lsh_pairs",
-      (s, d) => lshJaccardPairs(plantedCorpus(s, d), k = 32, bands = 8,
-        cap = 100, threshold = 0.3),
-      Some(lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3)),
+      (s, d) => lshJaccardPairs(plantedCorpus(s, d), MinHashK, MinHashBands,
+        MinHashCap, JaccardMin),
+      Some(lshOracleSql(MinHashBands)),
       headline = true,
     ),
     // Incremental LSH near-dup: dedup a new batch against the existing
@@ -969,7 +975,7 @@ object Dedup {
         val docs = Tables(s, d, "documents").select(col("doc_id"), col("text"))
         incrementalDedup(docs, docs.filter(col("doc_id") % 10 === 0))
       },
-      Some(lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+      Some(lshOracleSql(MinHashBands,
         newPred = Some("doc_id >= 1000000"))),
     ),
     // Near-dup SURVIVOR selection — the APPLY step of dedup: cluster the
@@ -1030,9 +1036,9 @@ object Dedup {
     // this is the shape you run at 100 TB.
     QuerySpec(
       "d07_ngram_jaccard_scale",
-      (s, d) => lshJaccardPairs(plantedCorpus(s, d), k = 32, bands = 16,
-        cap = 100, threshold = 0.3),
-      Some(lshOracleSql(k = 32, bands = 16, cap = 100, threshold = 0.3)),
+      (s, d) => lshJaccardPairs(plantedCorpus(s, d), MinHashK, bands = 16,
+        MinHashCap, JaccardMin),
+      Some(lshOracleSql(bands = 16)),
     ),
     // SimHash near-dup pairs: 64-bit sketch, 4×16-bit band join, hamming ≤ 8.
     QuerySpec(
@@ -1668,9 +1674,9 @@ object Dedup {
     // this same pipeline and inherit its slice verification.
     QuerySpec(
       "v03_lsh_pairs_sf1slice",
-      (s, d) => lshJaccardPairs(slicedPlanted(s, d), k = 32, bands = 8,
-        cap = 100, threshold = 0.3),
-      Some(lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+      (s, d) => lshJaccardPairs(slicedPlanted(s, d), MinHashK, MinHashBands,
+        MinHashCap, JaccardMin),
+      Some(lshOracleSql(MinHashBands,
         corpusSql = slicedCorpusCte)),
     ),
     QuerySpec(
@@ -1700,9 +1706,9 @@ object Dedup {
     // sf1-scale inputs.
     QuerySpec(
       "v07_lsh16_pairs_sf1slice",
-      (s, d) => lshJaccardPairs(slicedPlanted(s, d), k = 32, bands = 16,
-        cap = 100, threshold = 0.3),
-      Some(lshOracleSql(k = 32, bands = 16, cap = 100, threshold = 0.3,
+      (s, d) => lshJaccardPairs(slicedPlanted(s, d), MinHashK, bands = 16,
+        MinHashCap, JaccardMin),
+      Some(lshOracleSql(bands = 16,
         corpusSql = slicedCorpusCte)),
     ),
     // d10 sliced: existing = 5% of the raw docs; "every 10th" becomes
@@ -1717,7 +1723,7 @@ object Dedup {
         incrementalDedup(base.filter(col("doc_id") % 20 === 0),
           base.filter(col("doc_id") % 200 === 0))
       },
-      Some(lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+      Some(lshOracleSql(MinHashBands,
         newPred = Some("doc_id >= 1000000"),
         corpusSql = """WITH corpus AS (
           |  SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0
@@ -1765,7 +1771,7 @@ object Dedup {
   private def d11OracleSql(corpusSql: String): String = {
     val corpusBody = corpusSql.stripPrefix("WITH ")
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
-       |${lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+       |${lshOracleSql(MinHashBands,
             corpusSql = corpusSql)}
        |),
        |$corpusBody,
@@ -1787,7 +1793,7 @@ object Dedup {
   /** d17's oracle over a pluggable corpus CTE (shared with v17). */
   private def d17OracleSql(corpusSql: String): String =
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
-       |${lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+       |${lshOracleSql(MinHashBands,
             corpusSql = corpusSql)}
        |),
        |sym AS MATERIALIZED (
@@ -1810,7 +1816,7 @@ object Dedup {
   private def d21OracleSql(corpusSql: String): String = {
     val corpusBody = corpusSql.stripPrefix("WITH ")
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
-       |${lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+       |${lshOracleSql(MinHashBands,
             corpusSql = corpusSql)}
        |),
        |$corpusBody,
@@ -1853,7 +1859,7 @@ object Dedup {
          |        FROM documents)
          |  WHERE doc_id % 23 = 0 AND ($slicePred)
          |)""".stripMargin
-    lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+    lshOracleSql(MinHashBands,
       newPred = Some("doc_id >= 5000000"),
       corpusSql = benchCorpus,
       finalSql = Some(
@@ -1862,14 +1868,14 @@ object Dedup {
            |FROM cand
            |JOIN shingled sa ON sa.doc_id = a_id
            |JOIN shingled sb ON sb.doc_id = b_id
-           |WHERE $jacSql >= 0.3 AND a_id < 5000000
+           |WHERE $jacSql >= $JaccardMin AND a_id < 5000000
            |ORDER BY train_id, bench_src""".stripMargin))
   }
 
   /** d08's oracle over a pluggable corpus CTE (shared with v08). */
   private def d08OracleSql(corpusSql: String): String =
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
-       |${lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+       |${lshOracleSql(MinHashBands,
           corpusSql = corpusSql)}
        |),
        |sym AS MATERIALIZED (
@@ -1892,7 +1898,7 @@ object Dedup {
     // head is margin-stripped; the fnv fragment contains '|' (both
     // the literal and HUGEINT ops), so it concatenates AFTER
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
-       |${lshOracleSql(k = 32, bands = 8, cap = 100, threshold = 0.3,
+       |${lshOracleSql(MinHashBands,
           corpusSql = corpusSql)}
        |),
        |$corpusBody,
@@ -1989,7 +1995,7 @@ object Dedup {
     * materialization Spark performs for injected runtime filters.
     */
   def bloomMembership(historical: DataFrame, key: String,
-      expectedItems: Long = 1L << 16): Option[Column => Column] = {
+      expectedItems: Long): Option[Column => Column] = {
     import org.apache.spark.sql.{GraftColumnBridge => B}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -2191,18 +2197,19 @@ private[graft] object ParaDedup {
 
   /** DuckDB CTE block mirroring [[Dedup.paragraphKeep]] + the planting in
     * `withParas` over the raw documents table: produces
-    * `k`(doc_id, pos, para, keep). Width 25; banner prepended for
+    * `k`(doc_id, pos, para, keep). Width [[Dedup.ParaWidth]]; banner prepended for
     * doc_id % 5 = 0 (both parities, so the case variant varies); counts
     * group by the NORMALIZED paragraph string.
     */
   val paraKeepSqlCtes: String = {
     val normPara = normSql.format("para")
+    val W = Dedup.ParaWidth
     s"""p0 AS (
        |  SELECT doc_id,
        |    list_transform(
-       |      range(0, (len(string_split(text, ' ')) + 24) // 25),
+       |      range(0, (len(string_split(text, ' ')) + ${W - 1}) // $W),
        |      i -> array_to_string(
-       |             (string_split(text, ' '))[i*25+1 : i*25+25], ' ')) AS segs
+       |             (string_split(text, ' '))[i*$W+1 : i*$W+$W], ' ')) AS segs
        |  FROM documents),
        |p1 AS (
        |  SELECT doc_id,

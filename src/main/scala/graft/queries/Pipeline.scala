@@ -234,6 +234,21 @@ object Pipeline {
       min(col("tsu")).as("min_ts"), max(col("tsu")).as("max_ts"),
       min(col("value")).as("min_value"), max(col("value")).as("max_value"))
 
+  /** The base/append cutoff of the incremental-equivalence rows (p15,
+    * s20, c36, c39 and the streaming ANN twin): rows with `key` ≤ the
+    * returned value are the base, the rest the append batch. One bounded
+    * driver scalar, max(`key`)·4/5 under floor division, kept a literal so
+    * the slice predicates push down (a crossJoin'd scalar would block
+    * partition pruning). max() over an empty input is NULL: the cutoff is
+    * then Long.MinValue, so everything is delta and the base is empty —
+    * a clean empty result instead of an NPE on getLong. Each oracle
+    * derives the same cutoff in its own SQL.
+    */
+  private[graft] def appendCutoff(df: DataFrame, key: String): Long = {
+    val mxRow = df.agg(max(col(key))).head
+    if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0) * 4 / 5
+  }
+
   /** p15's engine — incremental zone-map maintenance (r15 VERDICT item
     * 5): fold a batch of APPENDED rows into a stored manifest without
     * rescanning the base data. `manifest` is zone-grain rows (what p13
@@ -1120,16 +1135,7 @@ object Pipeline {
           expr("event_id div 256").as("shard"),
           expr(EventsOps.TsUsSql).as("tsu"),
           col("value"), col("event_id"))
-        // bounded driver collect by construction: ONE max over event_id,
-        // needed as a pushdown-able literal for the append cutoff (a
-        // crossJoin'd scalar would block partition pruning of the slices).
-        // max() over an empty table is NULL — treat it as cut=MinValue
-        // (everything lands in the delta, merge of an empty manifest),
-        // matching p13's clean empty result instead of an opaque NPE on
-        // getLong (r16 ADVICE).
-        val mxRow = ev.agg(max(col("event_id"))).head
-        val cut = if (mxRow.isNullAt(0)) Long.MinValue
-          else mxRow.getLong(0) * 4 / 5
+        val cut = appendCutoff(ev, "event_id")
         val base = ev.filter(col("event_id") <= cut)
           .select("shard", "tsu", "value")
         val delta = ev.filter(col("event_id") > cut)

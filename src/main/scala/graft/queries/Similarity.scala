@@ -52,6 +52,17 @@ object Similarity {
   private[graft] val AnnNQ = 5 // the PQ rows' queries: vec_id < AnnNQ
   private[graft] val AnnShortlist = 32 // ADC shortlist per query
   private[graft] val AnnTopK = 5 // neighbors per query after the rerank
+  private[graft] val SearchNQ = 10 // s02/s04 queries: vec_id < SearchNQ
+
+  // The sign-LSH contracts, read by the rows and their oracles: the search
+  // index of s02 and the s10/s11/s13/s17 kNN graphs, and the near-dup
+  // banding of s03/s06/d23.
+  private[graft] val LshTables = 4 // hash tables of every sign-LSH row
+  private[graft] val LshBits = 8 // bits per table of s02/s10/s11/s17
+  private[graft] val LshCap = 1000 // search bucket cap: the smallest ids kept
+  private[graft] val DupBits = 10 // bits per table of s03/s06/d23
+  private[graft] val DupCap = 100 // near-dup hot-bucket guard: larger dropped
+  private[graft] val DupThreshold = 0.99 // s03/s06 exact-cosine verify
 
   /** Σ aᵢ·bᵢ in double precision, sequential fold. */
   def ddot(a: Column, b: Column): Column =
@@ -91,17 +102,17 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Subvector `si` (0-based) of width `subDim`, cast elementwise to
-    * double. Oracle: `list_transform(embedding[si*subDim+1:(si+1)*subDim],
+  /** Subvector `si` (0-based) of width [[PqSubDim]], cast elementwise to
+    * double. Oracle: `list_transform(embedding[si*PqSubDim+1:(si+1)*PqSubDim],
     * x -> CAST(x AS DOUBLE))`.
     */
-  private def subVec(e: Column, si: Column, subDim: Int): Column =
-    transform(slice(e, si * subDim + 1, lit(subDim)), x => x.cast(DoubleType))
+  private def subVec(e: Column, si: Column): Column =
+    transform(slice(e, si * PqSubDim + 1, lit(PqSubDim)), x => x.cast(DoubleType))
 
-  /** PQ codebooks: `m` subspaces × `ksub` codes, each subspace trained by
-    * `iters` Lloyd rounds (L2 metric, decimal-exact means — the s04
-    * exactness contract) over the corpus subvectors; seeds are the `ksub`
-    * lowest vec_ids' subvectors. Returns ONE broadcast-ready row
+  /** PQ codebooks: [[PqM]] subspaces × [[PqKsub]] codes, each subspace
+    * trained by [[PqIters]] Lloyd rounds (L2 metric, decimal-exact means —
+    * the s04 exactness contract) over the corpus subvectors; seeds are the
+    * [[PqKsub]] lowest vec_ids' subvectors. Returns ONE broadcast-ready row
     * `cb: array<struct<sub, codes: array<struct<code, cvec>>>>`, sorted by
     * sub (cb[sub] is positional) and each codes array by code id.
     *
@@ -113,21 +124,21 @@ object Similarity {
     * cell simply drops out of the codebook (all lookups key by `code`, not
     * by array position, so a sparse codebook stays correct).
     */
-  def pqCodebooks(e: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int): DataFrame = {
+  def pqCodebooks(e: DataFrame): DataFrame = {
     import graft.engine.Exact
     val subs = e
-      .select(col("vec_id"), explode(transform(sequence(lit(0), lit(m - 1)),
+      .select(col("vec_id"), explode(transform(sequence(lit(0), lit(PqM - 1)),
         si => struct(si.as("sub"),
-          subVec(col("embedding"), si, subDim).as("svec")))).as("sv"))
+          subVec(col("embedding"), si).as("svec")))).as("sv"))
       .select(col("vec_id"), col("sv.sub").as("sub"), col("sv.svec").as("svec"))
       .localCheckpoint(true)
-    var cb = subs.filter(col("vec_id") < ksub)
+    var cb = subs.filter(col("vec_id") < PqKsub)
       .select(col("sub"), col("vec_id").cast("int").as("code"),
         col("svec").as("cvec"))
       .groupBy("sub")
       .agg(array_sort(collect_list(struct(col("code"), col("cvec")))).as("codes"))
       .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PqIters) {
       val assigned = subs.join(broadcast(cb), "sub")
         .select(col("sub"), col("svec"),
           array_min(transform(col("codes"), c =>
@@ -148,16 +159,16 @@ object Similarity {
     cb.agg(array_sort(collect_list(struct(col("sub"), col("codes")))).as("cb"))
   }
 
-  /** The `m` PQ codes of `vec` against the in-scope `cb` codebook row: per
+  /** The [[PqM]] PQ codes of `vec` against the in-scope `cb` codebook row: per
     * subspace the nearest code by L2, (dist, code) tie-break. The one
     * encode of the flat (s08), IVF (s18/s20 and the streaming twin) and
     * residual (s19, where `vec` is the residual) indexes.
     */
-  private def pqCodes(vec: Column, m: Int, subDim: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), si =>
+  private def pqCodes(vec: Column): Column =
+    transform(sequence(lit(0), lit(PqM - 1)), si =>
       array_min(transform(
         element_at(col("cb"), si + 1).getField("codes"), c =>
-          struct(l2(subVec(vec, si, subDim), c.getField("cvec")).as("d"),
+          struct(l2(subVec(vec, si), c.getField("cvec")).as("d"),
             c.getField("code").as("code")))).getField("code")).as("codes")
 
   /** The query set `(q_id, q_emb)`: the vectors with vec_id < `n`. */
@@ -172,15 +183,15 @@ object Similarity {
     * an O(ksub) filter per row. Built from the RAW query subvectors, also
     * against residual codebooks (s19).
     */
-  private def pqLut(q: DataFrame, cbRow: DataFrame, subDim: Int, ksub: Int): DataFrame =
+  private def pqLut(q: DataFrame, cbRow: DataFrame): DataFrame =
     q.crossJoin(broadcast(cbRow))
       .select(col("q_id"), col("q_emb"),
         transform(col("cb"), sc =>
-          transform(sequence(lit(0), lit(ksub - 1)), codeId => {
+          transform(sequence(lit(0), lit(PqKsub - 1)), codeId => {
             val hit = filter(sc.getField("codes"),
               c => c.getField("code") === codeId)
             when(size(hit) > 0,
-              ddot(subVec(col("q_emb"), sc.getField("sub"), subDim),
+              ddot(subVec(col("q_emb"), sc.getField("sub")),
                 element_at(hit, 1).getField("cvec")))
               .otherwise(lit(Double.NegativeInfinity))
           })).as("lut"))
@@ -188,35 +199,34 @@ object Similarity {
   /** ADC serve over `cands(q_id, q_emb, lut, vec_id, codes)`: each score
     * folds the candidate's m LUT lookups in subspace order from `seed`
     * (0.0, or the residual index's per-cell `qc`), the bounded
-    * [[TopK.perKey]] partial top-k keeps ≤`shortlist` rows per query per
+    * [[TopK.perKey]] partial top-k keeps ≤[[AnnShortlist]] rows per query per
     * map task (never the candidates×queries scored frame), and the
-    * shortlist gets the exact-cosine rerank to `topK`. The one serve tail
+    * shortlist gets the exact-cosine rerank to [[AnnTopK]]. The one serve tail
     * of flat (s08), IVF-routed (s18/s20) and residual (s19) ADC.
     */
-  private def adcTopK(e: DataFrame, cands: DataFrame, seed: Column, m: Int,
-      shortlist: Int, topK: Int): DataFrame = {
+  private def adcTopK(e: DataFrame, cands: DataFrame, seed: Column): DataFrame = {
     val scored = cands
       .select(col("q_id"), col("q_emb"), col("vec_id"),
-        aggregate(sequence(lit(0), lit(m - 1)), seed, (acc, si) =>
+        aggregate(sequence(lit(0), lit(PqM - 1)), seed, (acc, si) =>
           acc + element_at(element_at(col("lut"), si + 1),
             element_at(col("codes"), si + 1) + 1)).as("adc"))
     val short = TopK.perKey(scored,
       keys = Seq(col("q_id")),
       order = Seq(col("adc").desc, col("vec_id")),
-      k = shortlist)
+      k = AnnShortlist)
     e.select(col("vec_id"), col("embedding").as("n_emb"))
       .join(broadcast(short), "vec_id")
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("adc"),
         cosine(col("q_emb"), col("n_emb")).as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= AnnTopK)
       .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"), col("cos"))
       .orderBy("q_id", "rank")
   }
 
   /** PQ-ADC approximate nearest neighbors: train codebooks
-    * ([[pqCodebooks]]), encode every corpus vector as `m` small code ids
+    * ([[pqCodebooks]]), encode every corpus vector as [[PqM]] small code ids
     * (the 100 TB memory story: m bytes leave the scan instead of the
     * full float vector — 64× compression at m=4, dim=64), precompute each
     * query's asymmetric-distance lookup table ([[pqLut]]), then score the
@@ -228,14 +238,13 @@ object Similarity {
     * broadcast codebook/LUT rows; the only corpus-wide exchange is the
     * TopK partial aggregation's ≤(queries·shortlist) rows per task.
     */
-  def pqAdcAnn(e: DataFrame, m: Int, subDim: Int, ksub: Int, iters: Int,
-      nQ: Int, shortlist: Int, topK: Int): DataFrame = {
-    val cbRow = pqCodebooks(e, m, subDim, ksub, iters)
+  def pqAdcAnn(e: DataFrame): DataFrame = {
+    val cbRow = pqCodebooks(e)
     val enc = e.crossJoin(broadcast(cbRow))
-      .select(col("vec_id"), pqCodes(col("embedding"), m, subDim))
-    val qlut = pqLut(annQueries(e, nQ), cbRow, subDim, ksub)
+      .select(col("vec_id"), pqCodes(col("embedding")))
+    val qlut = pqLut(annQueries(e, AnnNQ), cbRow)
     adcTopK(e, enc.crossJoin(broadcast(qlut)).filter(col("vec_id") =!= col("q_id")),
-      lit(0.0), m, shortlist, topK)
+      lit(0.0))
   }
 
   // ---- IVF coarse quantizer (s04) ----
@@ -255,8 +264,8 @@ object Similarity {
         c.getField("cell").as("cell"))))
       .getField("cell")
 
-  /** Lloyd-refined IVF centroids: seeds = the k lowest vec_ids, then exactly
-    * `iters` rounds of (per-row nearest-centroid assignment → decimal-exact
+  /** Lloyd-refined IVF centroids: seeds = the [[IvfK]] lowest vec_ids, then
+    * exactly `iters` rounds of (per-row nearest-centroid assignment → decimal-exact
     * mean per cell & dim) — a fixed count, so the DuckDB oracle unrolls the
     * identical steps. Returns ONE array row `cents: array<struct<cell,cvec>>`
     * ready to broadcast.
@@ -272,9 +281,9 @@ object Similarity {
     * order-independent, so centroids — and every downstream assignment —
     * are identical on any partitioning AND bit-reproducible by the oracle.
     */
-  def ivfCentroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
+  def ivfCentroids(e: DataFrame, iters: Int = IvfIters): DataFrame = {
     import graft.engine.Exact
-    var centArr = e.filter(col("vec_id") < k)
+    var centArr = e.filter(col("vec_id") < IvfK)
       .agg(collect_list(struct(col("vec_id").as("cell"),
         col("embedding").as("cvec"))).as("cents"))
       .localCheckpoint(true)
@@ -317,12 +326,11 @@ object Similarity {
   }
 
   /** IVF ANN end-to-end: build centroids ([[ivfCentroids]]), index the
-    * corpus by nearest cell, probe the `nprobe` closest cells per query
-    * (vec_id < 10), exact-cosine rerank to `topK`. Exposed so the spec can
-    * compare recall across iteration counts.
+    * corpus by nearest cell, probe the [[IvfNprobe]] closest cells per
+    * query (vec_id < [[SearchNQ]]), exact-cosine rerank to [[AnnTopK]].
     */
-  def ivfAnn(e: DataFrame, k: Int, nprobe: Int, iters: Int, topK: Int): DataFrame = {
-    val centArr = ivfCentroids(e, k, iters)
+  def ivfAnn(e: DataFrame): DataFrame = {
+    val centArr = ivfCentroids(e)
     // index: per-row assignment of the corpus to its final centroid.
     // localCheckpoint (not persist): eager, and the ContextCleaner reclaims
     // it when the frame goes out of scope — the house pattern from d03/d08
@@ -331,9 +339,9 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         nearestCell(col("cents"), col("embedding")).as("cell"))
       .localCheckpoint(true)
-    rerankTopK(probeCells(annQueries(e, 10), centArr, nprobe, qc = false)
+    rerankTopK(probeCells(annQueries(e, SearchNQ), centArr, IvfNprobe, qc = false)
       .join(index, "cell")
-      .filter(col("vec_id") =!= col("q_id")), topK)
+      .filter(col("vec_id") =!= col("q_id")), AnnTopK)
   }
 
   /** IVF-PQ quantizer training: coarse centroids ([[ivfCentroids]]) + the
@@ -342,9 +350,8 @@ object Similarity {
     * (train frozen on the BASE, encode also the append batch) share one
     * training definition.
     */
-  private[graft] def ivfPqQuantizers(trainE: DataFrame, k: Int, ivfIters: Int,
-      m: Int, subDim: Int, ksub: Int, pqIters: Int): (DataFrame, DataFrame) =
-    (ivfCentroids(trainE, k, ivfIters), pqCodebooks(trainE, m, subDim, ksub, pqIters))
+  private[graft] def ivfPqQuantizers(trainE: DataFrame): (DataFrame, DataFrame) =
+    (ivfCentroids(trainE), pqCodebooks(trainE))
 
   /** The IVF-PQ encode pass: one map-side sweep stamping each vector with
     * its coarse cell and m PQ codes against ALREADY-TRAINED quantizers.
@@ -358,16 +365,16 @@ object Similarity {
     * index — the property that makes appends cheap at 100 TB.
     */
   private[graft] def ivfPqEncode(e: DataFrame, centArr: DataFrame,
-      cbRow: DataFrame, m: Int, subDim: Int): DataFrame =
+      cbRow: DataFrame): DataFrame =
     e.withColumn("_j", lit(1))
       .join(broadcast(centArr.withColumn("_j", lit(1))), "_j")
       .join(broadcast(cbRow.withColumn("_j", lit(1))), "_j")
       .select(col("vec_id"),
         nearestCell(col("cents"), col("embedding")).as("cell"),
-        pqCodes(col("embedding"), m, subDim))
+        pqCodes(col("embedding")))
 
   /** Composed IVF-PQ ANN — the production FAISS index shape (r15 VERDICT
-    * item 4): route each query to its `nprobe` nearest IVF cells
+    * item 4): route each query to its [[IvfNprobe]] nearest IVF cells
     * ([[ivfCentroids]], the s04 coarse quantizer), ADC-score with the PQ
     * lookup table ([[pqCodebooks]], the s08 compressed codes) ONLY the
     * vectors indexed in those cells, then exact-cosine rerank the
@@ -375,7 +382,8 @@ object Similarity {
     * rows (m bytes each) instead of the whole float corpus — the two
     * operators' scale stories multiplied.
     *
-    * Composition law (SimilaritySpec): with nprobe = k this degenerates
+    * Composition law (SimilaritySpec, via [[ivfPqServe]]'s `nprobe`):
+    * with nprobe = [[IvfK]] this degenerates
     * to EXACTLY s08's flat ADC ranking — the cell routing only ever
     * restricts the candidate set, never changes a score. Index build is
     * ONE corpus pass computing cell + PQ codes together (both
@@ -383,25 +391,19 @@ object Similarity {
     * lives in exactly one cell, so no candidate dedup is needed); the
     * shortlist is the bounded TopK.perKey partial top-k.
     */
-  def ivfPqAnn(e: DataFrame, k: Int, nprobe: Int, ivfIters: Int,
-      m: Int, subDim: Int, ksub: Int, pqIters: Int,
-      nQ: Int, shortlist: Int, topK: Int,
-      trainPred: Option[Column] = None): DataFrame = {
+  def ivfPqAnn(e: DataFrame, trainPred: Option[Column] = None): DataFrame = {
     // trainPred bounds QUANTIZER TRAINING to a sample (t20b's sampled-
     // training pattern — and FAISS's own recommendation: ~O(k) training
     // points suffice); encode/route/serve stay corpus-wide and
     // structurally identical. The oracle-gated contract trains full
     // (trainPred = None); s18b runs the sampled deployment.
     val trainE = trainPred.map(e.filter).getOrElse(e)
-    val (centArr, cbRow) = ivfPqQuantizers(trainE, k, ivfIters,
-      m, subDim, ksub, pqIters)
+    val (centArr, cbRow) = ivfPqQuantizers(trainE)
     // ONE pass over the corpus: coarse cell + m PQ codes per vector —
     // the narrow index rows (vec_id, cell, m codes) are all that any
     // downstream stage touches until the final rerank
-    val index = ivfPqEncode(e, centArr, cbRow, m, subDim)
-      .localCheckpoint(true)
-    ivfPqServe(e, index, centArr, cbRow, m, subDim, ksub, nprobe,
-      nQ, shortlist, topK, residual = false)
+    val index = ivfPqEncode(e, centArr, cbRow).localCheckpoint(true)
+    ivfPqServe(e, index, centArr, cbRow, residual = false)
   }
 
   /** The IVF-PQ serve path over a built `index(vec_id, cell, codes)`:
@@ -410,18 +412,19 @@ object Similarity {
     * Shared by [[ivfPqAnn]], [[ivfPqIndexAppend]] and
     * [[ivfPqResidualAnn]] — the append op must serve through the SAME
     * path as the full build or its equivalence row proves nothing. A
-    * `residual` index seeds each score at its probe's qc.
+    * `residual` index seeds each score at its probe's qc. `nprobe` is
+    * settable for SimilaritySpec's s18 composition law (nprobe = [[IvfK]]
+    * reproduces flat ADC); every row probes [[IvfNprobe]] cells.
     */
   private[graft] def ivfPqServe(e: DataFrame, index: DataFrame,
-      centArr: DataFrame, cbRow: DataFrame, m: Int, subDim: Int, ksub: Int,
-      nprobe: Int, nQ: Int, shortlist: Int, topK: Int,
-      residual: Boolean): DataFrame = {
-    val q = annQueries(e, nQ)
+      centArr: DataFrame, cbRow: DataFrame, residual: Boolean,
+      nprobe: Int = IvfNprobe): DataFrame = {
+    val q = annQueries(e, AnnNQ)
     val cands = probeCells(q, centArr, nprobe, qc = residual).drop("q_emb")
       .join(index, "cell")
       .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(pqLut(q, cbRow, subDim, ksub)), "q_id")
-    adcTopK(e, cands, if (residual) col("qc") else lit(0.0), m, shortlist, topK)
+      .join(broadcast(pqLut(q, cbRow)), "q_id")
+    adcTopK(e, cands, if (residual) col("qc") else lit(0.0))
   }
 
   /** Incremental ANN index maintenance (r16 VERDICT item 3): a standing
@@ -445,23 +448,16 @@ object Similarity {
     * ([[graft.streaming.Streams]] annIndexEncode) runs the identical
     * encode pass over the ingest stream; StreamingSpec pins parity.
     */
-  def ivfPqIndexAppend(e: DataFrame, k: Int, nprobe: Int, ivfIters: Int,
-      m: Int, subDim: Int, ksub: Int, pqIters: Int,
-      nQ: Int, shortlist: Int, topK: Int,
+  def ivfPqIndexAppend(e: DataFrame,
       deletes: Option[DataFrame] = None): DataFrame = {
-    // bounded driver collect (the p15 pattern): ONE max over vec_id for
-    // the base/append cutoff literal; empty input → empty base+delta
-    val mxRow = e.agg(max(col("vec_id"))).head
-    val cut = if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0) * 4 / 5
+    val cut = Pipeline.appendCutoff(e, "vec_id")
     val base = e.filter(col("vec_id") <= cut)
     val delta = e.filter(col("vec_id") > cut)
-    val (centArr, cbRow) = ivfPqQuantizers(base, k, ivfIters,
-      m, subDim, ksub, pqIters)
+    val (centArr, cbRow) = ivfPqQuantizers(base)
     // the persisted artifacts: base index checkpointed once; the delta
     // encode stays lazy — it is the per-append work
-    val baseIdx = ivfPqEncode(base, centArr, cbRow, m, subDim)
-      .localCheckpoint(true)
-    val merged = baseIdx.union(ivfPqEncode(delta, centArr, cbRow, m, subDim))
+    val baseIdx = ivfPqEncode(base, centArr, cbRow).localCheckpoint(true)
+    val merged = baseIdx.union(ivfPqEncode(delta, centArr, cbRow))
     // tombstone deletion (s20b — FAISS remove_ids semantics): the
     // delete list is a RELATION anti-joined against the postings;
     // quantizers stay frozen, nothing re-encodes, and the per-delete
@@ -470,8 +466,7 @@ object Similarity {
     val live = deletes.map(dl =>
         merged.join(broadcast(dl.select("vec_id")), Seq("vec_id"), "left_anti"))
       .getOrElse(merged)
-    ivfPqServe(e, live, centArr, cbRow, m, subDim, ksub, nprobe,
-      nQ, shortlist, topK, residual = false)
+    ivfPqServe(e, live, centArr, cbRow, residual = false)
   }
 
   /** Residual IVF-PQ ANN — the ACTUAL FAISS `IVFPQ` encoding (s18 is
@@ -491,16 +486,13 @@ object Similarity {
     * RESIDUAL codebooks. The fold seeds at qc so both engines sum
     * (((qc + l0) + l1) + l2) + l3 in lockstep.
     */
-  def ivfPqResidualAnn(e: DataFrame, k: Int, nprobe: Int, ivfIters: Int,
-      m: Int, subDim: Int, ksub: Int, pqIters: Int,
-      nQ: Int, shortlist: Int, topK: Int,
+  def ivfPqResidualAnn(e: DataFrame,
       trainPred: Option[Column] = None): DataFrame = {
     // sampled quantizer training (the ivfPqAnn knob): centroids fit on
     // the sample; the residual codebooks fit on the SAMPLE's residuals
     // (sliced from the corpus-wide assignment frame, which encoding
     // needs anyway). Contract trains full (None).
-    val centArr = ivfCentroids(trainPred.map(e.filter).getOrElse(e),
-      k, ivfIters)
+    val centArr = ivfCentroids(trainPred.map(e.filter).getOrElse(e))
     // assignment keeping BOTH the cell id and its centroid vector (the
     // struct-argmax tiebreak never reaches cvec — cell is unique)
     val assigned = e.crossJoin(broadcast(centArr))
@@ -518,13 +510,11 @@ object Similarity {
       .localCheckpoint(true)
     val resFrame = assigned.select(col("vec_id"),
       col("residual").as("embedding"))
-    val cbRow = pqCodebooks(trainPred.map(resFrame.filter).getOrElse(resFrame),
-      m, subDim, ksub, pqIters)
+    val cbRow = pqCodebooks(trainPred.map(resFrame.filter).getOrElse(resFrame))
     val index = assigned.crossJoin(broadcast(cbRow))
-      .select(col("vec_id"), col("cell"), pqCodes(col("residual"), m, subDim))
+      .select(col("vec_id"), col("cell"), pqCodes(col("residual")))
       .localCheckpoint(true)
-    ivfPqServe(e, index, centArr, cbRow, m, subDim, ksub, nprobe,
-      nQ, shortlist, topK, residual = true)
+    ivfPqServe(e, index, centArr, cbRow, residual = true)
   }
 
   // ---- DuckDB replicas of the sign-LSH pipeline (oracles for s02/s03) ----
@@ -545,7 +535,7 @@ object Similarity {
     * values and the per-row multiply-sum order are unchanged, so every
     * projection double is bit-identical to the inline form.
     */
-  private def duckHypCte(nTables: Int, nBits: Int): String =
+  private def duckHypCte(nBits: Int): String =
     s"""hyp AS MATERIALIZED (
        |  SELECT tbl,
        |    list_transform(range(0, $nBits), j ->
@@ -554,7 +544,7 @@ object Similarity {
                   "CAST(d + 64 * j + 1024 * tbl AS HUGEINT)")} % 2 = 0
        |             THEN CAST(1.0 AS DOUBLE)
        |             ELSE CAST(-1.0 AS DOUBLE) END)) AS sgns
-       |  FROM (SELECT unnest(range(0, $nTables)) AS tbl))""".stripMargin
+       |  FROM (SELECT unnest(range(0, $LshTables)) AS tbl))""".stripMargin
 
   /** Mirrors [[lshProj]] against the `sgns` column of [[duckHypCte]]:
     * per-dim double multiply + left-to-right list_sum, the same float
@@ -639,16 +629,16 @@ object Similarity {
   def lshProjs(vec: Column, table: Int, nBits: Int): Column =
     array((0 until nBits).map(j => lshProj(vec, table, j)): _*)
 
-  /** Bits-per-table sized to the corpus: the smallest b in [lo, hi] with
-    * `occupancy · 2^b >= n`, i.e. expected bucket occupancy ≤ `occupancy`
-    * under uniform codes. Integer arithmetic only — a float log2 could
-    * round differently from the oracle's replica at exact powers of two.
+  /** Bits-per-table sized to the corpus: the smallest b in [4, 16] with
+    * `16 · 2^b >= n`, i.e. expected bucket occupancy ≤ 16 under uniform
+    * codes. Integer arithmetic only — a float log2 could round
+    * differently from the oracle's replica at exact powers of two.
     * This is the s10b deployment rule: candidate volume per query stays
-    * O(occupancy · probes) as the corpus grows, instead of growing
+    * O(16 · probes) as the corpus grows, instead of growing
     * linearly with n at a pinned code width.
     */
-  def scaledBits(n: Long, occupancy: Long = 16L, lo: Int = 4, hi: Int = 16): Int =
-    (lo to hi).find(b => (occupancy << b) >= n).getOrElse(hi)
+  def scaledBits(n: Long): Int =
+    (4 to 16).find(b => (16L << b) >= n).getOrElse(16)
 
   /** Code from a materialized projection array. */
   def codeOf(projs: Column, nBits: Int): Column =
@@ -663,7 +653,7 @@ object Similarity {
     * most likely buckets per table at zero extra index size. Tie-break
     * matches the DuckDB oracle: first occurrence of the rank-th value.
     */
-  def probeCodeOf(projs: Column, nBits: Int, rank: Int = 1): Column = {
+  def probeCodeOf(projs: Column, nBits: Int, rank: Int): Column = {
     val absArr = transform(projs, p => abs(p))
     val idx = array_position(absArr, element_at(array_sort(absArr), rank)) // 1-based
     codeOf(projs, nBits)
@@ -709,7 +699,7 @@ object Similarity {
     * it degrades gracefully, and the kept-ids rule (cap smallest) is
     * deterministic so the DuckDB oracle replicates it exactly.
     */
-  private def lshCandidates(corpus: DataFrame, queryPred: Column, nTables: Int,
+  private def lshCandidates(corpus: DataFrame, queryPred: Column,
       nBits: Int, cap: Int): DataFrame = {
     // one row per (vector, table); code and probe codes derived from the
     // SAME materialized projection array. Eager local checkpoint, not
@@ -717,7 +707,7 @@ object Similarity {
     // concurrently (the d03 lesson), and nothing leaks past the call.
     val codes = corpus.select(
       col("vec_id"),
-      posexplode(array((0 until nTables).map(t =>
+      posexplode(array((0 until LshTables).map(t =>
         lshProjs(col("embedding"), t, nBits)): _*)).as(Seq("tbl", "projs")))
       .select(col("vec_id"), col("tbl"),
         codeOf(col("projs"), nBits).as("code"),
@@ -751,20 +741,23 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
       .orderBy("q_id", "rank")
 
-  /** Sign-LSH approximate top-k ([[lshCandidates]] for the `queryPred`
-    * rows, then an exact cosine rerank over candidates only) — at 100 TB
-    * the bucket join touches |corpus|·(buckets probed)/2^nBits vectors
-    * instead of all of them.
+  /** Sign-LSH approximate top-k ([[lshCandidates]] for the vec_id <
+    * [[SearchNQ]] queries, then an exact cosine rerank over candidates
+    * only) — at 100 TB the bucket join touches |corpus|·(buckets
+    * probed)/2^nBits vectors instead of all of them. `k` and `cap` are
+    * settable for SimilaritySpec: its k = corpus-size sweep reads the
+    * candidate set, and its cap = 50 plant pins the bucket guard.
     */
-  def lshAnn(corpus: DataFrame, queryPred: Column, nTables: Int, nBits: Int,
-      k: Int, cap: Int = 1000): DataFrame =
+  def lshAnn(corpus: DataFrame, k: Int, cap: Int = LshCap): DataFrame = {
+    val queryPred = col("vec_id") < SearchNQ
     // embeddings attach per candidate: query side is tiny → broadcast;
     // corpus side is one shuffle of (vec_id → embedding) against the
     // candidate list, each vector moving once
-    rerankTopK(lshCandidates(corpus, queryPred, nTables, nBits, cap)
+    rerankTopK(lshCandidates(corpus, queryPred, LshBits, cap)
       .join(broadcast(corpus.filter(queryPred)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))), "q_id")
       .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"), k)
+  }
 
   /** kNN GRAPH — [[lshAnn]] with every vector as a query (the structure
     * SemDeDup-style semantic clustering, kNN-graph community detection,
@@ -776,8 +769,7 @@ object Similarity {
     * by the SAME capped bucket index (≤ cap ids per (tbl, code)), so the
     * graph build is O(|corpus| · probes · occupancy), never quadratic.
     */
-  def knnGraph(corpus: DataFrame, nTables: Int, nBits: Int, k: Int,
-      cap: Int = 1000): DataFrame =
+  def knnGraph(corpus: DataFrame, nBits: Int, k: Int): DataFrame =
     // DECISION RECORD (r10, measured): the serve cut stays a row_number
     // window, NOT plans/TopKPerKey. At the 1M probe (dev/scaleprobe_r10.jsonl,
     // identical corpus/params), the TopKPerKey variant ran 424 s vs 44 s
@@ -792,7 +784,7 @@ object Similarity {
     // PlanSpec. s08 keeps TopKPerKey, where per-task rows-per-key ≫ k
     // (corpus-wide scoring against a broadcast shortlist) makes the
     // partial phase genuinely reductive.
-    rerankTopK(lshCandidates(corpus, lit(true), nTables, nBits, cap)
+    rerankTopK(lshCandidates(corpus, lit(true), nBits, LshCap)
       .join(corpus.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), "q_id")
       .join(corpus.select(col("vec_id"), col("embedding")), "vec_id"), k)
 
@@ -804,20 +796,19 @@ object Similarity {
     * near-identical embeddings, the boilerplate-doc case of vector space)
     * can never turn candidate generation quadratic. Embeddings move only
     * per confirmed candidate — the bucket shuffle carries (tbl, code,
-    * vec_id), never the 64-float vectors.
+    * vec_id), never the 64-float vectors. Pairs clear [[DupThreshold]].
     */
-  def nearDupPairs(corpus: DataFrame, nTables: Int, nBits: Int, cap: Int,
-      threshold: Double = 0.99): DataFrame = {
+  def nearDupPairs(corpus: DataFrame): DataFrame = {
     val coded = corpus.select(
       col("vec_id").as("doc_id"),
-      posexplode(array((0 until nTables).map(t =>
-        lshCode(col("embedding"), t, nBits)): _*)).as(Seq("tbl", "code")))
-    val candidates = Dedup.bucketCandidates(coded, Seq("tbl", "code"), cap)
+      posexplode(array((0 until LshTables).map(t =>
+        lshCode(col("embedding"), t, DupBits)): _*)).as(Seq("tbl", "code")))
+    val candidates = Dedup.bucketCandidates(coded, Seq("tbl", "code"), DupCap)
     candidates
       .join(corpus.select(col("vec_id").as("a_id"), col("embedding").as("a_emb")), "a_id")
       .join(corpus.select(col("vec_id").as("b_id"), col("embedding").as("b_emb")), "b_id")
       .withColumn("cos", cosine(col("a_emb"), col("b_emb")))
-      .filter(col("cos") >= threshold)
+      .filter(col("cos") >= DupThreshold)
       .select(col("a_id"), col("b_id"), col("cos"))
       .orderBy("a_id", "b_id")
   }
@@ -841,8 +832,8 @@ object Similarity {
       .select(col("r.vec_id").as("vec_id"), col("r.embedding").as("embedding"))
   }
 
-  def embeddingNearDup(e: DataFrame, nTables: Int, nBits: Int, cap: Int): DataFrame =
-    nearDupPairs(perturbedCorpus(e), nTables, nBits, cap)
+  def embeddingNearDup(e: DataFrame): DataFrame =
+    nearDupPairs(perturbedCorpus(e))
 
   /** d23's engine — CROSS-corpus embedding near-dup (semantic
     * decontamination): given a corpus tagged `is_new` (false = train,
@@ -958,20 +949,20 @@ object Similarity {
     * to eigendecomposition).
     *
     * Start vector is the constant 1/8 = 1/√64 (exactly representable);
-    * `rounds` is FIXED — parity needs identical arithmetic, not
+    * [[S14Rounds]] is FIXED — parity needs identical arithmetic, not
     * convergence tests. Sign convention: flip so the largest-|component|
     * coordinate (ties → smallest index) is positive. Deflation uses the
     * UNFLIPPED vector (vvᵀ is sign-invariant) — the oracle does the same.
     */
-  private[graft] def pcaFit(e: DataFrame, dim: Int = S14Dim, k: Int = S14K,
-      rounds: Int = S14Rounds): (Array[Double], Array[Array[Double]], Array[Double]) = {
+  private[graft] def pcaFit(
+      e: DataFrame): (Array[Double], Array[Array[Double]], Array[Double]) = {
     val xv = e.select(col("vec_id"),
       posexplode(col("embedding").cast("array<double>")).as(Seq("i", "v")))
     val muRows = xv.groupBy("i")
       .agg((graft.engine.Exact.dsum(col("v")) /
         count(lit(1)).cast(DoubleType)).as("mu"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val mu = Array.tabulate(dim)(muRows)
+    val mu = Array.tabulate(S14Dim)(muRows)
     val muLit = array(mu.map(lit(_)): _*)
     // centered frame built map-side from the scan (no mean join needed —
     // mu is a literal); the self-join on vec_id expands to n·d² product
@@ -985,8 +976,8 @@ object Similarity {
       .groupBy("i", "j")
       .agg((graft.engine.Exact.dsum(col("xc") * col("yc")) / n).as("cv"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    val c = Array.tabulate(dim, dim)((i, j) => cRows((i, j)))
-    val (evecs, lambdas) = pcaEigen(c, dim, k, rounds)
+    val c = Array.tabulate(S14Dim, S14Dim)((i, j) => cRows((i, j)))
+    val (evecs, lambdas) = pcaEigen(c)
     (mu, evecs, lambdas)
   }
 
@@ -996,8 +987,9 @@ object Similarity {
     * Deterministic given `cIn` (decimal-quantized sums, IEEE-exact
     * everything else); `cIn` is not mutated.
     */
-  private[graft] def pcaEigen(cIn: Array[Array[Double]], dim: Int, k: Int,
-      rounds: Int): (Array[Array[Double]], Array[Double]) = {
+  private[graft] def pcaEigen(
+      cIn: Array[Array[Double]]): (Array[Array[Double]], Array[Double]) = {
+    val (dim, k) = (S14Dim, S14K)
     val c = Array.tabulate(dim, dim)((i, j) => cIn(i)(j))
     val c0 = Array.tabulate(dim, dim)((i, j) => c(i)(j))
     // phase 1: deflated power iteration — drives each vector toward a
@@ -1007,7 +999,7 @@ object Similarity {
     val vs = Array.ofDim[Array[Double]](k)
     for (comp <- 0 until k) {
       var v = Array.fill(dim)(0.125)
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to S14Rounds) {
         val w = Array.tabulate(dim)(i => decSum((0 until dim).map(j => c(i)(j) * v(j))))
         val norm = math.sqrt(decSum(w.map(x => x * x)))
         v = w.map(_ / norm)
@@ -1092,8 +1084,8 @@ object Similarity {
     * path by SimilaritySpec (captured variance on the EXACT covariance,
     * fast basis vs exact basis).
     */
-  def pcaProjectFast(e: DataFrame, dim: Int = S14Dim, k: Int = S14K,
-      rounds: Int = S14Rounds): DataFrame = {
+  def pcaProjectFast(e: DataFrame): DataFrame = {
+    val dim = S14Dim
     val buf = e.agg(graft.functions.GramAgg.gram(col("embedding"), dim))
       .head().getSeq[Double](0)
     val n = buf(0)
@@ -1106,7 +1098,7 @@ object Similarity {
       c(j)(i) = v
       p += 1
     }
-    val (evecs, _) = pcaEigen(c, dim, k, rounds)
+    val (evecs, _) = pcaEigen(c)
     pcaProjected(e, mu, evecs)
   }
 
@@ -1116,9 +1108,8 @@ object Similarity {
     * (id, label) — one row per vector that belongs to a mutual cluster.
     */
   private[graft] def mutualComponents(e: DataFrame,
-      nBits: Int = 8): DataFrame = {
-    val g = knnGraph(e.select(col("vec_id"), col("embedding")),
-      nTables = 4, nBits = nBits, k = 3, cap = 1000)
+      nBits: Int = LshBits): DataFrame = {
+    val g = knnGraph(e.select(col("vec_id"), col("embedding")), nBits, k = 3)
     // mutual edge: the unordered pair appears in both directions
     val mutual = g.select(
         least(col("q_id"), col("neighbor_id")).as("a_id"),
@@ -1145,7 +1136,7 @@ object Similarity {
     * cluster-keyed min, then narrow joins back to the id column — vectors
     * themselves never enter any join.
     */
-  def semanticSurvivors(e: DataFrame, nBits: Int = 8): DataFrame = {
+  def semanticSurvivors(e: DataFrame, nBits: Int = LshBits): DataFrame = {
     val comp = mutualComponents(e, nBits).withColumnRenamed("id", "vec_id")
     val keepers = comp.groupBy("label").agg(min(col("vec_id")).as("keeper"))
     e.select(col("vec_id"))
@@ -1295,53 +1286,16 @@ object Similarity {
     // ≥0.9 recall on planted genuinely-near neighbors.
     QuerySpec(
       "s02_ann_lsh",
-      (s, d) => lshAnn(emb(s, d), col("vec_id") < 10, nTables = 4, nBits = 8,
-        k = 5, cap = 1000),
+      (s, d) => lshAnn(emb(s, d), k = AnnTopK),
       // full SQL oracle: the whole sign-LSH pipeline (projections, codes,
       // multi-probe, BOUNDED bucket index, exact rerank) replicated in
-      // DuckDB with identical float evaluation order. The hot-bucket cap
-      // (keep the 1000 smallest vec_ids per (tbl, code)) is the QUALIFY
-      // row_number ≤ cap — same deterministic kept-ids rule as the Spark
-      // side's min-cap aggregation.
-      Some(s"""WITH ${duckHypCte(4, 8)},
-              |proj AS MATERIALIZED (
-              |  SELECT vec_id, embedding, tbl,
-              |    ${duckProjs("embedding")} AS projs
-              |  FROM embeddings CROSS JOIN hyp),
-              |coded AS MATERIALIZED (
-              |  SELECT vec_id, tbl,
-              |    ${duckCode("projs", 8)} AS code,
-              |    ${duckProbe("projs", 8, 1)} AS probe,
-              |    ${duckProbe("projs", 8, 2)} AS probe2
-              |  FROM proj),
-              |idx AS (
-              |  SELECT tbl, code, vec_id FROM coded
-              |  QUALIFY ROW_NUMBER() OVER (PARTITION BY tbl, code
-              |    ORDER BY vec_id) <= 1000),
-              |q AS (
-              |  SELECT tbl, code AS qcode, vec_id AS q_id
-              |  FROM coded WHERE vec_id < 10
-              |  UNION ALL
-              |  SELECT tbl, probe AS qcode, vec_id AS q_id
-              |  FROM coded WHERE vec_id < 10
-              |  UNION ALL
-              |  SELECT tbl, probe2 AS qcode, vec_id AS q_id
-              |  FROM coded WHERE vec_id < 10),
-              |cand AS (
-              |  SELECT DISTINCT q.q_id, i.vec_id
-              |  FROM idx i JOIN q ON i.tbl = q.tbl AND i.code = q.qcode
-              |  WHERE i.vec_id != q.q_id),
-              |ranked AS (
-              |  SELECT c.q_id, c.vec_id AS neighbor_id,
-              |    ${duckCos("qe.embedding", "ne.embedding")} AS cos,
-              |    ROW_NUMBER() OVER (PARTITION BY c.q_id
-              |      ORDER BY ${duckCos("qe.embedding", "ne.embedding")} DESC,
-              |        c.vec_id) AS rank
-              |  FROM cand c
-              |  JOIN embeddings qe ON qe.vec_id = c.q_id
-              |  JOIN embeddings ne ON ne.vec_id = c.vec_id)
+      // DuckDB with identical float evaluation order — s10's graph CTEs
+      // with the query side restricted to vec_id < SearchNQ.
+      Some(s"""WITH ${knnGraphCtes(duckHypCte(LshBits),
+                duckCode("projs", LshBits), duckProbe("projs", LshBits, _),
+                "proj", s" WHERE vec_id < $SearchNQ")}
               |SELECT q_id, neighbor_id, rank, cos FROM ranked
-              |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin),
+              |WHERE rank <= $AnnTopK ORDER BY q_id, rank""".stripMargin),
     ),
     // IVF (inverted-file) ANN: deterministic coarse quantizer (centroids =
     // THREE Lloyd iterations from hash-picked seeds — see [[ivfCentroids]]),
@@ -1353,7 +1307,7 @@ object Similarity {
     // identical three steps and stay bit-exact.
     QuerySpec(
       "s04_ann_ivf",
-      (s, d) => ivfAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters, AnnTopK),
+      (s, d) => ivfAnn(vecs(s, d)),
       // full SQL oracle: each Lloyd step uses the decimal-exact mean, so the
       // centroids — and every assignment, probe, and rerank after them —
       // are bit-identical across engines. The iterations are UNROLLED
@@ -1372,7 +1326,7 @@ object Similarity {
            |    SELECT e.vec_id AS q_id, e.embedding AS q_emb, c.cell,
            |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
            |        ORDER BY ${duckCos("e.embedding", "c.cvec")} DESC, c.cell) AS rn
-           |    FROM e CROSS JOIN cent$IvfIters c WHERE e.vec_id < 10) t WHERE rn <= $IvfNprobe),
+           |    FROM e CROSS JOIN cent$IvfIters c WHERE e.vec_id < $SearchNQ) t WHERE rn <= $IvfNprobe),
            |ranked AS (
            |  SELECT q_id, i.vec_id AS neighbor_id,
            |    ${duckCos("q_emb", "i.embedding")} AS cos,
@@ -1426,7 +1380,7 @@ object Similarity {
     // LSH buckets generate candidates; exact cosine ≥ 0.99 verifies.
     QuerySpec(
       "s03_embedding_neardup",
-      (s, d) => embeddingNearDup(emb(s, d), nTables = 4, nBits = 10, cap = 100),
+      (s, d) => embeddingNearDup(emb(s, d)),
       // full SQL oracle: planted perturbation (same float rounding), codes,
       // the SAME hot-bucket guard (codes above cap dropped whole), bucket
       // self-join, exact cosine verify
@@ -1448,8 +1402,8 @@ object Similarity {
     QuerySpec(
       "d23_semantic_decontam",
       (s, d) => crossCorpusEmbeddingNearDup(decontamCorpus(emb(s, d)),
-          nTables = 4, nBits = 10, cap = 100, threshold = 0.98,
-          benchProbes = 2)
+          nTables = LshTables, nBits = DupBits, cap = DupCap,
+          threshold = 0.98, benchProbes = 2)
         .select(col("train_id"),
           (col("bench_id") - 5000000L).as("bench_src"), col("cos"))
         .orderBy("train_id", "bench_src"),
@@ -1466,8 +1420,7 @@ object Similarity {
       "s06_semantic_dedup",
       (s, d) => {
         val corpus = perturbedCorpus(emb(s, d))
-        val pairs = nearDupPairs(corpus, nTables = 4, nBits = 10, cap = 100)
-          .select(col("a_id"), col("b_id"))
+        val pairs = nearDupPairs(corpus).select(col("a_id"), col("b_id"))
         val losers = graft.queries.Dedup.connectedComponents(pairs)
           .filter(col("id") =!= col("label"))
           .select(col("id").as("drop_id"))
@@ -1606,8 +1559,7 @@ object Similarity {
     // reaches an exchange.
     QuerySpec(
       "s08_pq_adc",
-      (s, d) => pqAdcAnn(vecs(s, d), PqM, PqSubDim, PqKsub, PqIters,
-        AnnNQ, AnnShortlist, AnnTopK),
+      (s, d) => pqAdcAnn(vecs(s, d)),
       Some {
         val subs = 1 until PqM
         s"""WITH ${pqOracleSubCtes().mkString(",\n")},
@@ -1631,8 +1583,7 @@ object Similarity {
     // the only new SQL is that one join.
     QuerySpec(
       "s18_ivfpq_ann",
-      (s, d) => ivfPqAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
-        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK),
+      (s, d) => ivfPqAnn(vecs(s, d)),
       Some(ivfPqOracleSql(None, idxWhere = "")),
     ),
     // SAMPLED-training IVF-PQ — the configuration a 100 TB deployment
@@ -1648,8 +1599,7 @@ object Similarity {
     // unchanged SQL. SimilaritySpec pins the recall-vs-full law.
     QuerySpec(
       "s18b_ivfpq_sampled",
-      (s, d) => ivfPqAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
-        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK,
+      (s, d) => ivfPqAnn(vecs(s, d),
         trainPred = Some(col("vec_id") < SampledTrainN)),
       Some(ivfPqOracleSql(Some(s"vec_id < $SampledTrainN"), idxWhere = "")),
     ),
@@ -1662,8 +1612,7 @@ object Similarity {
     // ADC sum.
     QuerySpec(
       "s19_ivfpq_residual",
-      (s, d) => ivfPqResidualAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
-        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK),
+      (s, d) => ivfPqResidualAnn(vecs(s, d)),
       Some(ivfPqResidualOracleSql(None)),
     ),
     // SAMPLED-training residual IVF-PQ — s19's deployment config (r16
@@ -1676,8 +1625,7 @@ object Similarity {
     // verbatim.
     QuerySpec(
       "s19b_ivfpq_residual_sampled",
-      (s, d) => ivfPqResidualAnn(vecs(s, d), IvfK, IvfNprobe, IvfIters,
-        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK,
+      (s, d) => ivfPqResidualAnn(vecs(s, d),
         trainPred = Some(col("vec_id") < SampledTrainN)),
       Some(ivfPqResidualOracleSql(Some(s"vec_id < $SampledTrainN"))),
     ),
@@ -1690,8 +1638,7 @@ object Similarity {
     // engines from MAX(vec_id)*4/5 under floor division.
     QuerySpec(
       "s20_ann_index_append",
-      (s, d) => ivfPqIndexAppend(vecs(s, d), IvfK, IvfNprobe, IvfIters,
-        PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK),
+      (s, d) => ivfPqIndexAppend(vecs(s, d)),
       Some(ivfPqOracleSql(Some(appendBaseSql), idxWhere = "")),
     ),
     // Tombstone deletion on the maintained index — s20 with a delete
@@ -1707,8 +1654,7 @@ object Similarity {
       "s20b_ann_index_delete",
       (s, d) => {
         val e = vecs(s, d)
-        ivfPqIndexAppend(e, IvfK, IvfNprobe, IvfIters,
-          PqM, PqSubDim, PqKsub, PqIters, AnnNQ, AnnShortlist, AnnTopK,
+        ivfPqIndexAppend(e,
           deletes = Some(e.filter(pmod(col("vec_id"), lit(17)) === 3)))
       },
       Some(ivfPqOracleSql(Some(appendBaseSql),
@@ -1765,8 +1711,7 @@ object Similarity {
     // removed; SimilaritySpec checks graph recall against brute force.
     QuerySpec(
       "s10_knn_graph",
-      (s, d) => knnGraph(vecs(s, d),
-        nTables = 4, nBits = 8, k = 5, cap = 1000),
+      (s, d) => knnGraph(vecs(s, d), LshBits, k = 5),
       Some(s"""WITH $knnGraphOracleCtes
               |SELECT q_id, neighbor_id, rank, cos FROM ranked
               |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin),
@@ -1786,7 +1731,7 @@ object Similarity {
       (s, d) => {
         val e = vecs(s, d)
         val nb = scaledBits(e.count())
-        knnGraph(e, nTables = 4, nBits = nb, k = 5, cap = 1000)
+        knnGraph(e, nb, k = 5)
       },
       Some(s"""WITH $knnGraphScaledOracleCtes
               |SELECT q_id, neighbor_id, rank, cos FROM ranked
@@ -1811,7 +1756,7 @@ object Similarity {
       (s, d) => {
         import graft.engine.Exact
         val e = vecs(s, d)
-        val centArr = ivfCentroids(e, IvfK, IvfIters)
+        val centArr = ivfCentroids(e)
         val assigned = e.crossJoin(broadcast(centArr))
           .select(col("vec_id"),
             nearestCell(col("cents"), col("embedding")).as("cell"))
@@ -2200,7 +2145,7 @@ object Similarity {
     * s08, candidate-gated for s18 — then [[pqRerankOracleTail]].
     */
   private def pqOracleSubCtes(src: String = "embeddings",
-      qsrc: String = "embeddings", tsrc: String = ""): Seq[String] = {
+      tsrc: String = ""): Seq[String] = {
     import graft.engine.Exact
     def sl(s: Int) =
       s"list_transform(embedding[${s * PqSubDim + 1}:${(s + 1) * PqSubDim}], x -> CAST(x AS DOUBLE))"
@@ -2212,10 +2157,10 @@ object Similarity {
       // when the LUT's query side differs from the train/encode source
       // (s19: codebooks over RESIDUALS, LUT over RAW query subvectors),
       // an extra q{s}v CTE carries the query subvectors
-      val qv = if (qsrc == src) v else s"q${s}v"
+      val qv = if (src == "embeddings") v else s"q${s}v"
       val qvCte =
-        if (qsrc == src) Seq.empty
-        else Seq(s"$qv AS (SELECT vec_id, ${sl(s)} AS svec FROM $qsrc)")
+        if (src == "embeddings") Seq.empty
+        else Seq(s"$qv AS (SELECT vec_id, ${sl(s)} AS svec FROM embeddings)")
       // when codebook TRAINING reads a sample while encoding stays
       // corpus-wide (s18b/s19b sampled-training deployment config), an
       // extra t{s}v CTE carries the training subvectors; seeds and every
@@ -2378,7 +2323,7 @@ object Similarity {
        |      p -> CAST(p[1] AS DOUBLE) - p[2]) AS embedding
        |  FROM idx0 i JOIN e ON e.vec_id = i.vec_id
        |  JOIN cent$IvfIters c ON c.cell = i.cell),
-       |$rtr${pqOracleSubCtes(src = "res", qsrc = "embeddings",
+       |$rtr${pqOracleSubCtes(src = "res",
               tsrc = if (trainWhere.isEmpty) "" else "rtr").mkString(",\n")},
        |${ivfPqServeOracleSql(residual = true)}""".stripMargin
   }
@@ -2390,7 +2335,7 @@ object Similarity {
     * count-sized (s13/s17b) oracles.
     */
   private def knnGraphCtes(hyp: String, code: String, probe: Int => String,
-      codedFrom: String): String =
+      codedFrom: String, queryWhere: String): String =
     s"""$hyp,
        |proj AS MATERIALIZED (
        |  SELECT vec_id, embedding, tbl,
@@ -2405,13 +2350,13 @@ object Similarity {
        |idx AS (
        |  SELECT tbl, code, vec_id FROM coded
        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY tbl, code
-       |    ORDER BY vec_id) <= 1000),
+       |    ORDER BY vec_id) <= $LshCap),
        |q AS (
-       |  SELECT tbl, code AS qcode, vec_id AS q_id FROM coded
+       |  SELECT tbl, code AS qcode, vec_id AS q_id FROM coded$queryWhere
        |  UNION ALL
-       |  SELECT tbl, probe AS qcode, vec_id AS q_id FROM coded
+       |  SELECT tbl, probe AS qcode, vec_id AS q_id FROM coded$queryWhere
        |  UNION ALL
-       |  SELECT tbl, probe2 AS qcode, vec_id AS q_id FROM coded),
+       |  SELECT tbl, probe2 AS qcode, vec_id AS q_id FROM coded$queryWhere),
        |cand AS (
        |  SELECT DISTINCT q.q_id, i.vec_id
        |  FROM idx i JOIN q ON i.tbl = q.tbl AND i.code = q.qcode
@@ -2426,10 +2371,12 @@ object Similarity {
        |  JOIN embeddings qe ON qe.vec_id = c.q_id
        |  JOIN embeddings ne ON ne.vec_id = c.vec_id)""".stripMargin
 
-  /** s10's contract (4 tables, 8 bits) through [[knnGraphCtes]]. */
+  /** s10's contract ([[LshTables]] tables, [[LshBits]] bits) through
+    * [[knnGraphCtes]], every vector a query.
+    */
   private def knnGraphOracleCtes: String =
-    knnGraphCtes(duckHypCte(4, 8), duckCode("projs", 8),
-      duckProbe("projs", 8, _), "proj")
+    knnGraphCtes(duckHypCte(LshBits), duckCode("projs", LshBits),
+      duckProbe("projs", LshBits, _), "proj", queryWhere = "")
 
   /** The s10b oracle: [[knnGraphOracleCtes]] with the code width computed
     * from the corpus COUNT by the same integer rule as [[scaledBits]]
@@ -2453,8 +2400,8 @@ object Similarity {
          |  SELECT COALESCE(MIN(b), 16) AS nb
          |  FROM range(4, 17) t(b), (SELECT COUNT(*) AS n FROM embeddings)
          |  WHERE (16 * (1 << b)) >= n),
-         |${duckHypCte(4, 16)}""".stripMargin,
-      dynCode, dynProbe, "proj, nbv")
+         |${duckHypCte(16)}""".stripMargin,
+      dynCode, dynProbe, "proj, nbv", queryWhere = "")
   }
 
   /** d23's oracle: union corpus (train + drifted bench), sign-LSH codes,
@@ -2471,7 +2418,7 @@ object Similarity {
        |      v -> CAST(CAST(v AS DOUBLE) * 0.95 + 0.02 AS FLOAT)),
        |    TRUE
        |  FROM embeddings WHERE vec_id % 23 = 0),
-       |${duckHypCte(4, 10)},
+       |${duckHypCte(DupBits)},
        |proj AS MATERIALIZED (
        |  SELECT vec_id, embedding, is_new, tbl,
        |    ${duckProjs("embedding")} AS projs
@@ -2481,15 +2428,15 @@ object Similarity {
        |  FROM (
        |    SELECT vec_id, embedding, is_new, tbl,
        |      CASE WHEN is_new
-       |        THEN list_distinct([${duckCode("projs", 10)},
-       |          ${duckProbe("projs", 10, 1)},
-       |          ${duckProbe("projs", 10, 2)},
-       |          ${duckProbe12("projs", 10)}])
-       |        ELSE [${duckCode("projs", 10)}] END AS cs
+       |        THEN list_distinct([${duckCode("projs", DupBits)},
+       |          ${duckProbe("projs", DupBits, 1)},
+       |          ${duckProbe("projs", DupBits, 2)},
+       |          ${duckProbe12("projs", DupBits)}])
+       |        ELSE [${duckCode("projs", DupBits)}] END AS cs
        |    FROM proj) c, UNNEST(c.cs) AS u(code)),
        |hot AS (
        |  SELECT tbl, code FROM coded GROUP BY tbl, code
-       |  HAVING COUNT(*) > 100),
+       |  HAVING COUNT(*) > $DupCap),
        |pruned AS MATERIALIZED (
        |  SELECT c.* FROM coded c ANTI JOIN hot h USING (tbl, code)),
        |cand AS (
@@ -2514,17 +2461,17 @@ object Similarity {
        |    list_transform(embedding,
        |      v -> CAST(CAST(v AS DOUBLE) * 0.98 + 0.01 AS FLOAT))
        |  FROM embeddings WHERE vec_id % 10 = 0),
-       |${duckHypCte(4, 10)},
+       |${duckHypCte(DupBits)},
        |proj AS MATERIALIZED (
        |  SELECT vec_id, embedding, tbl,
        |    ${duckProjs("embedding")} AS projs
        |  FROM corpus CROSS JOIN hyp),
        |coded AS MATERIALIZED (
-       |  SELECT vec_id, embedding, tbl, ${duckCode("projs", 10)} AS code
+       |  SELECT vec_id, embedding, tbl, ${duckCode("projs", DupBits)} AS code
        |  FROM proj),
        |hot AS (
        |  SELECT tbl, code FROM coded GROUP BY tbl, code
-       |  HAVING COUNT(*) > 100),
+       |  HAVING COUNT(*) > $DupCap),
        |pruned AS MATERIALIZED (
        |  SELECT c.* FROM coded c ANTI JOIN hot h USING (tbl, code)),
        |cand AS (
@@ -2534,6 +2481,6 @@ object Similarity {
        |  WHERE a.vec_id < b.vec_id)
        |SELECT a_id, b_id, ${duckCos("a_emb", "b_emb")} AS cos
        |FROM cand
-       |WHERE ${duckCos("a_emb", "b_emb")} >= 0.99
+       |WHERE ${duckCos("a_emb", "b_emb")} >= $DupThreshold
        |ORDER BY a_id, b_id""".stripMargin
 }

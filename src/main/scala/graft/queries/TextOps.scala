@@ -1885,7 +1885,7 @@ object TextOps {
     // Distributed quality-classifier TRAINING — see [[classifierTrain]]
     // for the full design narrative (hashed features, algebraic sigmoid,
     // decimal-exact full-batch rounds, broadcast model serve). The oracle
-    // unrolls the three fixed gradient rounds in chained CTEs — the
+    // unrolls the T20Rounds fixed gradient rounds in chained CTEs — the
     // s04-Lloyd pattern applied to model fitting. EdgeSpec asserts the
     // trained weights SEPARATE the planted classes (every positive
     // margin above every negative), i.e. the training actually learns,
@@ -1893,7 +1893,7 @@ object TextOps {
     QuerySpec(
       "t20_classifier_train",
       (s, d) => classifierTrain(docs(s, d)),
-      Some(t20OracleSql(T20Rounds, T20Lr)),
+      Some(t20OracleSql),
     ),
     // t20's DEPLOYABLE twin — train on the deterministic md5 sample,
     // serve corpus-wide (the FineWeb-Edu/DCLM deployment shape; the c27
@@ -1903,7 +1903,7 @@ object TextOps {
     QuerySpec(
       "t20b_classifier_sampled",
       (s, d) => classifierTrainSampled(docs(s, d)),
-      Some(t20bOracleSql(T20Rounds, T20Lr)),
+      Some(t20bOracleSql),
     ),
     // Quality-ensemble keep decision — see [[ensembleFrame]]: the
     // MAD-calibrated vote combination of t13 / c13 / the continuous
@@ -2092,7 +2092,7 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** t20's oracle: the `rounds` gradient rounds UNROLLED in chained CTEs
+  /** t20's oracle: the [[T20Rounds]] gradient rounds UNROLLED in chained CTEs
     * (seed residual → g1/w1 → m2/r2/g2/w2 → … → final margins), mirroring
     * the fixed round count in the contract query. Every sum goes through
     * [[graft.engine.Exact.sqlSumNarrow]]'s VARCHAR-hopped decimal path
@@ -2102,7 +2102,7 @@ object TextOps {
     * expression tree as the Spark side, so the whole training trajectory
     * is bit-identical.
     */
-  private[graft] def t20OracleSql(rounds: Int, lr: Double): String = {
+  private[graft] def t20OracleSql: String = {
     import graft.engine.{DuckHash, Exact}
     val head =
       s"""WITH docs2 AS (
@@ -2114,7 +2114,7 @@ object TextOps {
          |tk AS (SELECT doc_id, y, string_split(text, ' ') AS toks FROM docs2),
          |fc0 AS MATERIALIZED (
          |  SELECT doc_id, y,
-         |    CAST(${DuckHash.fnv("feat")} % 262144 AS BIGINT) AS fid,
+         |    CAST(${DuckHash.fnv("feat")} % $T20Buckets AS BIGINT) AS fid,
          |    COUNT(*) AS c
          |  FROM (
          |    SELECT doc_id, y, unnest(list_concat(toks,
@@ -2131,29 +2131,11 @@ object TextOps {
          |  JOIN nfeats USING (doc_id)),
          |nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nn FROM documents),
          |r1 AS (SELECT doc_id, 0.5 - y AS r FROM docs2)""".stripMargin
-    val body = (1 to rounds).map { k =>
-      val g =
-        s"""g$k AS (SELECT fid, s / nn AS g FROM (
-           |  SELECT fid, ${Exact.sqlSumNarrow("r * x")} AS s
-           |  FROM fc JOIN r$k USING (doc_id) GROUP BY fid)
-           |  CROSS JOIN nd)""".stripMargin
-      val w = if (k == 1)
-        s"w1 AS (SELECT fid, 0.0 - $lr * g AS w FROM g1)"
-      else
-        s"w$k AS (SELECT fid, w - $lr * g AS w FROM w${k - 1} JOIN g$k USING (fid))"
-      val next = if (k < rounds)
-        s""",
-           |m${k + 1} AS (SELECT doc_id, y, ${Exact.sqlSumNarrow("w * x")} AS m
-           |  FROM fc JOIN w$k USING (fid) GROUP BY doc_id, y),
-           |r${k + 1} AS (SELECT doc_id,
-           |  0.5 + m / (2.0 * (1.0 + abs(m))) - y AS r FROM m${k + 1})""".stripMargin
-      else ""
-      s",\n$g,\n$w$next"
-    }.mkString
+    val body = t20RoundCtes("fc")
     val tail =
       s""",
          |mf AS (SELECT doc_id, y, ${Exact.sqlSumNarrow("w * x")} AS m
-         |  FROM fc JOIN w$rounds USING (fid) GROUP BY doc_id, y),
+         |  FROM fc JOIN w$T20Rounds USING (fid) GROUP BY doc_id, y),
          |thr AS (SELECT (
          |    ${Exact.sqlSumNarrow("CASE WHEN y = 1.0 THEN m END")}
          |      / SUM(CASE WHEN y = 1.0 THEN 1.0 ELSE 0.0 END)
@@ -2166,13 +2148,41 @@ object TextOps {
     head + body + tail
   }
 
+  /** The [[T20Rounds]] unrolled gradient rounds over the `train` feature
+    * CTE (t20: `fc`, t20b: its in-sample slice `fcs`): per round the
+    * gradient `g{k}`, the weights `w{k}` and, before the last, the next
+    * margins `m{k+1}` and residuals `r{k+1}`.
+    */
+  private def t20RoundCtes(train: String): String = {
+    import graft.engine.Exact
+    (1 to T20Rounds).map { k =>
+      val g =
+        s"""g$k AS (SELECT fid, s / nn AS g FROM (
+           |  SELECT fid, ${Exact.sqlSumNarrow("r * x")} AS s
+           |  FROM $train JOIN r$k USING (doc_id) GROUP BY fid)
+           |  CROSS JOIN nd)""".stripMargin
+      val w = if (k == 1)
+        s"w1 AS (SELECT fid, 0.0 - $T20Lr * g AS w FROM g1)"
+      else
+        s"w$k AS (SELECT fid, w - $T20Lr * g AS w FROM w${k - 1} JOIN g$k USING (fid))"
+      val next = if (k < T20Rounds)
+        s""",
+           |m${k + 1} AS (SELECT doc_id, y, ${Exact.sqlSumNarrow("w * x")} AS m
+           |  FROM $train JOIN w$k USING (fid) GROUP BY doc_id, y),
+           |r${k + 1} AS (SELECT doc_id,
+           |  0.5 + m / (2.0 * (1.0 + abs(m))) - y AS r FROM m${k + 1})""".stripMargin
+      else ""
+      s",\n$g,\n$w$next"
+    }.mkString
+  }
+
   /** t20b's oracle — [[t20OracleSql]] with the training CTEs restricted
     * to the deterministic md5 sample (fcs/nd/r1 filter on in_sample) and
     * the serve/threshold split: margins over ALL docs under the
     * sample-trained weights, threshold from the sample's class means.
     * Same decimal-exact trajectory, so still bit-identical to Spark.
     */
-  private[graft] def t20bOracleSql(rounds: Int, lr: Double): String = {
+  private[graft] def t20bOracleSql: String = {
     import graft.engine.{DuckHash, Exact}
     val head =
       s"""WITH docs0 AS (
@@ -2190,7 +2200,7 @@ object TextOps {
          |  FROM docs2),
          |fc0 AS MATERIALIZED (
          |  SELECT doc_id, y, in_sample,
-         |    CAST(${DuckHash.fnv("feat")} % 262144 AS BIGINT) AS fid,
+         |    CAST(${DuckHash.fnv("feat")} % $T20Buckets AS BIGINT) AS fid,
          |    COUNT(*) AS c
          |  FROM (
          |    SELECT doc_id, y, in_sample, unnest(list_concat(toks,
@@ -2211,31 +2221,12 @@ object TextOps {
          |  FROM docs2 WHERE in_sample),
          |r1 AS (SELECT doc_id, 0.5 - y AS r FROM docs2 WHERE in_sample)"""
         .stripMargin
-    val body = (1 to rounds).map { k =>
-      val g =
-        s"""g$k AS (SELECT fid, s / nn AS g FROM (
-           |  SELECT fid, ${Exact.sqlSumNarrow("r * x")} AS s
-           |  FROM fcs JOIN r$k USING (doc_id) GROUP BY fid)
-           |  CROSS JOIN nd)""".stripMargin
-      val w = if (k == 1)
-        s"w1 AS (SELECT fid, 0.0 - $lr * g AS w FROM g1)"
-      else
-        s"w$k AS (SELECT fid, w - $lr * g AS w FROM w${k - 1} JOIN g$k USING (fid))"
-      val next = if (k < rounds)
-        s""",
-           |m${k + 1} AS (SELECT doc_id, y, ${Exact.sqlSumNarrow("w * x")} AS m
-           |  FROM fcs JOIN w$k USING (fid) GROUP BY doc_id, y),
-           |r${k + 1} AS (SELECT doc_id,
-           |  0.5 + m / (2.0 * (1.0 + abs(m))) - y AS r FROM m${k + 1})"""
-          .stripMargin
-      else ""
-      s",\n$g,\n$w$next"
-    }.mkString
+    val body = t20RoundCtes("fcs")
     val tail =
       s""",
          |mf AS (SELECT doc_id, y, in_sample,
          |    ${Exact.sqlSumNarrow("w * x")} AS m
-         |  FROM fc JOIN w$rounds USING (fid) GROUP BY doc_id, y, in_sample),
+         |  FROM fc JOIN w$T20Rounds USING (fid) GROUP BY doc_id, y, in_sample),
          |thr AS (SELECT (
          |    ${Exact.sqlSumNarrow("CASE WHEN y = 1.0 THEN m END")}
          |      / SUM(CASE WHEN y = 1.0 THEN 1.0 ELSE 0.0 END)
@@ -2352,9 +2343,9 @@ object TextOps {
     * labeled seed data, serve it as a scan-speed filter). Labels are
     * planted (every 9th doc gets twelve marker "quality vocabulary" tokens
     * appended and y=1), features are t13's hashed unigrams+bigrams
-    * bucketed to `buckets` ids (the hashing trick — the model is ≤ 2^18
+    * bucketed to [[T20Buckets]] ids (the hashing trick — the model is ≤ 2^18
     * rows by construction, broadcastable at ANY corpus size), and the
-    * optimizer is `rounds` FULL-BATCH gradient steps on logistic-style
+    * optimizer is [[T20Rounds]] FULL-BATCH gradient steps on logistic-style
     * loss with the algebraic sigmoid σ(x) = 0.5 + x / (2·(1+|x|))
     * (Elliott's rational sigmoid): only +,·,/,abs — every op IEEE
     * correctly rounded, so residuals are bit-identical across engines,
@@ -2386,39 +2377,53 @@ object TextOps {
   // ordering reason as t20Markers.
   private[graft] lazy val T20Rounds: Int = 6
   private[graft] lazy val T20Lr: Double = 800.0
+  private[graft] lazy val T20Buckets: Int = 262144 // hashed feature space
 
-  def classifierTrain(in: DataFrame, rounds: Int = T20Rounds,
-      lr: Double = T20Lr, buckets: Int = 262144): DataFrame = {
-    import graft.engine.Exact
+  /** t20/t20b's planted corpus `(doc_id, text, y, extra…)`: every 9th doc
+    * carries the marker tokens and is the positive class.
+    */
+  private def t20Base(in: DataFrame, extra: Column*): DataFrame = {
     val planted = when(col("doc_id") % 9 === 0,
       concat(col("text"), lit(" " + t20Markers))).otherwise(col("text"))
     val y = when(col("doc_id") % 9 === 0, 1.0).otherwise(0.0)
-    val base = in.select(col("doc_id"), planted.as("text"), y.as("y"))
-    // (doc, fid, c): hashed feature counts. Features are LENGTH-NORMALIZED
-    // (x = c / n_feats, the t13 serve shape) so margins compare across doc
-    // lengths — with raw counts the margin tracks length, not class (the
-    // r14 first cut measured exactly that), and a BIAS feature (fid = −1,
-    // x = 1/n_feats) absorbs the 1-in-9 class imbalance.
+    in.select(Seq(col("doc_id"), planted.as("text"), y.as("y")) ++ extra: _*)
+  }
+
+  /** t20/t20b's feature frame `(doc_id, y, extra…, fid, x)` over a
+    * [[t20Base]] frame: hashed feature counts into [[T20Buckets]] slots.
+    * Features are LENGTH-NORMALIZED (x = c / n_feats, the t13 serve shape)
+    * so margins compare across doc lengths — with raw counts the margin
+    * tracks length, not class (the r14 first cut measured exactly that),
+    * and a BIAS feature (fid = −1, x = 1/n_feats) absorbs the 1-in-9
+    * class imbalance. `extra` are pass-through doc-functional columns
+    * (t20b's in_sample), as in [[t20Margins]].
+    */
+  private def t20Features(base: DataFrame,
+      extra: Seq[String] = Nil): DataFrame = {
+    val keys = (Seq("doc_id", "y") ++ extra).map(col)
     val fc0 = base
-      .select(col("doc_id"), col("y"),
-        explode(classifierFeats(col("text"))).as("feat"))
-      .select(col("doc_id"), col("y"),
-        pmod(ghash.fnv1a64(col("feat")), lit(buckets.toLong)).as("fid"))
-      .groupBy("doc_id", "y", "fid")
+      .select(keys :+ explode(classifierFeats(col("text"))).as("feat"): _*)
+      .select(keys :+
+        pmod(ghash.fnv1a64(col("feat")), lit(T20Buckets.toLong)).as("fid"): _*)
+      .groupBy(keys :+ col("fid"): _*)
       .agg(count(lit(1)).as("c"))
       // checkpointed: consumed by BOTH the nf aggregate and the bias
       // union below — without it the tokenize+hash text scan runs twice
       .localCheckpoint(true)
     val nf = fc0.groupBy("doc_id")
       .agg(sum(col("c")).cast(DoubleType).as("nf"))
-    val fc = fc0
-      .unionByName(base.select(col("doc_id"), col("y"),
-        lit(-1L).as("fid"), lit(1L).as("c")))
+    fc0
+      .unionByName(base.select(keys ++ Seq(lit(-1L).as("fid"), lit(1L).as("c")): _*))
       .join(nf, "doc_id")
-      .select(col("doc_id"), col("y"), col("fid"),
-        (col("c").cast(DoubleType) / col("nf")).as("x"))
+      .select(keys ++ Seq(col("fid"),
+        (col("c").cast(DoubleType) / col("nf")).as("x")): _*)
       .localCheckpoint(true)
-    val w = t20TrainLoop(fc, base.select(col("doc_id"), col("y")), rounds, lr)
+  }
+
+  def classifierTrain(in: DataFrame): DataFrame = {
+    val base = t20Base(in)
+    val fc = t20Features(base)
+    val w = t20TrainLoop(fc, base.select(col("doc_id"), col("y")))
     // Final serve + evaluation: margins under the trained weights, with
     // the operating point at the midpoint of the class-mean margins (the
     // calibrated model keeps ALL margins below zero under 1-in-9
@@ -2466,15 +2471,15 @@ object TextOps {
         sum(when(col("y") === 0.0, 1.0)))
   }
 
-  /** The t20 training loop proper — `rounds` full-batch decimal-exact GD
+  /** The t20 training loop proper — [[T20Rounds]] full-batch decimal-exact GD
     * steps over a (doc_id, y, fid, x) feature frame; returns the final
     * checkpointed (fid, w) model. Extracted so the deployable sampled
     * path ([[classifierTrainSampled]]) trains through the IDENTICAL code
     * as the exact full-batch contract ([[classifierTrain]]) — they differ
     * only in which docs feed the loop.
     */
-  private def t20TrainLoop(fcTrain: DataFrame, trainDocs: DataFrame,
-      rounds: Int, lr: Double): DataFrame = {
+  private def t20TrainLoop(fcTrain: DataFrame,
+      trainDocs: DataFrame): DataFrame = {
     import graft.engine.Exact
     // training-set size as a broadcast 1-row frame (the c05 pattern),
     // never a driver-side count: gradients are mean-normalized so the
@@ -2484,7 +2489,7 @@ object TextOps {
     // round 1: w = 0 → all margins exactly 0 → residual is 0.5 − y
     var resid = trainDocs.select(col("doc_id"), (lit(0.5) - col("y")).as("r"))
     var w: DataFrame = null
-    for (round <- 1 to rounds) {
+    for (round <- 1 to T20Rounds) {
       val grad = fcTrain.join(resid, "doc_id")
         .groupBy("fid")
         .agg(Exact.dsum(col("r") * col("x")).as("gsum"))
@@ -2493,12 +2498,12 @@ object TextOps {
       // 0.0 - x, not unary minus: both engines then produce +0.0 on a
       // zero gradient (negate would yield -0.0 and break the bit compare)
       w = (if (w == null)
-             grad.select(col("fid"), (lit(0.0) - lit(lr) * col("g")).as("w"))
+             grad.select(col("fid"), (lit(0.0) - lit(T20Lr) * col("g")).as("w"))
            else
              w.join(grad, "fid")
-               .select(col("fid"), (col("w") - lit(lr) * col("g")).as("w")))
+               .select(col("fid"), (col("w") - lit(T20Lr) * col("g")).as("w")))
         .localCheckpoint(true)
-      if (round < rounds)
+      if (round < T20Rounds)
         resid = t20Margins(fcTrain, w)
           .select(col("doc_id"), (t20Sigma(col("m")) - col("y")).as("r"))
     }
@@ -2531,41 +2536,16 @@ object TextOps {
     * separates the planted classes corpus-wide and agrees with full-batch
     * t20 on every prediction.
     */
-  def classifierTrainSampled(in: DataFrame, rounds: Int = T20Rounds,
-      lr: Double = T20Lr, buckets: Int = 262144): DataFrame = {
-    import graft.engine.Exact
+  def classifierTrainSampled(in: DataFrame): DataFrame = {
     // sample membership hashes the PRE-PLANT text: label-independent
     val inSample = substring(md5(col("text")), 1, 1)
       .isin("0", "1", "2", "3")
-    val planted = when(col("doc_id") % 9 === 0,
-      concat(col("text"), lit(" " + t20Markers))).otherwise(col("text"))
-    val y = when(col("doc_id") % 9 === 0, 1.0).otherwise(0.0)
-    val base = in.select(col("doc_id"), planted.as("text"), y.as("y"),
-      inSample.as("in_sample"))
-    val fc0 = base
-      .select(col("doc_id"), col("y"), col("in_sample"),
-        explode(classifierFeats(col("text"))).as("feat"))
-      .select(col("doc_id"), col("y"), col("in_sample"),
-        pmod(ghash.fnv1a64(col("feat")), lit(buckets.toLong)).as("fid"))
-      .groupBy("doc_id", "y", "in_sample", "fid")
-      .agg(count(lit(1)).as("c"))
-      // checkpointed: consumed by BOTH the nf aggregate and the bias
-      // union below — without it the tokenize+hash text scan runs twice
-      .localCheckpoint(true)
-    val nf = fc0.groupBy("doc_id")
-      .agg(sum(col("c")).cast(DoubleType).as("nf"))
-    val fc = fc0
-      .unionByName(base.select(col("doc_id"), col("y"), col("in_sample"),
-        lit(-1L).as("fid"), lit(1L).as("c")))
-      .join(nf, "doc_id")
-      .select(col("doc_id"), col("y"), col("in_sample"), col("fid"),
-        (col("c").cast(DoubleType) / col("nf")).as("x"))
-      .localCheckpoint(true)
+    val base = t20Base(in, inSample.as("in_sample"))
+    val fc = t20Features(base, Seq("in_sample"))
     val fcs = fc.filter(col("in_sample"))
       .select(col("doc_id"), col("y"), col("fid"), col("x"))
     val w = t20TrainLoop(fcs,
-      base.filter(col("in_sample")).select(col("doc_id"), col("y")),
-      rounds, lr)
+      base.filter(col("in_sample")).select(col("doc_id"), col("y")))
     // corpus-wide serve under the sample-trained model; threshold from
     // the labeled sample only
     val mf = t20Margins(fc, w, Seq("in_sample")).localCheckpoint(true)

@@ -60,6 +60,11 @@ object Streams {
       .withColumn("event_time", expr(graft.queries.EventsOps.EventTimeSql))
   }
 
+  /** The event-time watermark delay of every watermarked stream here:
+    * state older than this behind the max event time is dropped.
+    */
+  val Watermark = "2 hours"
+
   /** Tumbling 1-hour windows per event type — identical logic to
     * e02_tumbling_window; works on batch and streaming inputs alike.
     */
@@ -69,10 +74,10 @@ object Streams {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
   /** Watermarked variant for production Append-mode sinks: state for windows
-    * older than 2 hours behind the max event time is dropped.
+    * older than [[Watermark]] behind the max event time is dropped.
     */
   def tumblingCountsWatermarked(events: DataFrame): DataFrame =
-    tumblingCounts(events.withWatermark("event_time", "2 hours"))
+    tumblingCounts(events.withWatermark("event_time", Watermark))
 
   /** Watermarked stream-stream join: purchases joined to the same user's
     * signups within [0, 1h] before the purchase. Both sides carry watermarks
@@ -83,11 +88,11 @@ object Streams {
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
         col("event_time").as("p_time"))
-      .withWatermark("p_time", "2 hours")
+      .withWatermark("p_time", Watermark)
     val signups = events.filter(col("event_type") === "signup")
       .select(col("event_id").as("s_id"), col("user_id").as("s_user"),
         col("event_time").as("s_time"))
-      .withWatermark("s_time", "2 hours")
+      .withWatermark("s_time", Watermark)
     purchases.join(
       signups,
       col("p_user") === col("s_user") &&
@@ -356,15 +361,12 @@ object Streams {
     import graft.queries.Similarity
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val mxRow = e.agg(max(col("vec_id"))).head
-    val cut = if (mxRow.isNullAt(0)) Long.MinValue else mxRow.getLong(0) * 4 / 5
+    val cut = graft.queries.Pipeline.appendCutoff(e, "vec_id")
     val (centArr, cbRow) = Similarity.ivfPqQuantizers(
-      e.filter(col("vec_id") <= cut), Similarity.IvfK, Similarity.IvfIters,
-      Similarity.PqM, Similarity.PqSubDim, Similarity.PqKsub, Similarity.PqIters)
+      e.filter(col("vec_id") <= cut))
     Similarity.ivfPqEncode(
       readEmbeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      centArr.localCheckpoint(true), cbRow.localCheckpoint(true),
-      Similarity.PqM, Similarity.PqSubDim)
+      centArr.localCheckpoint(true), cbRow.localCheckpoint(true))
   }
 
   /** Streaming n-gram count maintenance — the streaming half of batch
@@ -378,9 +380,10 @@ object Streams {
     * r17-item-1 shuffle discipline applied to the state store.
     * StreamingSpec pins streaming == batch count rows exactly.
     */
-  def ngramCounts(spark: SparkSession, dir: String, n: Int = 5): DataFrame =
+  def ngramCounts(spark: SparkSession, dir: String): DataFrame =
     graft.queries.Corpus.knNgramHashStream(
-        readDocs(spark, dir).select(col("doc_id"), col("text")), n)
+        readDocs(spark, dir).select(col("doc_id"), col("text")),
+        graft.queries.Corpus.C36N)
       .groupBy(col("h"))
       .agg(count(lit(1)).as("c"))
 
@@ -389,16 +392,16 @@ object Streams {
     * distinct-token explode feeds a stateful (token, shard)-keyed
     * aggregation whose per-micro-batch fold IS the df SUM + posting
     * accumulation of the batch merge. Per-key state is one shard's
-    * postings (bounded by the shard width B, the c10 guarantee), never
-    * a stopword's corpus-wide list. StreamingSpec pins streaming ==
-    * batch index rows exactly.
+    * postings (bounded by the shard width [[graft.queries.Corpus]]
+    * IndexShardB, the c10 guarantee), never a stopword's corpus-wide
+    * list. StreamingSpec pins streaming == batch index rows exactly.
     */
-  def invertedIndex(spark: SparkSession, dir: String,
-      shardB: Long = 100L): DataFrame =
+  def invertedIndex(spark: SparkSession, dir: String): DataFrame =
     readDocs(spark, dir)
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("token"))
-      .withColumn("shard", expr(s"doc_id div $shardB"))
+      .withColumn("shard",
+        expr(s"doc_id div ${graft.queries.Corpus.IndexShardB}"))
       .groupBy("token", "shard")
       .agg(count(lit(1)).as("df_shard"),
         concat_ws(",", sort_array(collect_list(col("doc_id"))))
@@ -526,8 +529,7 @@ object Streams {
         val spark = batch.sparkSession
         val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
         val existing = spark.read.parquet(corpusDir)
-        val pairs = graft.queries.Dedup.incrementalLshPairs(existing, b,
-          k = 32, bands = 8, cap = 100, threshold = 0.3)
+        val pairs = graft.queries.Dedup.incrementalLshPairs(existing, b)
           .localCheckpoint(true)
         onBatch(batchId, pairs)
         b.write.mode("append").parquet(corpusDir)
@@ -589,11 +591,11 @@ object Streams {
     * variant above — this is the shape you run forever against an unbounded
     * stream.
     */
-  def sessionizeAppend(events: DataFrame, delay: String = "2 hours"): Dataset[Session] = {
+  def sessionizeAppend(events: DataFrame): Dataset[Session] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withWatermark("event_time", delay)
+      .withWatermark("event_time", Watermark)
       .select(col("user_id"), col("ts_us"), col("value"), col("event_time"))
       .as[TimedEvent]
       .groupByKey(_.user_id)

@@ -684,14 +684,14 @@ class CorpusSpec extends AnyFunSuite {
   test("c39: index merge ≡ rebuild at ANY cutoff; concat IS the sorted merge") {
     import org.apache.spark.sql.functions._
     val in = docs.select(col("doc_id"), col("text"))
-    val full = Corpus.invertedIndexRows(in, 100L)
+    val full = Corpus.invertedIndexRows(in)
       .select("token", "shard", "df_shard", "postings")
       .collect().map(_.toSeq).toSet
     val mx = in.agg(max(col("doc_id"))).head.getLong(0)
     // 0% (all-delta), a boundary-shard-splitting cut, and 100% (all-base)
     for (cut <- Seq(-1L, mx / 2 + 1, mx)) {
-      val base = Corpus.invertedIndexRows(in.filter(col("doc_id") <= cut), 100L)
-      val delta = Corpus.invertedIndexRows(in.filter(col("doc_id") > cut), 100L)
+      val base = Corpus.invertedIndexRows(in.filter(col("doc_id") <= cut))
+      val delta = Corpus.invertedIndexRows(in.filter(col("doc_id") > cut))
       val merged = Corpus.invertedIndexMerge(base, delta)
         .select("token", "shard", "df_shard", "postings")
         .collect().map(_.toSeq).toSet

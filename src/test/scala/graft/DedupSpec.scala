@@ -505,8 +505,7 @@ class DedupSpec extends AnyFunSuite {
     val bench = Seq((5000001L,
       "a fast auburn vulpine leaps above an idle canine beside a calm stream"))
       .toDF("doc_id", "text")
-    val lexical = Dedup.incrementalLshPairs(train, bench,
-      k = 32, bands = 8, cap = 100, threshold = 0.3)
+    val lexical = Dedup.incrementalLshPairs(train, bench)
     assert(lexical.count() == 0, "lexical decontamination must miss a paraphrase")
     // ...while their embeddings barely move: d23's semantic pass pairs them
     val e1 = Array.tabulate(64)(i => math.sin(i * 0.7 + 1.0).toFloat)

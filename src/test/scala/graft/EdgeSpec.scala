@@ -195,8 +195,7 @@ class EdgeSpec extends AnyFunSuite {
     val docs = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text")).limit(50)
     val emptyBench = docs.filter(col("doc_id") < 0)
-    val out = graft.queries.Dedup.incrementalLshPairs(
-      docs, emptyBench, k = 32, bands = 8, cap = 100, threshold = 0.3)
+    val out = graft.queries.Dedup.incrementalLshPairs(docs, emptyBench)
     assert(out.count() == 0)
   }
 

@@ -96,4 +96,117 @@ class HygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"graft.queries must be conf-read-only; .conf.set found in: $offenders")
   }
+
+  /** Every defaulted parameter of a `def` in graft.queries and
+    * graft.streaming, as "File.def.param". Scaladoc is blanked first; each
+    * parameter list is read by bracket depth, and a parameter is defaulted
+    * when it holds a top-level `=` that is not part of `=>`, `==`, `<=`,
+    * `>=` or `!=`.
+    */
+  private def defaultedParams: Set[String] = {
+    val dirs = Seq("src/main/scala/graft/queries", "src/main/scala/graft/streaming")
+    val defRe = "\\bdef\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+    def closing(s: String, from: Int): Int = {
+      var depth = 0
+      var j = from
+      while ({
+        val c = s.charAt(j)
+        if ("([{".indexOf(c) >= 0) depth += 1
+        else if (")]}".indexOf(c) >= 0) depth -= 1
+        depth != 0
+      }) j += 1
+      j
+    }
+    def topLevel(p: String): Seq[(Char, Int, Int)] = { // (char, index, depth)
+      var depth = 0
+      p.zipWithIndex.map { case (c, i) =>
+        if ("([{".indexOf(c) >= 0) depth += 1
+        else if (")]}".indexOf(c) >= 0) depth -= 1
+        (c, i, depth)
+      }
+    }
+    dirs.flatMap(d => Files.list(Paths.get(d)).iterator().asScala)
+      .filter(_.toString.endsWith(".scala")).flatMap { path =>
+        val file = path.getFileName.toString.stripSuffix(".scala")
+        val src = "(?s)/\\*.*?\\*/".r
+          .replaceAllIn(Files.readString(path), m => " " * m.matched.length)
+        defRe.findAllMatchIn(src).flatMap { m =>
+          val lists = scala.collection.mutable.Buffer.empty[String]
+          var i = m.end
+          var more = true
+          while (more) {
+            while (i < src.length && " \t\n".indexOf(src.charAt(i)) >= 0) i += 1
+            if (i < src.length && (src.charAt(i) == '(' || src.charAt(i) == '[')) {
+              val j = closing(src, i)
+              if (src.charAt(i) == '(') lists += src.substring(i + 1, j)
+              i = j + 1
+            } else more = false
+          }
+          lists.flatMap { raw =>
+            val p = "//[^\n]*".r.replaceAllIn(raw, "")
+            val cuts = topLevel(p).collect { case (',', i, 0) => i }
+            (-1 +: cuts).zip(cuts :+ p.length).map { case (a, b) => p.substring(a + 1, b) }
+              .filter { q =>
+                topLevel(q).exists { case (c, k, dep) =>
+                  c == '=' && dep == 0 &&
+                    !(k + 1 < q.length && "=>".indexOf(q.charAt(k + 1)) >= 0) &&
+                    !(k > 0 && "=<>!".indexOf(q.charAt(k - 1)) >= 0)
+                }
+              }
+              .map(q => s"$file.${m.group(1)}." + q.split(":")(0).trim.split("\\s+").last)
+          }
+        }
+      }.toSet
+  }
+
+  test("defaulted query-layer parameters are an allow-list, each with its second caller") {
+    // A parameter whose every production caller passes one value is a
+    // constant, read by the row and its oracle (Similarity.IvfK, Dedup
+    // .MinHashK, Corpus.BudgetMult …). A default survives only where a
+    // spec exercises a law at another value or a second caller passes
+    // another value; the reason names that caller.
+    val allowed = Map(
+      "Corpus.unigramLmScore.broadcastVocabMax" -> "CorpusSpec shuffle path (0)",
+      "Corpus.bigramLmScore.broadcastVocabMax" -> "CorpusSpec shuffle path (0)",
+      "Corpus.dsirSelect.broadcastVocabMax" -> "CorpusSpec shuffle path (0)",
+      "Corpus.knNgramScore.broadcastTypesMax" -> "CorpusSpec shuffle path (0)",
+      "Corpus.knNgramScoreOpenVocab.broadcastTypesMax" -> "CorpusSpec shuffle path (0)",
+      "TextOps.hostPriorFilter.broadcastHostsMax" -> "EdgeSpec shuffle path (0)",
+      "Corpus.knNgramScore.minCount" -> "c35b and c32b rows (minCount = 2)",
+      "Corpus.knNgramModel.minCount" -> "CorpusSpec order-3 fixture; knScoreFromCounts passes it",
+      "Corpus.knNgramScoreCtes.minCount" -> "c35b oracle (minCount = 2)",
+      "Corpus.knNgramScoreCtes.where" -> "c38 oracle (retracted docs)",
+      "Corpus.knNgramScoreIncremental.cutOverride" -> "CorpusSpec c36 edge cutoffs",
+      "Dedup.lshOracleSql.newPred" -> "d10/d20 incremental oracles",
+      "Dedup.lshOracleSql.corpusSql" -> "sf1-slice and d20 oracles",
+      "Dedup.lshOracleSql.finalSql" -> "d20 oracle tail",
+      "Dedup.ngramJaccardPairs.bucketed" -> "DedupSpec blocked-vs-unblocked law",
+      "Dedup.connectedComponents.maxRounds" -> "DedupSpec round-cap law (1)",
+      "Dedup.connectedComponents.localThreshold" -> "DedupSpec/EdgeSpec distributed path",
+      "Dedup.lineKeep.width" -> "PropertySpec width property",
+      "Dedup.bloomGuardedNewRows.expectedItems" -> "PropertySpec expectedItems sweep",
+      "Pipeline.zoneOracleSql.where" -> "p17 oracle (taken-down rows)",
+      "Similarity.ivfCentroids.iters" -> "SimilaritySpec s04 Lloyd objective (1 round)",
+      "Similarity.ivfPqServe.nprobe" -> "SimilaritySpec s18 composition law (IvfK)",
+      "Similarity.ivfPqAnn.trainPred" -> "s18b row (sampled training)",
+      "Similarity.ivfPqResidualAnn.trainPred" -> "s19b row (sampled training)",
+      "Similarity.ivfPqIndexAppend.deletes" -> "s20b row (tombstones)",
+      "Similarity.lshAnn.cap" -> "SimilaritySpec s02 bucket guard (50)",
+      "Similarity.crossCorpusEmbeddingNearDup.benchProbes" -> "d23 row (2); SimilaritySpec probe sweep",
+      "Similarity.mutualComponents.nBits" -> "semanticSurvivors (scaledBits)",
+      "Similarity.semanticSurvivors.nBits" -> "s17b row (scaledBits)",
+      "Similarity.sq8Quantize.dim" -> "SimilaritySpec sq8 dim = 3 fixture",
+      "Similarity.pqOracleSubCtes.src" -> "s19 oracle (residuals)",
+      "Similarity.pqOracleSubCtes.tsrc" -> "s18b/s19b oracles (training sample)",
+      "TextOps.t20Features.extra" -> "t20b (in_sample)",
+      "TextOps.t20Margins.extra" -> "t20b (in_sample)",
+    )
+    val found = defaultedParams
+    val unlisted = found -- allowed.keySet
+    assert(unlisted.isEmpty,
+      s"defaulted parameters without an allow-list entry (make them constants, " +
+        s"or name the caller that passes another value): ${unlisted.toSeq.sorted}")
+    val stale = allowed.keySet -- found
+    assert(stale.isEmpty, s"allow-list entries with no defaulted parameter: ${stale.toSeq.sorted}")
+  }
 }

@@ -25,7 +25,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     // candidate volume of the same pipeline = what the rerank actually scans
     val nCand = queries.Similarity
-      .lshAnn(e, col("vec_id") < 10, nTables = 4, nBits = 8, k = n.toInt)
+      .lshAnn(e, k = n.toInt)
       .count()
     val scanFrac = nCand.toDouble / (10.0 * (n - 1))
     assert(scanFrac <= 0.35, s"LSH candidate set is not sublinear: $scanFrac")
@@ -78,7 +78,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val nb = scaledBits(e.count())
     val direct = graft.queries.Similarity
-      .knnGraph(e, nTables = 4, nBits = nb, k = 5, cap = 1000)
+      .knnGraph(e, nBits = nb, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val s13 = Registry.byName("s13_knn_graph_scaled").run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -119,8 +119,7 @@ class SimilaritySpec extends AnyFunSuite {
     // recomputed through the same public API the query uses
     val e = graft.engine.Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val g = queries.Similarity.knnGraph(e, nTables = 4, nBits = 8, k = 3,
-      cap = 1000)
+    val g = queries.Similarity.knnGraph(e, nBits = 8, k = 3)
     val nodes = g.select(
         least(col("q_id"), col("neighbor_id")).as("a"),
         greatest(col("q_id"), col("neighbor_id")).as("b"))
@@ -147,7 +146,7 @@ class SimilaritySpec extends AnyFunSuite {
           .as("embedding"))
     val corpus = e.unionByName(planted)
     val got = queries.Similarity
-      .lshAnn(corpus, col("vec_id") < 10, nTables = 4, nBits = 8, k = 5)
+      .lshAnn(corpus, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = (0L until 10L).map(q => (q, q + 1000000L))
     val recall = want.count(got.contains).toDouble / want.size
@@ -187,7 +186,7 @@ class SimilaritySpec extends AnyFunSuite {
     // cells repartition a query's neighborhood across more cells on a 1k
     // corpus — so the gate is on the objective, recall gated loosely below.
     def objective(iters: Int): Double = {
-      val cents = graft.queries.Similarity.ivfCentroids(e, k = 16, iters = iters)
+      val cents = graft.queries.Similarity.ivfCentroids(e, iters = iters)
       e.crossJoin(broadcast(cents))
         .select(array_max(transform(col("cents"),
           c => graft.queries.Similarity.cosine(col("embedding"), c.getField("cvec"))))
@@ -200,7 +199,7 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = Registry.byName("s01_ann_brute").run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = graft.queries.Similarity
-      .ivfAnn(e, k = 16, nprobe = 4, iters = 3, topK = 5)
+      .ivfAnn(e)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.count(got.contains).toDouble / exact.size
     assert(recall >= 0.7, s"3-iter recall vs brute force: $recall")
@@ -231,8 +230,7 @@ class SimilaritySpec extends AnyFunSuite {
     // k = corpus size → the result IS the candidate set (before top-k there
     // are exactly as many rows as distinct candidates)
     val cands = queries.Similarity
-      .lshAnn(corpus, col("vec_id") < 10, nTables = 4, nBits = 8,
-        k = n.toInt, cap = 50)
+      .lshAnn(corpus, k = n.toInt, cap = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // per query: ≤ 50 spam candidates can survive the capped index
     val spamPerQ = cands.filter(_._2 >= 9000000L).groupBy(_._1)
@@ -241,8 +239,7 @@ class SimilaritySpec extends AnyFunSuite {
       s"mega-bucket leaked past the index cap: $spamPerQ")
     // and the planted genuine near-copies still surface in top-5
     val got5 = queries.Similarity
-      .lshAnn(corpus, col("vec_id") < 10, nTables = 4, nBits = 8,
-        k = 5, cap = 50)
+      .lshAnn(corpus, k = 5, cap = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = (0L until 10L).map(q => (q, q + 1000000L))
     val recall = want.count(got5.contains).toDouble / want.size
@@ -269,7 +266,7 @@ class SimilaritySpec extends AnyFunSuite {
           v => (v.cast("double") * 0.98 + 0.01).cast("float")).as("embedding"))
     val corpus = e.unionByName(perturbed).unionByName(spam)
     val got = queries.Similarity
-      .nearDupPairs(corpus, nTables = 4, nBits = 10, cap = 100)
+      .nearDupPairs(corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!got.exists(p => p._1 >= 9000000L && p._2 >= 9000000L),
       "mega-bucket pairs leaked past the hot-bucket guard")
@@ -346,9 +343,8 @@ class SimilaritySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val e = graft.engine.Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val a = queries.Similarity.pqAdcAnn(e, 4, 16, 8, 2, 5, 32, 5).collect().toSeq
-    val b = queries.Similarity.pqAdcAnn(e.repartition(13), 4, 16, 8, 2, 5, 32, 5)
-      .collect().toSeq
+    val a = queries.Similarity.pqAdcAnn(e).collect().toSeq
+    val b = queries.Similarity.pqAdcAnn(e.repartition(13)).collect().toSeq
     assert(a == b, "decimal-exact codebooks must make PQ partitioning-invariant")
   }
 
@@ -584,12 +580,13 @@ class SimilaritySpec extends AnyFunSuite {
     // the composed index must equal s08's flat ADC ranking EXACTLY —
     // same codebooks, same LUT values, same shortlist, same rerank. This
     // is the "recall >= flat ADC at equal scanned-row budget" claim at
-    // full budget, provable bit-for-bit.
-    val full = rows(Similarity.ivfPqAnn(e, k = 16, nprobe = 16, ivfIters = 3,
-      m = 4, subDim = 16, ksub = 8, pqIters = 2,
-      nQ = 5, shortlist = 32, topK = 5))
-    val flat = rows(Similarity.pqAdcAnn(e, m = 4, subDim = 16, ksub = 8,
-      iters = 2, nQ = 5, shortlist = 32, topK = 5))
+    // full budget, provable bit-for-bit. The index is s18's (ivfPqAnn's
+    // quantizers and encode); only the serve probes all IvfK cells.
+    val (cents, cb) = Similarity.ivfPqQuantizers(e)
+    val full = rows(Similarity.ivfPqServe(e,
+      Similarity.ivfPqEncode(e, cents, cb).localCheckpoint(true), cents, cb,
+      residual = false, nprobe = Similarity.IvfK))
+    val flat = rows(Similarity.pqAdcAnn(e))
     assert(full == flat, "nprobe=k must reproduce flat ADC exactly")
     // Partial probing (the contract's nprobe=4 of 16 — a 4x scan cut on
     // the compressed rows): recall@5 against the flat-ADC result stays
@@ -649,12 +646,8 @@ class SimilaritySpec extends AnyFunSuite {
     // Identity law: a trainPred that keeps every row IS full training —
     // the sampled path may not touch anything but the training input
     // (the s13/s17b "rule applied outside the pipeline" discipline).
-    val full = rows(Similarity.ivfPqAnn(e, k = 16, nprobe = 4, ivfIters = 3,
-      m = 4, subDim = 16, ksub = 8, pqIters = 2,
-      nQ = 5, shortlist = 32, topK = 5))
-    val allIn = rows(Similarity.ivfPqAnn(e, k = 16, nprobe = 4, ivfIters = 3,
-      m = 4, subDim = 16, ksub = 8, pqIters = 2,
-      nQ = 5, shortlist = 32, topK = 5, trainPred = Some(lit(true))))
+    val full = rows(Similarity.ivfPqAnn(e))
+    val allIn = rows(Similarity.ivfPqAnn(e, trainPred = Some(lit(true))))
     assert(allIn == full, "trainPred=true must reproduce full training exactly")
     // Recall-vs-full law (the r16 verdict's ask for the oracled
     // deployment config): against the exact brute-force top-5, the
@@ -707,8 +700,6 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4))).toSeq
     val noDel = rows(Similarity.ivfPqIndexAppend(e,
-      k = 16, nprobe = 4, ivfIters = 3, m = 4, subDim = 16, ksub = 8,
-      pqIters = 2, nQ = 5, shortlist = 32, topK = 5,
       deletes = Some(e.filter(lit(false)))))
     val s20 = rows(Registry.byName("s20_ann_index_append").run(spark, sf))
     assert(noDel == s20, "empty delete list must equal s20 exactly")

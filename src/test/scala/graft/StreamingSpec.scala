@@ -69,10 +69,8 @@ class StreamingSpec extends AnyFunSuite {
       val e = spark.read.parquet(s"$sf/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val cut = e.agg(max(col("vec_id"))).head.getLong(0) * 4 / 5
-      val (cA, cR) = Similarity.ivfPqQuantizers(
-        e.filter(col("vec_id") <= cut), k = 16, ivfIters = 3,
-        m = 4, subDim = 16, ksub = 8, pqIters = 2)
-      val batch = key(Similarity.ivfPqEncode(e, cA, cR, m = 4, subDim = 16))
+      val (cA, cR) = Similarity.ivfPqQuantizers(e.filter(col("vec_id") <= cut))
+      val batch = key(Similarity.ivfPqEncode(e, cA, cR))
       assert(streamed == batch,
         "streaming ingest encode must reproduce the batch encode exactly")
     } finally q.stop()
@@ -124,7 +122,7 @@ class StreamingSpec extends AnyFunSuite {
       val streamed = key(spark.table("stream_c39"))
       val batch = key(graft.queries.Corpus.invertedIndexRows(
         spark.read.parquet(s"$sf/documents.parquet")
-          .select(col("doc_id"), col("text")), 100L))
+          .select(col("doc_id"), col("text"))))
       assert(streamed == batch,
         "stateful streaming index must equal the batch index")
     } finally q.stop()
