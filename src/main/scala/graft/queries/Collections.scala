@@ -12,7 +12,7 @@ import graft.engine.Tables
   */
 object Collections {
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Array algebra over token arrays.
     QuerySpec(
       "q59_array_funcs",

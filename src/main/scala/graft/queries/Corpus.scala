@@ -17,8 +17,7 @@ import graft.engine.{Exact, Tables}
 object Corpus {
 
   // Contract constants: each is read by its rows' engines, the streaming
-  // twins and the oracle SQL. Declared before `specs`, whose oracle text
-  // reads them while the object initializes.
+  // twins and the oracle SQL.
 
   /** The size gate of every language-model join here: the model (vocabulary
     * or n-gram type table) is broadcast up to this many rows and joined by
@@ -31,10 +30,11 @@ object Corpus {
     */
   private[graft] val IndexShardB = 100L
 
-  /** The n-gram order of c36's maintained count table, shared by c36b and
-    * the streaming twin ([[graft.streaming.Streams]] ngramCounts).
+  /** The order-5 Kneser–Ney order: c35/c35b score at it, the count
+    * engines (c36, c36b, c37, c38) run only at it, and so does the
+    * streaming twin ([[graft.streaming.Streams]] ngramCounts).
     */
-  private[graft] val C36N = 5
+  private[graft] val KnOrder = 5
 
   // c22's interpolation weights. λ̄ is NOT computed as 1.0-λ: that double
   // is 0.30000000000000004, one ulp off the literal 0.3.
@@ -592,6 +592,30 @@ object Corpus {
        |  FROM tg JOIN lm USING (u, v, w) GROUP BY doc_id)""".stripMargin
   }
 
+  /** `g{from}, …, g{to}` — a column list of the order-n KN oracle chains. */
+  private def glist(from: Int, to: Int): String =
+    (from to to).map(i => s"g$i").mkString(", ")
+
+  /** The order-n gram struct `{'g1': ts[i+0], …}` both KN oracle chains
+    * ([[knNgramScoreCtes]], [[knOpenScoreCtes]]) unnest their tokens into.
+    */
+  private def knGramStruct(n: Int): String =
+    (1 to n).map(j => s"'g$j': ts[i+${j - 1}]").mkString(", ")
+
+  /** The continuation-count CTEs over an in-scope `tc` (k{n-1} … k1, then
+    * x2 … x{n-1}) that both KN oracle chains share.
+    */
+  private def knContCtes(n: Int): String = (
+    Seq(s"""k${n - 1} AS (SELECT ${glist(2, n)}, COUNT(*) AS m${n - 1}
+           |  FROM tc GROUP BY ${glist(2, n)})""".stripMargin) ++
+    ((n - 2) to 1 by -1).map(k =>
+      s"""k$k AS (SELECT ${glist(n - k + 1, n)}, COUNT(*) AS m$k
+         |  FROM k${k + 1} GROUP BY ${glist(n - k + 1, n)})""".stripMargin) ++
+    (2 to n - 1).map(k =>
+      s"""x$k AS (SELECT ${glist(n - k + 1, n - 1)}, SUM(m$k) AS n$k,
+         |  COUNT(*) AS t$k FROM k$k GROUP BY ${glist(n - k + 1, n - 1)})""".stripMargin)
+    ).mkString(",\n")
+
   /** The order-n Kneser–Ney score chain as DuckDB CTEs ending in
     * `sc(doc_id, n_grams, avg_nll)` — generated for the same order the
     * Spark side runs ([[knNgramModel]]), with the probability expression
@@ -600,8 +624,6 @@ object Corpus {
     */
   private def knNgramScoreCtes(n: Int, minCount: Int = 1,
       where: String = ""): String = {
-    def glist(from: Int, to: Int): String =
-      (from to to).map(i => s"g$i").mkString(", ")
     val p1 = "(CAST(m1 AS DOUBLE) / CAST(nb AS DOUBLE))"
     val pMid = (2 to n - 1).foldLeft(p1) { (prev, k) =>
       s"""((CAST(m$k AS DOUBLE) - 0.75) / CAST(n$k AS DOUBLE)
@@ -615,31 +637,19 @@ object Corpus {
       if (minCount <= 1) s"$maxTerm\n       + $bo"
       else s"CASE WHEN c >= $minCount THEN $maxTerm\n       + $bo\n" +
         s"         ELSE $bo END"
-    val gramStruct = (1 to n).map(j =>
-      s"'g$j': ts[i+${j - 1}]").mkString(", ")
-    val contCtes = (
-      Seq(s"""k${n - 1} AS (SELECT ${glist(2, n)}, COUNT(*) AS m${n - 1}
-             |  FROM tc GROUP BY ${glist(2, n)})""".stripMargin) ++
-      ((n - 2) to 1 by -1).map(k =>
-        s"""k$k AS (SELECT ${glist(n - k + 1, n)}, COUNT(*) AS m$k
-           |  FROM k${k + 1} GROUP BY ${glist(n - k + 1, n)})""".stripMargin) ++
-      (2 to n - 1).map(k =>
-        s"""x$k AS (SELECT ${glist(n - k + 1, n - 1)}, SUM(m$k) AS n$k,
-           |  COUNT(*) AS t$k FROM k$k GROUP BY ${glist(n - k + 1, n - 1)})""".stripMargin)
-      ).mkString(",\n")
     val lmJoins = (2 to n - 1).map(k =>
       s"JOIN k${k - 1} USING (${glist(n - k + 2, n)}) " +
         s"JOIN x$k USING (${glist(n - k + 1, n - 1)})").mkString("\n    ")
     s"""tt AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents$where),
        |tgl AS (
        |  SELECT doc_id, unnest(list_transform(range(1, len(ts) - ${n - 2}),
-       |    i -> {$gramStruct})) AS t
+       |    i -> {${knGramStruct(n)}})) AS t
        |  FROM tt),
        |tg AS (SELECT doc_id, ${(1 to n).map(j => s"t.g$j AS g$j").mkString(", ")} FROM tgl),
        |tc AS (SELECT ${glist(1, n)}, COUNT(*) AS c FROM tg GROUP BY ${glist(1, n)}),
        |xn AS (SELECT ${glist(1, n - 1)}, SUM(c) AS cn, COUNT(*) AS tn
        |  FROM tc GROUP BY ${glist(1, n - 1)}),
-       |$contCtes,
+       |${knContCtes(n)},
        |tot AS (SELECT COUNT(*) AS nb FROM k2),
        |lm AS (
        |  SELECT ${(1 to n).map(j => s"tc.g$j").mkString(", ")},
@@ -664,21 +674,8 @@ object Corpus {
     * every arithmetic expression emitted by the same fold so the IEEE
     * trees agree by construction.
     */
-  private def knOpenScoreCtes(n: Int, trainPredSql: String): String = {
-    def glist(from: Int, to: Int): String =
-      (from to to).map(i => s"g$i").mkString(", ")
-    val gramStruct = (1 to n).map(j =>
-      s"'g$j': ts[i+${j - 1}]").mkString(", ")
-    val contCtes = (
-      Seq(s"""k${n - 1} AS (SELECT ${glist(2, n)}, COUNT(*) AS m${n - 1}
-             |  FROM tc GROUP BY ${glist(2, n)})""".stripMargin) ++
-      ((n - 2) to 1 by -1).map(k =>
-        s"""k$k AS (SELECT ${glist(n - k + 1, n)}, COUNT(*) AS m$k
-           |  FROM k${k + 1} GROUP BY ${glist(n - k + 1, n)})""".stripMargin) ++
-      (2 to n - 1).map(k =>
-        s"""x$k AS (SELECT ${glist(n - k + 1, n - 1)}, SUM(m$k) AS n$k,
-           |  COUNT(*) AS t$k FROM k$k GROUP BY ${glist(n - k + 1, n - 1)})""".stripMargin)
-      ).mkString(",\n")
+  private def knOpenScoreCtes(trainPredSql: String): String = {
+    val n = KnOrder
     val pkCtes = (
       Seq(s"""p1t AS (SELECT g$n, CAST(m1 AS DOUBLE) / CAST(nb AS DOUBLE)
              |  AS pk1 FROM k1, tot)""".stripMargin) ++
@@ -718,14 +715,14 @@ object Corpus {
        |    string_split(text, ' ') AS ts FROM documents),
        |tgl AS (
        |  SELECT doc_id, is_tr, unnest(list_transform(range(1, len(ts) - ${n - 2}),
-       |    i -> {$gramStruct})) AS t
+       |    i -> {${knGramStruct(n)}})) AS t
        |  FROM tt),
        |tg AS (SELECT doc_id, is_tr, ${(1 to n).map(j => s"t.g$j AS g$j").mkString(", ")} FROM tgl),
        |tc AS (SELECT ${glist(1, n)}, COUNT(*) AS c FROM tg
        |  WHERE is_tr = 1 GROUP BY ${glist(1, n)}),
        |xn AS (SELECT ${glist(1, n - 1)}, SUM(c) AS cn, COUNT(*) AS tn
        |  FROM tc GROUP BY ${glist(1, n - 1)}),
-       |$contCtes,
+       |${knContCtes(n)},
        |tot AS (SELECT COUNT(*) AS nb FROM k2),
        |$pkCtes,
        |$boCtes,
@@ -788,7 +785,7 @@ object Corpus {
        |SELECT doc_id, lang, avg_nll, ppl_bucket FROM bucketed
        |ORDER BY doc_id""".stripMargin
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Deterministic content-hash sampling — THE way to sample 100 TB
     // reproducibly: no RNG state, stable under retries/repartitioning,
     // and the same rows are selected by any engine that implements md5.
@@ -1351,9 +1348,9 @@ object Corpus {
     // incremental-equivalence family (p15 zone maps, s20 ANN postings).
     QuerySpec(
       "c36_kn5_count_merge",
-      (s, d) => knNgramScoreIncremental(Tables(s, d, "documents"), n = C36N),
+      (s, d) => knNgramScoreIncremental(Tables(s, d, "documents")),
       Some {
-        s"""WITH ${knNgramScoreCtes(C36N)}
+        s"""WITH ${knNgramScoreCtes(KnOrder)}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
       },
@@ -1369,10 +1366,10 @@ object Corpus {
     // state crosses runs.
     QuerySpec(
       "c36b_kn5_bucketed_merge",
-      (s, d) => knNgramScoreBucketed(s, Tables(s, d, "documents"), n = C36N,
+      (s, d) => knNgramScoreBucketed(s, Tables(s, d, "documents"),
         table = s"c36b_base_${graft.queries.Pipeline.dirTag(d)}"),
       Some {
-        s"""WITH ${knNgramScoreCtes(C36N)}
+        s"""WITH ${knNgramScoreCtes(KnOrder)}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
       },
@@ -1385,9 +1382,9 @@ object Corpus {
     // model's. CorpusSpec pins the order-5 NLL-monotonicity law.
     QuerySpec(
       "c35b_kn5_pruned_score",
-      (s, d) => knNgramScore(Tables(s, d, "documents"), n = 5, minCount = 2),
+      (s, d) => knNgramScore(Tables(s, d, "documents"), n = KnOrder, minCount = 2),
       Some {
-        s"""WITH ${knNgramScoreCtes(5, minCount = 2)}
+        s"""WITH ${knNgramScoreCtes(KnOrder, minCount = 2)}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
       },
@@ -1888,9 +1885,9 @@ object Corpus {
     // (the failure mode a trigram filter cannot see).
     QuerySpec(
       "c35_kn5_score",
-      (s, d) => knNgramScore(Tables(s, d, "documents"), n = 5),
+      (s, d) => knNgramScore(Tables(s, d, "documents"), n = KnOrder),
       Some {
-        s"""WITH ${knNgramScoreCtes(5)}
+        s"""WITH ${knNgramScoreCtes(KnOrder)}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
       },
@@ -1905,10 +1902,10 @@ object Corpus {
     // index's.
     QuerySpec(
       "c38_kn5_count_retract",
-      (s, d) => knNgramScoreRetract(Tables(s, d, "documents"), n = 5,
+      (s, d) => knNgramScoreRetract(Tables(s, d, "documents"),
         delPred = col("doc_id") % 23 === 7),
       Some {
-        s"""WITH ${knNgramScoreCtes(5,
+        s"""WITH ${knNgramScoreCtes(KnOrder,
           where = " WHERE NOT (doc_id % 23 = 7)")}
            |SELECT doc_id, n_grams, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
@@ -1925,10 +1922,10 @@ object Corpus {
     // trained there bit-for-bit, and that OOV-heavy docs rank worse.
     QuerySpec(
       "c37_kn5_ref_trained",
-      (s, d) => knNgramScoreOpenVocab(Tables(s, d, "documents"), n = 5,
+      (s, d) => knNgramScoreOpenVocab(Tables(s, d, "documents"),
         trainPred = col("source").isin("src0", "src1", "src2", "src3")),
       Some {
-        s"""WITH ${knOpenScoreCtes(5,
+        s"""WITH ${knOpenScoreCtes(
           "source IN ('src0', 'src1', 'src2', 'src3')")}
            |SELECT doc_id, n_grams, n_oov, avg_nll FROM sc
            |ORDER BY doc_id""".stripMargin
@@ -2107,7 +2104,7 @@ object Corpus {
   }
 
   /** Oracle CTE mirroring [[dupPlantedCorpus]]. */
-  lazy val DupPlantedCorpusCte: String =
+  val DupPlantedCorpusCte: String =
     """corpus AS (
       |  SELECT doc_id, source, text FROM documents
       |  UNION ALL
@@ -2156,7 +2153,7 @@ object Corpus {
     * `corpus(doc_id, source, text)` CTE and ending in `eff(source,
     * n_docs, n_unique_docs, total_tokens, unique_tokens, dup_factor)`.
     */
-  lazy val EffectiveTokensCtes: String =
+  val EffectiveTokensCtes: String =
     """rows_ AS (
       |  SELECT doc_id, source, md5(text) AS dg,
       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -2184,7 +2181,7 @@ object Corpus {
     * `by_src(source, n_tokens)` CTE and ends in `r2(source, n_tokens,
     * cap, alloc)` + `u(unfilled)`. Shared by the c23 and p08 oracles.
     */
-  lazy val WaterFillCtes: String = {
+  val WaterFillCtes: String = {
     s"""by_src_pos AS (
        |  -- zero-token sources are excluded BEFORE allocation (mirrored in
        |  -- tokenBudgetFillFromCounts): a 0-token source would divide by
@@ -2641,8 +2638,9 @@ object Corpus {
     * all-delta); the contract derives the cutoff from max(doc_id)
     * (bounded driver scalar, p15's pattern incl. the empty guard).
     */
-  def knNgramScoreIncremental(docs: DataFrame, n: Int,
+  def knNgramScoreIncremental(docs: DataFrame,
       cutOverride: Option[Long] = None): DataFrame = {
+    val n = KnOrder
     val cut = cutOverride.getOrElse(Pipeline.appendCutoff(docs, "doc_id"))
     // NOT checkpointed (re-measured r18 after the fused-kernel rewrite):
     // tg feeds three consumers, but materializing the 3n-1-column hash
@@ -2683,7 +2681,8 @@ object Corpus {
     * a local constant).
     */
   def knNgramScoreBucketed(s: org.apache.spark.sql.SparkSession,
-      docs: DataFrame, n: Int, table: String): DataFrame = {
+      docs: DataFrame, table: String): DataFrame = {
+    val n = KnOrder
     val cut = Pipeline.appendCutoff(docs, "doc_id")
     val tg = knNgramHashStream(docs, n)
     val baseTc = knGramHashCounts(tg.filter(col("doc_id") <= cut), n,
@@ -2708,8 +2707,8 @@ object Corpus {
     * retraction ≡ rebuild (d10/p15/s20b pattern); CorpusSpec pins
     * delete∘append ≡ rebuild on interleaved batches.
     */
-  def knNgramScoreRetract(docs: DataFrame, n: Int,
-      delPred: Column): DataFrame = {
+  def knNgramScoreRetract(docs: DataFrame, delPred: Column): DataFrame = {
+    val n = KnOrder
     // recompute-over-materialize for the fan-out hash stream (see
     // knNgramScoreIncremental's measured note)
     val tg = knNgramHashStream(docs, n)
@@ -2761,8 +2760,9 @@ object Corpus {
     * raise_errors (the closed-vocab family needs no score-join guard
     * because its stream IS the count table's source; here they differ).
     */
-  def knNgramScoreOpenVocab(docs: DataFrame, n: Int, trainPred: Column,
+  def knNgramScoreOpenVocab(docs: DataFrame, trainPred: Column,
       broadcastTypesMax: Long = ModelBroadcastMax): DataFrame = {
+    val n = KnOrder
     val D = 0.75
     val tcT = knGramHashCounts(knNgramHashStream(docs.filter(trainPred), n),
       n, "c37 train").localCheckpoint(true)
@@ -3238,7 +3238,7 @@ object Corpus {
     * alphabet is space + lowercase ASCII — TESTDATA.md — so U+E001.. can
     * never collide with a raw symbol).
     */
-  lazy val FixedMergesReplaceSql: String =
+  val FixedMergesReplaceSql: String =
     """replace(replace(replace(replace(replace(replace(w,
       |  'th', chr(57345)),
       |  chr(57345)||'e', chr(57346)),

@@ -157,7 +157,7 @@ object Dedup {
   private def slicedPlanted(s: SparkSession, d: String): DataFrame =
     plantedCorpus(s, d).filter(col("doc_id") % 20 === 0)
 
-  private lazy val slicedCorpusCte: String =
+  private val slicedCorpusCte: String =
     corpusCte.replace("WITH corpus AS (", "WITH corpus0 AS (") +
       ",\ncorpus AS (SELECT * FROM corpus0 WHERE doc_id % 20 = 0)"
 
@@ -567,6 +567,22 @@ object Dedup {
       localThreshold: Long = 1L << 20): DataFrame =
     connectedComponentsWithRounds(pairs, maxRounds, localThreshold)._1
 
+  /** [[connectedComponents]]' min-label labelling as DuckDB CTEs over an
+    * in-scope `pairs(a_id, b_id)` edge relation (the query needs `WITH
+    * RECURSIVE`): `sym` → recursive `reach` → `comp(id, component)`. The
+    * ONE oracle-side definition for d08, c21, d11, d17, d21 (and their
+    * sf1-slice twins) and the s06/s11/s17/s17b semantic-dedup rows.
+    */
+  private[graft] val componentSqlCtes: String =
+    """sym AS MATERIALIZED (
+      |  SELECT a_id AS src, b_id AS dst FROM pairs
+      |  UNION ALL SELECT b_id, a_id FROM pairs),
+      |reach AS (
+      |  SELECT src AS id, src AS label FROM sym
+      |  UNION
+      |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
+      |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id)""".stripMargin
+
   /** As [[connectedComponents]], also returning the number of star rounds
     * run before the fixpoint, so the O(log n)-rounds claim is measured,
     * not asserted (DedupSpec pins a chain's rounds; the driver fast path
@@ -919,7 +935,7 @@ object Dedup {
       .orderBy("split")
   }
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Exact dedup: digest → group → keep min id. Finds exactly the planted
     // exact copies.
     QuerySpec(
@@ -1775,14 +1791,7 @@ object Dedup {
             corpusSql = corpusSql)}
        |),
        |$corpusBody,
-       |sym AS MATERIALIZED (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id, a_id FROM pairs),
-       |reach AS (
-       |  SELECT src AS id, src AS label FROM sym
-       |  UNION
-       |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
-       |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id),
+       |$componentSqlCtes,
        |losers AS (SELECT id FROM comp WHERE id != component)
        |SELECT lang, COUNT(*) AS n_kept,
        |  md5(array_to_string(list_sort(list(doc_id)), ',')) AS kept_digest
@@ -1796,14 +1805,7 @@ object Dedup {
        |${lshOracleSql(MinHashBands,
             corpusSql = corpusSql)}
        |),
-       |sym AS MATERIALIZED (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id, a_id FROM pairs),
-       |reach AS (
-       |  SELECT src AS id, src AS label FROM sym
-       |  UNION
-       |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
-       |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id),
+       |$componentSqlCtes,
        |sizes AS (
        |  SELECT component, COUNT(*) AS cluster_size FROM comp
        |  GROUP BY component)
@@ -1820,14 +1822,7 @@ object Dedup {
             corpusSql = corpusSql)}
        |),
        |$corpusBody,
-       |sym AS MATERIALIZED (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id, a_id FROM pairs),
-       |reach AS (
-       |  SELECT src AS id, src AS label FROM sym
-       |  UNION
-       |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
-       |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id),
+       |$componentSqlCtes,
        |lab AS (
        |  SELECT s.doc_id, s.lang, CAST(length(s.text) AS BIGINT) AS len,
        |    COALESCE(c.component, s.doc_id) AS comp
@@ -1878,14 +1873,7 @@ object Dedup {
        |${lshOracleSql(MinHashBands,
           corpusSql = corpusSql)}
        |),
-       |sym AS MATERIALIZED (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id, a_id FROM pairs),
-       |reach AS (
-       |  SELECT src AS id, src AS label FROM sym
-       |  UNION
-       |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
-       |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id)
+       |$componentSqlCtes
        |SELECT component, COUNT(*) AS n_docs,
        |       array_to_string(list_sort(list(id)), ',') AS members
        |FROM comp GROUP BY component ORDER BY component""".stripMargin
@@ -1902,14 +1890,7 @@ object Dedup {
           corpusSql = corpusSql)}
        |),
        |$corpusBody,
-       |sym AS MATERIALIZED (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id, a_id FROM pairs),
-       |reach AS (
-       |  SELECT src AS id, src AS label FROM sym
-       |  UNION
-       |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
-       |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id),
+       |$componentSqlCtes,
        |assigned AS (
        |  SELECT c.doc_id, COALESCE(p.component, c.doc_id) AS component
        |  FROM corpus c LEFT JOIN comp p ON c.doc_id = p.id),""".stripMargin +
@@ -2092,7 +2073,7 @@ private[graft] object SubstrDedup {
   * planted on (while every line of real text stays corpus-unique).
   */
 private[graft] object LineDedup {
-  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.{Column, DataFrame}
   import org.apache.spark.sql.functions._
 
   val boilerplate: Seq[String] = Seq(
@@ -2123,7 +2104,7 @@ private[graft] object LineDedup {
 
   /** Aggregation expression rebuilding a doc's kept text from
     * [[Dedup.lineKeep]] rows (pos order) — shared by d12 (md5-pins it)
-    * and p01 (feeds it to the quality rules).
+    * and [[cleaned]] (feeds it to the p01/p05/p16 quality stages).
     */
   def keptTextAgg: Column =
     array_join(
@@ -2135,7 +2116,7 @@ private[graft] object LineDedup {
 
   /** DuckDB CTE block mirroring [[Dedup.lineKeep]] over a `planted`
     * (doc_id, text, …) CTE: produces `k`(doc_id, pos, line, keep).
-    * Shared by the d12 and p01 oracles.
+    * Shared by the d12 oracle and [[cleanSqlCtes]].
     */
   val lineKeepSqlCtes: String =
     """l0 AS (
@@ -2153,6 +2134,42 @@ private[graft] object LineDedup {
       |k AS (SELECT doc_id, pos, l.line,
       |        (cnt = 1 OR doc_id * 1048576 + pos = surv) AS keep
       |      FROM l JOIN lc USING (line))""".stripMargin
+
+  /** (doc_id, source, text) with [[plantText]] applied — the planted
+    * corpus of p01, p05 and p16.
+    */
+  def planted(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+      plantText(col("doc_id"), col("text")).as("text"))
+
+  /** The clean stage of p01, p05 and p16: [[Dedup.lineKeep]] over the
+    * planted text, each doc's kept lines reassembled ([[keptTextAgg]]),
+    * its source re-attached — (doc_id, text, source).
+    */
+  def cleaned(planted: DataFrame): DataFrame =
+    Dedup.lineKeep(planted.select("doc_id", "text"))
+      .groupBy("doc_id")
+      .agg(keptTextAgg.as("text"))
+      .join(planted.select("doc_id", "source"), "doc_id")
+
+  /** [[cleaned]] ∘ [[planted]] over `documents` as DuckDB CTEs:
+    * `planted` → [[lineKeepSqlCtes]] → `cleaned` →
+    * `withsrc(doc_id, source, text)` — the p01, p05 and p16 oracles.
+    */
+  val cleanSqlCtes: String =
+    s"""planted AS (
+       |  SELECT doc_id, source,
+       |    $plantSqlExpr AS text
+       |  FROM documents),
+       |$lineKeepSqlCtes,
+       |cleaned AS (
+       |  SELECT k.doc_id,
+       |    COALESCE(string_agg(CASE WHEN keep THEN line END, ' '
+       |      ORDER BY pos), '') AS text
+       |  FROM k GROUP BY k.doc_id),
+       |withsrc AS (
+       |  SELECT c.doc_id, p.source, c.text FROM cleaned c
+       |  JOIN planted p ON c.doc_id = p.doc_id)""".stripMargin
 }
 
 /** d22's planted noisy banner + CCNet normalizer — ONE definition shared by

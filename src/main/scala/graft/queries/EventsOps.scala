@@ -73,7 +73,7 @@ object EventsOps {
       )
   }
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Gap-based sessionization: new-session flag via lag, running sum →
     // session index, then per-session aggregates.
     QuerySpec(

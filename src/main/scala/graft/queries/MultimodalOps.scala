@@ -178,7 +178,7 @@ object MultimodalOps {
        |        FROM b))""".stripMargin
   }
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // REAL decode (round 10): one tiny deterministic raster per doc,
     // encoded to actual PNG (even ids, 8-bit gray) / BMP (odd ids, 24-bit)
     // bytes, decoded back via javax.imageio — dimensions and mean pixel

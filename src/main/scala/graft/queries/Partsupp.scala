@@ -79,7 +79,7 @@ object Partsupp {
        |    (SELECT unnest(range(0, 4)) AS r)""".stripMargin
   }
 
-  def specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // TPC-H Q2 (minimum-cost supplier): for the filtered parts, the
     // supplier(s) in EUROPE offering the region-wide minimum supplycost.
     // Plan: partsupp derives from the FILTERED part frame (generation-side

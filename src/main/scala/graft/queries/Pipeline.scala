@@ -340,12 +340,31 @@ object Pipeline {
   }
 
   /** The published manifest from a scored table: exact-dedup keeper
-    * election (min doc_id per content digest), keeper rows only. */
+    * election (min doc_id per content digest), keeper rows only. A
+    * keeper id names one row and so one digest: the join needs only the
+    * long doc_id key. */
   private[graft] def manifestFrom(scored: DataFrame): DataFrame =
     scored.join(
-      scored.groupBy("text_md5").agg(min(col("doc_id")).as("doc_id")),
-      Seq("text_md5", "doc_id"))
+      scored.groupBy("text_md5").agg(min(col("doc_id")).as("doc_id"))
+        .select("doc_id"),
+      "doc_id")
       .select("doc_id", "source", "n_words", "text_md5")
+
+  /** `manifestFrom(gateScored(src))` as the DuckDB tail of a WITH over an
+    * in-scope (doc_id, source, text) relation `src` — the p01 and p18
+    * oracles.
+    */
+  private def manifestOracleSql(src: String): String =
+    s"""${TextOps.Gopher.signalSqlCtes(src, Seq("source", "text"))},
+       |scored AS (
+       |  SELECT doc_id, source, n_words, md5(text) AS text_md5
+       |  FROM sig WHERE ${TextOps.Gopher.keepSql}),
+       |keeper AS (
+       |  SELECT text_md5, MIN(doc_id) AS doc_id
+       |  FROM scored GROUP BY text_md5)
+       |SELECT s.doc_id, s.source, s.n_words, s.text_md5
+       |FROM scored s JOIN keeper USING (text_md5, doc_id)
+       |ORDER BY s.doc_id""".stripMargin
 
   /** Takedown propagation into the published manifest (r17 verdict item
     * 3): the delete list removes its manifest rows, and every digest
@@ -393,87 +412,17 @@ object Pipeline {
       |    OR min_ts >= gmin + (2 * (gmax - gmin)) // 3) AS skip
       |FROM z, b ORDER BY shard""".stripMargin
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     QuerySpec(
       "p01_publish_manifest",
-      (s, d) => {
-        // stage 0: plant the d12 banners so the line-dedup stage has work
-        // (LineDedup.plantText: the ONE planting definition d12 also uses)
-        val planted = Tables(s, d, "documents")
-          .select(col("doc_id"), col("source"),
-            LineDedup.plantText(col("doc_id"), col("text")).as("text"))
-        // stage 1: corpus-level line dedup, reassembled cleaned text
-        val cleaned = Dedup.lineKeep(planted.select("doc_id", "text"))
-          .groupBy("doc_id")
-          .agg(LineDedup.keptTextAgg.as("text"))
-          .join(planted.select("doc_id", "source"), "doc_id")
-        // stage 2: the t09 rule battery on the CLEANED text — the SAME
-        // TextOps.Gopher signals/thresholds the t09 gate verifies
-        val Seq(nw, mwl, nst, rep) = TextOps.Gopher.signals(col("text"))
-        val scored = cleaned
-          .withColumn("n_words", nw)
-          .withColumn("mwl", mwl)
-          .withColumn("n_stop", nst)
-          .withColumn("rep", rep)
-          .filter(TextOps.Gopher.keep(
-            col("n_words"), col("mwl"), col("n_stop"), col("rep")))
-        // scored feeds both the keeper derivation and the final manifest
-        // join; measured at sf1, Spark's exchange reuse already covers the
-        // shared prefix (a localCheckpoint here changed nothing), so the
-        // plan stays fully visible to AQE instead.
-        // stage 3: exact dedup of the cleaned survivors, keep min doc_id
-        val keeper = scored
-          .groupBy(md5(col("text")).as("digest"))
-          .agg(min(col("doc_id")).as("doc_id"))
-        // manifest: what a trainer would read
-        scored.join(keeper, Seq("doc_id"))
-          .select(col("doc_id"), col("source"), col("n_words"),
-            md5(col("text")).as("text_md5"))
-          .orderBy("doc_id")
-      },
-      Some {
-        import TextOps.Gopher
-        s"""WITH planted AS (
-           |  SELECT doc_id, source,
-           |    ${LineDedup.plantSqlExpr} AS text
-           |  FROM documents),
-           |${LineDedup.lineKeepSqlCtes},
-           |cleaned AS (
-           |  SELECT k.doc_id,
-           |    COALESCE(string_agg(CASE WHEN keep THEN line END, ' '
-           |      ORDER BY pos), '') AS text
-           |  FROM k GROUP BY k.doc_id),
-           |withsrc AS (
-           |  SELECT c.doc_id, p.source, c.text FROM cleaned c
-           |  JOIN planted p ON c.doc_id = p.doc_id),
-           |g AS (
-           |  SELECT doc_id, source, text, string_split(text, ' ') AS toks,
-           |    list_transform(
-           |      range(1, CASE WHEN len(toks) - 2 > 1
-           |                    THEN len(toks) - 2
-           |                    ELSE 1 END + 1),
-           |      i -> array_to_string(toks[i:i+2], ' '))
-           |      AS grams
-           |  FROM withsrc),
-           |scored AS (
-           |  SELECT doc_id, source, text,
-           |    CAST(len(toks) AS BIGINT) AS n_words
-           |  FROM g
-           |  WHERE len(toks) BETWEEN ${Gopher.MinWords} AND ${Gopher.MaxWords}
-           |    AND CAST(length(replace(text, ' ', '')) AS DOUBLE)
-           |      / CAST(len(toks) AS DOUBLE)
-           |      BETWEEN ${Gopher.MwlLo} AND ${Gopher.MwlHi}
-           |    AND len(list_filter(toks, x -> list_contains([${Gopher.stopsSql}], x)))
-           |      >= ${Gopher.MinStops}
-           |    AND CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-           |      / CAST(len(grams) AS DOUBLE) < ${Gopher.RepMax}),
-           |keeper AS (
-           |  SELECT md5(text) AS digest, MIN(doc_id) AS doc_id
-           |  FROM scored GROUP BY md5(text))
-           |SELECT s.doc_id, s.source, s.n_words, md5(s.text) AS text_md5
-           |FROM scored s JOIN keeper USING (doc_id)
-           |ORDER BY s.doc_id""".stripMargin
-      },
+      // plant the d12 banners, line-dedup the corpus, then p18's publish
+      // stages on the CLEANED text: the t09 Gopher gate and the min-doc_id
+      // keeper per content digest
+      (s, d) => manifestFrom(gateScored(
+          LineDedup.cleaned(LineDedup.planted(Tables(s, d, "documents")))))
+        .orderBy("doc_id"),
+      Some(s"""WITH ${LineDedup.cleanSqlCtes},
+              |${manifestOracleSql("withsrc")}""".stripMargin),
     ),
     // Per-source corpus card — the dataset-card stats block a curation
     // team publishes per shard: volume (docs/tokens), language spread,
@@ -783,13 +732,8 @@ object Pipeline {
           df.groupBy(col("source"))
             .agg(count(lit(1)).as("n_docs"), sum(nTok).as("n_tokens"))
             .withColumn("stage", lit(stage))
-        val planted = Tables(s, d, "documents")
-          .select(col("doc_id"), col("source"),
-            LineDedup.plantText(col("doc_id"), col("text")).as("text"))
-        val cleaned = Dedup.lineKeep(planted.select("doc_id", "text"))
-          .groupBy("doc_id")
-          .agg(LineDedup.keptTextAgg.as("text"))
-          .join(planted.select("doc_id", "source"), "doc_id")
+        val planted = LineDedup.planted(Tables(s, d, "documents"))
+        val cleaned = LineDedup.cleaned(planted)
         val Seq(nw, mwl, nst, rep) = TextOps.Gopher.signals(col("text"))
         val scored = cleaned.filter(TextOps.Gopher.keep(nw, mwl, nst, rep))
         val keeper = scored
@@ -810,39 +754,10 @@ object Pipeline {
       },
       Some {
         import TextOps.Gopher
-        s"""WITH planted AS (
-           |  SELECT doc_id, source,
-           |    ${LineDedup.plantSqlExpr} AS text
-           |  FROM documents),
-           |${LineDedup.lineKeepSqlCtes},
-           |cleaned AS (
-           |  SELECT k.doc_id,
-           |    COALESCE(string_agg(CASE WHEN keep THEN line END, ' '
-           |      ORDER BY pos), '') AS text
-           |  FROM k GROUP BY k.doc_id),
-           |withsrc AS (
-           |  SELECT c.doc_id, p.source, c.text FROM cleaned c
-           |  JOIN planted p ON c.doc_id = p.doc_id),
-           |g AS (
-           |  SELECT doc_id, source, text, string_split(text, ' ') AS toks,
-           |    list_transform(
-           |      range(1, CASE WHEN len(toks) - 2 > 1
-           |                    THEN len(toks) - 2
-           |                    ELSE 1 END + 1),
-           |      i -> array_to_string(toks[i:i+2], ' '))
-           |      AS grams
-           |  FROM withsrc),
+        s"""WITH ${LineDedup.cleanSqlCtes},
+           |${Gopher.signalSqlCtes("withsrc", Seq("source", "text"))},
            |scored AS (
-           |  SELECT doc_id, source, text
-           |  FROM g
-           |  WHERE len(toks) BETWEEN ${Gopher.MinWords} AND ${Gopher.MaxWords}
-           |    AND CAST(length(replace(text, ' ', '')) AS DOUBLE)
-           |      / CAST(len(toks) AS DOUBLE)
-           |      BETWEEN ${Gopher.MwlLo} AND ${Gopher.MwlHi}
-           |    AND len(list_filter(toks, x -> list_contains([${Gopher.stopsSql}], x)))
-           |      >= ${Gopher.MinStops}
-           |    AND CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-           |      / CAST(len(grams) AS DOUBLE) < ${Gopher.RepMax}),
+           |  SELECT doc_id, source, text FROM sig WHERE ${Gopher.keepSql}),
            |keeper AS (
            |  SELECT md5(text) AS digest, MIN(doc_id) AS doc_id
            |  FROM scored GROUP BY md5(text)),
@@ -1197,43 +1112,14 @@ object Pipeline {
         val manifest = manifestFrom(scored).localCheckpoint(true)
         manifestDelete(manifest, scored, delPred).orderBy("doc_id")
       },
-      Some {
-        import TextOps.Gopher
-        s"""WITH planted AS (
-           |  SELECT d.doc_id, d.source, COALESCE(b.text, d.text) AS text
-           |  FROM documents d
-           |  LEFT JOIN documents b ON b.doc_id = d.doc_id - d.doc_id % 4),
-           |surv AS (
-           |  SELECT doc_id, source, text FROM planted
-           |  WHERE NOT (doc_id % 5 = 0)),
-           |g AS (
-           |  SELECT doc_id, source, text, string_split(text, ' ') AS toks,
-           |    list_transform(
-           |      range(1, CASE WHEN len(toks) - 2 > 1
-           |                    THEN len(toks) - 2
-           |                    ELSE 1 END + 1),
-           |      i -> array_to_string(toks[i:i+2], ' '))
-           |      AS grams
-           |  FROM surv),
-           |scored AS (
-           |  SELECT doc_id, source,
-           |    CAST(len(toks) AS BIGINT) AS n_words, md5(text) AS text_md5
-           |  FROM g
-           |  WHERE len(toks) BETWEEN ${Gopher.MinWords} AND ${Gopher.MaxWords}
-           |    AND CAST(length(replace(text, ' ', '')) AS DOUBLE)
-           |      / CAST(len(toks) AS DOUBLE)
-           |      BETWEEN ${Gopher.MwlLo} AND ${Gopher.MwlHi}
-           |    AND len(list_filter(toks, x -> list_contains([${Gopher.stopsSql}], x)))
-           |      >= ${Gopher.MinStops}
-           |    AND CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-           |      / CAST(len(grams) AS DOUBLE) < ${Gopher.RepMax}),
-           |keeper AS (
-           |  SELECT text_md5, MIN(doc_id) AS doc_id
-           |  FROM scored GROUP BY text_md5)
-           |SELECT s.doc_id, s.source, s.n_words, s.text_md5
-           |FROM scored s JOIN keeper USING (text_md5, doc_id)
-           |ORDER BY s.doc_id""".stripMargin
-      },
+      Some(s"""WITH planted AS (
+              |  SELECT d.doc_id, d.source, COALESCE(b.text, d.text) AS text
+              |  FROM documents d
+              |  LEFT JOIN documents b ON b.doc_id = d.doc_id - d.doc_id % 4),
+              |surv AS (
+              |  SELECT doc_id, source, text FROM planted
+              |  WHERE NOT (doc_id % 5 = 0)),
+              |${manifestOracleSql("surv")}""".stripMargin),
     ),
     // Ensemble-gated publish — p01 with its rule-battery quality stage
     // (t09 Gopher) swapped for the round's best filter, the t25b
@@ -1248,16 +1134,11 @@ object Pipeline {
     QuerySpec(
       "p16_ensemble_publish",
       (s, d) => {
-        val planted = Tables(s, d, "documents")
-          .select(col("doc_id"), col("source"),
-            LineDedup.plantText(col("doc_id"), col("text")).as("text"))
         // line-deduped text feeds the ensemble's several derivations
         // (t13 scan, LM model build, LM serve join, stats) — checkpoint
         // pins ONE derivation of the shuffle-heavy dedup stage
-        val cleaned = Dedup.lineKeep(planted.select("doc_id", "text"))
-          .groupBy("doc_id")
-          .agg(LineDedup.keptTextAgg.as("text"))
-          .join(planted.select("doc_id", "source"), "doc_id")
+        val cleaned = LineDedup.cleaned(
+            LineDedup.planted(Tables(s, d, "documents")))
           .localCheckpoint(true)
         val ens = TextOps.qualityEnsembleServe(
             cleaned.select(col("doc_id"), col("text")))
@@ -1274,19 +1155,7 @@ object Pipeline {
           .orderBy("doc_id")
       },
       Some {
-        s"""WITH planted AS (
-           |  SELECT doc_id, source,
-           |    ${LineDedup.plantSqlExpr} AS text
-           |  FROM documents),
-           |${LineDedup.lineKeepSqlCtes},
-           |cleaned AS (
-           |  SELECT k.doc_id,
-           |    COALESCE(string_agg(CASE WHEN keep THEN line END, ' '
-           |      ORDER BY pos), '') AS text
-           |  FROM k GROUP BY k.doc_id),
-           |withsrc AS (
-           |  SELECT c.doc_id, p.source, c.text FROM cleaned c
-           |  JOIN planted p ON c.doc_id = p.doc_id),
+        s"""WITH ${LineDedup.cleanSqlCtes},
            |${TextOps.ensembleOracleCtesFrom(
               TextOps.truncLmOracleCtesFrom("withsrc"), "withsrc")},
            |kept AS (

@@ -40,7 +40,7 @@ object Relational {
 
   private val sumQty  = Exact.sqlSum("l_quantity")
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // ---------------------------------------------------------------- parity
     QuerySpec(
       "q01_scan_project",

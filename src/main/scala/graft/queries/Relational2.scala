@@ -16,7 +16,7 @@ import graft.engine.{Exact, Tables}
   */
 object Relational2 {
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     QuerySpec(
       "q42_cube",
       (s, d) =>

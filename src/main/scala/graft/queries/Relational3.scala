@@ -16,7 +16,7 @@ import graft.engine.{Exact, GraftExtensions, Tables}
   */
 object Relational3 {
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Q2 family: rows attaining a per-group minimum via correlated subquery.
     QuerySpec(
       "q48_corr_min",

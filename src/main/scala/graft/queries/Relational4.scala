@@ -19,7 +19,7 @@ import graft.plans.TopK
   */
 object Relational4 {
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Q4 shape: EXISTS-correlated order counting — plans as a left-semi join
     // with a non-equi residual (lineitem shipped >60 days after the order).
     QuerySpec(

@@ -1242,7 +1242,7 @@ object Similarity {
        |FROM q ORDER BY vec_id""".stripMargin
   }
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Exact brute-force top-5 cosine neighbors for 10 query vectors.
     QuerySpec(
       "s01_ann_brute",
@@ -1437,14 +1437,7 @@ object Similarity {
            |  SELECT vec_id FROM embeddings
            |  UNION ALL
            |  SELECT vec_id + 1000000 FROM embeddings WHERE vec_id % 10 = 0),
-           |sym AS MATERIALIZED (
-           |  SELECT a_id AS src, b_id AS dst FROM pairs
-           |  UNION ALL SELECT b_id, a_id FROM pairs),
-           |reach AS (
-           |  SELECT src AS id, src AS label FROM sym
-           |  UNION
-           |  SELECT e.dst AS id, r.label FROM reach r JOIN sym e ON e.src = r.id),
-           |comp AS (SELECT id, MIN(label) AS component FROM reach GROUP BY id),
+           |${Dedup.componentSqlCtes},
            |losers AS (SELECT id FROM comp WHERE id != component)
            |SELECT COUNT(*) AS n_kept,
            |  md5(array_to_string(list_sort(list(vec_id)), ',')) AS kept_digest
@@ -1831,21 +1824,7 @@ object Similarity {
               .as("members_md5"))
           .orderBy("cluster"),
       Some(s"""WITH RECURSIVE $knnGraphOracleCtes,
-              |mutual AS (
-              |  SELECT LEAST(q_id, neighbor_id) AS a_id,
-              |         GREATEST(q_id, neighbor_id) AS b_id
-              |  FROM ranked WHERE rank <= 3
-              |  GROUP BY 1, 2 HAVING COUNT(*) = 2),
-              |sym AS MATERIALIZED (
-              |  SELECT a_id AS src, b_id AS dst FROM mutual
-              |  UNION ALL SELECT b_id, a_id FROM mutual),
-              |reach AS (
-              |  SELECT src AS id, src AS label FROM sym
-              |  UNION
-              |  SELECT e.dst AS id, r.label
-              |  FROM reach r JOIN sym e ON e.src = r.id),
-              |comp AS (SELECT id, MIN(label) AS component FROM reach
-              |         GROUP BY id)
+              |$mutualComponentSqlCtes
               |SELECT component AS cluster, COUNT(*) AS n_members,
               |  md5(array_to_string(list_sort(list(id)), ','))
               |    AS members_md5
@@ -1982,6 +1961,19 @@ object Similarity {
     ),
   )
 
+  /** [[mutualComponents]] as DuckDB CTEs over an in-scope
+    * `ranked(q_id, neighbor_id, cos, rank)` CTE: the mutual top-3 edges as
+    * `pairs`, then `comp(id, component)` — shared by the s11, s17 and
+    * s17b oracles.
+    */
+  private def mutualComponentSqlCtes: String =
+    s"""pairs AS (
+       |  SELECT LEAST(q_id, neighbor_id) AS a_id,
+       |         GREATEST(q_id, neighbor_id) AS b_id
+       |  FROM ranked WHERE rank <= 3
+       |  GROUP BY 1, 2 HAVING COUNT(*) = 2),
+       |${Dedup.componentSqlCtes}""".stripMargin
+
   /** The mutual-edge → connected-components → keeper-argmin survivor
     * tail, reading an in-scope `ranked(q_id, neighbor_id, cos, rank)`
     * CTE — ONE definition shared by s17 (pinned width) and s17b
@@ -1989,21 +1981,7 @@ object Similarity {
     * the two configurations.
     */
   private def survivorsOracleTail: String =
-    """mutual AS (
-      |  SELECT LEAST(q_id, neighbor_id) AS a_id,
-      |         GREATEST(q_id, neighbor_id) AS b_id
-      |  FROM ranked WHERE rank <= 3
-      |  GROUP BY 1, 2 HAVING COUNT(*) = 2),
-      |sym AS MATERIALIZED (
-      |  SELECT a_id AS src, b_id AS dst FROM mutual
-      |  UNION ALL SELECT b_id, a_id FROM mutual),
-      |reach AS (
-      |  SELECT src AS id, src AS label FROM sym
-      |  UNION
-      |  SELECT e.dst AS id, r.label
-      |  FROM reach r JOIN sym e ON e.src = r.id),
-      |comp AS (SELECT id, MIN(label) AS component FROM reach
-      |         GROUP BY id),
+    s"""$mutualComponentSqlCtes,
       |keepers AS (SELECT component, MIN(id) AS keeper FROM comp
       |            GROUP BY component)
       |SELECT emb.vec_id, c.component AS cluster,
@@ -2409,7 +2387,7 @@ object Similarity {
     * pairs (bench ids sort above all train ids, so a<b ∧ flags differ ⇒
     * a = train), exact cosine verify at 0.98.
     */
-  private lazy val d23OracleSql: String =
+  private val d23OracleSql: String =
     s"""WITH corpus AS (
        |  SELECT vec_id, embedding, FALSE AS is_new FROM embeddings
        |  UNION ALL
@@ -2453,7 +2431,7 @@ object Similarity {
   /** s03's full SQL oracle, shared with s06 (which nests it as the pairs
     * CTE of the survivor computation).
     */
-  private lazy val s03OracleSql: String =
+  private val s03OracleSql: String =
     s"""WITH corpus AS (
        |  SELECT vec_id, embedding FROM embeddings
        |  UNION ALL

@@ -20,7 +20,7 @@ import graft.engine.{Exact, Tables}
   */
 object Stats {
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Exact variance/stddev from decimal moments.
     QuerySpec(
       "q35_stats_exact",

@@ -215,6 +215,43 @@ object TextOps {
     def keep(nWords: Column, mwl: Column, nStop: Column, rep: Column): Column =
       nWords.between(MinWords, MaxWords) &&
         mwl.between(MwlLo, MwlHi) && nStop >= MinStops && rep < RepMax
+
+    /** [[signals]] as DuckDB CTEs over relation `src` (doc_id, text, …):
+      * `gt` → `gg` → `sig(doc_id, carry…, n_words, mean_word_len,
+      * n_stopwords, rep_ratio)` — the ONE oracle-side definition read by
+      * t09, t23, the ensemble rows and the p01/p05/p18 publish gates.
+      */
+    def signalSqlCtes(src: String, carry: Seq[String]): String =
+      s"""gt AS (
+         |  SELECT *, string_split(text, ' ') AS toks
+         |  FROM $src),
+         |gg AS (
+         |  SELECT *,
+         |    list_transform(
+         |      range(1, CASE WHEN len(toks) - 2 > 1
+         |                    THEN len(toks) - 2 ELSE 1 END + 1),
+         |      i -> array_to_string(toks[i:i+2], ' ')) AS grams
+         |  FROM gt),
+         |sig AS (
+         |  SELECT ${("doc_id" +: carry).mkString(", ")},
+         |    CAST(len(toks) AS BIGINT) AS n_words,
+         |    CAST(length(replace(text, ' ', '')) AS DOUBLE)
+         |      / CAST(len(toks) AS DOUBLE) AS mean_word_len,
+         |    CAST(len(list_filter(toks, x -> list_contains([$stopsSql], x)))
+         |      AS BIGINT) AS n_stopwords,
+         |    CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
+         |      / CAST(len(grams) AS DOUBLE) AS rep_ratio
+         |  FROM gg)""".stripMargin
+
+    /** t09's per-rule predicates over the `sig` columns, by output name. */
+    val okSql: Seq[(String, String)] = Seq(
+      "ok_len" -> s"n_words BETWEEN $MinWords AND $MaxWords",
+      "ok_mwl" -> s"mean_word_len BETWEEN $MwlLo AND $MwlHi",
+      "ok_stop" -> s"n_stopwords >= $MinStops",
+      "ok_rep" -> s"rep_ratio < $RepMax")
+
+    /** [[keep]] as DuckDB text over the `sig` columns. */
+    val keepSql: String = okSql.map { case (_, p) => s"($p)" }.mkString(" AND ")
   }
 
   /** t12's readability pieces — shared by the contract query (over its
@@ -250,7 +287,8 @@ object TextOps {
 
   /** t13's score chain as DuckDB CTEs ending in
     * `sc(doc_id, n_feats, score)` — ONE oracle-side definition shared by
-    * t13 and every oracle that consumes the classifier score (t23, t24).
+    * t13 and every oracle that consumes the classifier score (t22, t23,
+    * t24, and through [[ensembleOracleCtesFrom]] t25, t25b, t26 and p16).
     */
   private def t13ScoreCtes: String = t13ScoreCtesFrom("documents")
 
@@ -361,6 +399,28 @@ object TextOps {
           .as("recall"))
       .orderBy("threshold")
   }
+
+  /** [[sweepTable]] as the DuckDB tail of a WITH over an in-scope
+    * `base(doc_id, score, label)` CTE — shared by the t23 and t26 oracles.
+    */
+  private def sweepOracleSql(gridLits: Seq[String]): String =
+    s"""grid AS (SELECT CAST(UNNEST([${gridLits.mkString(", ")}]) AS DOUBLE)
+       |  AS threshold),
+       |agg AS (
+       |  SELECT threshold, COUNT(*) AS n_docs,
+       |    CAST(SUM(CASE WHEN score > threshold THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS n_keep,
+       |    CAST(SUM(CASE WHEN score > threshold AND label THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS tp,
+       |    CAST(SUM(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
+       |  FROM base, grid GROUP BY threshold)
+       |SELECT threshold, n_keep,
+       |  CAST(n_keep AS DOUBLE) / CAST(n_docs AS DOUBLE) AS keep_rate,
+       |  CASE WHEN n_keep > 0
+       |    THEN CAST(tp AS DOUBLE) / CAST(n_keep AS DOUBLE) END AS prec,
+       |  CASE WHEN n_pos > 0
+       |    THEN CAST(tp AS DOUBLE) / CAST(n_pos AS DOUBLE) END AS recall
+       |FROM agg ORDER BY threshold""".stripMargin
 
   /** t24's engine — quality-score distribution drift between two corpus
     * snapshots: the monitoring table a pipeline checks at every refresh
@@ -480,37 +540,14 @@ object TextOps {
   private[graft] def ensembleOracleCtesFrom(lmCtes: String,
       src: String): String = {
     import graft.engine.Exact
-    import Gopher._
     s"""${t13ScoreCtesFrom(src)},
-       |gt AS (
-       |  SELECT doc_id, text, string_split(text, ' ') AS toks
-       |  FROM $src),
-       |gg AS (
-       |  SELECT doc_id, text, toks,
-       |    list_transform(
-       |      range(1, CASE WHEN len(toks) - 2 > 1
-       |                    THEN len(toks) - 2 ELSE 1 END + 1),
-       |      i -> array_to_string(toks[i:i+2], ' ')) AS grams
-       |  FROM gt),
-       |sig AS (
-       |  SELECT doc_id,
-       |    CAST(len(toks) AS BIGINT) AS n_words,
-       |    CAST(length(replace(text, ' ', '')) AS DOUBLE)
-       |      / CAST(len(toks) AS DOUBLE) AS mean_word_len,
-       |    CAST(len(list_filter(toks, x -> list_contains([$stopsSql], x)))
-       |      AS BIGINT) AS n_stopwords,
-       |    CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-       |      / CAST(len(grams) AS DOUBLE) AS rep_ratio
-       |  FROM gg),
+       |${Gopher.signalSqlCtes(src, Nil)},
        |$lmCtes,
        |feats AS (
        |  SELECT s.doc_id, s.score AS cls, u.lm_nll, g.rep_ratio,
        |    CAST(g.n_stopwords AS DOUBLE) / CAST(g.n_words AS DOUBLE)
        |      AS stop_frac,
-       |    (g.n_words BETWEEN $MinWords AND $MaxWords)
-       |      AND (g.mean_word_len BETWEEN $MwlLo AND $MwlHi)
-       |      AND g.n_stopwords >= $MinStops AND g.rep_ratio < $RepMax
-       |      AS label
+       |    ${Gopher.keepSql} AS label
        |  FROM sc s JOIN usc u USING (doc_id) JOIN sig g USING (doc_id)),
        |st1 AS (
        |  SELECT
@@ -766,7 +803,7 @@ object TextOps {
         .localCheckpoint(true),
       T26Grid)
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Token counting: whitespace tokens + distinct tokens + char length.
     QuerySpec(
       "t01_token_stats",
@@ -1112,35 +1149,12 @@ object TextOps {
       },
       Some {
         import Gopher._
-        s"""WITH t AS (
-           |  SELECT doc_id, text, string_split(text, ' ') AS toks
-           |  FROM documents),
-           |g AS (
-           |  SELECT doc_id, text, toks,
-           |    list_transform(
-           |      range(1, CASE WHEN len(toks) - 2 > 1
-           |                    THEN len(toks) - 2 ELSE 1 END + 1),
-           |      i -> array_to_string(toks[i:i+2], ' ')) AS grams
-           |  FROM t),
-           |s AS (
-           |  SELECT doc_id,
-           |    CAST(len(toks) AS BIGINT) AS n_words,
-           |    CAST(length(replace(text, ' ', '')) AS DOUBLE)
-           |      / CAST(len(toks) AS DOUBLE) AS mean_word_len,
-           |    CAST(len(list_filter(toks, x -> list_contains([$stopsSql], x)))
-           |      AS BIGINT) AS n_stopwords,
-           |    CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-           |      / CAST(len(grams) AS DOUBLE) AS rep_ratio
-           |  FROM g)
+        val oks = okSql.map { case (name, p) => s"$p AS $name" }
+        s"""WITH ${signalSqlCtes("documents", Nil)}
            |SELECT doc_id, n_words, mean_word_len, n_stopwords, rep_ratio,
-           |  n_words BETWEEN $MinWords AND $MaxWords AS ok_len,
-           |  mean_word_len BETWEEN $MwlLo AND $MwlHi AS ok_mwl,
-           |  n_stopwords >= $MinStops AS ok_stop,
-           |  rep_ratio < $RepMax AS ok_rep,
-           |  (n_words BETWEEN $MinWords AND $MaxWords)
-           |    AND (mean_word_len BETWEEN $MwlLo AND $MwlHi)
-           |    AND n_stopwords >= $MinStops AND rep_ratio < $RepMax AS keep
-           |FROM s ORDER BY doc_id""".stripMargin
+           |  ${oks.mkString(",\n  ")},
+           |  $keepSql AS keep
+           |FROM sig ORDER BY doc_id""".stripMargin
       },
     ),
     // Classifier threshold calibration — see [[thresholdSweep]]: the
@@ -1150,76 +1164,12 @@ object TextOps {
     QuerySpec(
       "t23_threshold_sweep",
       (s, d) => thresholdSweep(docs(s, d)),
-      Some {
-        import graft.engine.DuckHash
-        import Gopher._
-        s"""WITH tk AS (
-           |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           |ft AS (
-           |  SELECT doc_id, list_concat(toks,
-           |    list_transform(range(1, len(toks)),
-           |      i -> toks[i] || ' ' || toks[i+1])) AS feats
-           |  FROM tk),
-           |ws AS (
-           |  SELECT doc_id, CAST(len(feats) AS BIGINT) AS n_feats,
-           |    list_transform(${DuckHash.mixChain("feats")},
-           |      v -> CAST(CAST(CAST(${DuckHash.signed("v")} AS DOUBLE)
-           |                     / 9.223372036854775808e18 AS VARCHAR)
-           |                AS DECIMAL(38,10))) AS wd
-           |  FROM ft),
-           |scored AS (
-           |  SELECT doc_id,
-           |    CAST(CAST(list_reduce(list_prepend(0::DECIMAL(38,10), wd),
-           |           (a, b) -> a + b) AS VARCHAR) AS DOUBLE)
-           |      / CAST(n_feats AS DOUBLE) AS score
-           |  FROM ws),
-           |gt AS (
-           |  SELECT doc_id, text, string_split(text, ' ') AS toks
-           |  FROM documents),
-           |gg AS (
-           |  SELECT doc_id, text, toks,
-           |    list_transform(
-           |      range(1, CASE WHEN len(toks) - 2 > 1
-           |                    THEN len(toks) - 2 ELSE 1 END + 1),
-           |      i -> array_to_string(toks[i:i+2], ' ')) AS grams
-           |  FROM gt),
-           |sig AS (
-           |  SELECT doc_id,
-           |    CAST(len(toks) AS BIGINT) AS n_words,
-           |    CAST(length(replace(text, ' ', '')) AS DOUBLE)
-           |      / CAST(len(toks) AS DOUBLE) AS mean_word_len,
-           |    CAST(len(list_filter(toks, x -> list_contains([$stopsSql], x)))
-           |      AS BIGINT) AS n_stopwords,
-           |    CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE)
-           |      / CAST(len(grams) AS DOUBLE) AS rep_ratio
-           |  FROM gg),
-           |lab AS (
-           |  SELECT doc_id,
-           |    (n_words BETWEEN $MinWords AND $MaxWords)
-           |      AND (mean_word_len BETWEEN $MwlLo AND $MwlHi)
-           |      AND n_stopwords >= $MinStops AND rep_ratio < $RepMax AS label
-           |  FROM sig),
-           |base AS (
-           |  SELECT s.doc_id, s.score, l.label
-           |  FROM scored s JOIN lab l USING (doc_id)),
-           |grid AS (SELECT CAST(UNNEST([${T23Grid.mkString(", ")}]) AS DOUBLE)
-           |  AS threshold),
-           |agg AS (
-           |  SELECT threshold, COUNT(*) AS n_docs,
-           |    CAST(SUM(CASE WHEN score > threshold THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS n_keep,
-           |    CAST(SUM(CASE WHEN score > threshold AND label THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS tp,
-           |    CAST(SUM(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-           |  FROM base, grid GROUP BY threshold)
-           |SELECT threshold, n_keep,
-           |  CAST(n_keep AS DOUBLE) / CAST(n_docs AS DOUBLE) AS keep_rate,
-           |  CASE WHEN n_keep > 0
-           |    THEN CAST(tp AS DOUBLE) / CAST(n_keep AS DOUBLE) END AS prec,
-           |  CASE WHEN n_pos > 0
-           |    THEN CAST(tp AS DOUBLE) / CAST(n_pos AS DOUBLE) END AS recall
-           |FROM agg ORDER BY threshold""".stripMargin
-      },
+      Some(s"""WITH $t13ScoreCtes,
+              |${Gopher.signalSqlCtes("documents", Nil)},
+              |base AS (
+              |  SELECT s.doc_id, s.score, ${Gopher.keepSql} AS label
+              |  FROM sc s JOIN sig USING (doc_id)),
+              |${sweepOracleSql(T23Grid)}""".stripMargin),
     ),
     // Quality-score distribution drift — see [[scoreDrift]]: t13 scores,
     // even/odd snapshot halves, T23-grid bin edges, per-bin L1 terms
@@ -1841,33 +1791,14 @@ object TextOps {
       "t22_host_prior_filter",
       (s, d) => hostPriorFilter(docs(s, d)),
       Some {
-        import graft.engine.{DuckHash, Exact}
+        import graft.engine.Exact
         s"WITH ${graft.queries.Dedup.duckUrlCanonCtes},\n" +
-          s"""tk AS (
-             |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-             |ft AS (
-             |  SELECT doc_id, list_concat(toks,
-             |    list_transform(range(1, len(toks)),
-             |      i -> toks[i] || ' ' || toks[i+1])) AS feats
-             |  FROM tk),
-             |ws AS (
-             |  SELECT doc_id, CAST(len(feats) AS BIGINT) AS n_feats,
-             |    list_transform(${DuckHash.mixChain("feats")},
-             |      v -> CAST(CAST(CAST(${DuckHash.signed("v")} AS DOUBLE)
-             |                     / 9.223372036854775808e18 AS VARCHAR)
-             |                AS DECIMAL(38,10))) AS wd
-             |  FROM ft),
-             |scored AS (
-             |  SELECT doc_id,
-             |    CAST(CAST(list_reduce(list_prepend(0::DECIMAL(38,10), wd),
-             |           (a, b) -> a + b) AS VARCHAR) AS DOUBLE)
-             |      / CAST(n_feats AS DOUBLE) AS score
-             |  FROM ws),
+          s"""$t13ScoreCtes,
              |based AS (
              |  SELECT s.doc_id,
              |    regexp_extract(c.canonical_url, '^https://([^/]+)', 1) AS host,
              |    s.score
-             |  FROM scored s JOIN canon c USING (doc_id)),
+             |  FROM sc s JOIN canon c USING (doc_id)),
              |prior AS (
              |  SELECT host,
              |    ${Exact.sqlSum("score")} / CAST(COUNT(*) AS DOUBLE)
@@ -1925,26 +1856,9 @@ object TextOps {
     QuerySpec(
       "t26_ensemble_sweep",
       (s, d) => ensembleSweep(docs(s, d)),
-      Some {
-        s"""WITH $ensembleOracleCtes,
-           |grid AS (SELECT CAST(UNNEST([${T26Grid.mkString(", ")}]) AS DOUBLE)
-           |  AS threshold),
-           |agg AS (
-           |  SELECT threshold, COUNT(*) AS n_docs,
-           |    CAST(SUM(CASE WHEN ens > threshold THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS n_keep,
-           |    CAST(SUM(CASE WHEN ens > threshold AND label THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS tp,
-           |    CAST(SUM(CASE WHEN label THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-           |  FROM ensemble, grid GROUP BY threshold)
-           |SELECT threshold, n_keep,
-           |  CAST(n_keep AS DOUBLE) / CAST(n_docs AS DOUBLE) AS keep_rate,
-           |  CASE WHEN n_keep > 0
-           |    THEN CAST(tp AS DOUBLE) / CAST(n_keep AS DOUBLE) END AS prec,
-           |  CASE WHEN n_pos > 0
-           |    THEN CAST(tp AS DOUBLE) / CAST(n_pos AS DOUBLE) END AS recall
-           |FROM agg ORDER BY threshold""".stripMargin
-      },
+      Some(s"""WITH $ensembleOracleCtes,
+              |base AS (SELECT doc_id, ens AS score, label FROM ensemble),
+              |${sweepOracleSql(T26Grid)}""".stripMargin),
     ),
     // The ensemble at SERVE configuration — see [[qualityEnsembleServe]]:
     // the LM vote from the bounded truncated model (the gate a stream
@@ -2366,18 +2280,14 @@ object TextOps {
     * through t13" is literally the last stage of the plan). Per-round
     * frames are localCheckpoint'ed (the d08 loop discipline).
     */
-  // lazy: referenced from t20OracleSql during the `specs` val's object
-  // initialization, which runs BEFORE this declaration — a plain val
-  // would still be null there and the oracle would plant " null"
-  private[graft] lazy val t20Markers: String =
+  private[graft] val t20Markers: String =
     (1 to 12).map(i => s"qy$i").mkString(" ")
   // Shared between the engine defaults and the oracle builder call — ONE
   // definition so changing either cannot silently break Spark/oracle
-  // bit-parity (the r14 ADVICE item). lazy for the same object-init
-  // ordering reason as t20Markers.
-  private[graft] lazy val T20Rounds: Int = 6
-  private[graft] lazy val T20Lr: Double = 800.0
-  private[graft] lazy val T20Buckets: Int = 262144 // hashed feature space
+  // bit-parity (the r14 ADVICE item).
+  private[graft] val T20Rounds: Int = 6
+  private[graft] val T20Lr: Double = 800.0
+  private[graft] val T20Buckets: Int = 262144 // hashed feature space
 
   /** t20/t20b's planted corpus `(doc_id, text, y, extra…)`: every 9th doc
     * carries the marker tokens and is the positive class.

@@ -14,7 +14,7 @@ import graft.engine.{Exact, Tables}
   */
 object TpchMore {
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     // Q7 shape: supplier-nation ↔ customer-nation trade volume.
     QuerySpec(
       "q54_tpch_q7",

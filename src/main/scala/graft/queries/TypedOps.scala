@@ -21,7 +21,7 @@ object TypedOps {
   case class Line(l_returnflag: String, l_quantity: Double, l_extendedprice: Double)
   case class FlagStats(l_returnflag: String, n: Long, sum_qty: Double, max_price: Double)
 
-  val specs: Vector[QuerySpec] = Vector(
+  lazy val specs: Vector[QuerySpec] = Vector(
     QuerySpec(
       "q58_typed_agg",
       (s, d) => {

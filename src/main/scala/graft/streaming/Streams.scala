@@ -383,7 +383,7 @@ object Streams {
   def ngramCounts(spark: SparkSession, dir: String): DataFrame =
     graft.queries.Corpus.knNgramHashStream(
         readDocs(spark, dir).select(col("doc_id"), col("text")),
-        graft.queries.Corpus.C36N)
+        graft.queries.Corpus.KnOrder)
       .groupBy(col("h"))
       .agg(count(lit(1)).as("c"))
 

@@ -581,7 +581,7 @@ class CorpusSpec extends AnyFunSuite {
     val oneShot = Corpus.knNgramScore(in, 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     for (cut <- Seq(None, Some(Long.MinValue), Some(Long.MaxValue))) {
-      val inc = Corpus.knNgramScoreIncremental(in, 5, cutOverride = cut)
+      val inc = Corpus.knNgramScoreIncremental(in, cutOverride = cut)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(inc == oneShot, s"cutOverride=$cut diverged from recount")
     }
@@ -651,7 +651,7 @@ class CorpusSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(maintained == rebuilt, "delete∘append diverged from recount")
     // and the contract query's one-step retraction agrees too
-    val oneStep = Corpus.knNgramScoreRetract(in, n, delPred).collect()
+    val oneStep = Corpus.knNgramScoreRetract(in, delPred).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(oneStep == rebuilt)
   }
@@ -659,9 +659,9 @@ class CorpusSpec extends AnyFunSuite {
   test("c36b: bucketed-base merge ≡ checkpointed merge; base side enters the merge unshuffled") {
     import org.apache.spark.sql.functions._
     val in = docs.select(col("doc_id"), col("text"))
-    val viaCkpt = Corpus.knNgramScoreIncremental(in, 5).collect()
+    val viaCkpt = Corpus.knNgramScoreIncremental(in).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val viaBucket = Corpus.knNgramScoreBucketed(spark, in, 5,
+    val viaBucket = Corpus.knNgramScoreBucketed(spark, in,
         "c36b_spec_base").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(viaBucket == viaCkpt,
@@ -716,7 +716,7 @@ class CorpusSpec extends AnyFunSuite {
     val closed = Corpus.knNgramScore(
         in.filter(trainPred).select(col("doc_id"), col("text")), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val open = Corpus.knNgramScoreOpenVocab(in, 5, trainPred).collect()
+    val open = Corpus.knNgramScoreOpenVocab(in, trainPred).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val trainIds = closed.map(_._1).toSet
     val openOnTrain = open.filter(r => trainIds.contains(r._1))
@@ -741,7 +741,7 @@ class CorpusSpec extends AnyFunSuite {
       (100L, train, "web") :+ // in-vocab web doc
       (101L, "zqx wvu tsr qpo nml kji hgf edc", "web")) // fully OOV
       .toDF("doc_id", "text", "source")
-    val open = Corpus.knNgramScoreOpenVocab(corpus, 5,
+    val open = Corpus.knNgramScoreOpenVocab(corpus,
         col("source") === "ref").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap
@@ -760,7 +760,7 @@ class CorpusSpec extends AnyFunSuite {
     assert(math.abs(open(101L)._3 - (0.0 - math.log(1.0 / (nb + 1)))) < 1e-9,
       s"all-OOV doc must sit exactly on the unk floor, got ${open(101L)._3}")
     // the broadcast chain and the compacted-shuffle path agree exactly
-    val viaShuffle = Corpus.knNgramScoreOpenVocab(corpus, 5,
+    val viaShuffle = Corpus.knNgramScoreOpenVocab(corpus,
         col("source") === "ref", broadcastTypesMax = 0).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toMap

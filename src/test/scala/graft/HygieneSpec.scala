@@ -97,6 +97,54 @@ class HygieneSpec extends AnyFunSuite {
       s"graft.queries must be conf-read-only; .conf.set found in: $offenders")
   }
 
+  test("query objects declare their specs lazily") {
+    // A strict `val specs` builds every oracle string while its object
+    // initializes, so a constant declared below it reads 0 or null inside
+    // the oracle text while the Scala side reads the right value.
+    val decl = "(?m)^\\s*((?:lazy\\s+)?val|def)\\s+specs\\b".r
+    val found = mainSources
+      .filter(_._1.toString.startsWith("src/main/scala/graft/queries/"))
+      .flatMap { case (p, text) =>
+        decl.findAllMatchIn(text).map(m => p.getFileName.toString -> m.group(1))
+      }
+    val registered = "queries\\.[A-Za-z0-9]+\\.specs".r
+      .findAllIn(Files.readString(Paths.get("src/main/scala/graft/Registry.scala")))
+      .size
+    assert(found.size == registered,
+      s"$registered objects in Registry, specs declarations found: $found")
+    val strict = found.filterNot(_._2.matches("lazy\\s+val"))
+    assert(strict.isEmpty, s"specs must be a lazy val in: $strict")
+  }
+
+  test("each shared curation stage's oracle SQL is spelled once") {
+    // A stage whose oracle text is copied into every row that uses it is
+    // as many anchors as copies, free to drift apart; each row reads the
+    // one builder instead. A fragment found twice is a copy growing back.
+    val stages = Seq(
+      "t13 score (TextOps.t13ScoreCtesFrom)" -> "/ 9.223372036854775808e18 AS VARCHAR",
+      "Gopher signals (TextOps.Gopher.signalSqlCtes)" -> "list_contains([$stopsSql], x)",
+      "Gopher keep rule (TextOps.Gopher.okSql)" -> "n_stopwords >= ",
+      "calibration sweep (TextOps.sweepOracleSql)" -> "CASE WHEN label THEN 1 ELSE 0 END",
+      "line-dedup clean (LineDedup.cleanSqlCtes)" ->
+        "COALESCE(string_agg(CASE WHEN keep THEN line END",
+      "line-dedup clean, Spark (LineDedup.cleaned)" -> "keptTextAgg.as(\"text\")",
+      "connected components (Dedup.componentSqlCtes)" ->
+        "UNION ALL SELECT b_id, a_id FROM pairs",
+      "mutual kNN edges (Similarity.mutualComponentSqlCtes)" ->
+        "SELECT LEAST(q_id, neighbor_id) AS a_id",
+      "KN gram struct (Corpus.knGramStruct)" -> "'g$j': ts[i+",
+    )
+    def occurrences(text: String, frag: String): Int =
+      Iterator.iterate(text.indexOf(frag))(i => text.indexOf(frag, i + 1))
+        .takeWhile(_ >= 0).size
+    val texts = mainSources.map(_._2)
+    val counts = stages.map { case (stage, frag) =>
+      stage -> texts.map(occurrences(_, frag)).sum
+    }
+    val wrong = counts.filter(_._2 != 1)
+    assert(wrong.isEmpty, s"stages not spelled exactly once under src/main: $wrong")
+  }
+
   /** Every defaulted parameter of a `def` in graft.queries and
     * graft.streaming, as "File.def.param". Scaladoc is blanked first; each
     * parameter list is read by bracket depth, and a parameter is defaulted
